@@ -35,6 +35,30 @@ import graft.pipeline.Checkpoints
   * leaves a parseable partial artifact.
   */
 object Bench {
+
+  /** One timed run of a gate: wall seconds and row count, or the error it
+    * threw (then `rows` is -1). */
+  final case class Run(seconds: Double, rows: Long, error: Option[String])
+
+  /** Time `body`, which returns the gate's row count; a throw is recorded
+    * in the returned run, not rethrown, so one gate never aborts the sweep. */
+  def timed(body: => Long): Run = {
+    val t0 = System.nanoTime()
+    val (rows, error) =
+      try (body, None)
+      catch { case e: Throwable => (-1L, Some(String.valueOf(e.getMessage))) }
+    Run((System.nanoTime() - t0) / 1e9, rows, error)
+  }
+
+  /** A gate's runs across passes. Only successful runs enter the floor: a
+    * gate that throws fast must not record a fast floor. */
+  final class GateRuns {
+    val times  = scala.collection.mutable.ArrayBuffer.empty[Double]
+    val failed = scala.collection.mutable.ArrayBuffer.empty[Run]
+    def record(r: Run): Unit = if (r.error.isEmpty) times += r.seconds else failed += r
+    def floor: Option[Double] = times.minOption
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -211,6 +235,12 @@ object Bench {
       }.mkString("{", ",", "}")
     }
 
+    // per-query accumulated runs across passes, in sweep order
+    val names = selected.map(_._1)
+    val fns   = selected.map(_._2)
+    val runs  = Array.fill(names.size)(new GateRuns)
+    val times = runs.map(_.times)
+
     // incremental artifact: rewritten after EVERY query so any truncation
     // (driver timeout, OOM kill) still leaves per-query data on disk.
     // Targeted runs (SPARK_GRAFT_ONLY) write a SEPARATE file — a 2-query
@@ -225,14 +255,20 @@ object Bench {
     case class QRow(name: String, floor: Double, worst: Double, cold: Double, runs: Int)
     def jmap(rs: Seq[QRow])(v: QRow => String): String =
       rs.map(r => "\"" + r.name + "\":" + v(r)).mkString("{", ",", "}")
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def artifactLine(rs: Seq[QRow], done: Boolean): String = {
+      // failed runs never enter a floor; they are listed here instead
+      val failed = names.indices.filter(i => runs(i).failed.nonEmpty).map { i =>
+        val f = runs(i).failed
+        s""""${names(i)}":{"runs":${f.length},"rows":-1,"error":${mapper.writeValueAsString(f.last.error.get)}}"""
+      }.mkString("{", ",", "}")
       val qs    = jmap(rs)(r => f"${r.floor}%.3f")
       val cold  = jmap(rs)(r => f"${r.cold}%.3f")
       val rc    = jmap(rs)(r => r.runs.toString)
       val total = rs.map(_.floor).sum
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"cold":$cold,"runs":$rc,""" +
         f""""prebuild_sec":$prebuildSec%.3f,"warmup_sec":$warmupSec%.3f,"prebuild":$prebuildJson,""" +
-        f""""timed_builders":$buildersJson,""" +
+        f""""timed_builders":$buildersJson,"failed":$failed,""" +
         f""""sf":"$sfDir","fingerprint":$fingerprint,"complete":$done}"""
     }
     def writeSelf(rs: Seq[QRow], done: Boolean): Unit = {
@@ -254,35 +290,31 @@ object Bench {
       if (!freshFamily) spark
       else familySessions.getOrElseUpdate(name.takeWhile(_ != '_'), spark.newSession())
 
-    // per-query accumulated run times across passes, in sweep order
-    val names = selected.map(_._1)
-    val fns   = selected.map(_._2)
-    val times = Array.fill(names.size)(scala.collection.mutable.ArrayBuffer.empty[Double])
     def snapshot(): Seq[QRow] =
       names.indices.filter(i => times(i).nonEmpty).map { i =>
         QRow(names(i), times(i).min, times(i).max, times(i).head, times(i).length)
       }
     def oneRun(i: Int): Unit = {
-      var rows = -1L
-      val gc0  = gcMillis
-      val t0   = System.nanoTime()
-      try {
+      val gc0 = gcMillis
+      val run = timed {
         val s = sessionFor(names(i))
         // label the jobs (guide §1): event logs / any attached UI attribute
         // every stage to its gate
         s.sparkContext.setJobDescription(s"bench:${names(i)}")
-        val df = fns(i)(s, sfDir)
-        rows = df.count()
+        val df   = fns(i)(s, sfDir)
+        val rows = df.count()
         // release this run's checkpoint blocks NOW — pipeline queries
         // otherwise stack ~1 dead frame per run until the ContextCleaner
         // happens to win, which is exactly the late-session degradation
         Checkpoints.free(df)
+        rows
       }
-      catch { case e: Throwable => System.err.println(s"[bench] ${names(i)} failed: ${e.getMessage}") }
-      val dt = (System.nanoTime() - t0) / 1e9
-      times(i) += dt
+      runs(i).record(run)
+      run.error.foreach(e => System.err.println(s"[bench] ${names(i)} failed: $e"))
+      val floor = runs(i).floor.fold("none")(f => f"$f%.3f")
       System.err.println(
-        f"[bench] ${names(i)}%-16s $dt%8.3f s  floor=${times(i).min}%8.3f  rows=$rows%-8d pass=${times(i).length}  " +
+        f"[bench] ${names(i)}%-16s ${run.seconds}%8.3f s  floor=$floor%8s  rows=${run.rows}%-8d " +
+          f"pass=${times(i).length + runs(i).failed.length}  " +
           f"cc=${codeCacheUsedMb}%3dMB meta=${metaspaceUsedMb}%3dMB gc+=${gcMillis - gc0}%4dms rdds=$persistedRdds%3d " +
           f"t=${elapsedS}%5.0fs")
       writeSelf(snapshot(), done = false)
@@ -304,7 +336,8 @@ object Bench {
     // while the budget holds.
     def deserves(i: Int): Boolean = {
       val ts = times(i)
-      ts.length < 3 || ts.min < ts.dropRight(2).min * 0.98
+      // a gate that has failed is not converging: no further re-runs
+      runs(i).failed.isEmpty && (ts.length < 3 || ts.min < ts.dropRight(2).min * 0.98)
     }
     var pass = 1
     var continue = true

@@ -44,17 +44,44 @@ final case class Coords(db: String, namespace: String, metric: String) {
  * cleanly. The file lock blocks until the peer releases; in-JVM overlap
  * (which would throw `OverlappingFileLockException`) is prevented by the
  * shared monitor taken first.
+ *
+ * Change token: every operation that changes a metric's files or metadata
+ * (append/insert, delete, compact and its crash repair, retention
+ * eviction, rollup enable/rebuild, initMetric, restore) ends by writing a
+ * fresh random UUID into `meta.json` — LAST, after every file of the
+ * operation is in place — and `meta.json` itself is replaced by an atomic
+ * rename, so a reader sees the old file or the new one, never a truncated
+ * one. [[read]] reads `meta.json` on every call and hands back the
+ * [[MetricRef]] it resolved last (scan DataFrame with its file index,
+ * shard ids and bounds, rollup view) while the token is unchanged, so the
+ * serving path pays the data-source resolution and shard listing once per
+ * metric state instead of once per query. Writes by this instance, by
+ * another instance, or by another driver process all change the token, so
+ * the next read re-resolves. The token is random rather than a counter, so
+ * a drop + re-create or a restore can never match an old token by chance;
+ * a `meta.json` without a token (written before tokens existed) is never
+ * cached. An operation that changes nothing (an empty sweep) leaves the
+ * token, and so the cached relation, alone; one that throws re-stamps it,
+ * since it may have changed files before it failed.
  */
 class Warehouse(val spark: SparkSession, val root: String) {
 
-  /** monitor + advisory file lock around every mutating metric op. */
+  /** monitor + advisory file lock around every mutating metric op. An op
+    * that throws may have changed files before it failed, so it re-stamps
+    * the change token: cached relations re-resolve instead of keeping a
+    * file index that lists deleted files or misses written ones. */
   private def withWriteLock[A](c: Coords)(body: => A): A =
     Warehouse.monitorFor(Paths.get(c.path(root)).toAbsolutePath.normalize.toString).synchronized {
       Files.createDirectories(Paths.get(c.path(root)))
       val ch = java.nio.channels.FileChannel.open(
         Paths.get(c.path(root), ".lock"),
         java.nio.file.StandardOpenOption.CREATE, java.nio.file.StandardOpenOption.WRITE)
-      try { val fl = ch.lock(); try body finally fl.release() } finally ch.close()
+      try {
+        val fl = ch.lock()
+        try body
+        catch { case e: Throwable => Try(stamp(c)); throw e }
+        finally fl.release()
+      } finally ch.close()
     }
 
   private def dataPath(c: Coords) = s"${c.path(root)}/data"
@@ -64,17 +91,37 @@ class Warehouse(val spark: SparkSession, val root: String) {
 
   // ---- metadata ----------------------------------------------------------
 
-  final case class Meta(schema: MetricSchema, shardIntervalMs: Long, retentionMs: Long)
+  /** `token` is the change token of the metric's current state (see the
+    * class doc); `None` only for metadata written before tokens existed. */
+  final case class Meta(schema: MetricSchema, shardIntervalMs: Long, retentionMs: Long,
+                        token: Option[String] = None)
 
-  private def writeMeta(c: Coords, m: Meta): Unit = {
+  /** Write `m` under a FRESH change token: a temp file in the metric
+    * directory renamed over `meta.json`, so concurrent readers never see a
+    * truncated file. Every mutating operation calls this (or [[stamp]])
+    * last. */
+  private def writeMeta(c: Coords, m: Meta): Unit = writeMetaIn(Paths.get(c.path(root)), m)
+
+  private def writeMetaIn(dir: java.nio.file.Path, m: Meta): Unit = {
     val fields = m.schema.orderedNames.map { n =>
       val f = m.schema.fields(n)
       s"""{"name":"${f.name}","type":"${f.dataType.catalogString}","class":"${f.fieldClass.name}"}"""
     }.mkString("[", ",", "]")
-    val json = s"""{"shardIntervalMs":${m.shardIntervalMs},"retentionMs":${m.retentionMs},"fields":$fields}"""
-    Files.createDirectories(Paths.get(c.path(root)))
-    Files.write(Paths.get(metaPath(c)), json.getBytes(StandardCharsets.UTF_8))
+    val token = java.util.UUID.randomUUID().toString
+    val json = s"""{"shardIntervalMs":${m.shardIntervalMs},"retentionMs":${m.retentionMs},"fields":$fields,"token":"$token"}"""
+    Files.createDirectories(dir)
+    val tmp = dir.resolve(s".meta.json.$token.tmp")
+    try {
+      Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
+      Files.move(tmp, dir.resolve("meta.json"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    } finally Files.deleteIfExists(tmp)
+    ()
   }
+
+  /** Re-stamp the change token after an operation that changed files but
+    * not the metadata. Re-reads `meta.json` under the caller's write lock,
+    * so a schema union that landed since the caller's own read is kept. */
+  private def stamp(c: Coords): Unit = readMeta(c).foreach(writeMeta(c, _))
 
   /** shard interval + retention for a registered metric — the
     * DescribeMetricResponse.MetricInfo surface (reference
@@ -82,9 +129,11 @@ class Warehouse(val spark: SparkSession, val root: String) {
   def metricInfo(c: Coords): Option[(Long, Long)] =
     readMeta(c).map(m => (m.shardIntervalMs, m.retentionMs))
 
-  private def readMeta(c: Coords): Option[Meta] =
+  private def readMeta(c: Coords): Option[Meta] = readMetaIn(Paths.get(c.path(root)))
+
+  private def readMetaIn(dir: java.nio.file.Path): Option[Meta] =
     Try {
-      val json = new String(Files.readAllBytes(Paths.get(metaPath(c))), StandardCharsets.UTF_8)
+      val json = new String(Files.readAllBytes(dir.resolve("meta.json")), StandardCharsets.UTF_8)
       // minimal hand parser for the fixed shape written above
       val shardMs = """"shardIntervalMs":(\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
       val retMs   = """"retentionMs":(\d+)""".r.findFirstMatchIn(json).get.group(1).toLong
@@ -93,7 +142,8 @@ class Warehouse(val spark: SparkSession, val root: String) {
         val dt = CatalystSqlParser.parseDataType(m.group(2))
         m.group(1) -> MetricField(m.group(1), dt, FieldClass.fromName(m.group(3)))
       }.toMap
-      Meta(MetricSchema(fields), shardMs, retMs)
+      val token = """"token":"([^"]+)"""".r.findFirstMatchIn(json).map(_.group(1))
+      Meta(MetricSchema(fields), shardMs, retMs, token)
     }.toOption
 
   private object CatalystSqlParser {
@@ -190,6 +240,9 @@ class Warehouse(val spark: SparkSession, val root: String) {
                   }
                 }
             finally walk.close() // the walk holds open directory handles
+            // a fresh change token: a relation this process cached for an
+            // earlier life of the same metric can never match the backup's
+            readMetaIn(tmp).foreach(writeMetaIn(tmp, _))
             val dst = Paths.get(c.path(root))
             Files.createDirectories(dst.getParent)
             // serialize vs in-process writers WITHOUT withWriteLock — that
@@ -296,10 +349,12 @@ class Warehouse(val spark: SparkSession, val root: String) {
       sharded
         .repartition(col("shard"))
         .write.partitionBy("shard").mode("append").parquet(dataPath(c))
-      writeMeta(c, m)
       // write-time rollup maintenance: this batch's stats segment appends
-      // to the log (reference: facet update per accumulated batch)
-      rollupStep(c).foreach(step => appendRollupSegment(c, df, step))
+      // to the log (reference: facet update per accumulated batch). The
+      // meta goes last — its new token publishes data AND segment — and
+      // also when the segment fails, so the written rows' schema lands.
+      try rollupStep(c).foreach(step => appendRollupSegment(c, df, step))
+      finally writeMeta(c, m)
       // an all-empty batch can run zero tasks → no metric row at all
       obs.get.getOrElse("rows", 0L).asInstanceOf[Long]
     }
@@ -332,18 +387,44 @@ class Warehouse(val spark: SparkSession, val root: String) {
   /** Open a metric for querying; the shard column is exposed to the
     * executor for pruning but hidden from projections. Live time bounds come
     * from the shard directory names (metadata-only — the reference's
-    * `[lowerShardBound, upperShardBound]` of live locations). */
+    * `[lowerShardBound, upperShardBound]` of live locations).
+    *
+    * `meta.json` is read on every call; while its change token matches the
+    * one the cached [[MetricRef]] was resolved under, that ref is returned
+    * as is (see the class doc). */
   def read(c: Coords): Either[String, MetricRef] =
-    readMeta(c).toRight(s"metric ${c.metric} does not exist").map { m =>
-      val df = spark.read.schema(m.schema.toStruct.add("shard", LongType)).parquet(dataPath(c))
-      val shardIds = subdirs(dataPath(c)).filter(_.startsWith("shard=")).map(_.stripPrefix("shard=").toLong)
-      val bounds =
-        if (shardIds.isEmpty) None
-        else Some((shardIds.min * m.shardIntervalMs, (shardIds.max + 1) * m.shardIntervalMs - 1))
-      MetricRef(df, m.schema,
-        Some(ShardInfo("shard", m.shardIntervalMs, bounds, shardIds, Some(shardRowCount(c, _)))),
-        rollup = rollupRef(c))
+    readMeta(c) match {
+      case None =>
+        resolved.remove(c)
+        Left(s"metric ${c.metric} does not exist")
+      case Some(m) =>
+        val cached = for {
+          t         <- m.token
+          (t0, ref) <- Option(resolved.get(c))
+          if t0 == t
+        } yield ref
+        Right(cached.getOrElse {
+          val ref = resolve(c, m)
+          m.token.fold(resolved.remove(c))(t => resolved.put(c, (t, ref)))
+          ref
+        })
     }
+
+  /** The last resolved ref per metric, with the change token it was resolved
+    * under. A ref resolved while a writer was mid-operation may see files
+    * newer than its token — harmless, the writer's token replaces it. */
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[Coords, (String, MetricRef)]()
+
+  private def resolve(c: Coords, m: Meta): MetricRef = {
+    val df = spark.read.schema(m.schema.toStruct.add("shard", LongType)).parquet(dataPath(c))
+    val shardIds = subdirs(dataPath(c)).filter(_.startsWith("shard=")).map(_.stripPrefix("shard=").toLong)
+    val bounds =
+      if (shardIds.isEmpty) None
+      else Some((shardIds.min * m.shardIntervalMs, (shardIds.max + 1) * m.shardIntervalMs - 1))
+    MetricRef(df, m.schema,
+      Some(ShardInfo("shard", m.shardIntervalMs, bounds, shardIds, Some(shardRowCount(c, _)))),
+      rollup = rollupRef(c))
+  }
 
   /**
    * Metadata-only row count of one shard: the sum of the parquet footers'
@@ -437,6 +518,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
           // deleted rows invalidate the stats segments: rebuild from the
           // surviving data (one aggregation job over the rewritten shards)
           rollupStep(c).foreach(step => rebuildRollupLocked(c, m, step))
+          stamp(c)
         }
       }
     }
@@ -467,8 +549,8 @@ class Warehouse(val spark: SparkSession, val root: String) {
     readMeta(c).toRight(s"metric ${c.metric} does not exist").map { m =>
       withWriteLock(c) {
         val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverCompact(c, fs)
-        subdirs(dataPath(c)).filter(_.startsWith("shard=")).flatMap { sh =>
+        val repaired = recoverCompact(c, fs)
+        val compacted = subdirs(dataPath(c)).filter(_.startsWith("shard=")).flatMap { sh =>
           val sid      = sh.stripPrefix("shard=").toLong
           val shardDir = new Path(s"${dataPath(c)}/$sh")
           val files = fs.listStatus(shardDir)
@@ -496,6 +578,8 @@ class Warehouse(val spark: SparkSession, val root: String) {
             Some(sid)
           }
         }
+        if (repaired || compacted.nonEmpty) stamp(c)
+        compacted
       }
     }
 
@@ -504,18 +588,21 @@ class Warehouse(val spark: SparkSession, val root: String) {
    * whose `shard=<sid>` is missing means the crash hit between the two
    * renames — restore the aside copy; otherwise the swap completed and
    * only the delete was lost — drop the leftover. Stale `.tmp_compact_*`
-   * output (crash during the rewrite) is always safe to delete.
+   * output (crash during the rewrite) is always safe to delete. Returns
+   * whether anything was repaired.
    */
-  private def recoverCompact(c: Coords, fs: org.apache.hadoop.fs.FileSystem): Unit = {
+  private def recoverCompact(c: Coords, fs: org.apache.hadoop.fs.FileSystem): Boolean = {
     val base = new Path(c.path(root))
-    if (fs.exists(base)) fs.listStatus(base).foreach { st =>
+    fs.exists(base) && fs.listStatus(base).count { st =>
       val name = st.getPath.getName
       if (name.startsWith(".old_compact_")) {
         val shardDir = new Path(s"${dataPath(c)}/shard=${name.stripPrefix(".old_compact_")}")
         if (!fs.exists(shardDir)) fs.rename(st.getPath, shardDir)
         else fs.delete(st.getPath, true)
-      } else if (name.startsWith(".tmp_compact_")) fs.delete(st.getPath, true)
-    }
+        true
+      } else if (name.startsWith(".tmp_compact_")) { fs.delete(st.getPath, true); true }
+      else false
+    } > 0
   }
 
   /** DROP METRIC: remove data + catalog entry. */
@@ -569,6 +656,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
           s"""{"stepMs":$stepMs,"keys":$keyJson,"keepOnEvict":$keepOnEvict}"""
             .getBytes(StandardCharsets.UTF_8))
         rebuildRollupLocked(c, m, stepMs)
+        stamp(c)
       }
     }
   }
@@ -600,7 +688,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
   def rebuildRollup(c: Coords): Either[String, Unit] =
     readMeta(c).toRight(s"metric ${c.metric} does not exist").flatMap { m =>
       rollupStep(c).toRight(s"rollup not enabled for ${c.metric}").map { step =>
-        withWriteLock(c) { rebuildRollupLocked(c, m, step) }
+        withWriteLock(c) { rebuildRollupLocked(c, m, step); stamp(c) }
       }
     }
 
@@ -655,8 +743,10 @@ class Warehouse(val spark: SparkSession, val root: String) {
             .map(_.stripPrefix("shard=").toLong)
             .filter(s => (s + 1) * m.shardIntervalMs - 1 < cutoff)
           full.foreach(s => fs.delete(new Path(s"${dataPath(c)}/shard=$s"), true))
-          if (full.nonEmpty && !keep)
-            rollupStep(c).foreach(step => rebuildRollupLocked(c, m, step))
+          if (full.nonEmpty) {
+            if (!keep) rollupStep(c).foreach(step => rebuildRollupLocked(c, m, step))
+            stamp(c)
+          }
           (keep, full)
         }
         if (keepTier) Right(evicted) // whole-shard grain; boundary shard stays raw

@@ -192,16 +192,14 @@ final class GraftJavaClient private (engine: GraftEngine, maxResultRows: Int) {
       safely {
         engine.sql(stmt.db, stmt.namespace, stmt.queryString).map { df =>
           val out = new java.util.ArrayList[java.util.Map[String, Object]]()
-          val it  = df.toLocalIterator()
-          var n   = 0
-          while (it.hasNext && n < maxResultRows) {
-            val row = it.next()
-            val m   = new java.util.LinkedHashMap[String, Object]()
+          // one bounded collect: the limit at the plan root keeps a
+          // `limit 1` to one job and the driver to maxResultRows rows
+          df.limit(maxResultRows).collect().foreach { row =>
+            val m = new java.util.LinkedHashMap[String, Object]()
             row.schema.fieldNames.zipWithIndex.foreach { case (f, i) =>
               m.put(f, if (row.isNullAt(i)) null else row.get(i).asInstanceOf[Object])
             }
             out.add(m)
-            n += 1
           }
           out
         }

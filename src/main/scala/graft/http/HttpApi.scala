@@ -10,8 +10,10 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, struct, to_json}
 
 import graft.GraftEngine
+import graft.catalog.Coords
 import graft.plan.TimeContext
 import graft.security.{AuthResult, GraftAuthProvider}
 import graft.sql.{Ast, SqlParser}
@@ -28,12 +30,14 @@ import graft.sql.{Ast, SqlParser}
  *    dimensions?, tags?}}` → insert one record
  *  - `GET /commands/<db>/<namespace>/metrics` → metric listing
  *
- * Results never materialize on the driver: rows stream through
- * `toLocalIterator` (one partition resident at a time) onto the chunked
- * response, capped at `maxResultRows` — the serving-layer bound the
- * reference enforces on its fetches. A `select * from events` over REST
- * at 100 TB returns the first `maxResultRows` rows and `"truncated":true`
- * instead of collecting the table into driver heap.
+ * Results are capped at `maxResultRows` — the serving-layer bound the
+ * reference enforces on its fetches. Every answer is ONE bounded collect
+ * ([[HttpApi.records]]): `limit(maxResultRows + 1)` sits at the plan root,
+ * so the driver receives at most `maxResultRows + 1` rendered rows per task
+ * result (never a whole partition, never the table), with
+ * `spark.driver.maxResultSize` as the hard stop. A `select * from events`
+ * over REST at 100 TB returns the first `maxResultRows` rows and
+ * `"truncated":true`.
  *
  * Uses only the JDK http server + the Jackson shipped with Spark — no new
  * dependencies.
@@ -124,30 +128,6 @@ class HttpApi(
       Some((403, s"""{"error":${mapper.writeValueAsString(s"not authorized ${check.failReason}".trim)}}"""))
     else None
 
-  /**
-   * Write `prefix + r1,r2,… + suffix(truncated)` to `out`, streaming rows
-   * from the executors via `toLocalIterator` — driver memory holds at most
-   * one partition, never the result set; `maxResultRows` bounds the
-   * response itself.
-   */
-  private def writeRecords(
-      df: DataFrame,
-      out: java.io.OutputStream,
-      prefix: String,
-      suffix: Boolean => String
-  ): Unit = {
-    out.write(prefix.getBytes(StandardCharsets.UTF_8))
-    val it    = df.toJSON.toLocalIterator()
-    var n     = 0
-    while (it.hasNext && n < maxResultRows) {
-      if (n > 0) out.write(','.toInt)
-      out.write(it.next().getBytes(StandardCharsets.UTF_8))
-      n += 1
-    }
-    out.write(suffix(it.hasNext).getBytes(StandardCharsets.UTF_8))
-    out.flush()
-  }
-
   private def handleQuery(ex: HttpExchange): Unit = {
     if (ex.getRequestMethod != "POST") { respond(ex, 405, """{"error":"POST required"}"""); return }
     Try {
@@ -171,11 +151,10 @@ class HttpApi(
                 else sel
               engine.executeStatement(enriched) match {
                 case Right(df) =>
-                  ex.getResponseHeaders.set("Content-Type", "application/json")
-                  ex.sendResponseHeaders(200, 0) // chunked: size unknown up front
-                  writeRecords(df, ex.getResponseBody, """{"records":[""",
-                    truncated => s"""],"truncated":$truncated}""")
-                  ex.close()
+                  // rendered before any header goes out: a failing job
+                  // still answers a clean 500
+                  respond(ex, 200, HttpApi.records(df, maxResultRows, """{"records":[""",
+                    truncated => s"""],"truncated":$truncated}"""))
                 case Left(err) => respond(ex, 400, s"""{"error":${mapper.writeValueAsString(err)}}""")
               }
           }
@@ -183,7 +162,7 @@ class HttpApi(
         case Left(err) => respond(ex, 400, s"""{"error":${mapper.writeValueAsString(err)}}""")
       }
     }.failed.foreach { err =>
-      // headers may already be sent mid-stream — then closing is all we can do
+      // headers may already be sent — then closing is all we can do
       Try(respond(ex, 500, s"""{"error":${mapper.writeValueAsString(err.getMessage)}}"""))
       Try(ex.close())
     }
@@ -225,8 +204,9 @@ class HttpApi(
       case Right(_) =>
         // fan out to live subscribers (reference: WriteCoordinator fires
         // PublishRecord to the PublisherActor on every write)
-        publish(Map("timestamp" -> stmt.timestamp.getOrElse(tc.currentTime), "value" -> value) ++
-          stmt.dimensions ++ stmt.tags)
+        hub.publish(Coords(stmt.db, stmt.namespace, stmt.metric),
+          Map("timestamp" -> stmt.timestamp.getOrElse(tc.currentTime), "value" -> value) ++
+            stmt.dimensions ++ stmt.tags)
         (200, """{"inserted":1}""")
       case Left(err) => (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
     }
@@ -283,13 +263,15 @@ class HttpApi(
         val out = ex.getResponseBody
         engine.executeStatement(sel) match {
           case Right(df) =>
-            // historical prefix streams under the same row cap as /query
-            writeRecords(df, out, """data: {"historical":[""", t => s"""],"truncated":$t}""" + "\n\n")
+            // historical prefix under the same row cap as /query
+            out.write(HttpApi.records(df, maxResultRows, """data: {"historical":[""",
+              t => s"""],"truncated":$t}""" + "\n\n").getBytes(StandardCharsets.UTF_8))
+            out.flush()
           case Left(_) => // metric may not exist yet — start empty
             out.write("data: {\"historical\":[],\"truncated\":false}\n\n".getBytes(StandardCharsets.UTF_8))
             out.flush()
         }
-        lazy val live: LiveSub = LiveSub(sel.where, new SseSubscriber(
+        lazy val live: LiveSub = LiveSub(Coords(sel.db, sel.namespace, sel.metric), sel.where, new SseSubscriber(
           write = bytes => { out.write(bytes); out.flush() },
           onDead = () => { hub.remove(live); ownSubs.remove(live); Try(ex.close()); () },
           capacity = sseQueueCapacity,
@@ -326,13 +308,6 @@ class HttpApi(
         handle(ex)(_ => (400, s"""{"error":${mapper.writeValueAsString(err)}}"""))
     }
   }
-
-  /** Enqueue a freshly-written record for every matching live subscription
-    * across ALL transports sharing the [[hub]] (SSE here, WS in [[WsApi]]).
-    * Non-blocking: each subscriber's [[SseSubscriber]] buffer absorbs the
-    * event and its own flusher writes it out — a stalled client stalls
-    * only itself (and is evicted on overflow), never the write path. */
-  private def publish(record: Map[String, Any]): Unit = hub.publish(record)
 
   /** hub subscriber count (post-eviction) — observability for specs. */
   def liveSubscriberCount: Int = hub.size
@@ -489,5 +464,25 @@ class HttpApi(
         }
       case _ => (404, """{"error":"unknown command"}""")
     }
+  }
+}
+
+object HttpApi {
+
+  /**
+   * `prefix + r1,r2,… + suffix(truncated)`: `df`'s first `maxRows` rows as
+   * JSON objects, byte-identical to `Dataset.toJSON` (the same generator
+   * and options, via `to_json(struct(*))`), and whether more rows exist.
+   * The star expands to the plan's output attributes without looking any
+   * name up, so duplicate names, dotted names and backticks render as they
+   * are. One bounded collect: `limit(maxRows + 1)` at the plan root
+   * makes Spark plan `CollectLimit` / `TakeOrderedAndProject`, so a
+   * `limit 1` reads one partition in one job, a trailing ORDER BY is a
+   * top-k instead of a range sort with its own sampling job, and the driver
+   * receives at most `maxRows + 1` rows per task result.
+   */
+  private[graft] def records(df: DataFrame, maxRows: Int, prefix: String, suffix: Boolean => String): String = {
+    val rows = df.select(to_json(struct(col("*")))).limit(maxRows + 1).collect()
+    rows.iterator.take(maxRows).map(_.getString(0)).mkString(prefix, ",", suffix(rows.length > maxRows))
   }
 }

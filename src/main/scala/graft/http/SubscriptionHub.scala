@@ -4,17 +4,20 @@ import scala.jdk.CollectionConverters._
 
 import com.fasterxml.jackson.databind.ObjectMapper
 
+import graft.catalog.Coords
 import graft.plan.TimeContext
 
-/** One live plain-query subscription: the registered predicate plus the
-  * subscriber's bounded event buffer (any transport framing). */
-final case class LiveSub(pred: Option[graft.sql.Ast.Predicate], sub: SseSubscriber)
+/** One live plain-query subscription: the metric it watches, the
+  * registered predicate, and the subscriber's bounded event buffer (any
+  * transport framing). */
+final case class LiveSub(coords: Coords, pred: Option[graft.sql.Ast.Predicate], sub: SseSubscriber)
 
 /**
  * Transport-independent live-subscription registry (the reference's
  * `PublisherActor` role, `nsdb-cluster/.../PublisherActor.scala`): SSE and
  * WebSocket transports register bounded subscribers here, and every write
- * fans out once through [[publish]] with per-record predicate matching.
+ * fans out once through [[publish]] to the subscriptions on the written
+ * metric, with per-record predicate matching.
  * Registration and fan-out are lock-free (copy-on-write list): `publish`
  * never blocks on subscriber health — each subscriber's own buffer absorbs
  * or evicts.
@@ -30,12 +33,27 @@ final class SubscriptionHub {
   /** registered subscriber count (post-eviction) — observability. */
   def size: Int = subs.size()
 
-  /** Enqueue a freshly-written record for every matching subscription. */
-  def publish(record: Map[String, Any]): Unit = {
+  /** Enqueue a record freshly written to metric `c` for every matching
+    * subscription on that metric. Non-blocking: each subscriber's
+    * [[SseSubscriber]] buffer absorbs the event and its own flusher writes
+    * it out — a stalled client stalls only itself (and is evicted on
+    * overflow), never the write path. */
+  def publish(c: Coords, record: Map[String, Any]): Unit = fanOut(record)(_.coords == c)
+
+  /** Enqueue a record whose metric the writer does not name for every
+    * matching subscription, whatever metric it watches — so subscriptions
+    * on other metrics receive it too. Kept only for `perfbench/`'s
+    * harness, which does not pass the metric yet; no write path of graft
+    * uses it. */
+  @deprecated("pass the written metric: publish(coords, record)", "0.1")
+  def publish(record: Map[String, Any]): Unit = fanOut(record)(_ => true)
+
+  private def fanOut(record: Map[String, Any])(watches: LiveSub => Boolean): Unit = {
     implicit val tc: TimeContext = TimeContext(System.currentTimeMillis())
+    lazy val json = mapper.writeValueAsString(record.asJava)
     subs.forEach { s =>
-      if (s.pred.forall(p => graft.exec.PredicateEval.matches(p, record, tc)))
-        s.sub.offer(mapper.writeValueAsString(record.asJava))
+      if (watches(s) && s.pred.forall(p => graft.exec.PredicateEval.matches(p, record, tc)))
+        s.sub.offer(json)
     }
   }
 }

@@ -10,6 +10,7 @@ import scala.util.Try
 import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.GraftEngine
+import graft.catalog.Coords
 import graft.plan.TimeContext
 import graft.security.GraftAuthProvider
 import graft.sql.{Ast, SqlParser}
@@ -228,7 +229,7 @@ class WsApi(
         // the subscriber's flusher delivers PRE-FRAMED text frames (one per
         // event, batched per drain tick into a single socket write)
         lazy val closer: AutoCloseable = () => live.sub.close()
-        lazy val live: LiveSub = LiveSub(sel.where, new SseSubscriber(
+        lazy val live: LiveSub = LiveSub(Coords(sel.db, sel.namespace, sel.metric), sel.where, new SseSubscriber(
           write = rawWrite,
           onDead = () => { hub.remove(live); owned.remove(closer); closeConn() },
           capacity = queueCapacity,
@@ -258,15 +259,7 @@ class WsApi(
   /** historical snapshot under the same row cap as the REST surface. */
   private def historicalJson(sel: Ast.SelectStatement)(implicit tc: TimeContext): String =
     engine.executeStatement(sel) match {
-      case Right(df) =>
-        val it = df.toJSON.toLocalIterator()
-        val sb = new StringBuilder("""{"historical":[""")
-        var n  = 0
-        while (it.hasNext && n < maxResultRows) {
-          if (n > 0) sb.append(',')
-          sb.append(it.next()); n += 1
-        }
-        sb.append("""],"truncated":""").append(it.hasNext).append('}').toString
+      case Right(df) => HttpApi.records(df, maxResultRows, """{"historical":[""", t => s"""],"truncated":$t}""")
       case Left(_) => """{"historical":[],"truncated":false}""" // metric may not exist yet
     }
 }

@@ -14,6 +14,7 @@ import io.netty.channel.socket.nio.NioServerSocketChannel
 import io.netty.handler.codec.http2.{DefaultHttp2DataFrame, DefaultHttp2Headers, DefaultHttp2HeadersFrame, Http2DataFrame, Http2FrameCodecBuilder, Http2HeadersFrame, Http2MultiplexHandler}
 
 import graft.GraftEngine
+import graft.catalog.Coords
 import graft.http.{LiveSub, SseSubscriber, SubscriptionHub}
 import graft.plan.TimeContext
 import graft.rpc.ProtoWire.{Reader, Writer}
@@ -250,7 +251,7 @@ class GrpcApi(
                 plain(req.value))
               val res = engine.executeStatement(stmt) match {
                 case Right(_) =>
-                  hub.publish(Map[String, Any](
+                  hub.publish(Coords(stmt.db, stmt.namespace, stmt.metric), Map[String, Any](
                     "timestamp" -> stmt.timestamp.getOrElse(tc.currentTime), "value" -> plain(req.value)) ++
                     stmt.dimensions ++ stmt.tags)
                   RpcInsertResult(completedSuccessfully = true)
@@ -353,7 +354,7 @@ class GrpcApi(
           // DATA frame (gRPC allows several length-prefixed messages per
           // frame)
           val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
-          lazy val sub: LiveSub = LiveSub(sel.where, new SseSubscriber(
+          lazy val sub: LiveSub = LiveSub(Coords(sel.db, sel.namespace, sel.metric), sel.where, new SseSubscriber(
             write = bytes => {
               if (ctx.channel().isActive)
                 ctx.writeAndFlush(new DefaultHttp2DataFrame(Unpooled.wrappedBuffer(bytes)))
@@ -416,7 +417,7 @@ class GrpcApi(
               val bit = RpcBit(ins.timestamp.getOrElse(tc.currentTime), toRpcValue(ins.value),
                 ins.dimensions.map { case (k, v) => k -> toRpcValue(v) },
                 ins.tags.map { case (k, v) => k -> toRpcValue(v) })
-              hub.publish(Map[String, Any](
+              hub.publish(Coords(ins.db, ins.namespace, ins.metric), Map[String, Any](
                 "timestamp" -> ins.timestamp.getOrElse(tc.currentTime), "value" -> ins.value) ++
                 ins.dimensions ++ ins.tags)
               SqlResponse(ins.db, ins.namespace, ins.metric, completedSuccessfully = true, records = Seq(bit))

@@ -153,6 +153,143 @@ class HttpApiSpec extends SparkTestBase {
     } finally api.stop()
   }
 
+  /** The rendering `/query` used before its single bounded collect: rows
+    * drained through `toJSON.toLocalIterator` up to the cap. */
+  private def toJsonRendering(df: org.apache.spark.sql.DataFrame, cap: Int): String = {
+    val it = df.toJSON.toLocalIterator()
+    val sb = new StringBuilder("""{"records":[""")
+    var n  = 0
+    while (it.hasNext && n < cap) {
+      if (n > 0) sb.append(',')
+      sb.append(it.next()); n += 1
+    }
+    sb.append("""],"truncated":""").append(it.hasNext).append('}').toString
+  }
+
+  it should "answer /query byte-identically to the toJSON rendering for every plan shape" in {
+    import spark.implicits._
+    val root   = Files.createTempDirectory("graft_http_parity_").toString
+    val wh     = new Warehouse(spark, root)
+    val engine = new GraftEngine(spark, Some(wh))
+    val day    = 86400000L
+    // four day-shards; `name` is null on some rows, so null fields are dropped
+    // from those objects exactly as toJSON drops them
+    wh.append(graft.catalog.Coords("db", "ns", "shapes"), Seq(
+      (0 * day + 100L, 1.5, Some("ann"), "x"),
+      (0 * day + 200L, 2.5, None, "y"),
+      (1 * day + 100L, 3.5, Some("bob"), "x"),
+      (1 * day + 300L, 4.5, Some("ann"), "y"),
+      (2 * day + 100L, 5.5, None, "x"),
+      (3 * day + 100L, 6.5, Some("cy"), "y")
+    ).toDF("timestamp", "value", "name", "grp"), tags = Set("grp", "name")).fold(fail(_), identity)
+    val statements = Seq(
+      "select * from shapes",                                                            // plain
+      "select * from shapes order by timestamp desc limit 3",                            // ordered-limit
+      s"select * from shapes where timestamp >= ${day} and timestamp < ${3 * day} order by timestamp", // time range
+      "select count(*), sum(*), min(*), max(*), avg(*) from shapes",                     // global
+      "select value, name, value from shapes order by timestamp",                        // repeated column
+      "select sum(value) from shapes group by grp order by grp",                         // tag
+      "select count(distinct name) from shapes group by grp order by grp",               // count distinct
+      s"select count(*) from shapes where timestamp in (0, ${4 * day}) group by interval 1 d" // interval
+    )
+    for (cap <- Seq(10000, 2)) {
+      val api  = new HttpApi(engine, maxResultRows = cap)
+      val port = api.start()
+      try statements.foreach { q =>
+        val (st, body) = post(port, "/query", s"""{"db":"db","namespace":"ns","queryString":"$q"}""")
+        withClue(s"$q (cap $cap): ") {
+          st shouldBe 200
+          body shouldBe toJsonRendering(engine.sql("db", "ns", q)(graft.plan.TimeContext(0L)).fold(fail(_), identity), cap)
+        }
+      } finally api.stop()
+    }
+  }
+
+  it should "render frames with names that need quoting and nulls like toJSON" in {
+    import spark.implicits._
+    val df = Seq((1L, Some("a"), Some(Seq(1, 2))), (2L, None, None), (3L, Some("c"), Some(Seq.empty[Int])))
+      .toDF("dotted.name", "we`ird col", "arr")
+    val render = (d: org.apache.spark.sql.DataFrame, cap: Int) =>
+      HttpApi.records(d, cap, """{"records":[""", t => s"""],"truncated":$t}""")
+    for (cap <- Seq(1, 3, 5)) render(df, cap) shouldBe toJsonRendering(df, cap)
+    // two columns under one name, as two aggregates of one kind answer
+    val dup = df.select(org.apache.spark.sql.functions.col("`dotted.name`").as("n"), df("arr").as("n"))
+    render(dup, 5) shouldBe toJsonRendering(dup, 5)
+    render(df.limit(0), 5) shouldBe """{"records":[],"truncated":false}"""
+  }
+
+  it should "answer select * limit 1 over a multi-shard metric with one job and one task" in {
+    import spark.implicits._
+    val root   = Files.createTempDirectory("graft_http_limit1_").toString
+    val wh     = new Warehouse(spark, root)
+    val engine = new GraftEngine(spark, Some(wh))
+    val day    = 86400000L
+    (0 until 6).foreach { d =>
+      wh.append(graft.catalog.Coords("db", "ns", "wide"),
+        Seq((d * day + 100L, d.toDouble, "x"), (d * day + 200L, d + 0.5, "y")).toDF("timestamp", "value", "grp"),
+        tags = Set("grp")).fold(fail(_), identity)
+    }
+    val api  = new HttpApi(engine)
+    val port = api.start()
+    val jobs  = new java.util.concurrent.atomic.AtomicInteger(0)
+    val tasks = new java.util.concurrent.atomic.AtomicInteger(0)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        jobs.incrementAndGet(); ()
+      }
+      override def onTaskEnd(te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet(); ()
+      }
+    }
+    val q = """{"db":"db","namespace":"ns","queryString":"select * from wide limit 1"}"""
+    try {
+      post(port, "/query", q)._1 shouldBe 200 // warm: resolve + cache the metric
+      Thread.sleep(500)                        // let the listener bus drain
+      spark.sparkContext.addSparkListener(listener)
+      val (st, body) = post(port, "/query", q)
+      st shouldBe 200
+      new com.fasterxml.jackson.databind.ObjectMapper().readTree(body).get("records").size() shouldBe 1
+      Thread.sleep(500)
+      jobs.get() shouldBe 1
+      tasks.get() shouldBe 1
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      api.stop()
+    }
+  }
+
+  it should "push a live write only to subscriptions on the written metric" in {
+    val root   = Files.createTempDirectory("graft_sse_scope_").toString
+    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val api    = new HttpApi(engine)
+    val port   = api.start()
+    try {
+      Seq("ma", "mb").foreach { m =>
+        post(port, "/data",
+          s"""{"db":"db","namespace":"ns","metric":"$m","bit":{"timestamp":1000,"value":1.0}}""")._1 shouldBe 200
+      }
+      val received = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val q   = java.net.URLEncoder.encode("select * from ma where value > 3", "UTF-8")
+      val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/subscribe?db=db&namespace=ns&q=$q")).GET().build()
+      client.sendAsync(req, HttpResponse.BodyHandlers.fromLineSubscriber(
+        new java.util.concurrent.Flow.Subscriber[String] {
+          def onSubscribe(s: java.util.concurrent.Flow.Subscription): Unit = s.request(Long.MaxValue)
+          def onNext(line: String): Unit = if (line.startsWith("data: ")) received.add(line.stripPrefix("data: "))
+          def onError(t: Throwable): Unit = ()
+          def onComplete(): Unit = ()
+        }))
+      received.poll(20, java.util.concurrent.TimeUnit.SECONDS) should include("historical")
+      // a write to metric mb matches the predicate but is not ma's
+      post(port, "/data",
+        """{"db":"db","namespace":"ns","metric":"mb","bit":{"timestamp":2000,"value":8.0}}""")._1 shouldBe 200
+      received.poll(2, java.util.concurrent.TimeUnit.SECONDS) shouldBe null
+      // the same write to ma arrives
+      post(port, "/data",
+        """{"db":"db","namespace":"ns","metric":"ma","bit":{"timestamp":3000,"value":9.0}}""")._1 shouldBe 200
+      received.poll(20, java.util.concurrent.TimeUnit.SECONDS) should include(""""value":9.0""")
+    } finally api.stop()
+  }
+
   it should "answer /health with SERVING up and NOT_SERVING down, never hanging on a stalled probe" in {
     val root   = Files.createTempDirectory("graft_health_").toString
     val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
