@@ -4,6 +4,7 @@ import java.lang.management.ManagementFactory
 
 import scala.jdk.CollectionConverters._
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.Checkpoints
@@ -62,11 +63,8 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus  = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // small SF files: split finer so all cores participate
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .config("spark.sql.files.openCostInBytes", "1m")
@@ -93,6 +91,8 @@ object Bench {
     def metaspaceUsedMb: Long = ManagementFactory.getMemoryPoolMXBeans.asScala
       .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum >> 20
     def persistedRdds: Int = spark.sparkContext.getPersistentRDDs.size
+    // generated classes compiled so far (JVM-wide; a codegen cache hit adds none)
+    def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     // floor = min over passes: absorbs one-off JIT/IO/scheduler noise
     // (observed ±2-4x swings on shared hardware — a single noisy window
@@ -205,16 +205,21 @@ object Bench {
     // IS the relation ([[SparkEntry.timedBuilderGates]]) are REBUILT inside
     // that gate's timed row — those six floors measure real work; the
     // prebuild copy only shields earlier-sweeping consumers.
-    val prebuild: Seq[(String, Double)] = {
+    // A relation whose build threw is listed under `prebuild_failed` with
+    // its error and seconds, and stays out of `prebuild`/`prebuild_sec`.
+    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+    val (prebuildFailed, prebuilt) = {
       val pt0 = System.nanoTime()
-      val r = try SparkEntry.prebuildShared(spark, sfDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] prebuild failed: ${e.getMessage}"); Seq.empty }
+      val r = SparkEntry.prebuildShared(spark, sfDir)
+      r.foreach(p => p.error.foreach(e => System.err.println(s"[bench] prebuild ${p.name} failed: $e")))
       System.err.println(f"[bench] shared-relation prebuild at $sfDir in ${(System.nanoTime() - pt0) / 1e9}%.0f s")
-      r
+      r.partition(_.error.isDefined)
     }
-    val prebuildSec  = prebuild.map(_._2).sum
-    val prebuildJson = prebuild.map { case (n, t) => f""""$n":$t%.3f""" }.mkString("{", ",", "}")
+    val prebuildSec  = prebuilt.map(_.seconds).sum
+    val prebuildJson = prebuilt.map(p => f""""${p.name}":${p.seconds}%.3f""").mkString("{", ",", "}")
+    val prebuildFailedJson = prebuildFailed.map { p =>
+      f""""${p.name}":{"seconds":${p.seconds}%.3f,"error":${mapper.writeValueAsString(p.error.get)}}"""
+    }.mkString("{", ",", "}")
     val buildersJson = SparkEntry.timedBuilderGates.toSeq.sortBy(_._1)
       .map { case (g, rel) => s""""$g":"$rel"""" }.mkString("{", ",", "}")
 
@@ -255,7 +260,6 @@ object Bench {
     case class QRow(name: String, floor: Double, worst: Double, cold: Double, runs: Int)
     def jmap(rs: Seq[QRow])(v: QRow => String): String =
       rs.map(r => "\"" + r.name + "\":" + v(r)).mkString("{", ",", "}")
-    val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     def artifactLine(rs: Seq[QRow], done: Boolean): String = {
       // failed runs never enter a floor; they are listed here instead
       val failed = names.indices.filter(i => runs(i).failed.nonEmpty).map { i =>
@@ -268,7 +272,7 @@ object Bench {
       val total = rs.map(_.floor).sum
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs,"cold":$cold,"runs":$rc,""" +
         f""""prebuild_sec":$prebuildSec%.3f,"warmup_sec":$warmupSec%.3f,"prebuild":$prebuildJson,""" +
-        f""""timed_builders":$buildersJson,"failed":$failed,""" +
+        f""""prebuild_failed":$prebuildFailedJson,"timed_builders":$buildersJson,"failed":$failed,""" +
         f""""sf":"$sfDir","fingerprint":$fingerprint,"complete":$done}"""
     }
     def writeSelf(rs: Seq[QRow], done: Boolean): Unit = {
@@ -296,6 +300,7 @@ object Bench {
       }
     def oneRun(i: Int): Unit = {
       val gc0 = gcMillis
+      val cg0 = codegenCompiles
       val run = timed {
         val s = sessionFor(names(i))
         // label the jobs (guide §1): event logs / any attached UI attribute
@@ -315,7 +320,7 @@ object Bench {
       System.err.println(
         f"[bench] ${names(i)}%-16s ${run.seconds}%8.3f s  floor=$floor%8s  rows=${run.rows}%-8d " +
           f"pass=${times(i).length + runs(i).failed.length}  " +
-          f"cc=${codeCacheUsedMb}%3dMB meta=${metaspaceUsedMb}%3dMB gc+=${gcMillis - gc0}%4dms rdds=$persistedRdds%3d " +
+          f"cc=${codeCacheUsedMb}%3dMB meta=${metaspaceUsedMb}%3dMB gc+=${gcMillis - gc0}%4dms cg+=${codegenCompiles - cg0}%3d rdds=$persistedRdds%3d " +
           f"t=${elapsedS}%5.0fs")
       writeSelf(snapshot(), done = false)
     }

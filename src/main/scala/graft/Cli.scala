@@ -2,8 +2,6 @@ package graft
 
 import scala.io.StdIn
 
-import org.apache.spark.sql.SparkSession
-
 import graft.plan.TimeContext
 import graft.sql.{Ast, CommandParser}
 
@@ -19,10 +17,8 @@ object Cli {
   def main(args: Array[String]): Unit = {
     val root = args.headOption.getOrElse(sys.props("java.io.tmpdir") + "/graft_warehouse")
     val db   = args.lift(1).getOrElse("default")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(4)
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.SparkPlan
 
 /** Diagnostics: dump physical plans of representative queries to audit
@@ -53,10 +52,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val checkMode  = args.contains("--check")
     val digestMode = args.contains("--digest") || checkMode
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(4).master("local[4]")
       // static plans for the committed digest (see scaladoc)
       .config("spark.sql.adaptive.enabled", (!digestMode).toString)
       .config("spark.ui.enabled", "false")

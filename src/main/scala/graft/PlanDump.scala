@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.ExplainMode
 
 /** Diagnostics: write `explain("formatted")` of named gates to files —
@@ -19,10 +18,7 @@ object PlanDump {
     java.nio.file.Files.createDirectories(outDir)
     val suffix = args(1)
     val dir = args(2)
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
+    val spark = GraftSession.builder(4).master("local[4]")
       .config("spark.sql.adaptive.enabled", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()

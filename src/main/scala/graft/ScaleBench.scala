@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 import graft.pipeline.Checkpoints
 
 /** Scale-probe harness: measures how the flagship scale-path queries grow
@@ -154,11 +152,8 @@ object ScaleBench {
     val workDir = if (args.length > 1) args(1) else "/tmp/graft_scale"
     val runs    = if (args.length > 2) args(2).toInt else 3
     val cpus    = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.files.maxPartitionBytes", "8m")
       .config("spark.sql.files.openCostInBytes", "1m")
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",

@@ -364,6 +364,10 @@ object SparkEntry {
     })
   }
 
+  /** One shared relation's prebuild: its build seconds, and the error if
+    * the build threw. */
+  final case class Prebuilt(name: String, seconds: Double, error: Option[String])
+
   /** Build every session-shared relation for `(s, d)` UNTIMED — the bench
     * calls this between warm-up and pass 1 so a CONSUMER gate's timed row
     * measures the gate's own work, never the first-consumer build of a
@@ -372,13 +376,16 @@ object SparkEntry {
     * (amortized-but-attributed, VERDICT r17 item 1). Relations that have a
     * designated TIMED BUILDER gate ([[timedBuilderGates]]) are rebuilt
     * inside that gate's timed row as well — the prebuild here only keeps
-    * earlier-sweeping consumers from absorbing the build. */
-  def prebuildShared(s: SparkSession, d: String): Seq[(String, Double)] = {
-    val out = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
+    * earlier-sweeping consumers from absorbing the build. A relation whose
+    * build throws does not stop the others: its entry carries the error. */
+  def prebuildShared(s: SparkSession, d: String): Seq[Prebuilt] = {
+    val out = scala.collection.mutable.ArrayBuffer.empty[Prebuilt]
     def timed(name: String)(body: => Any): Unit = {
       val t0 = System.nanoTime()
-      try body catch { case _: Throwable => () }
-      out += name -> (System.nanoTime() - t0) / 1e9
+      val error =
+        try { body; None }
+        catch { case e: Throwable => Some(String.valueOf(e.getMessage)) }
+      out += Prebuilt(name, (System.nanoTime() - t0) / 1e9, error)
     }
     timed("media_frames")  { mmPayload(s, d); mmAv(s, d) }
     timed("events_by_user") { sharedEvByUser(s, d) }

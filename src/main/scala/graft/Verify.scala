@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -7,11 +6,8 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
+    val spark = GraftSession.builder(cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       // same local-mode AQE sizing as Bench (see the comment there)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
@@ -25,9 +21,10 @@ object Verify {
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     def keep(name: String) = only.forall(_.contains(name))
     // same per-query JVM health probes as Bench (code cache, GC delta,
-    // live persisted RDDs): a 100+-plan single-JVM sweep is exactly the
-    // session shape that once collapsed late queries 20-50x — if it ever
-    // recurs here, the verify log attributes it without a rerun
+    // generated-class compiles, live persisted RDDs): a 100+-plan
+    // single-JVM sweep is exactly the session shape that once collapsed
+    // late queries 20-50x — if it ever recurs here, the verify log
+    // attributes it without a rerun
     val ccPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
     def ccUsedMb: Long = {
       var s = 0L; ccPools.forEach(p => if (p.getName.contains("CodeHeap")) s += p.getUsage.getUsed); s >> 20
@@ -37,9 +34,11 @@ object Verify {
       java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.forEach(g => s += g.getCollectionTime)
       s
     }
+    def cgCount: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       val t0  = System.nanoTime()
       val gc0 = gcMs
+      val cg0 = cgCount
       try {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
@@ -48,7 +47,7 @@ object Verify {
         // into the late-session degradation either
         graft.pipeline.Checkpoints.free(df)
         System.err.println(f"[verify] $name%-16s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
-          f"cc=${ccUsedMb}%3dMB gc+=${gcMs - gc0}%4dms rdds=${spark.sparkContext.getPersistentRDDs.size}%3d")
+          f"cc=${ccUsedMb}%3dMB gc+=${gcMs - gc0}%4dms cg+=${cgCount - cg0}%3d rdds=${spark.sparkContext.getPersistentRDDs.size}%3d")
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -16,9 +16,8 @@ import graft.sql.Ast
 object LockProbeMain {
   def main(args: Array[String]): Unit = {
     val Array(root, metric, nStr) = args
-    val spark = org.apache.spark.sql.SparkSession.builder()
+    val spark = GraftSession.builder(2)
       .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     import spark.implicits._
