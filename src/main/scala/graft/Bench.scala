@@ -189,7 +189,8 @@ object Bench {
       // the warm-dir copies of the session-shared relations served their
       // purpose (JIT) — release them so they do not occupy executor
       // storage for the whole timed sweep
-      try SparkEntry.releaseShared(spark, warmDir) catch { case _: Throwable => () }
+      SparkEntry.releaseShared(spark, warmDir).foreach(f =>
+        System.err.println(s"[bench] release ${f.name} failed: ${f.error}"))
     }
 
     // UNTIMED build of the session-shared relations at the TIMED dir: a
