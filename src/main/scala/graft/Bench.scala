@@ -3,6 +3,7 @@ package graft
 import java.lang.management.ManagementFactory
 
 import scala.jdk.CollectionConverters._
+import scala.util.control.NonFatal
 
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
@@ -147,9 +148,9 @@ object Bench {
     val oneTimeSetup = Set("tx_bpeenc")
     (Seq("g_count" -> SparkEntry.queries("g_count")) ++ selected.headOption ++
       selected.filter(q => oneTimeSetup(q._1))).foreach {
-      case (_, fn) =>
+      case (name, fn) =>
         try { val df = fn(spark, sfDir); df.count(); Checkpoints.free(df) }
-        catch { case _: Throwable => () }
+        catch { case NonFatal(e) => System.err.println(s"[bench] warmup $name failed: $e") }
     }
 
     // PER-GATE untimed warm-up at the tiny SF (round 17): the ascending-
@@ -236,8 +237,12 @@ object Bench {
       val tables = Option(dir.listFiles()).getOrElse(Array.empty)
         .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
       tables.map { f =>
-        val rows = try spark.read.parquet(f.getPath).count() catch { case _: Throwable => -1L }
-        s""""${f.getName.stripSuffix(".parquet")}":{"bytes":${f.length()},"mtime":${f.lastModified()},"rows":$rows}"""
+        val table = f.getName.stripSuffix(".parquet")
+        val rows =
+          try spark.read.parquet(f.getPath).count()
+          catch { case NonFatal(e) =>
+            System.err.println(s"[bench] fingerprint $table failed: $e"); -1L }
+        s""""$table":{"bytes":${f.length()},"mtime":${f.lastModified()},"rows":$rows}"""
       }.mkString("{", ",", "}")
     }
 

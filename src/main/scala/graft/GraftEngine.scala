@@ -82,8 +82,8 @@ class GraftEngine(val spark: SparkSession, val warehouse: Option[graft.catalog.W
    * a registered metric: eligible temporal aggregations are then served
    * from the stats table instead of scanning raw points — the engine's
    * facet-index read path (see [[graft.exec.RollupRef]]). The caller owns
-   * freshness: rebuild or stream-maintain the stats
-   * ([[graft.streaming.StreamingRollup]]) as the metric grows.
+   * freshness: rebuild or [[graft.operators.Rollup.merge]] the stats as
+   * the metric grows.
    */
   def attachRollup(db: String, namespace: String, metric: String,
                    stats: DataFrame, stepMs: Long): Either[String, Unit] =
@@ -164,9 +164,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: Option[graft.catalog.W
       case Ast.Explain(q) =>
         // EXPLAIN (beyond the reference surface): the planner's verdict as
         // (property, value) rows — shape, projection, predicate, ordering —
-        // without touching data. NOW resolves against the wall clock, as a
-        // directly-executed statement would.
-        implicit val tc: TimeContext = TimeContext(System.currentTimeMillis())
+        // without touching data.
         def opt[T](o: Option[T]): String = o.map(_.toString).getOrElse("-")
         plan(db, namespace, q).map {
           case PlannedQuery.Simple(fields, distinct, where, order, limit) => Seq(
@@ -228,7 +226,7 @@ class GraftEngine(val spark: SparkSession, val warehouse: Option[graft.catalog.W
     }
 
   /** Plan without executing (validation surface for tests / error parity). */
-  def plan(db: String, namespace: String, query: String)(implicit tc: TimeContext): Either[String, PlannedQuery] =
+  def plan(db: String, namespace: String, query: String): Either[String, PlannedQuery] =
     SqlParser.parse(db, namespace, query).flatMap {
       case s: Ast.SelectStatement =>
         resolve(s.db, s.namespace, s.metric).flatMap(ref => Planner.plan(s, ref.schema))

@@ -1718,7 +1718,7 @@ object OracleGen {
   /** mirror of [[Similarity.matryoshkaTopK]]: prefix-dimension cosine
     * shortlist (the same component fold stopped at `dPrefix`), exact
     * full-dimension re-rank of the `nCand` candidates. */
-  def matryoshkaTopKSql(dPrefix: Int, nCand: Int, k: Int, dim: Int, qid: Long = 0L): String =
+  def matryoshkaTopKSql(dPrefix: Int, nCand: Int, k: Int, qid: Long = 0L): String =
     s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
        |q AS (SELECT embedding AS qe FROM e WHERE vec_id = $qid),
        |cd AS (SELECT e.vec_id AS id FROM e, q

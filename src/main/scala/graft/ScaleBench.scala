@@ -116,7 +116,6 @@ object ScaleBench {
     },
     // st_hops: same fractional support convention as st_ppr below
     "st_hops" -> { (s, d) =>
-      import org.apache.spark.sql.functions._
       val edges = graft.operators.Star.coPurchaseEdges(
         s.read.parquet(s"$d/lineitem.parquet"),
         minSupportFrac = Some(2.0 / 150000.0))
@@ -127,7 +126,6 @@ object ScaleBench {
     // cut of 2 would admit every replicated pair and densify the graph
     // with the factor instead of with the data's structure)
     "st_ppr" -> { (s, d) =>
-      import org.apache.spark.sql.functions._
       val edges = graft.operators.Star.coPurchaseEdges(
         s.read.parquet(s"$d/lineitem.parquet"),
         minSupportFrac = Some(2.0 / 150000.0))

@@ -370,7 +370,7 @@ object SparkEntry {
         timeMirror = Some(mirror))
       val canonical = e.metricRef("graft", "main", "events_rolled").get.df
       // materialized ONCE per testdata dir as real parquet (the production
-      // shape — StreamingRollup.maintain writes the same stats table): the
+      // shape — Warehouse.append maintains the same stats table): the
       // served gates read a precomputed table, never a lazy re-derivation,
       // and the harness's per-query Checkpoints.free can't evict it
       // v2: keyed by event_type (path versioned so a schema change can
@@ -1200,7 +1200,7 @@ object SparkEntry {
     // cut-off signature the ACF alone cannot show
     "ts_pacf" -> ((s, d) =>
       TimeSeries.pacfProfile(evUs(s, d), Seq("event_type"), "ts", "value", HourUs,
-        maxLag = 4, gridIn = Some(sharedGridSeries(s, d))).orderBy("event_type")),
+        maxLag = 4).orderBy("event_type")),
     // lagged cross-correlation click→error on the shared hourly grid (one
     // conditional-agg pass; every statistic a ts-ordered fold)
     "ts_xcorr" -> ((s, d) =>
@@ -2260,7 +2260,7 @@ object SparkEntry {
     "ann_pq"    -> OracleGen.pqTopKSql(m = 8, kpq = 16, dim = 64, k = 20),
     "ann_ivfpq" -> OracleGen.ivfPqTopKSql(nlist = 16, nprobe = 4, m = 8, kpq = 16, dim = 64, k = 20),
     "ann_pq_rerank" -> OracleGen.pqRerankSql(m = 8, kpq = 16, dim = 64, k = 20, nCand = 60),
-    "ann_mrl" -> OracleGen.matryoshkaTopKSql(dPrefix = 16, nCand = 60, k = 20, dim = 64),
+    "ann_mrl" -> OracleGen.matryoshkaTopKSql(dPrefix = 16, nCand = 60, k = 20),
     "ann_int8" -> OracleGen.int8RerankSql(nCand = 60, k = 20, dim = 64),
     "ann_1bit" -> OracleGen.oneBitRerankSql(nCand = 60, k = 20, dim = 64),
     // derived sizing from the SAME functions the Spark side runs, applied

@@ -785,8 +785,7 @@ object Maintenance {
     * metric and the whole report is queryable ([[lastSweep]], surfaced over
     * the REST command API). */
   final case class SweepReport(atMs: Long, metricsSwept: Int, evictedShards: Int,
-                               compactedShards: Int, errors: Seq[String],
-                               sidecarsRecapped: Int = 0)
+                               compactedShards: Int, errors: Seq[String])
 
   @volatile private var last: Option[SweepReport] = None
 
@@ -814,13 +813,7 @@ object Maintenance {
         case scala.util.control.NonFatal(e) => errors += s"$db.$ns.$m sweep: ${e.getMessage}"
       }
     }
-    // sidecar re-cap for registered streaming-gate indexes — the banded
-    // relation's bucket cap erodes as accepted batches append un-capped
-    // rows; the sweep restores it (reference parity: the periodic
-    // retention check, MetadataCoordinator.scala:83-84,198)
-    val (recapped, sidecarErrs) = graft.pipeline.StreamingDedup.compactSidecars(wh.spark)
-    errors ++= sidecarErrs
-    val report = SweepReport(tc.currentTime, swept, evicted, compacted, errors.result(), recapped)
+    val report = SweepReport(tc.currentTime, swept, evicted, compacted, errors.result())
     report.errors.foreach(e => System.err.println(s"[graft-maintenance] $e"))
     last = Some(report)
     report

@@ -76,7 +76,7 @@ class HttpApi(
     server.createContext("/data", (ex: HttpExchange) => handle(ex)(handleData))
     server.createContext("/commands", (ex: HttpExchange) => handle(ex)(handleCommands))
     server.createContext("/subscribe", (ex: HttpExchange) => handleSubscribe(ex))
-    server.createContext("/health", (ex: HttpExchange) => handle(ex)(handleHealth))
+    server.createContext("/health", (ex: HttpExchange) => handle(ex)(_ => handleHealth()))
     server.setExecutor(java.util.concurrent.Executors.newCachedThreadPool(r => {
       val t = new Thread(r, "graft-http"); t.setDaemon(true); t
     }))
@@ -361,7 +361,7 @@ class HttpApi(
     * NOT_SERVING with the reason — what a load balancer needs to rotate a
     * bad node out. Deliberately unauthenticated (health probes run before
     * credentials exist), and it leaks no names — only up/down facts. */
-  private def handleHealth(ex: HttpExchange): (Int, String) = {
+  private def handleHealth(): (Int, String) = {
     val sparkUp = !engine.spark.sparkContext.isStopped
     val wh: Either[String, String] = engine.warehouse match {
       case None    => Right("none")
@@ -383,7 +383,7 @@ class HttpApi(
     //   GET /commands/<db>/namespaces                    → namespaces
     //   GET /commands/<db>/<namespace>/metrics           → metrics
     //   GET /commands/<db>/<namespace>/<metric>/describe → field name/type/class
-    def listOf(key: String, cmd: Ast.Command, db: String = "", ns: String = ""): (Int, String) =
+    def listOf(key: String, cmd: Ast.Command, db: String, ns: String = ""): (Int, String) =
       engine.command(db, ns, cmd) match {
         case Right(rows) =>
           (200, rows.flatten.map(mapper.writeValueAsString).mkString(s"""{"$key":[""", ",", "]}"))
@@ -417,7 +417,7 @@ class HttpApi(
           case None => (200, """{"lastSweep":null}""")
           case Some(r) =>
             val errs = r.errors.map(mapper.writeValueAsString).mkString("[", ",", "]")
-            (200, s"""{"lastSweep":{"atMs":${r.atMs},"metricsSwept":${r.metricsSwept},"evictedShards":${r.evictedShards},"compactedShards":${r.compactedShards},"sidecarsRecapped":${r.sidecarsRecapped},"errors":$errs}}""")
+            (200, s"""{"lastSweep":{"atMs":${r.atMs},"metricsSwept":${r.metricsSwept},"evictedShards":${r.evictedShards},"compactedShards":${r.compactedShards},"errors":$errs}}""")
         }
       case Array("commands", db, "namespaces") =>
         guarded(auth.checkDbAuth(db, payload, writePermission = false))(

@@ -73,17 +73,6 @@ final case class MetricSchema(fields: Map[String, MetricField]) {
 object MetricSchema {
   val FieldClassKey = "graft.fieldClass"
 
-  /** Rebuild from a StructType written by [[MetricSchema.toStruct]]. */
-  def fromStruct(st: StructType): MetricSchema =
-    MetricSchema(st.fields.map { f =>
-      val cls =
-        if (f.metadata.contains(FieldClassKey)) FieldClass.fromName(f.metadata.getString(FieldClassKey))
-        else if (f.name == "timestamp") FieldClass.Timestamp
-        else if (f.name == "value") FieldClass.Value
-        else FieldClass.Dimension
-      f.name -> MetricField(f.name, f.dataType, cls)
-    }.toMap)
-
   /** Classify an arbitrary source schema into a metric schema. */
   def fromMapping(st: StructType, tagNames: Set[String]): MetricSchema =
     MetricSchema(st.fields.map { f =>

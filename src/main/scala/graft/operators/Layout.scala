@@ -4,16 +4,15 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /**
- * Multi-dimensional DATA LAYOUT for scan pruning — the missing third leg
- * next to time partitioning (`shard=` directories) and hash bucketing
- * ([[Bucketed]]): Z-ORDER (Morton) clustering. Sorting a table by one
- * column makes that column's per-file min/max ranges tight and every
- * other column's ranges useless; interleaving the bits of TWO filter
- * columns into one sort key makes BOTH columns' per-file ranges tight
- * simultaneously, so parquet row-group min/max statistics prune scans for
- * predicates on either column (or both). At 100 TB this is the difference
- * between "skip 15/16 of the files" and "read everything" for the second
- * filter column.
+ * Multi-dimensional DATA LAYOUT for scan pruning next to time
+ * partitioning (`shard=` directories): Z-ORDER (Morton) clustering.
+ * Sorting a table by one column makes that column's per-file min/max
+ * ranges tight and every other column's ranges useless; interleaving the
+ * bits of TWO filter columns into one sort key makes BOTH columns' per-file
+ * ranges tight simultaneously, so parquet row-group min/max statistics
+ * prune scans for predicates on either column (or both). At 100 TB this
+ * is the difference between "skip 15/16 of the files" and "read
+ * everything" for the second filter column.
  *
  * The key is pure exact integer bit arithmetic — deterministic, codegen'd,
  * engine-portable — so both the layout decision and the skipping evidence
@@ -142,30 +141,6 @@ object Layout {
       .agg(count(lit(1)).as("n"),
         min(col("__x")).as("x_min"), max(col("__x")).as("x_max"),
         min(col("__y")).as("y_min"), max(col("__y")).as("y_max"))
-  }
-
-  /**
-   * Z-ORDER LAYOUT: range-partition on the Morton key of `(xCol, yCol)`
-   * and sort within partitions — the write-side clustering step before a
-   * parquet write (each output file then covers one bounded box of the
-   * (x, y) plane, and row-group min/max prunes on both columns).
-   * Range-bound SAMPLING makes the partition cut points
-   * non-deterministic run to run; the LAYOUT is an optimization, not a
-   * semantics — readers never depend on which file a row landed in.
-   */
-  def zorderBy(
-      df: DataFrame,
-      xCol: String,
-      yCol: String,
-      bits: Int = 16,
-      partitions: Int = 0
-  ): DataFrame = {
-    val key = mortonKey(col(xCol), col(yCol), bits).as("__z")
-    val keyed = df.withColumn("__z", key)
-    val parted =
-      if (partitions > 0) keyed.repartitionByRange(partitions, col("__z"))
-      else keyed.repartitionByRange(col("__z"))
-    parted.sortWithinPartitions(col("__z")).drop("__z")
   }
 
   /**

@@ -85,8 +85,8 @@ object Rollup {
     coalesceStats(a.unionByName(b))
 
   /** Re-aggregate a stats table that holds several segments per group
-    * (the single-frame half of [[merge]]; also the merge-at-read step of
-    * [[graft.streaming.StreamingRollup]]'s segment log). */
+    * (the single-frame half of [[merge]]; also the warehouse's merge-at-read
+    * step over its appended rollup segments). */
   def coalesceStats(stats: DataFrame): DataFrame = {
     val groupCols = stats.columns.filterNot(Set("n", "vsum", "vmin", "vmax")).toSeq
     stats

@@ -706,7 +706,7 @@ object TimeSeries {
       tsCol: String,
       valueCol: String,
       step: Long,
-      gridIn: Option[DataFrame] = None
+      gridIn: Option[DataFrame]
   ): DataFrame = gridIn match {
     // a PRE-COLLECTED series relation ([[collectedGridSeries]]) passes
     // straight through: ~13 scan-fold gates fold the same per-key arrays,
@@ -1365,8 +1365,7 @@ object TimeSeries {
       tsCol: String,
       valueCol: String,
       step: Long,
-      maxLag: Int = 4,
-      gridIn: Option[DataFrame] = None
+      maxLag: Int = 4
   ): DataFrame = {
     val base = acfProfile(df, keys, tsCol, valueCol, step, maxLag)
     val withPhi = pacfExprs(maxLag, k => s"acf_$k").foldLeft(base) {

@@ -144,8 +144,7 @@ object Chat {
    * rows: parse once, keep structurally valid conversations whose
    * loss-mask share clears `minMaskRatio`, emit the row with `n_turns`
    * and the 6-dp `mask_ratio` appended. Works identically on a static
-   * frame (the oracle gate) and a streaming one (append mode, no state) —
-   * chain [[StreamingCurate]] / [[StreamingDedup]] stages after it.
+   * frame (the oracle gate) and a streaming one (append mode, no state).
    */
   def chatGateStream(
       stream: DataFrame,

@@ -764,7 +764,7 @@ object Dedup {
 
   /**
    * MinHash signature index of a corpus: `(id, sh, sig)`. Built once and
-   * persisted ([[writeSignatureIndex]]); every future ingest batch's
+   * persisted as parquet; every future ingest batch's
    * near-dup gate joins against it instead of re-shingling 100 TB of
    * history. Growing the corpus = appending the accepted batch's rows.
    */
@@ -780,24 +780,16 @@ object Dedup {
       .withColumn("sig", GraftFunctions.minhash(col("sh"), numHashes))
   }
 
-  def writeSignatureIndex(index: DataFrame, path: String): Unit =
-    index.write.mode("overwrite").parquet(path)
-
-  def readSignatureIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /**
    * The capped corpus band relation `(id, band, bucket)` with degenerate
    * buckets already dropped — the ONE corpus-wide aggregation the gate
-   * needs. Precompute it alongside the signature index (and persist it,
-   * e.g. parquet partitioned by `band`) so each ingest batch pays only the
-   * bucket join, never a rescan-and-count of 100 TB of corpus buckets.
+   * needs.
    */
-  def bandedIndex(
+  private def bandedIndex(
       corpusIndex: DataFrame,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      maxBucket: Int = 1000
+      numHashes: Int,
+      bands: Int,
+      maxBucket: Int
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     val banded = bandBuckets(corpusIndex, bands, numHashes / bands)
@@ -805,15 +797,6 @@ object Dedup {
       .filter(col("count") <= maxBucket)
       .select(col("band"), col("bucket"))
     banded.join(smallBuckets, Seq("band", "bucket"), "left_semi")
-  }
-
-  /** The UNCAPPED `(id, band, bucket)` band relation of a signature table —
-    * what an ingest loop appends to a persisted [[bandedIndex]] sidecar for
-    * each accepted batch (the cap is a corpus-build-time filter, re-applied
-    * on periodic rebuilds, not per batch). */
-  def bandRelation(sigRel: DataFrame, numHashes: Int = 64, bands: Int = 16): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    bandBuckets(sigRel, bands, numHashes / bands)
   }
 
   /**
@@ -826,9 +809,8 @@ object Dedup {
    * future batch. Scale shape: the index is a parquet table; the batch
    * side is micro-batch-sized, so AQE broadcasts the batch bands against
    * the corpus bucket scan and the only wide shuffle is the corpus bucket
-   * count — itself precomputable. Candidates dedupe on bare id pairs
-   * before the shingle arrays join back for the verify
-   * (same discipline as [[minhashLshPairs]]).
+   * count. Candidates dedupe on bare id pairs before the shingle arrays
+   * join back for the verify (same discipline as [[minhashLshPairs]]).
    */
   def gateAgainstCorpus(
       newDocs: DataFrame,
@@ -839,11 +821,7 @@ object Dedup {
       shingleK: Int = 3,
       maxBucket: Int = 1000,
       textCol: String = "text",
-      idCol: String = "doc_id",
-      // a persisted [[bandedIndex]] — MUST have been built with the same
-      // numHashes/bands/maxBucket as this call, or buckets silently never
-      // collide and the gate passes everything through
-      corpusBanded: Option[DataFrame] = None
+      idCol: String = "doc_id"
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
     GraftFunctions.register(newDocs.sparkSession)
@@ -851,7 +829,7 @@ object Dedup {
     val fresh = signatureIndex(newDocs, numHashes, shingleK, textCol, idCol).pinned
 
     val freshBanded  = bandBuckets(fresh, bands, rows)
-    val cappedCorpus = corpusBanded.getOrElse(bandedIndex(corpusIndex, numHashes, bands, maxBucket))
+    val cappedCorpus = bandedIndex(corpusIndex, numHashes, bands, maxBucket)
 
     val candidates = freshBanded.alias("n")
       .join(cappedCorpus.alias("c"), col("n.band") === col("c.band") && col("n.bucket") === col("c.bucket"))

@@ -815,9 +815,6 @@ object Retrieval {
       .repartition(col("term")).sortWithinPartitions(col("term"), col(idCol), col("pos"))
       .write.mode("overwrite").parquet(path)
 
-  def readPositionalIndex(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
   /**
    * PROXIMITY MATCH (span-near) — documents where `second` occurs within
    * `slop` positions AFTER `first`, with the pair count. Generalizes
@@ -913,12 +910,10 @@ object Retrieval {
    * with the per-doc hit count (occurrences of all matching variants).
    * The recall net under misspellings that exact/BM25 matching drops.
    *
-   * Scale shape: the DISTINCT corpus vocabulary (orders of magnitude
-   * smaller than the corpus) is scanned once with the codegen'd
-   * `levenshtein` — never the corpus text; the surviving variant terms
-   * broadcast into a postings join. With a persisted [[TermIndex]] the
-   * vocab scan is `SELECT DISTINCT term FROM postings` — no corpus read
-   * at all ([[fuzzyMatchesIndexed]]).
+   * Scale shape: the DISTINCT vocabulary of the [[TermIndex]] postings
+   * (orders of magnitude smaller than the corpus) is scanned once with the
+   * codegen'd `levenshtein` — never the corpus text; the surviving variant
+   * terms broadcast into a postings join.
    *
    * All-integer arithmetic (distances, counts) — nothing to drift.
    */
@@ -936,16 +931,6 @@ object Retrieval {
       .agg(sum(col("tf")).cast("long").as("n_matches"),
         count(lit(1)).cast("long").as("n_variants"))
   }
-
-  /** [[fuzzyMatchesIndexed]] over a raw corpus (tokenizes once). */
-  def fuzzyMatches(
-      docs: DataFrame,
-      term: String,
-      maxDist: Int = 1,
-      textCol: String = "text",
-      idCol: String = "doc_id"
-  ): DataFrame =
-    fuzzyMatchesIndexed(termIndex(docs, textCol, idCol), term, maxDist, idCol)
 
   /**
    * PRF EXPANSION TERMS — pseudo-relevance feedback term mining (the text
@@ -978,7 +963,6 @@ object Retrieval {
       dp: Int = 4
   ): DataFrame = {
     require(nSeed > 0 && nExpand > 0, "nSeed and nExpand must be positive")
-    import graft.pipeline.Checkpoints
     import graft.pipeline.Checkpoints.PinOps
     // the seed list is a HARD-BOUNDED shortlist (≤ nSeed rows by the
     // limit) — collect the ids and filter the postings directly (the MMR

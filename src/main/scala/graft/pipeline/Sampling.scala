@@ -353,11 +353,10 @@ object Sampling {
         round(lit(1.0 - smoothing) * col("__w") + lit(smoothing / d), 6).as("weight"))
   }
 
-  /** The bounded multiplicative-weights loop shared by [[domainReweight]]
-    * (raw lattice losses) and [[mixWeightsOf]] (6-dp monitor losses):
-    * uniform init, `rounds` × (tilt by excess over the mixture mean,
-    * renormalize), every fold in the caller's sorted-domain array order. */
-  private[graft] def mwLoop(loss: Array[Double], rounds: Int, lr: Double): Array[Double] = {
+  /** [[domainReweight]]'s bounded multiplicative-weights loop: uniform
+    * init, `rounds` × (tilt by excess over the mixture mean, renormalize),
+    * every fold in the caller's sorted-domain array order. */
+  private def mwLoop(loss: Array[Double], rounds: Int, lr: Double): Array[Double] = {
     val d = loss.length
     val w = Array.fill(d)(1.0 / d)
     for (_ <- 1 to rounds) {
@@ -373,42 +372,6 @@ object Sampling {
       while (i < d) { w(i) = w(i) / sw; i += 1 }
     }
     w
-  }
-
-  /**
-   * Mixture weights from an ALREADY-AGGREGATED per-domain frame
-   * `(domain, n_docs, loss)` — the downstream half of the streaming
-   * monitor ([[StreamingCurate.domainMixMonitor]] emits one such row set
-   * per event-time window; run this over a window's rows in foreachBatch
-   * or on the live rollup a dashboard reads). Same loop, smoothing and
-   * snaps as [[domainReweight]]; the only difference is the loss input
-   * arrives 6-dp-snapped rather than raw, so weights may differ from the
-   * batch operator's in the last decimal (the spec bounds it).
-   */
-  def mixWeightsOf(
-      perDomain: DataFrame,
-      rounds: Int = 3,
-      lr: Double = 0.5,
-      smoothing: Double = 0.1
-  ): DataFrame = {
-    require(rounds >= 0 && rounds <= 64, "rounds must be in [0,64]")
-    require(lr > 0.0 && lr <= 1.0, "lr must be in (0,1]")
-    require(smoothing >= 0.0 && smoothing < 1.0, "smoothing must be in [0,1)")
-    val spark = perDomain.sparkSession
-    import spark.implicits._
-    val agg = perDomain
-      .select(col("domain").cast("string"), col("n_docs").cast("long"), col("loss").cast("double"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(_._1)(OracleCompat.utf8Ordering)
-    val d = agg.length
-    if (d == 0)
-      return Seq.empty[(String, Long, Double, Double)]
-        .toDF("domain", "n_docs", "loss", "weight")
-    val w = mwLoop(agg.map(_._3), rounds, lr)
-    agg.indices.map { i => (agg(i)._1, agg(i)._2, agg(i)._3, w(i)) }
-      .toDF("domain", "n_docs", "loss", "__w")
-      .select(col("domain"), col("n_docs"), col("loss"),
-        round(lit(1.0 - smoothing) * col("__w") + lit(smoothing / d), 6).as("weight"))
   }
 
   /**

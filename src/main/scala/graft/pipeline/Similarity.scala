@@ -452,7 +452,6 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"
   ): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     require(k > 0, "need k > 0 neighborhood size")
     // the per-half indexes are pure seed-fixed projections (row-local
     // kernel over the input scan): the sims job reads each twice (bucket
@@ -727,30 +726,6 @@ object Similarity {
     val cents = spark.read.parquet(s"$path/_centroids").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap
     IvfIndex(spark.read.parquet(path), cents)
-  }
-
-  /**
-   * Incrementally extend a persisted IVF index: assign `newVecs` to the
-   * EXISTING centroids (one shuffle-free kernel projection — k-means never
-   * re-runs) and append the rows into the centroid-partitioned layout, so
-   * each new batch lands inside the inverted lists it belongs to. The
-   * standard ingest pattern: centroids are retrained offline/periodically;
-   * between retrains, arrival batches stream into the current partitions.
-   * Returns the assignment that was appended.
-   */
-  def ivfAppend(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String,
-      newVecs: DataFrame,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id"
-  ): DataFrame = {
-    GraftFunctions.register(spark)
-    val cents = spark.read.parquet(s"$path/_centroids").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap
-    val assigned = assignByProjection(newVecs, cents, vecCol, idCol).pinned
-    assigned.write.partitionBy("centroid").mode("append").parquet(path)
-    assigned
   }
 
   /** driver-side cosine with the same left-to-right dim-order folds the

@@ -359,13 +359,11 @@ object TextAnalysis {
    */
   /** The vocabulary→log-ratio table behind [[importanceWeights]]:
     * `(w, lr)` with `lr = ln P̂_target(w) − ln P̂_source(w)`, add-one
-    * smoothed over the union vocabulary. Exposed so a streaming scorer can
-    * snapshot it once and apply it row-locally per micro-batch
-    * ([[StreamingCurate.importanceScoreStream]]). */
-  def importanceLogRatios(
+    * smoothed over the union vocabulary. */
+  private def importanceLogRatios(
       df: DataFrame,
       targetDf: DataFrame,
-      textCol: String = "text"
+      textCol: String
   ): DataFrame = {
     import graft.pipeline.Checkpoints.PinOps
     val srcW = df.select(explode(words(col(textCol))).as("w"))
@@ -1374,7 +1372,6 @@ object TextAnalysis {
       textCol: String = "text",
       idCol: String = "doc_id"
   ): DataFrame = {
-    import graft.pipeline.Checkpoints
     import graft.pipeline.Checkpoints.PinOps
     // zero merges is legal: a corpus whose training dried immediately (all
     // single-char words) encodes as plain character tokenization — the

@@ -1,6 +1,6 @@
 package graft.plan
 
-import graft.model.{FieldClass, MetricSchema}
+import graft.model.MetricSchema
 import graft.sql.Ast._
 
 /** One consistent "now" per query; injected so NOW-relative predicates are deterministic. */

@@ -2,6 +2,8 @@ package graft.streaming
 
 import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -149,7 +151,9 @@ object Subscriptions {
   /**
    * R6: periodic re-execution of a standard aggregation query on a fixed
    * scheduler, pushing each result to the subscriber callback. Returns a
-   * handle that stops the scheduler.
+   * handle that stops the scheduler. A run whose query is rejected or
+   * whose execution or callback throws is logged to stderr with the
+   * subscription's db, namespace and SQL; the schedule keeps running.
    */
   def periodic(
       engine: GraftEngine,
@@ -162,12 +166,14 @@ object Subscriptions {
     val exec: ScheduledExecutorService = Executors.newSingleThreadScheduledExecutor(r => {
       val t = new Thread(r, "graft-periodic-subscription"); t.setDaemon(true); t
     })
+    def failed(err: String): Unit =
+      System.err.println(s"[graft-periodic] $db.$namespace `$sql` failed: $err")
     exec.scheduleAtFixedRate(
       () =>
         try {
           implicit val tc: TimeContext = TimeContext(System.currentTimeMillis())
-          engine.sql(db, namespace, sql).foreach(df => onResult(df.collect()))
-        } catch { case _: Throwable => () },
+          engine.sql(db, namespace, sql).fold(failed, df => onResult(df.collect()))
+        } catch { case NonFatal(e) => failed(e.toString) },
       0L, intervalMs, TimeUnit.MILLISECONDS
     )
     () => exec.shutdownNow()

@@ -73,14 +73,12 @@ class PipelineSpec extends SparkTestBase {
     // does not project)
     Dedup.gateAgainstCorpus(batch, corpus, threshold = 0.5, shingleK = 2).columns shouldBe batch.columns
 
-    // a persisted banded index (the per-batch zero-aggregation path) gates
-    // identically to the inline computation
-    val bandedPath = java.nio.file.Files.createTempDirectory("graft_banded_").toString + "/banded"
-    Dedup.bandedIndex(corpus).write.mode("overwrite").parquet(bandedPath)
-    val keptPre = Dedup.gateAgainstCorpus(batch, corpus, threshold = 0.5, shingleK = 2,
-      corpusBanded = Some(spark.read.parquet(bandedPath)))
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    keptPre shouldBe kept
+    // the signature index persisted as parquet and read back gates
+    // identically to the in-memory one
+    val idxPath = java.nio.file.Files.createTempDirectory("graft_sigidx_").toString + "/index"
+    corpus.write.parquet(idxPath)
+    Dedup.gateAgainstCorpus(batch, spark.read.parquet(idxPath), threshold = 0.5, shingleK = 2)
+      .select("doc_id").collect().map(_.getLong(0)).toSet shouldBe kept
   }
 
   "Curate.trainingMix" should "compose curate→decontaminate→cc-dedup→mix→pack deterministically" in {
@@ -1202,39 +1200,6 @@ class PipelineSpec extends SparkTestBase {
     kept(true).toDouble should be > kept(false).toDouble
     // empty input short-circuits instead of NPE on the null max
     Sampling.weightedHashSample(corpus.filter(lit(false)), 0.5, "w").count() shouldBe 0L
-  }
-
-  "Layout.zValue" should "interleave bits (Morton order)" in {
-    import graft.pipeline.Layout
-    val out = Seq((0L, 0L), (1L, 0L), (0L, 1L), (3L, 5L), (65535L, 65535L))
-      .toDF("a", "b")
-      .select(Layout.zValue($"a", $"b").as("z")).collect().map(_.getLong(0))
-    // morton(a,b): a-bits at odd positions, b-bits at even
-    out shouldBe Array(0L, 2L, 1L, 27L, 0xFFFFFFFFL)
-  }
-
-  "Layout.writeZOrdered" should "prune files on EITHER axis where a sort prunes only one" in {
-    import graft.pipeline.Layout
-    val dir  = java.nio.file.Files.createTempDirectory("graft_zorder_").toString
-    val grid = (for { x <- 0 until 64; y <- 0 until 64 } yield (x.toLong, y.toLong)).toDF("x", "y")
-    Layout.writeZOrdered(grid, s"$dir/z", "x", "y", numFiles = 16)
-    grid.repartitionByRange(16, $"x").sortWithinPartitions("x")
-      .write.parquet(s"$dir/by_x") // the single-column layout a compaction gives
-    // files whose [min,max] span of `c` intersects [lo,hi] — the same
-    // per-row-group stats parquet pruning consults at scale
-    def matching(path: String, c: String, lo: Long, hi: Long): Int =
-      new java.io.File(path).listFiles().filter(_.getName.endsWith(".parquet")).count { f =>
-        val r = spark.read.parquet(f.getAbsolutePath)
-          .agg(org.apache.spark.sql.functions.min(c), org.apache.spark.sql.functions.max(c))
-          .collect()(0)
-        r.getLong(0) <= hi && r.getLong(1) >= lo
-      }
-    // z-order: a narrow range on either axis touches a strip of blocks
-    matching(s"$dir/z", "x", 0, 7) should be <= 6
-    matching(s"$dir/z", "y", 0, 7) should be <= 6
-    // x-sort: perfect on x, hopeless on y (every file spans all of y)
-    matching(s"$dir/by_x", "x", 0, 7) should be <= 3
-    matching(s"$dir/by_x", "y", 0, 7) shouldBe 16
   }
 
   "TextAnalysis.sourceDrift" should "score divergence from the corpus mix" in {
@@ -3129,22 +3094,6 @@ class PipelineSpec extends SparkTestBase {
     val direct = Similarity.semDedup(semVecs, tau = 0.9, nlist = 2)
       .collect().map(r => (r.getLong(0), r.getBoolean(2))).sortBy(_._1)
     viaIndex shouldBe direct
-  }
-
-  "Similarity.ivfAppend" should "route new vectors into the persisted inverted lists" in {
-    val path = java.nio.file.Files.createTempDirectory("graft_ivfa_").toString + "/ivf"
-    Similarity.ivfWrite(Similarity.ivfBuild(semVecs, nlist = 2), path)
-    val before = spark.read.parquet(path).count()
-    val rnd    = new scala.util.Random(23)
-    val newVec = Array.fill(16)(rnd.nextGaussian().toFloat)
-    val appended = Similarity.ivfAppend(spark, path,
-      Seq((100L, newVec)).toDF("vec_id", "embedding"))
-    appended.count() shouldBe 1L
-    spark.read.parquet(path).count() shouldBe before + 1
-    // the appended row is probe-able through the reloaded index
-    val idx = Similarity.ivfRead(spark, path)
-    Similarity.ivfTopK(idx.assigned, idx.centroids, newVec.toSeq, k = 1, nprobe = 2)
-      .head().getLong(0) shouldBe 100L
   }
 
   "pipeline operators" should "flow empty inputs through without errors" in {

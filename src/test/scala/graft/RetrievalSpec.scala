@@ -204,7 +204,7 @@ class RetrievalSpec extends SparkTestBase {
     val corpus = Seq((0L, "a b a b a"), (1L, "a c b a x"), (2L, "b a b")).toDF("doc_id", "text")
     val dir = java.nio.file.Files.createTempDirectory("graft_posix_").toString
     Retrieval.writePositionalIndex(corpus, dir)
-    val persisted = Retrieval.readPositionalIndex(spark, dir)
+    val persisted = spark.read.parquet(dir)
     val live = Retrieval.phraseMatches(Retrieval.positionalPostings(corpus), Seq("a", "b"))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     Retrieval.phraseMatches(persisted, Seq("a", "b"))
@@ -260,13 +260,13 @@ class RetrievalSpec extends SparkTestBase {
     out.head.getDouble(2) shouldBe single
   }
 
-  "Retrieval.fuzzyMatches" should "count occurrences of all edit-distance variants" in {
+  "Retrieval.fuzzyMatchesIndexed" should "count occurrences of all edit-distance variants" in {
     val d = Seq(
       (0L, "spark sparks spork x"), // spark(0), sparks(1), spork(1) all match
       (1L, "sprk and nothing"),     // sprk is distance 1 (deletion)
       (2L, "stork swam away")       // stork is distance 2: excluded
     ).toDF("doc_id", "text")
-    val out = Retrieval.fuzzyMatches(d, "spark", maxDist = 1).orderBy("doc_id")
+    val out = Retrieval.fuzzyMatchesIndexed(Retrieval.termIndex(d), "spark", maxDist = 1).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     out shouldBe Array((0L, 3L, 3L), (1L, 1L, 1L))
   }

@@ -68,9 +68,16 @@ class StarSpec extends SparkTestBase {
       xSpan should be <= 16384L
       ySpan should be <= 16384L
     }
-    // the layout op itself: within-partition sortedness and row parity
-    val laid = Layout.zorderBy(grid.toDF("x", "y"), "x", "y", bits = 16, partitions = 4)
-    laid.collect().map(r => (r.getLong(0), r.getLong(1))).sorted shouldBe grid.sorted
+    // sorting on the Morton key keeps every row, and each run of 16
+    // consecutive keys is one such bounded box
+    val laid = grid.toDF("x", "y")
+      .orderBy(Layout.mortonKey(col("x"), col("y"), bits = 16))
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    laid.sorted shouldBe grid.sorted
+    laid.grouped(16).foreach { box =>
+      (box.map(_._1).max - box.map(_._1).min) should be <= 16384L
+      (box.map(_._2).max - box.map(_._2).min) should be <= 16384L
+    }
   }
 
   "Star.soleLatestShippers" should "credit only the unique last shipper of multi-supplier orders" in {

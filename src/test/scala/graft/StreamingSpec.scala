@@ -101,6 +101,25 @@ class StreamingSpec extends SparkTestBase {
     } finally handle.close()
   }
 
+  it should "log a failing run and keep the schedule running" in {
+    val (engine, _) = newEngineWithHistory()
+    val calls  = new java.util.concurrent.atomic.AtomicInteger()
+    val errBuf = new java.io.ByteArrayOutputStream()
+    val oldErr = System.err
+    System.setErr(new java.io.PrintStream(errBuf, true))
+    val handle = Subscriptions.periodic(engine, "db", "ns",
+      "select count(*) from events group by kind", intervalMs = 200L,
+      _ => if (calls.incrementAndGet() == 1) throw new IllegalStateException("subscriber down"))
+    try {
+      val deadline = System.currentTimeMillis() + 10000
+      while (calls.get() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
+      calls.get() should be >= 2 // the run after the throwing one still fired
+    } finally { handle.close(); System.setErr(oldErr) }
+    errBuf.toString should include(
+      "[graft-periodic] db.ns `select count(*) from events group by kind` failed: " +
+        "java.lang.IllegalStateException: subscriber down")
+  }
+
   "Ingest" should "stream micro-batches into the warehouse" in {
     implicit val sqlc = spark.sqlContext
     val root  = Files.createTempDirectory("graft_ingest_").toString
