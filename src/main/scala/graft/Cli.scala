@@ -19,7 +19,6 @@ object Cli {
     val db   = args.lift(1).getOrElse("default")
     val spark = GraftSession.builder(4)
       .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val engine = new GraftEngine(spark, root)

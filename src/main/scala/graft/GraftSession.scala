@@ -19,6 +19,8 @@ import org.apache.spark.sql.SparkSession
  *    timestamp encoding is epoch millis in a long)
  *  - the native graft functions injected for every session incl. pure SQL
  *  - a generated-code cache of [[CodegenCacheEntries]] classes (below)
+ *  - no Spark UI, and a status store of [[RetainedStatusEntries]] finished
+ *    SQL executions, jobs and stages (below)
  *
  * '''Codegen cache.''' Spark keeps compiled generated classes in one
  * JVM-wide LRU whose size, `spark.sql.codegen.cache.maxEntries` (default
@@ -32,11 +34,21 @@ import org.apache.spark.sql.SparkSession
  * changing constants each add a one-off entry. Because the size is read on
  * first use, an application that built (and ran codegen on) its own session
  * before calling graft keeps that session's value.
+ *
+ * '''Status store.''' Spark records every SQL execution, job and stage in an
+ * in-memory status store for its UI, keeping up to 1000 of each by
+ * default. graft never starts that UI and nothing in graft reads the store,
+ * so the retained entries only grew the live heap with the work done. The
+ * store keeps the last [[RetainedStatusEntries]] finished entries of each
+ * kind; running ones are never pruned.
  */
 object GraftSession {
 
   /** Generated classes Spark's codegen cache retains (see the scaladoc). */
   val CodegenCacheEntries = 1000
+
+  /** Finished SQL executions, jobs and stages the status store keeps. */
+  val RetainedStatusEntries = 20
 
   def builder(cores: Int = Runtime.getRuntime.availableProcessors()): SparkSession.Builder =
     SparkSession.builder()
@@ -47,10 +59,14 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.extensions", "graft.functions.GraftSparkExtensions")
       .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries.toString)
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.ui.retainedExecutions", RetainedStatusEntries.toString)
+      .config("spark.ui.retainedJobs", RetainedStatusEntries.toString)
+      .config("spark.ui.retainedStages", RetainedStatusEntries.toString)
 
   /** local development/test session. */
   def local(cores: Int = 4): SparkSession = {
-    val s = builder(cores).master(s"local[$cores]").config("spark.ui.enabled", "false").getOrCreate()
+    val s = builder(cores).master(s"local[$cores]").getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
   }

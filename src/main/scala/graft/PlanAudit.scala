@@ -55,7 +55,6 @@ object PlanAudit {
     val spark = GraftSession.builder(4).master("local[4]")
       // static plans for the committed digest (see scaladoc)
       .config("spark.sql.adaptive.enabled", (!digestMode).toString)
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val pos = args.filterNot(a => a == "--digest" || a == "--check")

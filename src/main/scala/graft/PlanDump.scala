@@ -20,7 +20,6 @@ object PlanDump {
     val dir = args(2)
     val spark = GraftSession.builder(4).master("local[4]")
       .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val qs =

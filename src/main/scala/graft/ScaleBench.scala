@@ -158,7 +158,6 @@ object ScaleBench {
         sys.env.getOrElse("SPARK_GRAFT_MIN_PART", "64k"))
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes",
         sys.env.getOrElse("SPARK_GRAFT_ADVISORY", "4m"))
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

@@ -103,7 +103,6 @@ object ScaleGen {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = GraftSession.builder(cpus.toInt)
       .master(s"local[$cpus]")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     generate(spark, baseDir, outDir, factorStr.toInt)

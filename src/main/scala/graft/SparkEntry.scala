@@ -1200,7 +1200,7 @@ object SparkEntry {
     // cut-off signature the ACF alone cannot show
     "ts_pacf" -> ((s, d) =>
       TimeSeries.pacfProfile(evUs(s, d), Seq("event_type"), "ts", "value", HourUs,
-        maxLag = 4).orderBy("event_type")),
+        maxLag = 4, gridIn = Some(sharedGridSeries(s, d))).orderBy("event_type")),
     // lagged cross-correlation click→error on the shared hourly grid (one
     // conditional-agg pass; every statistic a ts-ordered fold)
     "ts_xcorr" -> ((s, d) =>

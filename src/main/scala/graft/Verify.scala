@@ -11,7 +11,6 @@ object Verify {
       // same local-mode AQE sizing as Bench (see the comment there)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4m")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()

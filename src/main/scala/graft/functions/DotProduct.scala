@@ -257,7 +257,10 @@ object GraftFunctions {
       new ExpressionInfo(classOf[UnitSnap].getName, "graft_unit_snap")),
     ("graft_char_bigrams",
       (exprs: Seq[Expression]) => CharBigrams(exprs.head),
-      new ExpressionInfo(classOf[CharBigrams].getName, "graft_char_bigrams"))
+      new ExpressionInfo(classOf[CharBigrams].getName, "graft_char_bigrams")),
+    ("graft_poly_hash",
+      (exprs: Seq[Expression]) => PolyHash(exprs.head, exprs(1), exprs(2)),
+      new ExpressionInfo(classOf[PolyHash].getName, "graft_poly_hash"))
   )
 
   private def utf8Array(e: Expression): Array[org.apache.spark.unsafe.types.UTF8String] =
@@ -281,6 +284,12 @@ object GraftFunctions {
   /** Ascending-sorted sequential sum of a double array — the codegen'd
     * portable fold (requires [[register]]). */
   def foldSum(xs: Column): Column = call_function("graft_fold_sum", xs)
+
+  /** portable polynomial hash of a string column, one compiled call per
+    * row; NULL gives `seed` (requires [[register]]). */
+  def polyHash(s: Column, base: Long, seed: Long): Column =
+    call_function("graft_poly_hash", s,
+      org.apache.spark.sql.functions.lit(base), org.apache.spark.sql.functions.lit(seed))
 
   /** MinHash signature of a hashed-shingle array (requires [[register]]). */
   def minhash(shingleHashes: Column, numHashes: Int): Column =

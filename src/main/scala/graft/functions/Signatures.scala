@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
@@ -90,7 +91,9 @@ object PortableHash extends Serializable {
     new GenericArrayData(Array(lo, hi))
   }
 
-  /** polynomial fold over the code points of bytes[from, to). */
+  /** polynomial fold over the code points of bytes[from, to). Each step
+    * reduces with `floorMod`, i.e. SQL `pmod`, so a negative seed or base
+    * folds exactly as the HOF form does. */
   def wordPoly(bytes: Array[Byte], from: Int, to: Int, base: Long, seed: Long): Long = {
     var acc   = seed
     var i     = from
@@ -98,7 +101,7 @@ object PortableHash extends Serializable {
     while (i < to && ascii) { if (bytes(i) < 0) ascii = false else i += 1 }
     if (ascii) {
       i = from
-      while (i < to) { acc = (acc * base + bytes(i)) % P31; i += 1 }
+      while (i < to) { acc = Math.floorMod(acc * base + bytes(i), P31); i += 1 }
       acc
     } else {
       val s  = new String(bytes, from, to - from, java.nio.charset.StandardCharsets.UTF_8)
@@ -106,12 +109,19 @@ object PortableHash extends Serializable {
       acc = seed
       while (ci < s.length) {
         val cp = s.codePointAt(ci)
-        acc = (acc * base + cp) % P31
+        acc = Math.floorMod(acc * base + cp, P31)
         ci += Character.charCount(cp)
       }
       acc
     }
   }
+
+  /** [[wordPoly]] over a whole string; NULL or empty gives `seed`. The
+    * body of the compiled `graft_poly_hash` ([[PolyHash]]), value-identical
+    * to the HOF reference form [[graft.pipeline.Dedup.polyHash]]. */
+  def polyHash(s: UTF8String, base: Long, seed: Long): Long =
+    if (s == null || s.numBytes == 0) seed
+    else wordPoly(s.getBytes, 0, s.numBytes, base, seed)
 
   /** word boundaries of a single-space split, KEEPING empty words —
     * matches `split(text, " ")` (Spark limit=-1) and DuckDB
@@ -324,6 +334,38 @@ case class ShingleSet(child: Expression, k: Int) extends UnaryExpression {
   }
 
   override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
+}
+
+/**
+ * `graft_poly_hash(str, base, seed)`: the portable polynomial word hash
+ * ([[PortableHash.polyHash]]) as one compiled static call per row. The
+ * operators' sampling and watermark hashes run this instead of the HOF
+ * reference form [[graft.pipeline.Dedup.polyHash]], whose per-code-point
+ * lambda fold is interpreted. A NULL string gives `seed`, as the HOF form
+ * does, so the call does not propagate NULL; `base` and `seed` must be
+ * non-null constants.
+ */
+case class PolyHash(str: Expression, base: Expression, seed: Expression)
+    extends RuntimeReplaceable with ImplicitCastInputTypes {
+
+  override def inputTypes = Seq(StringType, LongType, LongType)
+
+  override def checkInputDataTypes(): TypeCheckResult = {
+    val typed = super.checkInputDataTypes()
+    if (typed.isFailure) typed
+    else if (Seq(base, seed).forall(e => e.foldable && e.eval() != null)) TypeCheckResult.TypeCheckSuccess
+    else TypeCheckResult.TypeCheckFailure("graft_poly_hash requires non-null constant base and seed")
+  }
+
+  override lazy val replacement: Expression =
+    StaticInvoke(PortableHash.getClass, LongType, "polyHash", Seq(str, base, seed), inputTypes,
+      propagateNull = false, returnNullable = false)
+
+  override def prettyName: String = "graft_poly_hash"
+  override def children: Seq[Expression] = Seq(str, base, seed)
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
+    copy(str = c(0), base = c(1), seed = c(2))
 }
 
 /** Native content-defined-chunk kernel (single-space words, boundary at

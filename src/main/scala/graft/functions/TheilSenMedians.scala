@@ -22,10 +22,13 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
  *    reversal: `(−a)/(−b)` is bit-equal to `a/b`);
  *  - the median is the same positional selection the window ranked —
  *    1-indexed rows `(n+1) div 2 .. (n+2) div 2` of the VALUE-ascending
- *    order (`java.util.Arrays.sort(double[])` uses `Double.compare`, the
- *    exact ordering Spark's sort applies to DoubleType), summed then
- *    divided by the selected count — `x/1.0` or `(a+b)/2.0`, the very
- *    expressions `sum/count` evaluated;
+ *    order under `Double.compare` (the order `Arrays.sort(double[])` and
+ *    Spark's sort apply to DoubleType: −0.0 before 0.0, NaN last), summed
+ *    then divided by the selected count — `x/1.0` or `(a+b)/2.0`, the very
+ *    expressions `sum/count` evaluated. Those two order statistics are
+ *    SELECTED in expected O(n) (Hoare's FIND) rather than read off a full
+ *    sort: a key's ~C(n,2) slopes are otherwise sorted just to read one or
+ *    two of them;
  *  - degenerate inputs (< 2 points for slopes, empty for residuals)
  *    return NaN — callers filter `n_points >= 2` first, exactly the keys
  *    the old inner join against the pair frame kept.
@@ -75,8 +78,7 @@ object TheilSenMedians {
       }
       i += 1
     }
-    java.util.Arrays.sort(s)
-    medianSorted(s)
+    median(s)
   }
 
   /** median of the residuals `v_i − slope · x_i` (slope is the already
@@ -90,17 +92,58 @@ object TheilSenMedians {
       r(i) = vs.getDouble(i) - slope * xs.getLong(i).toDouble
       i += 1
     }
-    java.util.Arrays.sort(r)
-    medianSorted(r)
+    median(r)
   }
 
   /** 1-indexed positions `(n+1) div 2 .. (n+2) div 2` of the ascending
-    * order, summed / count — the windowed `medianOf` selection verbatim. */
-  private def medianSorted(a: Array[Double]): Double = {
+    * order, summed / count — the windowed `medianOf` selection verbatim.
+    * Reorders `a` in place. */
+  private def median(a: Array[Double]): Double = {
     val n  = a.length
     val lo = (n - 1) / 2
-    val hi = n / 2
-    if (lo == hi) a(lo) / 1.0 else (a(lo) + a(hi)) / 2.0
+    select(a, lo)
+    if (n % 2 == 1) a(lo) / 1.0
+    else {
+      // after the selection a(lo+1 until n) holds exactly the values at or
+      // above rank lo, so rank lo+1 is their minimum
+      var hi = lo + 1
+      var i  = lo + 2
+      while (i < n) { if (java.lang.Double.compare(a(i), a(hi)) < 0) hi = i; i += 1 }
+      (a(lo) + a(hi)) / 2.0
+    }
+  }
+
+  /** Hoare's FIND: reorders `a` so that `a(k)` holds the value of rank `k`
+    * in `Double.compare` order, every value before it is at or below it and
+    * every value after it at or above it. Median-of-three pivots; expected
+    * O(n). */
+  private def select(a: Array[Double], k: Int): Unit = {
+    def cmp(x: Double, y: Double): Int = java.lang.Double.compare(x, y)
+    var l = 0
+    var r = a.length - 1
+    while (l < r) {
+      val m = (l + r) >>> 1
+      // order a(l) <= a(m) <= a(r), then partition around a(m)
+      if (cmp(a(m), a(l)) < 0) swap(a, m, l)
+      if (cmp(a(r), a(l)) < 0) swap(a, r, l)
+      if (cmp(a(r), a(m)) < 0) swap(a, r, m)
+      val pivot = a(m)
+      var i = l
+      var j = r
+      while (i <= j) {
+        while (cmp(a(i), pivot) < 0) i += 1
+        while (cmp(pivot, a(j)) < 0) j -= 1
+        if (i <= j) { swap(a, i, j); i += 1; j -= 1 }
+      }
+      // a(l..j) <= pivot, a(j+1 until i) == pivot, a(i..r) >= pivot
+      if (k <= j) r = j
+      else if (k >= i) l = i
+      else return
+    }
+  }
+
+  private def swap(a: Array[Double], i: Int, j: Int): Unit = {
+    val t = a(i); a(i) = a(j); a(j) = t
   }
 }
 

@@ -1301,14 +1301,17 @@ object Relational {
     val per = df.select(col(idCol).as("__id"), col(valueCol).cast("long").as("__x"))
       .groupBy(col("__id")).agg(sum(col("__x")).as("__x"))
     val pt = per.agg(count(lit(1)).as("n"), sum(col("__x")).as("__sx"))
-    val h = graft.pipeline.Sampling.sampleHash(
-      concat_ws("#", col("__id"), col("__b")), seed)
+    val h = col("__h")
     // Poisson(1) inverse CDF on the 1e-4 hash lattice: cum pmf ·10⁴
     val w = when(h < 3679L, 0L).when(h < 7358L, 1L).when(h < 9197L, 2L)
       .when(h < 9810L, 3L).when(h < 9963L, 4L).when(h < 9994L, 5L).otherwise(6L)
     val reps = per
       .select(col("__id"), col("__x"),
         explode(sequence(lit(0L), lit(replicas - 1L))).as("__b"))
+      // the hash is its own column, so the CASE WHEN reads it once per row
+      // instead of re-hashing in each of its branches
+      .withColumn("__h", graft.pipeline.Sampling.sampleHash(
+        per, concat_ws("#", col("__id"), col("__b")), seed))
       .withColumn("__w", w)
       .groupBy(col("__b"))
       .agg(sum(col("__w")).as("__sw"),

@@ -1365,9 +1365,10 @@ object TimeSeries {
       tsCol: String,
       valueCol: String,
       step: Long,
-      maxLag: Int = 4
+      maxLag: Int = 4,
+      gridIn: Option[DataFrame] = None
   ): DataFrame = {
-    val base = acfProfile(df, keys, tsCol, valueCol, step, maxLag)
+    val base = acfProfile(df, keys, tsCol, valueCol, step, maxLag, gridIn)
     val withPhi = pacfExprs(maxLag, k => s"acf_$k").foldLeft(base) {
       case (acc, (name, e)) => acc.withColumn(name, expr(e))
     }

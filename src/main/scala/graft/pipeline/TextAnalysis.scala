@@ -818,9 +818,10 @@ object TextAnalysis {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(minTokens >= 1, "minTokens must be >= 1")
+    GraftFunctions.register(df.sparkSession)
     val ws = filter(words(col(textCol)), w => length(w) >= 1)
     val green = (acc: Column, w: Column) =>
-      acc + when(pmod(Dedup.polyHash(w, 131L, seed), lit(2L)) === 0L, 1L).otherwise(0L)
+      acc + when(pmod(GraftFunctions.polyHash(w, 131L, seed), lit(2L)) === 0L, 1L).otherwise(0L)
     df.select(col(idCol),
         size(ws).cast("long").as("n_tokens"),
         aggregate(ws, lit(0L), green).as("n_green"))

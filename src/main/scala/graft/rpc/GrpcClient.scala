@@ -196,13 +196,14 @@ class GrpcClient(host: String = "127.0.0.1", port: Int, timeoutMs: Long = 15000,
     val stream = open("/io.radicalbit.nsdb.rpc.NSDbStreaming/streamSQL", queue)
     val w      = new Writer; req.encode(w)
     stream.writeAndFlush(new DefaultHttp2DataFrame(Unpooled.wrappedBuffer(frame(w.result())), true))
+    // closing the handle interrupts the pump; that ends it like a stream end
     val pump = new Thread(() => {
       var running = true
-      while (running) queue.take() match {
+      try while (running) queue.take() match {
         case bytes: Array[Byte] => onMessage(SqlStreamingResponse.decode(new Reader(bytes)))
         case _: GrpcEnd         => running = false
         case _                  => running = false
-      }
+      } catch { case _: InterruptedException => () }
     }, "graft-grpc-subscribe")
     pump.setDaemon(true)
     pump.start()

@@ -6,9 +6,9 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.metrics.source.CodegenMetrics
 
-/** `GraftSession` is the one place a graft session is configured, and its
+/** `GraftSession` is the one place a graft session is configured, its
   * generated-code cache holds a working set larger than Spark's default
-  * 100 entries. */
+  * 100 entries, and its status store stays bounded. */
 class GraftSessionSpec extends SparkTestBase {
 
   private def compiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
@@ -27,10 +27,19 @@ class GraftSessionSpec extends SparkTestBase {
     round() shouldBe 0L
   }
 
+  it should "run without a UI and keep a bounded status store" in {
+    val conf = spark.sparkContext.getConf
+    conf.get("spark.ui.enabled") shouldBe "false"
+    Seq("spark.sql.ui.retainedExecutions", "spark.ui.retainedJobs", "spark.ui.retainedStages")
+      .foreach(k => conf.get(k) shouldBe GraftSession.RetainedStatusEntries.toString)
+  }
+
   "session config" should "be written only in GraftSession" in {
     // split literals, so this file does not match its own patterns
     val builderCall  = ("SparkSession" + """\s*\.\s*builder""").r
-    val shuffleParts = ".config(\"spark.sql.shuffle." + "partitions\""
+    val ownedKeys = Seq("spark.sql.shuffle." + "partitions", "spark.ui." + "enabled",
+      "spark.sql.ui." + "retainedExecutions", "spark.ui." + "retainedJobs", "spark.ui." + "retainedStages")
+      .map(k => s".config(\"$k\"")
     val sources = Seq("src/main", "src/test").map(Paths.get(_)).flatMap { root =>
       Files.isDirectory(root) shouldBe true
       val walk = Files.walk(root)
@@ -41,7 +50,7 @@ class GraftSessionSpec extends SparkTestBase {
     val offenders = sources.filter { p =>
       val text = Files.readString(p)
       p.getFileName.toString != "GraftSession.scala" &&
-        (builderCall.findFirstIn(text).isDefined || text.contains(shuffleParts))
+        (builderCall.findFirstIn(text).isDefined || ownedKeys.exists(text.contains))
     }
     offenders shouldBe empty
   }

@@ -3,6 +3,8 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
+import scala.jdk.CollectionConverters._
+
 import graft.catalog.Warehouse
 import graft.rpc.RpcMessages._
 import graft.rpc.{GrpcApi, GrpcClient}
@@ -147,6 +149,36 @@ class GrpcApiSpec extends SparkTestBase {
       sub.close()
     } finally {
       client.close(); grpc.stop(); http.stop()
+    }
+  }
+
+  it should "end a subscription's pump thread quietly when the handle closes" in {
+    val root   = Files.createTempDirectory("graft_grpc_close_").toString
+    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val api    = new GrpcApi(engine)
+    val client = new GrpcClient(port = api.start())
+    val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    def pumps(): Set[Thread] =
+      Thread.getAllStackTraces.keySet.asScala.filter(_.getName == "graft-grpc-subscribe").toSet
+    try {
+      engine.initMetric("db", "ns", "m", 86400000L)
+      client.write(RpcInsert("db", "ns", "m", 500L, LongValue(1L), Map.empty, Map.empty))
+        .toOption.get.completedSuccessfully shouldBe true
+      val before = pumps()
+      val events = new LinkedBlockingQueue[SqlStreamingResponse]()
+      val sub = client.subscribe(SqlRequest("db", "ns", "m", "select * from m"))(events.put)
+      events.poll(10, TimeUnit.SECONDS).payload shouldBe a[SubscribedByQueryString]
+      val started = pumps() -- before
+      started should have size 1
+      started.foreach(_.setUncaughtExceptionHandler((t: Thread, e: Throwable) =>
+        uncaught.add(s"${t.getName}: $e")))
+      // the pump is blocked in its queue when the handle closes
+      sub.close()
+      started.foreach(_.join(10000))
+      started.foreach(_.isAlive shouldBe false)
+      uncaught.asScala shouldBe empty
+    } finally {
+      client.close(); api.stop()
     }
   }
 

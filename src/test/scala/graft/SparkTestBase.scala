@@ -15,7 +15,6 @@ object SparkTestBase {
     val s = GraftSession.builder(4)
       .master("local[4]")
       .appName("graft-test")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s

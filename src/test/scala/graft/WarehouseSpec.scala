@@ -18,7 +18,6 @@ object LockProbeMain {
     val Array(root, metric, nStr) = args
     val spark = GraftSession.builder(2)
       .master("local[2]")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     import spark.implicits._
     val wh = new Warehouse(spark, root)
