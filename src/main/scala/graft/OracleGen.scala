@@ -1,7 +1,7 @@
 package graft
 
 import graft.functions.PortableHash
-import graft.pipeline.{Dedup, Similarity}
+import graft.pipeline.Similarity
 
 /**
  * DuckDB SQL generators for the signature-pipeline correctness oracles.
@@ -65,7 +65,7 @@ object OracleGen {
       rel: String = "documents", sfx: String = ""): String = {
     require(numHashes % bands == 0)
     val rows  = numHashes / bands
-    val perms = Dedup.mhParams(numHashes)
+    val perms = PortableHash.minhashPerms(numHashes)
     val asl   = perms.map(_._1).mkString("[", ",", "]")
     val bsl   = perms.map(_._2).mkString("[", ",", "]")
     s"""params$sfx AS (SELECT $asl::BIGINT[] AS asl, $bsl::BIGINT[] AS bsl),
@@ -2037,7 +2037,7 @@ object OracleGen {
       threshold: Double, numHashes: Int, bands: Int, shingleK: Int, maxBucket: Int, mod: Int): String = {
     require(numHashes % bands == 0)
     val rows  = numHashes / bands
-    val perms = Dedup.mhParams(numHashes)
+    val perms = PortableHash.minhashPerms(numHashes)
     val asl   = perms.map(_._1).mkString("[", ",", "]")
     val bsl   = perms.map(_._2).mkString("[", ",", "]")
     s"""WITH params AS (SELECT $asl::BIGINT[] AS asl, $bsl::BIGINT[] AS bsl),
@@ -2094,7 +2094,7 @@ object OracleGen {
   // ---- embedding similarity ----------------------------------------------
 
   /** sequential-fold dot product over dim components — bit-identical to the
-    * Spark kernels ([[graft.functions.DotProduct]] and the HOF fold). */
+    * Spark kernels ([[graft.functions.ArrayKernels.dot]] and the HOF fold). */
   private def foldDot(a: String => String, b: String => String, dim: Int): String =
     s"list_reduce(list_prepend(0.0::DOUBLE, list_transform(range(1, ${dim + 1}), i -> ${a("i::INT")} * ${b("i::INT")})), (x,y) -> x+y)"
 

@@ -416,7 +416,11 @@ class Warehouse(val spark: SparkSession, val root: String) {
   private val resolved = new java.util.concurrent.ConcurrentHashMap[Coords, (String, MetricRef)]()
 
   private def resolve(c: Coords, m: Meta): MetricRef = {
-    val df = spark.read.schema(m.schema.toStruct.add("shard", LongType)).parquet(dataPath(c))
+    val schema = m.schema.toStruct.add("shard", LongType)
+    // an initialized metric has no data directory until its first insert
+    val df =
+      if (Files.isDirectory(Paths.get(dataPath(c)))) spark.read.schema(schema).parquet(dataPath(c))
+      else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     val shardIds = subdirs(dataPath(c)).filter(_.startsWith("shard=")).map(_.stripPrefix("shard=").toLong)
     val bounds =
       if (shardIds.isEmpty) None

@@ -1,11 +1,7 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -24,7 +20,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * by merge, so the final tokenization of every word form is unchanged
  * (spec-enforced against the HOF fold).
  */
-object BpeReplayKernel extends Serializable {
+object BpeReplayKernel {
 
   /** Character tokens (code-point semantics, like `substring(w, i, 1)`)
     * with the merges applied in learned order, each as one greedy
@@ -94,67 +90,4 @@ object BpeReplayKernel extends Serializable {
     }
     new GenericArrayData(out)
   }
-}
-
-// explicitly Serializable: the expression tree ships into Generate tasks
-// by Java serialization, and a non-serializable superclass would have its
-// no-arg constructor RUN during deserialization — before the subclass
-// fields exist. For the same reason nothing in this constructor body may
-// touch the abstract members.
-abstract class BpeReplayBase extends UnaryExpression with Serializable {
-  def lhs: Array[UTF8String]
-  def rhs: Array[UTF8String]
-  protected lazy val cat: Array[UTF8String] = {
-    require(lhs.length == rhs.length, "merge lhs/rhs tables must have equal length")
-    lhs.zip(rhs).map { case (x, y) => UTF8String.concat(x, y) }
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires a string word, got ${other.catalogString}")
-  }
-  override def nullable: Boolean = true
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
-  }
-
-  protected def genCall(ctx: CodegenContext, ev: ExprCode, method: String): ExprCode = {
-    val kernel = ctx.addReferenceObj("bpeReplayKernel", BpeReplayKernel, BpeReplayKernel.getClass.getName)
-    val ut     = "org.apache.spark.unsafe.types.UTF8String[]"
-    val l      = ctx.addReferenceObj("bpeLhs", lhs, ut)
-    val r      = ctx.addReferenceObj("bpeRhs", rhs, ut)
-    val c      = ctx.addReferenceObj("bpeCat", cat, ut)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $kernel.$method($in, $l, $r, $c);")
-  }
-}
-
-/** `graft_bpe_apply(word, lhs[], rhs[])` → the word's token array after
-  * replaying the merge table in learned order. */
-case class BpeApplyTokens(child: Expression, lhs: Array[UTF8String], rhs: Array[UTF8String])
-    extends BpeReplayBase {
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def prettyName: String = "graft_bpe_apply"
-  override protected def nullSafeEval(w: Any): Any =
-    BpeReplayKernel.applyArray(w.asInstanceOf[UTF8String], lhs, rhs, cat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genCall(ctx, ev, "applyArray")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** `graft_bpe_pairs(word, lhs[], rhs[])` → adjacent `(l, r)` pairs of the
-  * replayed tokenization (one training round's explode input). */
-case class BpeAdjacentPairs(child: Expression, lhs: Array[UTF8String], rhs: Array[UTF8String])
-    extends BpeReplayBase {
-  override def dataType: DataType = ArrayType(
-    StructType(Seq(StructField("l", StringType, nullable = false),
-      StructField("r", StringType, nullable = false))), containsNull = false)
-  override def prettyName: String = "graft_bpe_pairs"
-  override protected def nullSafeEval(w: Any): Any =
-    BpeReplayKernel.pairsArray(w.asInstanceOf[UTF8String], lhs, rhs, cat)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    genCall(ctx, ev, "pairsArray")
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }

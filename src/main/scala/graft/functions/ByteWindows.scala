@@ -1,43 +1,29 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.types.{ArrayType, BinaryType, DataType, DoubleType, LongType}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 
 /**
- * Per-window RMS energy of a binary payload read as unsigned PCM8 samples
- * around the 128 midpoint: element `w` is
- * `sqrt(Σ_{i ∈ window w} (b_i − 128)² / n_w)` over `window`-byte frames
- * (the last frame is the remainder; an empty payload yields an empty
- * array). ONE compiled pass over the bytes replaces the
+ * Binary-payload kernels behind `graft_rms_windows` and `graft_blockhash`:
+ * ONE compiled pass over the bytes each, replacing the
  * `transform(sequence(1, n), i → conv(hex(substring(payload, i, 1)), 16,
- * 10))` byte explode plus the per-window `slice`/`aggregate` lambda
- * chain: Catalyst higher-order functions evaluate their lambdas
- * INTERPRETED per element, and the per-byte substring/hex/conv allocated
- * three transient strings per sample — measured ~1.2 µs/byte on the mm
- * energy gates. Arithmetic is bit-identical to the expression chain it
- * replaces: exact int `(b−128)²`, exact long frame sums, ONE double
- * divide + `Math.sqrt` per frame.
+ * 10))` byte explode plus the per-window `slice`/`aggregate` lambda chains.
+ * Catalyst higher-order functions evaluate their lambdas INTERPRETED per
+ * element, and the per-byte substring/hex/conv allocated three transient
+ * strings per sample — measured ~1.2 µs/byte on the mm energy gates.
  */
-case class RmsWindows(child: Expression, window: Int) extends UnaryExpression {
-  require(window >= 1, "window must be >= 1")
+object ByteWindows {
 
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_rms_windows requires a binary input, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def prettyName: String = "graft_rms_windows"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    val n     = bytes.length
-    val nw    = if (n == 0) 0 else (n + window - 1) / window
-    val out   = new Array[Double](nw)
+  /** Per-window RMS energy of a payload read as unsigned PCM8 samples
+    * around the 128 midpoint: element `w` is
+    * `sqrt(Σ_{i ∈ window w} (b_i − 128)² / n_w)` over `window`-byte frames
+    * (the last frame is the remainder; an empty payload yields an empty
+    * array). Bit-identical to the expression chain it replaces: exact int
+    * `(b−128)²`, exact long frame sums, ONE double divide + `Math.sqrt` per
+    * frame. */
+  def rmsWindows(bytes: Array[Byte], window: Int): ArrayData = {
+    val n   = bytes.length
+    val nw  = if (n == 0) 0 else (n + window - 1) / window
+    val out = new Array[Double](nw)
     var w = 0
     while (w < nw) {
       val start = w * window
@@ -51,121 +37,34 @@ case class RmsWindows(child: Expression, window: Int) extends UnaryExpression {
     new GenericArrayData(out)
   }
 
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n   = ctx.freshName("n")
-      val nw  = ctx.freshName("nw")
-      val out = ctx.freshName("out")
-      val w   = ctx.freshName("w")
-      val st  = ctx.freshName("st")
-      val en  = ctx.freshName("en")
-      val s   = ctx.freshName("s")
-      val i   = ctx.freshName("i")
-      val d   = ctx.freshName("d")
-      s"""
-         |final int $n = $a.length;
-         |final int $nw = $n == 0 ? 0 : ($n + ${window - 1}) / $window;
-         |final double[] $out = new double[$nw];
-         |for (int $w = 0; $w < $nw; $w++) {
-         |  final int $st = $w * $window;
-         |  final int $en = java.lang.Math.min($st + $window, $n);
-         |  long $s = 0L;
-         |  for (int $i = $st; $i < $en; $i++) {
-         |    final int $d = ($a[$i] & 0xFF) - 128;
-         |    $s += $d * $d;
-         |  }
-         |  $out[$w] = java.lang.Math.sqrt((double) $s / (double) ($en - $st));
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
-}
-
-/**
- * 62-bit-max blockhash signature of a binary payload: the payload splits
- * into `blocks` equal slices of `ceil(n / blocks)` bytes (the tail slice
- * is the remainder; slices past the end are skipped exactly as an empty
- * `slice()` fails the old chain's `size > 0` guard), and bit `b` sets
- * when slice `b`'s unsigned-byte mean exceeds the whole payload's mean —
- * compared in EXACT integer cross-multiplication (`Σ_b · n > Σ_total ·
- * n_b`), never a float divide, exactly as the `aggregate`/`slice` lambda
- * chain it replaces computed it. One compiled pass instead of the
- * interpreted per-byte extract plus `blocks` interpreted slice-folds.
- */
-case class BlockhashSig(child: Expression, blocks: Int) extends UnaryExpression {
-  require(blocks >= 1 && blocks <= 62, "blocks must be in [1, 62]")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case BinaryType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_blockhash requires a binary input, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = LongType
-  override def prettyName: String = "graft_blockhash"
-
-  override protected def nullSafeEval(input: Any): Any = {
-    val bytes = input.asInstanceOf[Array[Byte]]
-    val n     = bytes.length
-    if (n == 0) 0L
-    else {
-      val bl = (n + blocks - 1) / blocks
-      var ts = 0L
-      var i  = 0
-      while (i < n) { ts += (bytes(i) & 0xFF); i += 1 }
-      var sig = 0L
-      var b   = 0
-      while (b < blocks) {
-        val start = b * bl
-        if (start < n) {
-          val end = math.min(start + bl, n)
-          var s = 0L
-          var j = start
-          while (j < end) { s += (bytes(j) & 0xFF); j += 1 }
-          if (s * n > ts * (end - start)) sig |= 1L << b
-        }
-        b += 1
+  /** 62-bit-max blockhash signature: the payload splits into `blocks`
+    * equal slices of `ceil(n / blocks)` bytes (the tail slice is the
+    * remainder; slices past the end are skipped exactly as an empty
+    * `slice()` fails the old chain's `size > 0` guard), and bit `b` sets
+    * when slice `b`'s unsigned-byte mean exceeds the whole payload's mean —
+    * compared in EXACT integer cross-multiplication (`Σ_b · n > Σ_total ·
+    * n_b`), never a float divide, exactly as the `aggregate`/`slice` lambda
+    * chain it replaces computed it. */
+  def blockhash(bytes: Array[Byte], blocks: Int): Long = {
+    val n = bytes.length
+    if (n == 0) return 0L
+    val bl = (n + blocks - 1) / blocks
+    var ts = 0L
+    var i  = 0
+    while (i < n) { ts += (bytes(i) & 0xFF); i += 1 }
+    var sig = 0L
+    var b   = 0
+    while (b < blocks) {
+      val start = b * bl
+      if (start < n) {
+        val end = math.min(start + bl, n)
+        var s = 0L
+        var j = start
+        while (j < end) { s += (bytes(j) & 0xFF); j += 1 }
+        if (s * n > ts * (end - start)) sig |= 1L << b
       }
-      sig
+      b += 1
     }
+    sig
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, a => {
-      val n   = ctx.freshName("n")
-      val bl  = ctx.freshName("bl")
-      val ts  = ctx.freshName("ts")
-      val sig = ctx.freshName("sig")
-      val b   = ctx.freshName("b")
-      val st  = ctx.freshName("st")
-      val en  = ctx.freshName("en")
-      val s   = ctx.freshName("s")
-      val i   = ctx.freshName("i")
-      val j   = ctx.freshName("j")
-      s"""
-         |final int $n = $a.length;
-         |long $sig = 0L;
-         |if ($n > 0) {
-         |  final int $bl = ($n + ${blocks - 1}) / $blocks;
-         |  long $ts = 0L;
-         |  for (int $i = 0; $i < $n; $i++) { $ts += ($a[$i] & 0xFF); }
-         |  for (int $b = 0; $b < $blocks; $b++) {
-         |    final int $st = $b * $bl;
-         |    if ($st < $n) {
-         |      final int $en = java.lang.Math.min($st + $bl, $n);
-         |      long $s = 0L;
-         |      for (int $j = $st; $j < $en; $j++) { $s += ($a[$j] & 0xFF); }
-         |      if ($s * $n > $ts * ($en - $st)) { $sig |= 1L << $b; }
-         |    }
-         |  }
-         |}
-         |${ev.value} = $sig;
-       """.stripMargin
-    })
-
-  override protected def withNewChildInternal(newChild: Expression): Expression =
-    copy(child = newChild)
 }

@@ -1,15 +1,19 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** Shared implementation for [[Int8QSim]] — kept on a stable object so both
-  * the interpreted and the codegen'd paths run the SAME byte code. */
-object Int8QSimKernel extends Serializable {
+/**
+ * `graft_int8_qsim`: quantized-cosine shortlist score for int8
+ * scalar-quantized retrieval — the compiled form of the
+ * `transform`/`array_max`/`round` HOF chain in `Similarity.int8TopKRerank`.
+ *
+ * Rationale (§4 of the optimization guide): higher-order functions
+ * evaluate their lambdas interpreted, per element — and the HOF spelling
+ * embeds the `array_max` subtree INSIDE the per-element lambda, so each
+ * row pays O(dim²), three times (dot + the two norm uses). [[qsim]] is one
+ * O(dim) pass per row, bit-identical on the values (spec-enforced).
+ */
+object Int8QSimKernel {
 
   /** Spark's `round(x, 0)` for doubles: NaN/Infinity pass through, else
     * HALF_UP on the decimal string value (matches RoundBase for
@@ -42,7 +46,7 @@ object Int8QSimKernel extends Serializable {
     * of the HOF chain in `Similarity.int8TopKRerank` (bit-identical:
     * same quantization arithmetic, same sequential fold order, nulls
     * skipped exactly like graft_dot/fnorm skip them). */
-  def qsim(v: ArrayData, isFloat: Boolean, zq: Array[Double], zqNorm: Double): Double = {
+  def qsim(v: ArrayData, isFloat: Boolean, zq: Array[Double], zqNorm: java.lang.Double): Double = {
     val s   = 127.0 / maxAbs(v, isFloat)
     val n   = v.numElements()
     val nq  = zq.length
@@ -58,7 +62,7 @@ object Int8QSimKernel extends Serializable {
       }
       i += 1
     }
-    dot / (math.sqrt(n2) * zqNorm)
+    dot / (math.sqrt(n2) * zqNorm.doubleValue)
   }
 
   /** Driver-side replay of the same quantization for the query literal
@@ -85,56 +89,4 @@ object Int8QSimKernel extends Serializable {
     while (i < zq.length) { s += zq(i) * zq(i); i += 1 }
     math.sqrt(s)
   }
-}
-
-/**
- * Quantized-cosine shortlist score for int8 scalar-quantized retrieval —
- * the compiled form of the `transform`/`array_max`/`round` HOF chain in
- * `Similarity.int8TopKRerank`.
- *
- * Rationale (§4 of the optimization guide): higher-order functions
- * evaluate their lambdas interpreted, per element — and the HOF spelling
- * embeds the `array_max` subtree INSIDE the per-element lambda, so each
- * row pays O(dim²), three times (dot + the two norm uses). This kernel is
- * one O(dim) pass per row in generated code, bit-identical on the values
- * (spec-enforced).
- */
-case class Int8QSim(child: Expression, zq: Array[Double]) extends UnaryExpression {
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  private lazy val zqNorm: Double = Int8QSimKernel.norm(zq)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_int8_qsim requires array<float|double>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_int8_qsim"
-
-  override protected def nullSafeEval(v: Any): Any =
-    Int8QSimKernel.qsim(v.asInstanceOf[ArrayData], isFloat, zq, zqNorm)
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("int8QSimKernel", Int8QSimKernel, Int8QSimKernel.getClass.getName)
-    val zqRef  = ctx.addReferenceObj("zq", zq, "double[]")
-    // the norm rides as a boxed reference, not a source literal — source
-    // printing must not be trusted to round-trip every double
-    val nRef   = ctx.addReferenceObj("zqNorm", java.lang.Double.valueOf(zqNorm), "java.lang.Double")
-    nullSafeCodeGen(ctx, ev, in =>
-      s"${ev.value} = $kernel.qsim($in, $isFloat, $zqRef, $nRef.doubleValue());")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }

@@ -1,13 +1,21 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, LongType}
 
-/** One-pass multi-table LSH bucket kernel (see [[LshBuckets]]). */
-object LshKernel extends Serializable {
+/**
+ * `graft_lsh_buckets`: native multi-table LSH bucketing, one sign-bucket
+ * per hash table computed in one pass over the vector.
+ *
+ * Rationale: building `tables` bucket columns from per-plane dot products
+ * (even native ones) makes the projection a `tables × planes`-expression
+ * tree — at 12 tables × 7 planes that is 84 separate array traversals per
+ * row and a plan Catalyst spends seconds optimizing/codegen'ing. This
+ * kernel collapses the whole bucketing stage into ONE call: the vector is
+ * read once, all dots accumulate over primitive locals, and plan size is
+ * independent of the table/plane counts (which
+ * [[graft.pipeline.Similarity.planesFor]] grows with the corpus).
+ */
+object LshKernel {
 
   /**
    * All per-table sign buckets of one vector in a single traversal.
@@ -15,7 +23,7 @@ object LshKernel extends Serializable {
    * `[table][plane][component]`; bucket of table t packs bit j =
    * (sequential-fold dot(vec, plane_{t,j}) > 0), identical per bit to the
    * portable HOF form [[graft.pipeline.Similarity.lshBucket]] and to a
-   * per-plane [[DotProduct]] (same order, same double arithmetic, null
+   * per-plane `graft_dot` (same order, same double arithmetic, null
    * elements contribute 0, common-prefix length semantics).
    */
   def buckets(vec: ArrayData, isFloat: Boolean, planesFlat: Array[Double], k: Int, dim: Int): ArrayData = {
@@ -47,50 +55,4 @@ object LshKernel extends Serializable {
     }
     new GenericArrayData(out)
   }
-}
-
-/**
- * Native multi-table LSH bucketing: `array<long>` of one sign-bucket per
- * hash table, computed in one pass over the vector.
- *
- * Rationale: building `tables` bucket columns from per-plane dot products
- * (even native ones) makes the projection a `tables × planes`-expression
- * tree — at 12 tables × 7 planes that is 84 separate array traversals per
- * row and a plan Catalyst spends seconds optimizing/codegen'ing. This
- * expression collapses the whole bucketing stage into ONE node: the vector
- * is read once, all dots accumulate over primitive locals, and plan size
- * is independent of the table/plane counts (which [[graft.pipeline.Similarity.planesFor]]
- * grows with the corpus).
- */
-case class LshBuckets(child: Expression, planesFlat: Array[Double], k: Int, dim: Int)
-    extends UnaryExpression {
-
-  require(k >= 1 && dim >= 1 && planesFlat.length % (k * dim) == 0,
-    s"planesFlat length ${planesFlat.length} must be a multiple of k*dim = ${k * dim}")
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_lsh_buckets requires array<float|double>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_lsh_buckets"
-
-  override protected def nullSafeEval(v: Any): Any =
-    LshKernel.buckets(v.asInstanceOf[ArrayData], isFloat, planesFlat, k, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("lshKernel", LshKernel, LshKernel.getClass.getName)
-    val planes = ctx.addReferenceObj("planesFlat", planesFlat, "double[]")
-    nullSafeCodeGen(ctx, ev, in =>
-      s"${ev.value} = $kernel.buckets($in, $isFloat, $planes, $k, $dim);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }

@@ -1,13 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
 
-/** One-pass min-Euclidean-distance kernel (see [[MinEuclDist]]). */
-object MinEuclKernel extends Serializable {
+/**
+ * `graft_min_eucl`: native minimum Euclidean distance of a vector column
+ * to a literal center set, one pass over the vector — replaces a
+ * `centers.size`-branch `zip_with`/`aggregate` higher-order-function chain
+ * whose lambdas evaluate INTERPRETED per element (per round of a greedy
+ * k-center traversal that chain re-reads the vector once per center
+ * through interpreted dispatch; this reads it once, compiled).
+ */
+object MinEuclKernel {
 
   /**
    * Minimum Euclidean distance from `vec` to any center in `centsFlat`
@@ -53,55 +56,4 @@ object MinEuclKernel extends Serializable {
     }
     best
   }
-}
-
-/**
- * Native minimum Euclidean distance of a vector column to a literal
- * center set, one pass over the vector — replaces a `centers.size`-branch
- * `zip_with`/`aggregate` higher-order-function chain whose lambdas
- * evaluate INTERPRETED per element (per round of a greedy k-center
- * traversal that chain re-reads the vector once per center through
- * interpreted dispatch; this reads it once, compiled).
- */
-case class MinEuclDist(child: Expression, centsFlat: Array[Double], dim: Int)
-    extends UnaryExpression {
-
-  require(dim >= 1 && centsFlat.length % dim == 0,
-    s"centsFlat length ${centsFlat.length} must be a multiple of dim = $dim")
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_min_eucl requires array<float|double>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = DoubleType
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_min_eucl"
-
-  override protected def nullSafeEval(v: Any): Any =
-    MinEuclKernel.minDist(v.asInstanceOf[ArrayData], isFloat, centsFlat, dim)
-
-  override def eval(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("minEuclKernel", MinEuclKernel, MinEuclKernel.getClass.getName)
-    val cents  = ctx.addReferenceObj("centsFlat", centsFlat, "double[]")
-    val boxed  = ctx.freshName("boxed")
-    nullSafeCodeGen(ctx, ev, in =>
-      s"""
-         |java.lang.Double $boxed = $kernel.minDist($in, $isFloat, $cents, $dim);
-         |if ($boxed == null) { ${ev.isNull} = true; } else { ${ev.value} = $boxed.doubleValue(); }
-       """.stripMargin)
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }

@@ -1,18 +1,24 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
-/** One-pass nearest-centroid kernel (see [[NearestCentroid]]). */
-object CentroidKernel extends Serializable {
+/**
+ * `graft_nearest_centroid`: native nearest-centroid assignment, the
+ * 0-based position of the cosine-closest centroid among `centsFlat`
+ * (nlist × dim doubles, row-major), one pass over the vector.
+ *
+ * Replaces an nlist-branch cosine `array` + `array_position(array_max)`
+ * projection — plan size becomes independent of nlist and each row reads
+ * its vector once instead of nlist times, which is what survives
+ * nlist ≈ √n sizing at 100 TB. Centroid norms are precomputed driver-side
+ * (same sequential fold the expression form constant-folded).
+ */
+object CentroidKernel {
 
   /**
    * 0-based index of the cosine-nearest centroid. Arithmetic replicates
    * the expression form it replaces exactly: sequential-fold double dots
-   * ([[DotProduct]] semantics — common prefix, null elements contribute 0),
+   * ([[ArrayKernels.dot]] semantics — common prefix, null elements contribute 0),
    * `sim = dot/(|v|·|c|)`, first index wins ties. NaN mirrors Spark's
    * ordering, where NaN is GREATER than any double (`array_max` of a row
    * containing NaN is NaN, and `array_position` then finds the first NaN):
@@ -49,49 +55,4 @@ object CentroidKernel extends Serializable {
     }
     bestI
   }
-}
-
-/**
- * Native nearest-centroid assignment: 0-based position of the
- * cosine-closest centroid among `centsFlat` (nlist × dim doubles,
- * row-major), one pass over the vector.
- *
- * Replaces an nlist-branch cosine `array` + `array_position(array_max)`
- * projection — plan size becomes independent of nlist and each row reads
- * its vector once instead of nlist times, which is what survives
- * nlist ≈ √n sizing at 100 TB. Centroid norms are precomputed driver-side
- * (same sequential fold the expression form constant-folded).
- */
-case class NearestCentroid(child: Expression, centsFlat: Array[Double], norms: Array[Double], dim: Int)
-    extends UnaryExpression {
-
-  require(dim >= 1 && centsFlat.length == norms.length * dim,
-    s"centsFlat length ${centsFlat.length} must equal norms.length*dim = ${norms.length * dim}")
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_nearest_centroid requires array<float|double>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = IntegerType
-  override def prettyName: String = "graft_nearest_centroid"
-
-  override protected def nullSafeEval(v: Any): Any =
-    CentroidKernel.nearest(v.asInstanceOf[ArrayData], isFloat, centsFlat, norms, dim)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("centroidKernel", CentroidKernel, CentroidKernel.getClass.getName)
-    val cents  = ctx.addReferenceObj("centsFlat", centsFlat, "double[]")
-    val ns     = ctx.addReferenceObj("centNorms", norms, "double[]")
-    nullSafeCodeGen(ctx, ev, in =>
-      s"${ev.value} = $kernel.nearest($in, $isFloat, $cents, $ns, $dim);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }

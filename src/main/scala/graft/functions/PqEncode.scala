@@ -1,13 +1,17 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType, IntegerType}
 
-/** One-pass product-quantization encoder (see [[PqEncode]]). */
-object PqKernel extends Serializable {
+/**
+ * `graft_pq_encode`: native PQ encoding, `array<int>` of `m` sub-codes per
+ * vector, one pass.
+ *
+ * The expression alternative builds an `m × kpq`-branch distance tree per
+ * row; this kernel keeps plan size independent of the codebook and reads
+ * the vector once — the shape that survives production codebooks
+ * (`m`=16-64, `kpq`=256) at 100 TB.
+ */
+object PqKernel {
 
   /**
    * `m` sub-codes for one vector: for subspace `j`, the 0-based index of
@@ -16,7 +20,7 @@ object PqKernel extends Serializable {
    * dims `i` ASCENDING (the same left-fold order the DuckDB oracle
    * replays); the first minimum wins ties (strict `<` — later equal
    * distances never displace an earlier code). Null / missing elements
-   * read as 0, mirroring [[DotProduct]]'s common-prefix convention.
+   * read as 0, mirroring [[ArrayKernels.dot]]'s common-prefix convention.
    */
   def encode(vec: ArrayData, isFloat: Boolean, centsFlat: Array[Double],
              m: Int, dsub: Int, kpq: Int): ArrayData = {
@@ -55,46 +59,4 @@ object PqKernel extends Serializable {
     }
     new GenericArrayData(codes)
   }
-}
-
-/**
- * Native PQ encoding: `array<int>` of `m` sub-codes per vector, one pass.
- *
- * The expression alternative builds an `m × kpq`-branch distance tree per
- * row; this kernel keeps plan size independent of the codebook and reads
- * the vector once — the shape that survives production codebooks
- * (`m`=16-64, `kpq`=256) at 100 TB.
- */
-case class PqEncode(child: Expression, centsFlat: Array[Double],
-                    m: Int, dsub: Int, kpq: Int)
-    extends UnaryExpression {
-
-  require(m >= 1 && dsub >= 1 && kpq >= 1 && centsFlat.length == m * kpq * dsub,
-    s"centsFlat length ${centsFlat.length} must equal m*kpq*dsub = ${m * kpq * dsub}")
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_pq_encode requires array<float|double>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(IntegerType, containsNull = false)
-  override def prettyName: String = "graft_pq_encode"
-
-  override protected def nullSafeEval(v: Any): Any =
-    PqKernel.encode(v.asInstanceOf[ArrayData], isFloat, centsFlat, m, dsub, kpq)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("pqKernel", PqKernel, PqKernel.getClass.getName)
-    val cents  = ctx.addReferenceObj("pqCentsFlat", centsFlat, "double[]")
-    nullSafeCodeGen(ctx, ev, in =>
-      s"${ev.value} = $kernel.encode($in, $isFloat, $cents, $m, $dsub, $kpq);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }

@@ -1,23 +1,16 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, ImplicitCastInputTypes, RuntimeReplaceable, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Native signature kernels for the dedup operators. The HOF formulations
- * (`transform` + `array_min` / 64 × `aggregate`) evaluate an interpreted
- * lambda per array element — for a minhash signature that is
- * `numHashes × |shingles|` lambda invocations per document. These
- * expressions run the same arithmetic as tight generated loops.
- */
-
-/**
- * Portable polynomial hashing shared by the text-dedup kernels.
+ * Portable polynomial hashing and the signature kernels of the dedup
+ * operators (`graft_poly_hash`, `graft_shingles`, `graft_word_hashes`,
+ * `graft_winnow`, `graft_winnow_fps`, `graft_cdc_chunks`, `graft_minhash`,
+ * `graft_simhash`). The HOF formulations (`transform` + `array_min` / 64 ×
+ * `aggregate`) evaluate an interpreted lambda per array element — for a
+ * minhash signature that is `numHashes × |shingles|` lambda invocations per
+ * document. These methods run the same arithmetic as tight compiled loops.
  *
  * `poly(word) = fold over code points of (acc * base + cp) mod (2^31-1)`,
  * seeded — plain modular arithmetic that an external SQL engine (the
@@ -29,7 +22,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * containing a non-ASCII byte falls back to a per-code-point fold so the
  * definition stays "code points" everywhere.
  */
-object PortableHash extends Serializable {
+object PortableHash {
   val P31 = 2147483647L // 2^31 - 1
   val P31b = 2147483629L // 2^31 - 19 (prime) — independent reduction modulus
   val FallbackMod = 1L << 55 // short-doc fold modulus (see shingleSet)
@@ -117,11 +110,39 @@ object PortableHash extends Serializable {
   }
 
   /** [[wordPoly]] over a whole string; NULL or empty gives `seed`. The
-    * body of the compiled `graft_poly_hash` ([[PolyHash]]), value-identical
-    * to the HOF reference form [[graft.pipeline.Dedup.polyHash]]. */
+    * body of `graft_poly_hash`, value-identical to the HOF reference form
+    * [[graft.pipeline.Dedup.polyHash]]. */
   def polyHash(s: UTF8String, base: Long, seed: Long): Long =
     if (s == null || s.numBytes == 0) seed
     else wordPoly(s.getBytes, 0, s.numBytes, base, seed)
+
+  /** MinHash permutation parameters `(a_i, b_i)`, one seeded sequence
+    * shared by `graft_minhash` and the HOF form
+    * [[graft.pipeline.Dedup.minhashSignature]]. */
+  def minhashPerms(numHashes: Int): Array[(Long, Long)] = {
+    val rnd = new scala.util.Random(42)
+    Array.fill(numHashes)((1L + rnd.nextInt(Int.MaxValue - 1).toLong, rnd.nextInt(Int.MaxValue).toLong))
+  }
+
+  /** MinHash signature over a hashed-shingle array: for each permutation
+    * i, `min over shingles of floorMod(floorMod(h, P) * as(i) + bs(i), P)`
+    * with P = 2^31-1 — value-identical to the HOF form. */
+  def minhash(shingles: ArrayData, as: Array[Long], bs: Array[Long]): ArrayData = {
+    val n   = shingles.numElements()
+    val acc = Array.fill(as.length)(Long.MaxValue)
+    var i   = 0
+    while (i < n) {
+      val base = Math.floorMod(shingles.getLong(i), P31)
+      var j    = 0
+      while (j < as.length) {
+        val x = Math.floorMod(base * as(j) + bs(j), P31)
+        if (x < acc(j)) acc(j) = x
+        j += 1
+      }
+      i += 1
+    }
+    new GenericArrayData(acc)
+  }
 
   /** word boundaries of a single-space split, KEEPING empty words —
     * matches `split(text, " ")` (Spark limit=-1) and DuckDB
@@ -306,257 +327,4 @@ object PortableHash extends Serializable {
     }
     new GenericArrayData(java.util.Arrays.copyOf(tmp, nc))
   }
-}
-
-/**
- * Native k-word shingle-set kernel: split on single spaces, hash each word
- * (portable polynomial, 31-bit), combine k-windows arithmetically, return
- * the SORTED DISTINCT hash array. One tight loop per document vs the
- * `transform`/`aggregate` HOF chain (interpreted lambda per element) — the
- * prep stage of every text-dedup operator runs through this.
- */
-case class ShingleSet(child: Expression, k: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"graft_shingles requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_shingles"
-
-  override protected def nullSafeEval(v: Any): Any =
-    PortableHash.shingleSet(v.asInstanceOf[UTF8String], k)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ph = ctx.addReferenceObj("portableHash", PortableHash, PortableHash.getClass.getName)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ph.shingleSet($in, $k);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/**
- * `graft_poly_hash(str, base, seed)`: the portable polynomial word hash
- * ([[PortableHash.polyHash]]) as one compiled static call per row. The
- * operators' sampling and watermark hashes run this instead of the HOF
- * reference form [[graft.pipeline.Dedup.polyHash]], whose per-code-point
- * lambda fold is interpreted. A NULL string gives `seed`, as the HOF form
- * does, so the call does not propagate NULL; `base` and `seed` must be
- * non-null constants.
- */
-case class PolyHash(str: Expression, base: Expression, seed: Expression)
-    extends RuntimeReplaceable with ImplicitCastInputTypes {
-
-  override def inputTypes = Seq(StringType, LongType, LongType)
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    val typed = super.checkInputDataTypes()
-    if (typed.isFailure) typed
-    else if (Seq(base, seed).forall(e => e.foldable && e.eval() != null)) TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure("graft_poly_hash requires non-null constant base and seed")
-  }
-
-  override lazy val replacement: Expression =
-    StaticInvoke(PortableHash.getClass, LongType, "polyHash", Seq(str, base, seed), inputTypes,
-      propagateNull = false, returnNullable = false)
-
-  override def prettyName: String = "graft_poly_hash"
-  override def children: Seq[Expression] = Seq(str, base, seed)
-
-  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression =
-    copy(str = c(0), base = c(1), seed = c(2))
-}
-
-/** Native content-defined-chunk kernel (single-space words, boundary at
-  * word-hash ≡ 0 mod `divisor`, packed `n_words·2^32+chunk_hash` longs in
-  * chunk order) — see [[PortableHash.cdcChunkList]]. */
-case class CdcChunks(child: Expression, divisor: Int) extends UnaryExpression {
-  require(divisor >= 2, "divisor must be >= 2")
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"graft_cdc_chunks requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_cdc_chunks"
-
-  override protected def nullSafeEval(v: Any): Any =
-    PortableHash.cdcChunkList(v.asInstanceOf[UTF8String], divisor)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ph = ctx.addReferenceObj("portableHash", PortableHash, PortableHash.getClass.getName)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ph.cdcChunkList($in, $divisor);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** Native winnowing-fingerprint kernel (char k-grams, w-window rightmost
-  * minima, packed `pos·2^32+fp` longs) — see [[PortableHash.winnow]]. */
-case class WinnowFingerprints(child: Expression, k: Int, w: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"graft_winnow requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_winnow"
-
-  override protected def nullSafeEval(v: Any): Any =
-    PortableHash.winnow(v.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ph = ctx.addReferenceObj("portableHash", PortableHash, PortableHash.getClass.getName)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ph.winnow($in, $k, $w);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** Native sorted-distinct winnowing fingerprint-VALUE kernel — see
-  * [[PortableHash.winnowFpSet]]. */
-case class WinnowFpSet(child: Expression, k: Int, w: Int) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"graft_winnow_fps requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_winnow_fps"
-
-  override protected def nullSafeEval(v: Any): Any =
-    PortableHash.winnowFpSet(v.asInstanceOf[UTF8String], k, w)
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ph = ctx.addReferenceObj("portableHash", PortableHash, PortableHash.getClass.getName)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ph.winnowFpSet($in, $k, $w);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** Native distinct wide word-hash kernel (simhash input) — see [[PortableHash.wordHashSet]]. */
-case class WordHashSet(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"graft_word_hashes requires string, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_word_hashes"
-
-  override protected def nullSafeEval(v: Any): Any =
-    PortableHash.wordHashSet(v.asInstanceOf[UTF8String])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ph = ctx.addReferenceObj("portableHash", PortableHash, PortableHash.getClass.getName)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ph.wordHashSet($in);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/**
- * MinHash signature over a hashed-shingle array: for each permutation i,
- * `min over shingles of floorMod(floorMod(h, P) * a_i + b_i, P)` with
- * P = 2^31-1 — value-identical to the HOF version in
- * [[graft.pipeline.Dedup.minhashSignature]].
- */
-case class MinHashSignature(child: Expression, numHashes: Int) extends UnaryExpression {
-
-  private val P = 2147483647L // 2^31 - 1
-
-  // deterministic permutation parameters — MUST stay in sync with
-  // Dedup.mhParams (same seed, same generator sequence)
-  @transient private lazy val perms: Array[(Long, Long)] = {
-    val rnd = new scala.util.Random(42)
-    Array.fill(numHashes)((1L + rnd.nextInt(Int.MaxValue - 1).toLong, rnd.nextInt(Int.MaxValue).toLong))
-  }
-  @transient private lazy val as: Array[Long] = perms.map(_._1)
-  @transient private lazy val bs: Array[Long] = perms.map(_._2)
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"graft_minhash requires array<bigint>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_minhash"
-
-  override protected def nullSafeEval(v: Any): Any = {
-    val arr = v.asInstanceOf[ArrayData]
-    val n   = arr.numElements()
-    val acc = Array.fill(numHashes)(Long.MaxValue)
-    var i   = 0
-    while (i < n) {
-      val base = java.lang.Math.floorMod(arr.getLong(i), P)
-      var j = 0
-      while (j < numHashes) {
-        val x = java.lang.Math.floorMod(base * as(j) + bs(j), P)
-        if (x < acc(j)) acc(j) = x
-        j += 1
-      }
-      i += 1
-    }
-    new GenericArrayData(acc)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val aRef = ctx.addReferenceObj("mhAs", as, "long[]")
-    val bRef = ctx.addReferenceObj("mhBs", bs, "long[]")
-    nullSafeCodeGen(ctx, ev, in => {
-      val i = ctx.freshName("i"); val j = ctx.freshName("j")
-      val n = ctx.freshName("n"); val acc = ctx.freshName("acc")
-      val base = ctx.freshName("base"); val x = ctx.freshName("x")
-      s"""
-         |final int $n = $in.numElements();
-         |final long[] $acc = new long[$numHashes];
-         |java.util.Arrays.fill($acc, Long.MAX_VALUE);
-         |for (int $i = 0; $i < $n; $i++) {
-         |  final long $base = java.lang.Math.floorMod($in.getLong($i), ${P}L);
-         |  for (int $j = 0; $j < $numHashes; $j++) {
-         |    final long $x = java.lang.Math.floorMod($base * $aRef[$j] + $bRef[$j], ${P}L);
-         |    if ($x < $acc[$j]) $acc[$j] = $x;
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($acc);
-       """.stripMargin
-    })
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/**
- * 128-bit SimHash signature over a wide word-hash array, returned as TWO
- * packed non-negative longs `[lo, hi]` (positions 0-63 / 64-127, see
- * [[PortableHash.simHash128]]). Packing makes the downstream pipeline
- * all-builtin: band buckets are 32-bit slices (`shiftright`/`&`) and the
- * Hamming verify is `bit_count(lo_a ^ lo_b) + bit_count(hi_a ^ hi_b)` —
- * codegen'd Spark builtins instead of a 64-element interpreted HOF fold.
- */
-case class SimHashSignature(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(LongType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(s"graft_simhash requires array<bigint>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  override def prettyName: String = "graft_simhash"
-
-  override protected def nullSafeEval(v: Any): Any =
-    PortableHash.simHash128(v.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val ph = ctx.addReferenceObj("portableHash", PortableHash, PortableHash.getClass.getName)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $ph.simHash128($in);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }

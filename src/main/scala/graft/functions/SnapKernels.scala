@@ -1,11 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
@@ -13,7 +8,7 @@ import org.apache.spark.unsafe.types.UTF8String
  * query hot paths (§4). Each replicates its HOF spelling exactly on the
  * operator's input domain (spec-enforced).
  */
-object SnapKernels extends Serializable {
+object SnapKernels {
 
   /** Unit-normalized 1e-6-lattice snap of a vector — the compiled form of
     * `transform(v, x => round(x / norm(v) * 1e6)::long)` where the HOF
@@ -59,69 +54,4 @@ object SnapKernels extends Serializable {
     while (i < nc - 1) { out(i) = w.substring(i, i + 2); i += 1 }
     new GenericArrayData(out)
   }
-}
-
-/** `graft_unit_snap(vec)` → `array<long>` unit-normalized 1e-6 lattice
-  * coordinates, one compiled pass (null elements preserved). */
-case class UnitSnap(child: Expression) extends UnaryExpression {
-
-  private def isFloat: Boolean = child.dataType match {
-    case ArrayType(FloatType, _) => true
-    case _                       => false
-  }
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case ArrayType(FloatType, _) | ArrayType(DoubleType, _) => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_unit_snap requires array<float|double>, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(LongType, containsNull = true)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_unit_snap"
-
-  override protected def nullSafeEval(v: Any): Any =
-    SnapKernels.unitSnap(v.asInstanceOf[ArrayData], isFloat)
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("snapKernels", SnapKernels, SnapKernels.getClass.getName)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $kernel.unitSnap($in, $isFloat);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
-}
-
-/** `graft_char_bigrams(word)` → `array<string>` of the word's overlapping
-  * 2-character substrings, one compiled pass. */
-case class CharBigrams(child: Expression) extends UnaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = child.dataType match {
-    case StringType => TypeCheckResult.TypeCheckSuccess
-    case other => TypeCheckResult.TypeCheckFailure(
-      s"graft_char_bigrams requires a string word, got ${other.catalogString}")
-  }
-
-  override def dataType: DataType = ArrayType(StringType, containsNull = false)
-  override def nullable: Boolean = true
-  override def prettyName: String = "graft_char_bigrams"
-
-  override protected def nullSafeEval(w: Any): Any =
-    SnapKernels.charBigrams(w.asInstanceOf[UTF8String])
-
-  override def eval(input: InternalRow): Any = {
-    val v = child.eval(input)
-    if (v == null) null else nullSafeEval(v)
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val kernel = ctx.addReferenceObj("snapKernels", SnapKernels, SnapKernels.getClass.getName)
-    nullSafeCodeGen(ctx, ev, in => s"${ev.value} = $kernel.charBigrams($in);")
-  }
-
-  override protected def withNewChildInternal(newChild: Expression): Expression = copy(child = newChild)
 }

@@ -1,10 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, LongType}
 
 /**
  * Per-key Theil–Sen medians as ONE compiled pass over the collected grid
@@ -145,54 +141,4 @@ object TheilSenMedians {
   private def swap(a: Array[Double], i: Int, j: Int): Unit = {
     val t = a(i); a(i) = a(j); a(j) = t
   }
-}
-
-/** `graft_ts_slope_median(xs: array<long>, vs: array<double>) -> double` */
-case class TheilSenSlopeMedian(left: Expression, right: Expression) extends BinaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult = (left.dataType, right.dataType) match {
-    case (ArrayType(LongType, _), ArrayType(DoubleType, _)) => TypeCheckResult.TypeCheckSuccess
-    case (l, r) => TypeCheckResult.TypeCheckFailure(
-      s"graft_ts_slope_median requires (array<bigint>, array<double>), got ${l.catalogString} / ${r.catalogString}")
-  }
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_ts_slope_median"
-
-  override protected def nullSafeEval(xs: Any, vs: Any): Any =
-    TheilSenMedians.slopesMedian(xs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, v) => s"graft.functions.TheilSenMedians.slopesMedian($x, $v)")
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
-/** `graft_ts_resid_median(xs: array<long>, vs: array<double>, slope: double) -> double` */
-case class TheilSenResidMedian(first: Expression, second: Expression, third: Expression)
-    extends TernaryExpression {
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (first.dataType, second.dataType, third.dataType) match {
-      case (ArrayType(LongType, _), ArrayType(DoubleType, _), DoubleType) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (a, b, c) => TypeCheckResult.TypeCheckFailure(
-        s"graft_ts_resid_median requires (array<bigint>, array<double>, double), got " +
-          s"${a.catalogString} / ${b.catalogString} / ${c.catalogString}")
-    }
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "graft_ts_resid_median"
-
-  override protected def nullSafeEval(xs: Any, vs: Any, slope: Any): Any =
-    TheilSenMedians.residMedian(
-      xs.asInstanceOf[ArrayData], vs.asInstanceOf[ArrayData], slope.asInstanceOf[Double])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, (x, v, s) => s"graft.functions.TheilSenMedians.residMedian($x, $v, $s)")
-
-  override protected def withNewChildrenInternal(
-      newFirst: Expression, newSecond: Expression, newThird: Expression): Expression =
-    copy(first = newFirst, second = newSecond, third = newThird)
 }

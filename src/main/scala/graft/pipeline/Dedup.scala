@@ -4,7 +4,7 @@ import graft.pipeline.Checkpoints.PinOps
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-import graft.functions.GraftFunctions
+import graft.functions.{GraftFunctions, PortableHash}
 
 /**
  * Deduplication operators for training-data pipelines, each designed for
@@ -66,7 +66,7 @@ object Dedup {
    * arithmetically — no per-shingle string building; window sums stay
    * inside a long under ANSI mode (Spark 4 throws on overflow). Sorted so
    * the native merge-intersect can verify pairs; longs shuffle instead of
-   * strings. HOF reference form of [[graft.functions.ShingleSet]] (the
+   * strings. HOF reference form of [[graft.functions.PortableHash.shingleSet]] (the
    * native kernel the operators use) — a spec asserts they are
    * value-identical.
    */
@@ -158,18 +158,11 @@ object Dedup {
 
   private val MhPrime = 2147483647L // 2^31 - 1: keeps a*h + b inside a long
 
-  /** deterministic permutation parameters (a_i, b_i) for the minhash family
-    * (shared with [[graft.OracleGen]], which embeds them as SQL literals). */
-  private[graft] def mhParams(numHashes: Int): Array[(Long, Long)] = {
-    val rnd = new scala.util.Random(42)
-    Array.fill(numHashes)((1L + rnd.nextInt(Int.MaxValue - 1).toLong, rnd.nextInt(Int.MaxValue).toLong))
-  }
-
   /** minhash signature (array of numHashes longs) over a hashed-shingle-set
     * column — portable HOF form; the LSH pipeline uses the value-identical
-    * native [[graft.functions.MinHashSignature]] kernel. */
+    * native [[graft.functions.PortableHash.minhash]] kernel. */
   def minhashSignature(shingleHashes: Column, numHashes: Int): Column = {
-    val perms = mhParams(numHashes)
+    val perms = PortableHash.minhashPerms(numHashes)
     val base  = transform(shingleHashes, h => pmod(h, lit(MhPrime)))
     array(perms.map { case (a, b) =>
       array_min(transform(base, h => pmod(h * lit(a) + lit(b), lit(MhPrime))))
@@ -410,7 +403,7 @@ object Dedup {
    * ([[graft.functions.PortableHash.cdcChunkList]], packed
    * `n_words·2^32+chunk_hash` longs); the HOF reference form
    * [[cdcChunksHof]] states the same semantics declaratively and a spec
-   * asserts row-identity (the [[graft.functions.ShingleSet]] /
+   * asserts row-identity (the [[graft.functions.PortableHash.shingleSet]] /
    * winnow discipline applied to the chunker — its interpreted per-word
    * transform + per-chunk slice/aggregate lambdas were the d_cdc floor).
    */
@@ -1464,7 +1457,7 @@ object Dedup {
    * `[lo, hi]`: per position, sign of the sum of ±1 over word hashes
    * (positions 0-63 from the wide hash bits, 64-127 from the [[lane2Hash]]
    * rehash bits). HOF reference form of the native
-   * [[graft.functions.SimHashSignature]] — a spec asserts identity.
+   * [[graft.functions.PortableHash.simHash128]] — a spec asserts identity.
    */
   def simhashSignature(hashesCol: Column): Column = {
     def packed(hs: Column): Column =
@@ -1483,7 +1476,7 @@ object Dedup {
     * the oracle can replay the signature. Bits 62-63 are ~always 0 (the
     * value is uniform below P² ≈ 2^62): those signature positions are
     * constant on both engines and contribute 0 to every Hamming distance.
-    * HOF reference form of the native [[graft.functions.WordHashSet]]. */
+    * HOF reference form of the native [[graft.functions.PortableHash.wordHashSet]]. */
   def wordHashes(text: Column): Column =
     sort_array(array_distinct(transform(split(text, " "),
       w => polyHash(w, 131L, 7L) * lit(PortableHashP) + polyHash(w, 137L, 11L))))

@@ -1237,7 +1237,7 @@ object Multimodal {
    * segmentation) every audio-curation pipeline runs before the
    * expensive model pass. Unlike the decode stubs this is REAL byte
    * arithmetic end to end: the per-window RMS array comes from the
-   * [[graft.functions.RmsWindows]] kernel (one compiled pass over the
+   * [[graft.functions.ByteWindows.rmsWindows]] kernel (one compiled pass over the
    * bytes — no UDF, no interpreted lambda), frame sums are exact
    * integers, and the only float ops are one divide + sqrt per frame —
    * so the DuckDB oracle replays it exactly from `hex(payload)`.

@@ -37,7 +37,7 @@ object Retrieval {
   /** ascending-sorted sequential fold — the order-insensitive double sum
     * (each weight is itself a fixed IEEE op chain, so sorting + left fold
     * pins the one remaining source of cross-engine drift). Runs as the
-    * native codegen'd kernel [[graft.functions.SortedFoldSum]]
+    * native compiled kernel [[graft.functions.ArrayKernels.foldSum]]
     * (value-identical to `aggregate(array_sort(xs), 0.0, _+_)`): the
     * interpreted HOF form single-threaded AQE-coalesced scoring stages. */
   private def foldSum(xs: Column): Column = graft.functions.GraftFunctions.foldSum(xs)

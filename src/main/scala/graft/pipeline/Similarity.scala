@@ -24,7 +24,7 @@ object Similarity {
 
   /** sequential-fold dot product of two array columns (cast to double).
     * Portable HOF form — DataFrame-level operators below use the native
-    * codegen'd [[graft.functions.DotProduct]] instead (same semantics:
+    * codegen'd [[graft.functions.ArrayKernels.dot]] instead (same semantics:
     * sequential double sum). */
   def dot(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
@@ -787,7 +787,7 @@ object Similarity {
    * oracle replayable). The codebook is `m*kpq*dsub` floats — driver-side
    * by construction (a bounded `kpq`-row collect), broadcast as an
    * expression literal. Encoding is ONE kernel pass per row
-   * ([[graft.functions.PqEncode]]), plan size independent of the codebook.
+   * ([[graft.functions.PqKernel]]), plan size independent of the codebook.
    */
   def pqBuild(
       df: DataFrame,
@@ -1426,7 +1426,7 @@ object Similarity {
    * vectors (k·dim doubles — the bounded-collect class, enforced k ≤ 64);
    * the argmax is one `TakeOrdered(1)`. No pairwise matrix, no shuffle
    * beyond the top-1 reductions. Each scan's min-distance is ONE compiled
-   * kernel pass ([[graft.functions.MinEuclDist]], round 17) — the former
+   * kernel pass ([[graft.functions.MinEuclKernel]], round 17) — the former
    * per-center `zip_with`/`aggregate` chain evaluated its lambdas
    * INTERPRETED per element and re-read the vector once per center.
    */

@@ -4,6 +4,7 @@ import java.util.concurrent.atomic.AtomicLong
 
 import scala.jdk.CollectionConverters._
 import scala.util.Try
+import scala.util.control.NonFatal
 
 import io.netty.bootstrap.ServerBootstrap
 import io.netty.buffer.Unpooled
@@ -336,8 +337,14 @@ class GrpcApi(
         case Right(sel: Ast.SelectStatement) if sel.groupBy.isEmpty =>
           val quid = java.util.UUID.nameUUIDFromBytes(
             s"${quids.incrementAndGet()}:${req.statement}".getBytes("UTF-8")).toString
-          val historical = engine.executeStatement(sel) match {
-            case Right(df)   => df.limit(maxResultRows).collect().toSeq.map(rowToBit(df.columns, _, req))
+          // any failure of the historical query is the subscriber's answer,
+          // not a bare INTERNAL status the client's pump cannot surface
+          val answer =
+            try engine.executeStatement(sel).map(df =>
+              df.limit(maxResultRows).collect().toSeq.map(rowToBit(df.columns, _, req)))
+            catch { case NonFatal(e) => Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }
+          val historical = answer match {
+            case Right(bits) => bits
             case Left(error) =>
               unary(ctx, SqlStreamingResponse(req.db, req.namespace, req.metric,
                 SubscriptionFailed(req.statement, error)).encode)

@@ -5,18 +5,21 @@ import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 import scala.util.Random
 
-import org.apache.spark.sql.{functions, Column, DataFrame}
+import org.apache.spark.sql.{functions, AnalysisException, Column, DataFrame, Row}
+import org.apache.spark.sql.catalyst.expressions.Alias
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 
-import graft.functions.{GraftFunctions, TheilSenMedians}
+import graft.functions.{GraftFunctions, Kernel, TheilSenMedians}
 import graft.operators.Relational
 import graft.pipeline.{Dedup, Sampling, TextAnalysis}
 
 /** The compiled kernels on the batch board's hot paths answer exactly as
   * their reference forms: `graft_poly_hash` as the HOF fold
   * [[Dedup.polyHash]], and the Theil–Sen medians by selection as a median
-  * read off `Arrays.sort`. */
+  * read off `Arrays.sort`. Every scalar kernel answers the same through
+  * generated code and through the interpreted (reflective) path. */
 class CompiledKernelSpec extends SparkTestBase {
   import spark.implicits._
 
@@ -212,7 +215,123 @@ class CompiledKernelSpec extends SparkTestBase {
     r.foreach(row => row.getDouble(0) shouldBe row.getDouble(1))
   }
 
+  // ---- every scalar kernel: generated code == interpreted path ------------
+
+  private val aggregates = Set("graft_collect_capped", "graft_topk_sum", "graft_sole_latest")
+
+  /** one call per scalar registry entry: `name(first<rest>)`; `bad` puts a
+    * wrongly typed column in the first argument's place. */
+  private case class Call(name: String, first: String, rest: String = "") {
+    def sql: String = s"$name($first$rest)"
+    def bad: String = s"$name(${if (Set("text", "word")(first)) "vd" else "text"}$rest)"
+  }
+
+  private val calls = Seq(
+    Call("graft_dot", "vf", ", vd"),
+    Call("graft_fold_sum", "vd"),
+    Call("graft_sorted_intersect", "ls", ", ls2"),
+    Call("graft_minhash", "ls", ", 8"),
+    Call("graft_simhash", "ls"),
+    Call("graft_shingles", "text", ", 3"),
+    Call("graft_word_hashes", "text"),
+    Call("graft_winnow", "text", ", 4, 3"),
+    Call("graft_winnow_fps", "text", ", 4, 3"),
+    Call("graft_cdc_chunks", "text", ", 3"),
+    Call("graft_poly_hash", "text", ", 131, 7"),
+    Call("graft_lsh_buckets", "vf", ", array(1.0D, -1.0D, 0.5D, 0.0D, 0.0D, 1.0D, -1.0D, 2.0D), 2, 4"),
+    Call("graft_nearest_centroid", "vd", ", array(1.0D, 0.0D, 0.0D, 0.0D, 0.0D, 1.0D, 1.0D, 0.0D), " +
+      "array(1.0D, sqrt(2.0D)), 4"),
+    Call("graft_min_eucl", "vf", ", array(1.0D, 0.0D, 0.0D, 0.0D, 0.0D, 1.0D, 1.0D, 0.0D), 4"),
+    Call("graft_pq_encode", "vd", ", array(0.0D, 0.0D, 1.0D, 1.0D, -1.0D, 0.5D, 0.0D, 0.0D, 2.0D, -1.0D, " +
+      "0.5D, 0.5D), 2, 2, 3"),
+    Call("graft_rms_windows", "bin", ", 3"),
+    Call("graft_blockhash", "bin", ", 4"),
+    Call("graft_ts_slope_median", "xs", ", vs"),
+    Call("graft_ts_resid_median", "xs", ", vs, slope"),
+    Call("graft_int8_qsim", "vf", ", array(12.0D, -127.0D, 64.0D, 3.0D)"),
+    Call("graft_bpe_apply", "word", ", array('a', 'ab'), array('b', 'c')"),
+    Call("graft_bpe_pairs", "word", ", array('a', 'ab'), array('b', 'c')"),
+    Call("graft_unit_snap", "vd"),
+    Call("graft_char_bigrams", "word"))
+
+  /** seeded rows (vectors with null elements and short lengths, sorted
+    * distinct id sets, byte payloads, Theil–Sen grids) plus one all-NULL
+    * row, read back from parquet so no plan folds into a local relation. */
+  private lazy val kernelInputs: DataFrame = {
+    val rnd = new Random(31)
+    val vocab = Seq("alpha", "beta", "gamma", "délta", "中文", "x", "12", "")
+    def vec(f: Double => Any): Seq[Any] =
+      Seq.fill(if (rnd.nextInt(6) == 0) 3 else 4)(if (rnd.nextInt(8) == 0) null else f(rnd.nextGaussian()))
+    def ids: Seq[Long] = Seq.fill(rnd.nextInt(12))(rnd.nextInt(30).toLong).distinct.sorted
+    val rows = (1 to 40).map { i =>
+      val xs = Seq.fill(2 + rnd.nextInt(9))(rnd.nextInt(50).toLong).distinct.sorted
+      Row(i.toLong, vec(_.toFloat), vec(identity), ids, ids,
+        Seq.fill(1 + rnd.nextInt(20))(vocab(rnd.nextInt(vocab.size))).mkString(" "),
+        Seq.fill(1 + rnd.nextInt(6))("abc".charAt(rnd.nextInt(3))).mkString,
+        Array.fill(rnd.nextInt(20))(rnd.nextInt(256).toByte),
+        xs, xs.map(_ => rnd.nextGaussian()), rnd.nextGaussian())
+    } :+ Row.fromSeq(0L +: Seq.fill(10)(null))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("vf", ArrayType(FloatType)), StructField("vd", ArrayType(DoubleType)),
+      StructField("ls", ArrayType(LongType)), StructField("ls2", ArrayType(LongType)),
+      StructField("text", StringType), StructField("word", StringType), StructField("bin", BinaryType),
+      StructField("xs", ArrayType(LongType)), StructField("vs", ArrayType(DoubleType)),
+      StructField("slope", DoubleType)))
+    val dir = Files.createTempDirectory("graft_kernels_").resolve("in").toString
+    spark.createDataFrame(rows.asJava, schema).repartition(2).write.parquet(dir)
+    spark.read.parquet(dir)
+  }
+
+  "every scalar kernel" should "answer the same with generated code and through the interpreted path" in {
+    GraftFunctions.register(spark)
+    calls.foreach { c =>
+      def run(): Seq[String] =
+        kernelInputs.selectExpr("id", s"${c.sql} AS k").orderBy("id").collect().map(_.toString).toSeq
+      val compiled = run()
+      withClue(s"${c.sql}: ") {
+        compiled.size shouldBe 41
+        withoutCodegen(run()) shouldBe compiled
+        // a NULL input gives NULL, except the hash, which gives its seed
+        compiled.head shouldBe (if (c.name == "graft_poly_hash") "[0,7]" else "[0,null]")
+        compiled.tail.count(!_.endsWith(",null]")) should be > 10
+      }
+    }
+  }
+
+  it should "fail at analysis on a wrongly typed column, naming the function" in {
+    GraftFunctions.register(spark)
+    calls.foreach { c =>
+      val e = intercept[AnalysisException](kernelInputs.selectExpr(c.bad))
+      withClue(c.bad) { e.getMessage should include(s"${c.name} requires") }
+    }
+  }
+
   // ---- guard ---------------------------------------------------------------
+
+  "the functions package" should "carry no hand-written codegen, and every scalar entry builds the wrapper" in {
+    val dir = Paths.get("src/main/scala/graft/functions")
+    val files = {
+      val walk = Files.walk(dir)
+      try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
+    }
+    files.size should be > 5
+    val codegen = "\\b(doGenCode|nullSafeCodeGen|defineCodeGen)\\b".r
+    files.filter(p => codegen.findFirstIn(Files.readString(p)).isDefined).map(_.getFileName) shouldBe empty
+    GraftFunctions.register(spark)
+    calls.map(_.name).toSet shouldBe GraftFunctions.registry.map(_._1).toSet -- aggregates
+    calls.foreach { c =>
+      val built = kernelInputs.selectExpr(c.sql).queryExecution.analyzed.expressions.collect {
+        case Alias(child, _) => child
+      }
+      withClue(c.sql) {
+        built should have size 1
+        built.head shouldBe a[Kernel]
+        built.head.prettyName shouldBe c.name
+      }
+    }
+  }
+
 
   "operator paths" should "call the compiled hash, not the HOF polyHash" in {
     // the HOF fold stays only as the reference form of these natives

@@ -182,6 +182,47 @@ class GrpcApiSpec extends SparkTestBase {
     }
   }
 
+  it should "answer a subscription on an initialized, empty metric with an empty snapshot" in {
+    val root   = Files.createTempDirectory("graft_grpc_empty_").toString
+    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val api    = new GrpcApi(engine)
+    val client = new GrpcClient(port = api.start())
+    try {
+      engine.initMetric("db", "ns", "m", 86400000L) shouldBe Right(())
+      val events = new LinkedBlockingQueue[SqlStreamingResponse]()
+      val sub = client.subscribe(SqlRequest("db", "ns", "m", "select * from m"))(events.put)
+      val first = events.poll(10, TimeUnit.SECONDS)
+      first should not be null
+      first.payload.asInstanceOf[SubscribedByQueryString].records shouldBe empty
+      sub.close()
+    } finally {
+      client.close(); api.stop()
+    }
+  }
+
+  it should "answer a subscription whose historical query fails with SubscriptionFailed" in {
+    val root   = Files.createTempDirectory("graft_grpc_fail_").toString
+    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val api    = new GrpcApi(engine)
+    val client = new GrpcClient(port = api.start())
+    try {
+      engine.initMetric("db", "ns", "m", 86400000L) shouldBe Right(())
+      // a data file that is not parquet makes the historical read throw
+      val shard = java.nio.file.Paths.get(root, "db", "ns", "m", "data", "shard=0")
+      Files.createDirectories(shard)
+      Files.write(shard.resolve("part-0.parquet"), "not parquet".getBytes("UTF-8"))
+      val events = new LinkedBlockingQueue[SqlStreamingResponse]()
+      val sub = client.subscribe(SqlRequest("db", "ns", "m", "select * from m"))(events.put)
+      val first = events.poll(10, TimeUnit.SECONDS)
+      first should not be null
+      first.payload shouldBe a[SubscriptionFailed]
+      first.payload.asInstanceOf[SubscriptionFailed].reason should not be empty
+      sub.close()
+    } finally {
+      client.close(); api.stop()
+    }
+  }
+
   it should "enforce per-level authorization with the reference's write-permission contract" in {
     val root   = Files.createTempDirectory("graft_grpc_auth_").toString
     val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))

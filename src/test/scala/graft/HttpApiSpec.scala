@@ -290,6 +290,26 @@ class HttpApiSpec extends SparkTestBase {
     } finally api.stop()
   }
 
+  it should "answer /query on an initialized, empty metric with an empty result" in {
+    val root   = Files.createTempDirectory("graft_http_empty_").toString
+    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val api    = new HttpApi(engine)
+    val port   = api.start()
+    try {
+      engine.initMetric("db", "ns", "m", 86400000L) shouldBe Right(())
+      val req = HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/query"))
+        .POST(HttpRequest.BodyPublishers.ofString("""{"db":"db","namespace":"ns","queryString":"select * from m"}"""))
+        .header("Content-Type", "application/json")
+        .timeout(java.time.Duration.ofSeconds(30))
+        .build()
+      val res = client.send(req, HttpResponse.BodyHandlers.ofString())
+      withClue(res.body()) {
+        res.statusCode() shouldBe 200
+        res.body() should include(""""records":[]""")
+      }
+    } finally api.stop()
+  }
+
   it should "answer /health with SERVING up and NOT_SERVING down, never hanging on a stalled probe" in {
     val root   = Files.createTempDirectory("graft_health_").toString
     val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))

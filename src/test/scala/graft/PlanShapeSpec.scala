@@ -63,13 +63,14 @@ class PlanShapeSpec extends SparkTestBase {
   }
 
   "the PQ operators" should "encode via the one-pass kernel, not an expression tree" in {
+    // plans show a kernel as the method its StaticInvoke calls
     val plan = SparkEntry.queries("ann_pq")(spark, dir).queryExecution.executedPlan.toString
-    withClue(plan) { plan should include("graft_pq_encode") }
+    withClue(plan) { plan should include("PqKernel.encode(") }
     // IVF-PQ: assign + filter + encode + ADC fuse into one scan — the only
     // Exchange left is the TakeOrdered's singlePartition collect
     val ivfpq = SparkEntry.queries("ann_ivfpq")(spark, dir).queryExecution.executedPlan.toString
     withClue(ivfpq) {
-      ivfpq should include("graft_pq_encode")
+      ivfpq should include("PqKernel.encode(")
       ivfpq should not include "SortMergeJoin"
     }
   }
@@ -122,13 +123,13 @@ class PlanShapeSpec extends SparkTestBase {
       ql should not include "CartesianProduct"
       // the kernel lives in TakeOrdered's (unprinted) project list — assert
       // on the optimized plan, where the expression tree is spelled out
-      qlQe.optimizedPlan.toString should include("graft_fold_sum")
+      qlQe.optimizedPlan.toString should include("ArrayKernels.foldSum(")
     }
     // winnow pairs: fingerprints come distinct from the one native pass —
     // no relational Distinct before the bucket-capped self-join
     val wp = Dedup.winnowPairs(docs, k = 16, w = 8).queryExecution.executedPlan.toString
     withClue(wp) {
-      wp should include("graft_winnow_fps")
+      wp should include("PortableHash.winnowFpSet(")
       wp should not include "CartesianProduct"
     }
     // NB confusion: the only nested-loop is the intended tiny
@@ -136,7 +137,7 @@ class PlanShapeSpec extends SparkTestBase {
     val nbQe = graft.pipeline.TextAnalysis.nbConfusion(docs).queryExecution
     withClue(nbQe.executedPlan.toString) {
       nbQe.executedPlan.toString should not include "CartesianProduct"
-      nbQe.optimizedPlan.toString should include("graft_fold_sum")
+      nbQe.optimizedPlan.toString should include("ArrayKernels.foldSum(")
     }
   }
 
@@ -161,7 +162,7 @@ class PlanShapeSpec extends SparkTestBase {
     val klQe = TextAnalysis.tokenKlShift(corpus, corpus).queryExecution
     withClue(klQe.executedPlan.toString) {
       klQe.executedPlan.toString should not include "CartesianProduct"
-      klQe.optimizedPlan.toString should include("graft_fold_sum")
+      klQe.optimizedPlan.toString should include("ArrayKernels.foldSum(")
     }
     // burstiness: the top-k is a TakeOrdered, never a global sort
     val btPlan = TextAnalysis.burstyTerms(corpus, k = 5, minCount = 1L)
