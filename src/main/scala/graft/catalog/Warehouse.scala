@@ -8,8 +8,11 @@ import scala.util.Try
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.classic.ClassicConversions.castToImpl
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 
 import graft.exec.{Executor, MetricRef, RollupRef, ShardInfo}
 import graft.model.{FieldClass, MetricField, MetricSchema}
@@ -63,6 +66,32 @@ final case class Coords(db: String, namespace: String, metric: String) {
  * cached. An operation that changes nothing (an empty sweep) leaves the
  * token, and so the cached relation, alone; one that throws re-stamps it,
  * since it may have changed files before it failed.
+ *
+ * Resident copy: the scan of a metric resolved under a token is also held
+ * in Spark's columnar cache (on the block manager's local disk, see
+ * [[Warehouse.ResidentLevel]]), so the executor's plans read
+ * `InMemoryTableScan` batches instead of opening, and footer-reading,
+ * every parquet file on every query. The copy is built lazily, partition by
+ * partition, by the first queries that touch it, and released when the
+ * token moves (by this instance's own write, or on the first read that sees
+ * another writer's token). Two rules keep it correct:
+ *  - Spark's cache matches cached data by plan equivalence, and a plain
+ *    `spark.read.parquet(path)` is the same plan under every token. So the
+ *    scan carries its token as a data-source option
+ *    ([[Warehouse.TokenOption]]): each token's scan is a distinct plan, and
+ *    a fresh ref can never be served the copy of an older state, whoever
+ *    wrote it. Spark's own re-cache by path after an append refreshes only
+ *    the old token's copy, which the new token never reads.
+ *  - Releasing a copy releases every equivalent one, which here means every
+ *    ref of the same token, in any instance on the same root. So a copy is
+ *    released only when its token is no longer current, and readers racing
+ *    on a new token share one resolution and one copy.
+ * A metric is held only while its data files total at most
+ * [[residentBudget]]: a quarter of the block manager's storage memory,
+ * divided by the columnar cache's measured expansion over parquet
+ * ([[Warehouse.ColumnarExpansion]]). A larger metric reads parquet on
+ * every query, as if no copy existed, so a first query never materializes
+ * a metric that does not fit. [[residency]] reports each metric's state.
  */
 class Warehouse(val spark: SparkSession, val root: String) {
 
@@ -100,9 +129,11 @@ class Warehouse(val spark: SparkSession, val root: String) {
     * directory renamed over `meta.json`, so concurrent readers never see a
     * truncated file. Every mutating operation calls this (or [[stamp]])
     * last. */
-  private def writeMeta(c: Coords, m: Meta): Unit = writeMetaIn(Paths.get(c.path(root)), m)
+  private def writeMeta(c: Coords, m: Meta): Unit =
+    releaseStale(c, Some(writeMetaIn(Paths.get(c.path(root)), m)))
 
-  private def writeMetaIn(dir: java.nio.file.Path, m: Meta): Unit = {
+  /** Writes `m` under a fresh token into `dir`; returns the token. */
+  private def writeMetaIn(dir: java.nio.file.Path, m: Meta): String = {
     val fields = m.schema.orderedNames.map { n =>
       val f = m.schema.fields(n)
       s"""{"name":"${f.name}","type":"${f.dataType.catalogString}","class":"${f.fieldClass.name}"}"""
@@ -115,7 +146,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
       Files.write(tmp, json.getBytes(StandardCharsets.UTF_8))
       Files.move(tmp, dir.resolve("meta.json"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
     } finally Files.deleteIfExists(tmp)
-    ()
+    token
   }
 
   /** Re-stamp the change token after an operation that changed files but
@@ -242,7 +273,7 @@ class Warehouse(val spark: SparkSession, val root: String) {
             finally walk.close() // the walk holds open directory handles
             // a fresh change token: a relation this process cached for an
             // earlier life of the same metric can never match the backup's
-            readMetaIn(tmp).foreach(writeMetaIn(tmp, _))
+            readMetaIn(tmp).foreach(m => writeMetaIn(tmp, m))
             val dst = Paths.get(c.path(root))
             Files.createDirectories(dst.getParent)
             // serialize vs in-process writers WITHOUT withWriteLock — that
@@ -390,36 +421,103 @@ class Warehouse(val spark: SparkSession, val root: String) {
     * `[lowerShardBound, upperShardBound]` of live locations).
     *
     * `meta.json` is read on every call; while its change token matches the
-    * one the cached [[MetricRef]] was resolved under, that ref is returned
-    * as is (see the class doc). */
+    * one the cached [[MetricRef]] was resolved under, that ref, and with it
+    * the resident copy of its scan, is returned as is (see the class doc). */
   def read(c: Coords): Either[String, MetricRef] =
     readMeta(c) match {
       case None =>
-        resolved.remove(c)
+        releaseStale(c, None)
         Left(s"metric ${c.metric} does not exist")
       case Some(m) =>
-        val cached = for {
-          t         <- m.token
-          (t0, ref) <- Option(resolved.get(c))
-          if t0 == t
-        } yield ref
-        Right(cached.getOrElse {
-          val ref = resolve(c, m)
-          m.token.fold(resolved.remove(c))(t => resolved.put(c, (t, ref)))
-          ref
-        })
+        m.token match {
+          case None =>
+            releaseStale(c, None)
+            Right(resolve(c, m, None))
+          case Some(t) =>
+            Right(Option(resolved.get(c)).filter(_.token == t).getOrElse(install(c, m, t)).ref)
+        }
     }
 
-  /** The last resolved ref per metric, with the change token it was resolved
-    * under. A ref resolved while a writer was mid-operation may see files
-    * newer than its token — harmless, the writer's token replaces it. */
-  private val resolved = new java.util.concurrent.ConcurrentHashMap[Coords, (String, MetricRef)]()
+  /** The last resolved metric per coordinates. A ref resolved while a writer
+    * was mid-operation may see files newer than its token — harmless, the
+    * writer's token replaces it. */
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[Coords, Warehouse.Resolved]()
 
-  private def resolve(c: Coords, m: Meta): MetricRef = {
+  /** Resolves `c` under `t` unless a racing reader already has (`compute`
+    * runs one remapping per key at a time, so racing readers share one
+    * resolution and one copy), then releases the entry it replaced, unless
+    * that entry's token is still current: a reader that read `meta.json`
+    * just before a write may replace a newer entry, and the copy of the
+    * current token must survive that. */
+  private def install(c: Coords, m: Meta, t: String): Warehouse.Resolved = {
+    var replaced: Option[Warehouse.Resolved] = None
+    val now = resolved.compute(c, (_, prev) =>
+      if (prev != null && prev.token == t) prev
+      else {
+        replaced = Option(prev)
+        val ref   = resolve(c, m, Some(t))
+        val bytes = Warehouse.dataBytes(ref.df)
+        val held  = bytes > 0 && bytes <= residentBudget
+        if (held) {
+          // the ref's own frame is optimized before the copy is registered,
+          // so it stays the file scan (its `inputFiles` list the files);
+          // every query built on it is planned afresh and reads the copy
+          ref.df.queryExecution.assertOptimized()
+          spark.sharedState.cacheManager.cacheQuery(castToImpl(ref.df), Some(residentName(c, t)),
+            Warehouse.ResidentLevel)
+        }
+        Warehouse.Resolved(t, ref, bytes, held)
+      })
+    replaced.filterNot(r => readMeta(c).flatMap(_.token).contains(r.token)).foreach(_.release())
+    now
+  }
+
+  /** Drops `c`'s entry and releases its copy, unless its token is `current`. */
+  private def releaseStale(c: Coords, current: Option[String]): Unit =
+    Option(resolved.get(c)).filterNot(r => current.contains(r.token)).foreach { r =>
+      if (resolved.remove(c, r)) r.release()
+    }
+
+  /** Releases every resident copy this instance holds. A later read of a
+    * metric resolves it again and builds a new copy lazily. */
+  def release(): Unit =
+    resolved.keySet.asScala.toSeq.foreach(c => Option(resolved.remove(c)).foreach(_.release()))
+
+  /** The largest metric, in data-file bytes, that is held resident: a
+    * quarter of the block manager's storage memory (summed over executors)
+    * divided by [[Warehouse.ColumnarExpansion]], so that no one metric's
+    * copy takes more than a quarter of the cache. */
+  protected def residentBudget: Long =
+    (spark.sparkContext.getExecutorMemoryStatus.values.map(_._1).sum / 4 / Warehouse.ColumnarExpansion).toLong
+
+  /** The name of `c`'s copy under token `t` in Spark's cache and storage status. */
+  private def residentName(c: Coords, t: String): String = s"${Warehouse.ResidentPrefix}${c.path(root)}@$t"
+
+  /** Each metric this instance holds a resolution of, by coordinates: its
+    * data-file bytes, the bytes its copy holds now (memory + disk, from
+    * Spark's storage status; 0 until a query has touched the copy, and
+    * always 0 over the budget), and whether it is over the budget. */
+  def residency: Seq[Warehouse.Residency] = {
+    // a cached relation's RDD is named "In-memory table <name>"
+    val stored = spark.sparkContext.getRDDStorageInfo.filter(_.name.contains(Warehouse.ResidentPrefix))
+      .groupMapReduce(i => i.name.substring(i.name.indexOf(Warehouse.ResidentPrefix)))(
+        i => i.memSize + i.diskSize)(_ + _)
+    val budget = residentBudget
+    resolved.asScala.toSeq.map { case (c, r) =>
+      Warehouse.Residency(c, r.dataBytes, if (r.held) stored.getOrElse(residentName(c, r.token), 0L) else 0L,
+        overBudget = r.dataBytes > budget)
+    }.sortBy(r => (r.coords.db, r.coords.namespace, r.coords.metric))
+  }
+
+  /** The metric's scan (with `token` as its option when there is one, see
+    * the class doc), shard ids and bounds, and rollup view. */
+  private def resolve(c: Coords, m: Meta, token: Option[String]): MetricRef = {
     val schema = m.schema.toStruct.add("shard", LongType)
     // an initialized metric has no data directory until its first insert
     val df =
-      if (Files.isDirectory(Paths.get(dataPath(c)))) spark.read.schema(schema).parquet(dataPath(c))
+      if (Files.isDirectory(Paths.get(dataPath(c))))
+        spark.read.schema(schema).options(token.fold(Map.empty[String, String])(t => Map(Warehouse.TokenOption -> t)))
+          .parquet(dataPath(c))
       else spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     val shardIds = subdirs(dataPath(c)).filter(_.startsWith("shard=")).map(_.stripPrefix("shard=").toLong)
     val bounds =
@@ -609,10 +707,11 @@ class Warehouse(val spark: SparkSession, val root: String) {
     } > 0
   }
 
-  /** DROP METRIC: remove data + catalog entry. */
+  /** DROP METRIC: remove data + catalog entry, and release the resident copy. */
   def drop(c: Coords): Unit = withWriteLock(c) {
     val fs = new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.delete(new Path(c.path(root)), true)
+    releaseStale(c, None)
   }
 
   /**
@@ -846,6 +945,44 @@ object Warehouse {
   /** Footer-read budget per shard for metadata row counts — bounds O3
     * plan-construction latency on shards compaction hasn't reached yet. */
   val maxFooterReadsPerShard: Int = 64
+
+  /** The data-source option that carries a scan's change token, so that
+    * each token's scan is a distinct plan to Spark's cache (see the class doc). */
+  val TokenOption: String = "graft.warehouse.token"
+
+  /** Prefix of every resident copy's name in Spark's cache and storage status. */
+  val ResidentPrefix: String = "graft.warehouse:"
+
+  /** Storage level of the resident copies: the block manager's local disk.
+    * On the heap, the benchmark's `serve_read` copy cost 6-9 MB of live heap
+    * against 1-3 MB on disk, for a smaller share of its throughput gain. */
+  val ResidentLevel: StorageLevel = StorageLevel.DISK_ONLY
+
+  /** Cached columnar bytes per parquet data-file byte. Measured at 1.25 on
+    * the benchmark's `events` metric (100k rows, 1-day shards, snappy
+    * parquet: 1.80 MB of files, 2.24 MB cached, the same in memory and on
+    * disk). */
+  val ColumnarExpansion: Double = 1.25
+
+  /** A metric resolved under one change token: the ref [[Warehouse.read]]
+    * hands out, the bytes of its data files, and whether its scan is held
+    * resident. */
+  private final case class Resolved(token: String, ref: MetricRef, dataBytes: Long, held: Boolean) {
+    def release(): Unit = if (held) { ref.df.unpersist(blocking = false); () }
+  }
+
+  /** One metric's resident state (see [[Warehouse.residency]]). */
+  final case class Residency(coords: Coords, dataBytes: Long, cachedBytes: Long, overBudget: Boolean)
+
+  /** Bytes of the data files a scan lists (its file index's total); 0 for a
+    * frame with no file scan. */
+  private def dataBytes(df: DataFrame): Long =
+    df.queryExecution.analyzed.collect {
+      case l: LogicalRelation => l.relation match {
+        case h: HadoopFsRelation => h.location.sizeInBytes
+        case _                   => 0L
+      }
+    }.sum
 
   /** JVM-wide per-metric-path monitors: two Warehouse instances on the same
     * root share one monitor, so in-process writers serialize BEFORE the

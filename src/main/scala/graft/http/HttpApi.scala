@@ -411,14 +411,18 @@ class HttpApi(
           case Left(err) => (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
         }
       // maintenance observability: the last retention/compaction sweep's
-      // report — a permanently failing eviction is visible here, not silent
+      // report — a permanently failing eviction is visible here, not silent —
+      // and the resident state of each metric the payload may read
       case Array("commands", "maintenance") =>
-        graft.catalog.Maintenance.lastSweep match {
-          case None => (200, """{"lastSweep":null}""")
-          case Some(r) =>
-            val errs = r.errors.map(mapper.writeValueAsString).mkString("[", ",", "]")
-            (200, s"""{"lastSweep":{"atMs":${r.atMs},"metricsSwept":${r.metricsSwept},"evictedShards":${r.evictedShards},"compactedShards":${r.compactedShards},"errors":$errs}}""")
+        val sweep = graft.catalog.Maintenance.lastSweep.fold("null") { r =>
+          val errs = r.errors.map(mapper.writeValueAsString).mkString("[", ",", "]")
+          s"""{"atMs":${r.atMs},"metricsSwept":${r.metricsSwept},"evictedShards":${r.evictedShards},"compactedShards":${r.compactedShards},"errors":$errs}"""
         }
+        val resident = engine.warehouse.toSeq.flatMap(_.residency)
+          .filter(r => auth.checkMetricAuth(r.coords.db, r.coords.namespace, r.coords.metric, payload,
+            writePermission = false).success)
+          .map(r => s"""{"db":${mapper.writeValueAsString(r.coords.db)},"namespace":${mapper.writeValueAsString(r.coords.namespace)},"metric":${mapper.writeValueAsString(r.coords.metric)},"dataBytes":${r.dataBytes},"cachedBytes":${r.cachedBytes},"overBudget":${r.overBudget}}""")
+        (200, resident.mkString(s"""{"lastSweep":$sweep,"resident":[""", ",", "]}"))
       case Array("commands", db, "namespaces") =>
         guarded(auth.checkDbAuth(db, payload, writePermission = false))(
           listOf("namespaces", Ast.ShowNamespaces, db))

@@ -60,7 +60,9 @@ final class SseSubscriber(
       }
     } catch {
       case _: InterruptedException => () // close() requested
-      case _: Throwable            => () // dead socket
+      case e: java.io.IOException =>      // dead socket
+        SseSubscriber.deadSockets.incrementAndGet()
+        System.err.println(s"[graft-sse] subscriber evicted: write failed: ${e.getMessage}")
     } finally {
       if (closed.compareAndSet(false, true)) onDead()
     }
@@ -70,6 +72,12 @@ final class SseSubscriber(
 }
 
 object SseSubscriber {
+  private val deadSockets = new java.util.concurrent.atomic.AtomicLong()
+
+  /** subscribers evicted because a write to their socket failed (logged
+    * one by one). Any other failure of a flusher propagates. */
+  def deadSocketCount: Long = deadSockets.get()
+
   /** default per-event framing: SSE. The WS transport passes a text-frame
     * encoder instead — buffer/drain/eviction semantics are shared. */
   val sseFrame: String => Array[Byte] =

@@ -79,7 +79,10 @@ class WsApi(
     pool.execute(() =>
       while (running && !server.isClosed)
         try { val s = server.accept(); pool.execute(() => handle(s)) }
-        catch { case _: Throwable => () } // closed during stop()
+        catch {
+          // stop() closed the server socket under accept(): the loop's end
+          case e: java.net.SocketException if server.isClosed => socketClosed("accept", e)
+        }
     )
     server.getLocalPort
   }
@@ -95,6 +98,18 @@ class WsApi(
 
   /** tracked subscriber/scheduler/socket count — observability for specs. */
   def ownedCount: Int = owned.size()
+
+  private val closedSockets = new java.util.concurrent.atomic.AtomicLong()
+
+  /** closed or dead-socket exceptions this transport caught and logged: the
+    * accept loop's end at [[stop]], and connections that died under a read or
+    * write. Any other failure propagates. */
+  def closedSocketCount: Long = closedSockets.get()
+
+  private def socketClosed(where: String, e: java.io.IOException): Unit = {
+    closedSockets.incrementAndGet()
+    System.err.println(s"[graft-ws] $where: socket closed: ${e.getMessage}")
+  }
 
   // ---- connection lifecycle ----------------------------------------------
 
@@ -136,7 +151,7 @@ class WsApi(
               subProtocols)
           case Some(_) => () // binary/pong/continuation: ignored
         }
-    } catch { case _: Throwable => () } // dead socket
+    } catch { case e: java.io.IOException => socketClosed("connection", e) } // dead socket
     finally closeConn()
   }
 

@@ -2,7 +2,6 @@ package graft
 
 import java.nio.file.Files
 
-import graft.catalog.Warehouse
 import graft.client.GraftClient
 import graft.plan.TimeContext
 
@@ -12,7 +11,7 @@ class GraftClientSpec extends SparkTestBase {
 
   private def newClient(): GraftClient = {
     val root = Files.createTempDirectory("graft_client_").toString
-    GraftClient.embedded(new GraftEngine(spark, Some(new Warehouse(spark, root))))
+    GraftClient.embedded(new GraftEngine(spark, Some(warehouse(root))))
   }
 
   "GraftClient" should "write bits and query them back through the builder chain" in {

@@ -5,7 +5,6 @@ import java.util.concurrent.{LinkedBlockingQueue, TimeUnit}
 
 import scala.jdk.CollectionConverters._
 
-import graft.catalog.Warehouse
 import graft.rpc.RpcMessages._
 import graft.rpc.{GrpcApi, GrpcClient}
 import graft.security.{AuthResult, GraftAuthProvider}
@@ -17,7 +16,7 @@ class GrpcApiSpec extends SparkTestBase {
 
   "GrpcApi" should "serve the full reference RPC surface over the wire" in {
     val root   = Files.createTempDirectory("graft_grpc_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new GrpcApi(engine)
     val port   = api.start()
     val client = new GrpcClient(port = port)
@@ -99,7 +98,7 @@ class GrpcApiSpec extends SparkTestBase {
       // restore (restore.proto): a backup of the warehouse root restores
       // into a fresh engine
       val root2   = Files.createTempDirectory("graft_grpc_restore_").toString
-      val engine2 = new GraftEngine(spark, Some(new Warehouse(spark, root2)))
+      val engine2 = new GraftEngine(spark, Some(warehouse(root2)))
       val api2    = new GrpcApi(engine2)
       val port2   = api2.start()
       val client2 = new GrpcClient(port = port2)
@@ -119,7 +118,7 @@ class GrpcApiSpec extends SparkTestBase {
     // both the REST and gRPC surfaces makes every transport's writes
     // visible to every transport's subscribers (reference PublisherActor)
     val root   = Files.createTempDirectory("graft_grpc_hub_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val hub    = new graft.http.SubscriptionHub
     val http   = new graft.http.HttpApi(engine, hub = hub)
     val grpc   = new GrpcApi(engine, hub = hub)
@@ -154,7 +153,7 @@ class GrpcApiSpec extends SparkTestBase {
 
   it should "end a subscription's pump thread quietly when the handle closes" in {
     val root   = Files.createTempDirectory("graft_grpc_close_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new GrpcApi(engine)
     val client = new GrpcClient(port = api.start())
     val uncaught = new java.util.concurrent.ConcurrentLinkedQueue[String]()
@@ -184,7 +183,7 @@ class GrpcApiSpec extends SparkTestBase {
 
   it should "answer a subscription on an initialized, empty metric with an empty snapshot" in {
     val root   = Files.createTempDirectory("graft_grpc_empty_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new GrpcApi(engine)
     val client = new GrpcClient(port = api.start())
     try {
@@ -202,7 +201,7 @@ class GrpcApiSpec extends SparkTestBase {
 
   it should "answer a subscription whose historical query fails with SubscriptionFailed" in {
     val root   = Files.createTempDirectory("graft_grpc_fail_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new GrpcApi(engine)
     val client = new GrpcClient(port = api.start())
     try {
@@ -225,7 +224,7 @@ class GrpcApiSpec extends SparkTestBase {
 
   it should "enforce per-level authorization with the reference's write-permission contract" in {
     val root   = Files.createTempDirectory("graft_grpc_auth_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val deny = new GraftAuthProvider {
       def extractHttpSecurityPayload(rawHeaders: Map[String, String]): String =
         rawHeaders.getOrElse("authorization", "")
@@ -259,7 +258,7 @@ class GrpcApiSpec extends SparkTestBase {
 
   it should "answer an unknown method with a trailers-only UNIMPLEMENTED and chunk >16 KiB responses" in {
     val root   = Files.createTempDirectory("graft_grpc_wire_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new GrpcApi(engine)
     val port   = api.start()
     val client = new GrpcClient(port = port)

@@ -4,7 +4,6 @@ import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.Files
 
-import graft.catalog.Warehouse
 import graft.http.HttpApi
 
 /** REST surface specs: query (with from/to enrichment), ingest, commands —
@@ -30,7 +29,7 @@ class HttpApiSpec extends SparkTestBase {
 
   "HttpApi" should "serve the full ingest + query + commands lifecycle" in {
     val root   = Files.createTempDirectory("graft_http_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine)
     val port   = api.start()
     try {
@@ -93,7 +92,7 @@ class HttpApiSpec extends SparkTestBase {
 
   it should "stream SSE subscriptions: historical first, then matching writes" in {
     val root   = Files.createTempDirectory("graft_sse_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine)
     val port   = api.start()
     try {
@@ -169,7 +168,7 @@ class HttpApiSpec extends SparkTestBase {
   it should "answer /query byte-identically to the toJSON rendering for every plan shape" in {
     import spark.implicits._
     val root   = Files.createTempDirectory("graft_http_parity_").toString
-    val wh     = new Warehouse(spark, root)
+    val wh     = warehouse(root)
     val engine = new GraftEngine(spark, Some(wh))
     val day    = 86400000L
     // four day-shards; `name` is null on some rows, so null fields are dropped
@@ -221,7 +220,7 @@ class HttpApiSpec extends SparkTestBase {
   it should "answer select * limit 1 over a multi-shard metric with one job and one task" in {
     import spark.implicits._
     val root   = Files.createTempDirectory("graft_http_limit1_").toString
-    val wh     = new Warehouse(spark, root)
+    val wh     = warehouse(root)
     val engine = new GraftEngine(spark, Some(wh))
     val day    = 86400000L
     (0 until 6).foreach { d =>
@@ -260,7 +259,7 @@ class HttpApiSpec extends SparkTestBase {
 
   it should "push a live write only to subscriptions on the written metric" in {
     val root   = Files.createTempDirectory("graft_sse_scope_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine)
     val port   = api.start()
     try {
@@ -292,7 +291,7 @@ class HttpApiSpec extends SparkTestBase {
 
   it should "answer /query on an initialized, empty metric with an empty result" in {
     val root   = Files.createTempDirectory("graft_http_empty_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine)
     val port   = api.start()
     try {
@@ -312,7 +311,7 @@ class HttpApiSpec extends SparkTestBase {
 
   it should "answer /health with SERVING up and NOT_SERVING down, never hanging on a stalled probe" in {
     val root   = Files.createTempDirectory("graft_health_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine)
     val port   = api.start()
     try {
@@ -341,7 +340,7 @@ class HttpApiSpec extends SparkTestBase {
 
   it should "reject a malformed refresh_ms with 400 before any SSE bytes go out" in {
     val root   = Files.createTempDirectory("graft_http_refresh_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine)
     val port   = api.start()
     try {
@@ -356,7 +355,7 @@ class HttpApiSpec extends SparkTestBase {
 
   it should "re-push aggregated subscriptions periodically" in {
     val root   = Files.createTempDirectory("graft_sse_agg_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine)
     val port   = api.start()
     try {
@@ -398,7 +397,7 @@ class HttpApiSpec extends SparkTestBase {
 
   it should "reject a /data bit without a numeric value" in {
     val root   = Files.createTempDirectory("graft_http_badval_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine)
     val port   = api.start()
     try {
@@ -419,7 +418,7 @@ class HttpApiSpec extends SparkTestBase {
 
   it should "enforce the pluggable authorization provider per scope with 403s" in {
     val root   = Files.createTempDirectory("graft_http_auth_").toString
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine, auth = new TestAuthProvider)
     val port   = api.start()
     def postAuthed(path: String, body: String, token: Option[String]): (Int, String) = {
@@ -465,7 +464,7 @@ class HttpApiSpec extends SparkTestBase {
 
   it should "expose the last maintenance sweep over /commands/maintenance" in {
     val root   = Files.createTempDirectory("graft_http_maint_").toString
-    val wh     = new Warehouse(spark, root)
+    val wh     = warehouse(root)
     val engine = new GraftEngine(spark, Some(wh))
     val api    = new HttpApi(engine)
     val port   = api.start()
@@ -477,6 +476,27 @@ class HttpApiSpec extends SparkTestBase {
       s shouldBe 200
       b should include(""""metricsSwept":""")
       b should include(""""errors":[]""")
+    } finally api.stop()
+  }
+
+  it should "report each metric's resident copy over /commands/maintenance until it is dropped" in {
+    val root   = Files.createTempDirectory("graft_http_resident_").toString
+    val wh     = warehouse(root)
+    val engine = new GraftEngine(spark, Some(wh))
+    val api    = new HttpApi(engine)
+    val port   = api.start()
+    try {
+      post(port, "/data",
+        """{"db":"db","namespace":"ns","metric":"m","bit":{"timestamp":1000,"value":1.0}}""")._1 shouldBe 200
+      get(port, "/commands/maintenance")._2 should include(""""resident":[]""")
+      post(port, "/query", """{"db":"db","namespace":"ns","queryString":"select sum(value) from m"}""")._1 shouldBe 200
+      val (s, b) = get(port, "/commands/maintenance")
+      s shouldBe 200
+      b should include(""""metric":"m"""")
+      b should include(""""overBudget":false""")
+      """"cachedBytes":(\d+)""".r.findFirstMatchIn(b).map(_.group(1).toLong).getOrElse(0L) should be > 0L
+      wh.drop(graft.catalog.Coords("db", "ns", "m"))
+      get(port, "/commands/maintenance")._2 should include(""""resident":[]""")
     } finally api.stop()
   }
 }

@@ -88,4 +88,33 @@ class SseSubscriberSpec extends AnyFlatSpec with Matchers {
     Thread.sleep(200) // let the flusher unwind through its finally
     deaths2.get() shouldBe 1
   }
+
+  it should "count and log a dead socket's write failure, and let any other failure propagate" in {
+    Uncaught.in("graft-sse-flusher") { thrown =>
+      val before = SseSubscriber.deadSocketCount
+      val deaths = new AtomicInteger(0)
+      val dead = new SseSubscriber(
+        write = _ => throw new java.io.IOException("Broken pipe"),
+        onDead = () => deaths.incrementAndGet(), capacity = 8, refreshMs = 5)
+      dead.offer("""{"i":1}""")
+      val deadline = System.currentTimeMillis() + 5000
+      while (deaths.get() == 0 && System.currentTimeMillis() < deadline) Thread.sleep(10)
+      deaths.get() shouldBe 1
+      SseSubscriber.deadSocketCount shouldBe before + 1
+      thrown.poll(200, TimeUnit.MILLISECONDS) shouldBe null
+
+      // a failure that is not the socket's: still evicted exactly once, not
+      // counted as a dead socket, and thrown out of the flusher
+      val broken = new SseSubscriber(
+        write = _ => throw new IllegalStateException("encoder bug"),
+        onDead = () => deaths.incrementAndGet(), capacity = 8, refreshMs = 5)
+      broken.offer("""{"i":2}""")
+      val e = thrown.poll(5, TimeUnit.SECONDS)
+      e shouldBe an[IllegalStateException]
+      e.getMessage shouldBe "encoder bug"
+      deaths.get() shouldBe 2
+      broken.isClosed shouldBe true
+      SseSubscriber.deadSocketCount shouldBe before + 1
+    }
+  }
 }

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions.col
 
-import graft.catalog.{Coords, Warehouse}
+import graft.catalog.Coords
 import graft.plan.TimeContext
 import graft.streaming.{Ingest, Subscriptions}
 
@@ -123,7 +123,7 @@ class StreamingSpec extends SparkTestBase {
   "Ingest" should "stream micro-batches into the warehouse" in {
     implicit val sqlc = spark.sqlContext
     val root  = Files.createTempDirectory("graft_ingest_").toString
-    val wh    = new Warehouse(spark, root)
+    val wh    = warehouse(root)
     val input = MemoryStream[Ev]
     val query = Ingest.start(
       input.toDF().select(col("timestamp"), col("value"), col("kind")),

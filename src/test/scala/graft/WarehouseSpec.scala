@@ -45,7 +45,7 @@ class WarehouseSpec extends SparkTestBase {
 
   private def freshEngine(): (GraftEngine, Warehouse, String) = {
     val root = Files.createTempDirectory("graft_wh_").toString
-    val wh   = new Warehouse(spark, root)
+    val wh   = warehouse(root)
     (new GraftEngine(spark, Some(wh)), wh, root)
   }
 
@@ -469,8 +469,8 @@ class WarehouseSpec extends SparkTestBase {
 
   it should "serialize writers across Warehouse instances via the advisory file lock" in {
     val root = Files.createTempDirectory("graft_wh_lock_").toString
-    val whA  = new Warehouse(spark, root)
-    val whB  = new Warehouse(spark, root)
+    val whA  = warehouse(root)
+    val whB  = warehouse(root)
     val c    = Coords("db", "ns", "mlock")
     // interleaved appends from two instances (the two-driver shape; in one
     // JVM the shared monitor serializes before the file lock is attempted)
@@ -485,7 +485,7 @@ class WarehouseSpec extends SparkTestBase {
     futures.map(_.get()).foreach(_.fold(fail(_), identity) shouldBe 1L)
     pool.shutdown()
     new java.io.File(s"$root/db/ns/mlock/.lock").exists shouldBe true
-    new Warehouse(spark, root).read(c).fold(fail(_), _.df.count()) shouldBe 10L
+    warehouse(root).read(c).fold(fail(_), _.df.count()) shouldBe 10L
   }
 
   it should "serialize schema-union validation across two driver PROCESSES" in {
@@ -525,7 +525,7 @@ class WarehouseSpec extends SparkTestBase {
       while (!Files.exists(ready) && child.isAlive && System.nanoTime() < deadline)
         Thread.sleep(100)
       Files.exists(ready) shouldBe true
-      val wh = new Warehouse(spark, root)
+      val wh = warehouse(root)
       (1 to n).foreach { i =>
         wh.append(c,
           Seq((2000000L + i * 1000L, i.toDouble, s"p$i")).toDF("timestamp", "value", "parent_dim"),

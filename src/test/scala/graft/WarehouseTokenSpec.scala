@@ -13,7 +13,9 @@ import graft.sql.Ast
 /** The read path's change token: `Warehouse.read` hands back the resolved
   * relation while `meta.json`'s token is unchanged, every mutating
   * operation writes a fresh token last, and `meta.json` is replaced
-  * atomically so a racing reader never sees the metric missing. */
+  * atomically so a racing reader never sees the metric missing. The
+  * resident copy of a metric's scan never serves an older token's rows,
+  * whichever instance wrote, and each metric keeps at most one copy. */
 class WarehouseTokenSpec extends SparkTestBase {
 
   import spark.implicits._
@@ -23,7 +25,7 @@ class WarehouseTokenSpec extends SparkTestBase {
   private val day = 86400000L
 
   private def freshWarehouse(): Warehouse =
-    new Warehouse(spark, Files.createTempDirectory("graft_wh_token_").toString)
+    warehouse(Files.createTempDirectory("graft_wh_token_").toString)
 
   /** three day-shards, four rows */
   private def seed(wh: Warehouse, c: Coords, retentionMs: Long = 0L): Unit =
@@ -170,7 +172,7 @@ class WarehouseTokenSpec extends SparkTestBase {
     // another instance drops and re-creates behind this one's cache: the
     // re-created metadata carries a new random token, so the cached
     // relation of the old metric is never handed back
-    val peer = new Warehouse(spark, wh.root)
+    val peer = warehouse(wh.root)
     peer.drop(c)
     peer.initMetric(c, shardIntervalMs = 1000L) shouldBe Right(())
     Try(wh.read(c)).toOption.flatMap(_.toOption).exists(_ eq r1) shouldBe false
@@ -194,7 +196,7 @@ class WarehouseTokenSpec extends SparkTestBase {
       if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
     } finally walk.close()
     // another instance drops the metric, so this instance's cache survives
-    new Warehouse(spark, wh.root).drop(c)
+    warehouse(wh.root).drop(c)
     wh.restore(backup.toString).fold(fail(_), identity) shouldBe Seq(c)
     values(reResolved(wh, c, r0)) shouldBe Seq(1.0, 2.0, 3.0, 4.0)
   }
@@ -235,6 +237,153 @@ class WarehouseTokenSpec extends SparkTestBase {
     wh.delete(Ast.DeleteStatement("db", "ns", "idle",
       Ast.CmpPred("timestamp", Ast.Gt, Ast.AbsValue(9 * day)))).fold(fail(_), identity)
     (read(wh, c) eq r0) shouldBe true
+  }
+
+  // ---- the resident copy ------------------------------------------------
+
+  /** the metric's resident state in `wh`, if `wh` holds a resolution of it */
+  private def residency(wh: Warehouse, c: Coords): Option[Warehouse.Residency] =
+    wh.residency.find(_.coords == c)
+
+  /** the copies of `c` in the session's cache, across instances */
+  private def copiesOf(wh: Warehouse, c: Coords): Seq[String] =
+    SparkTestBase.residentCopies.filter(_.startsWith(s"${Warehouse.ResidentPrefix}${c.path(wh.root)}@"))
+
+  /** a whole-scan read of `c` through `wh`: its values, after checking that
+    * the scan came from the resident copy and that the copy now holds data */
+  private def served(wh: Warehouse, c: Coords): Seq[Double] = {
+    val ref  = read(wh, c)
+    val scan = ref.df.select("value")
+    val v    = scan.as[Double].collect().toSeq.sorted
+    scan.queryExecution.executedPlan.collectFirst {
+      case s: org.apache.spark.sql.execution.columnar.InMemoryTableScanExec => s
+    } should not be empty
+    residency(wh, c).map(_.cachedBytes).getOrElse(0L) should be > 0L
+    v
+  }
+
+  private def ins(wh: Warehouse, metric: String, ts: Long, v: Double): Unit =
+    wh.insert(Ast.InsertStatement("db", "ns", metric, Some(ts), Map("name" -> "i"), Map("grp" -> "x"), v))
+      .fold(fail(_), identity)
+
+  "The resident copy" should "serve exactly the fresh rows after every token-changing operation" in {
+    val wh = freshWarehouse()
+    val c  = Coords("db", "ns", "fresh")
+    seed(wh, c, retentionMs = 8 * day + day / 2)
+    served(wh, c) shouldBe Seq(1.0, 2.0, 3.0, 4.0)
+    // append goes through Spark's own write path, which re-caches by path
+    wh.append(c, Seq((3 * day + 100L, 5.0, "d", "x")).toDF("timestamp", "value", "name", "grp"),
+      tags = Set("grp")).fold(fail(_), identity)
+    served(wh, c) shouldBe Seq(1.0, 2.0, 3.0, 4.0, 5.0)
+    ins(wh, "fresh", 3 * day + 200L, 6.0)
+    served(wh, c) shouldBe Seq(1.0, 2.0, 3.0, 4.0, 5.0, 6.0)
+    wh.delete(Ast.DeleteStatement("db", "ns", "fresh", Ast.EqPred("value", Ast.AbsValue(5.0))))
+      .fold(fail(_), identity)
+    served(wh, c) shouldBe Seq(1.0, 2.0, 3.0, 4.0, 6.0)
+    (1 to 2).foreach(_ => seed(wh, c)) // three files in shards 0-2
+    served(wh, c).size shouldBe 13
+    wh.compact(c, maxFilesPerShard = 2).fold(fail(_), identity) should not be empty
+    served(wh, c).size shouldBe 13
+    // now = day 10, retention 8.5 days: shard 0 goes whole, shard 1 sheds its rows
+    wh.evictExpired(c).fold(fail(_), identity) shouldBe Seq(0L)
+    served(wh, c) shouldBe Seq(4.0, 4.0, 4.0, 6.0)
+    wh.enableRollup(c, stepMs = 1000L).fold(fail(_), identity)
+    ins(wh, "fresh", 4 * day, 7.0)
+    served(wh, c) shouldBe Seq(4.0, 4.0, 4.0, 6.0, 7.0)
+    wh.rebuildRollup(c).fold(fail(_), identity)
+    served(wh, c) shouldBe Seq(4.0, 4.0, 4.0, 6.0, 7.0)
+    // drop + re-create: same path, new metric
+    wh.drop(c)
+    wh.read(c).isLeft shouldBe true
+    ins(wh, "fresh", 5 * day, 8.0)
+    served(wh, c) shouldBe Seq(8.0)
+    // restore of a backup taken now, after another instance dropped the metric
+    val backup = Files.createTempDirectory("graft_wh_backup_")
+    val src    = Paths.get(wh.root)
+    val walk   = Files.walk(src)
+    try walk.forEach { p =>
+      val t = backup.resolve(src.relativize(p).toString)
+      if (Files.isDirectory(p)) Files.createDirectories(t) else Files.copy(p, t)
+    } finally walk.close()
+    ins(wh, "fresh", 5 * day + 1L, 9.0)
+    served(wh, c) shouldBe Seq(8.0, 9.0)
+    warehouse(wh.root).drop(c)
+    wh.restore(backup.toString).fold(fail(_), identity) shouldBe Seq(c)
+    served(wh, c) shouldBe Seq(8.0)
+    copiesOf(wh, c).size shouldBe 1
+  }
+
+  it should "serve the fresh rows after a second instance on the same root writes" in {
+    val wh   = freshWarehouse()
+    val peer = warehouse(wh.root)
+    val c    = Coords("db", "ns", "peer")
+    seed(wh, c)
+    served(wh, c) shouldBe Seq(1.0, 2.0, 3.0, 4.0)
+    peer.append(c, Seq((3 * day + 100L, 5.0, "d", "x")).toDF("timestamp", "value", "name", "grp"),
+      tags = Set("grp")).fold(fail(_), identity)
+    served(wh, c) shouldBe Seq(1.0, 2.0, 3.0, 4.0, 5.0)
+    // both instances read the same token: one shared copy
+    served(peer, c) shouldBe Seq(1.0, 2.0, 3.0, 4.0, 5.0)
+    copiesOf(wh, c).size shouldBe 1
+    peer.delete(Ast.DeleteStatement("db", "ns", "peer", Ast.CmpPred("value", Ast.Lt, Ast.AbsValue(3.0))))
+      .fold(fail(_), identity)
+    served(wh, c) shouldBe Seq(3.0, 4.0, 5.0)
+    peer.compact(c, maxFilesPerShard = 0).fold(fail(_), identity) should not be empty
+    served(wh, c) shouldBe Seq(3.0, 4.0, 5.0)
+    copiesOf(wh, c).size shouldBe 1
+  }
+
+  it should "not hold a metric whose data files exceed the budget" in {
+    val wh = new Warehouse(spark, Files.createTempDirectory("graft_wh_budget_").toString) {
+      override protected def residentBudget: Long = 0L
+    }
+    val c = Coords("db", "ns", "big")
+    try {
+      seed(wh, c)
+      val scan = read(wh, c).df.select("value")
+      scan.as[Double].collect().toSeq.sorted shouldBe Seq(1.0, 2.0, 3.0, 4.0)
+      scan.queryExecution.executedPlan.collectFirst {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      } should not be empty
+      val r = residency(wh, c).getOrElse(fail("no residency entry"))
+      r.overBudget shouldBe true
+      r.cachedBytes shouldBe 0L
+      r.dataBytes should be > 0L
+      copiesOf(wh, c) shouldBe empty
+    } finally wh.release()
+  }
+
+  it should "leave at most one cached entry per metric through repeated token changes" in {
+    val wh   = freshWarehouse()
+    val peer = warehouse(wh.root)
+    val c    = Coords("db", "ns", "churn")
+    seed(wh, c)
+    (1 to 6).foreach { i =>
+      // alternate the writer: this instance releases on its own write, and
+      // on the first read that sees a peer's token
+      ins(if (i % 2 == 0) wh else peer, "churn", 3 * day + i, i.toDouble)
+      served(wh, c).size shouldBe 4 + i
+      copiesOf(wh, c).size shouldBe 1
+    }
+    wh.drop(c)
+    copiesOf(wh, c) shouldBe empty
+  }
+
+  it should "keep one copy when readers race on a new token" in {
+    val wh = freshWarehouse()
+    val c  = Coords("db", "ns", "racers")
+    seed(wh, c)
+    served(wh, c)
+    ins(wh, "racers", 3 * day, 5.0)
+    val start = new java.util.concurrent.CountDownLatch(1)
+    val pool  = java.util.concurrent.Executors.newFixedThreadPool(4)
+    try {
+      val fs = (1 to 4).map(_ => pool.submit(() => { start.await(); values(read(wh, c)) }))
+      start.countDown()
+      fs.foreach(_.get(60, java.util.concurrent.TimeUnit.SECONDS) shouldBe Seq(1.0, 2.0, 3.0, 4.0, 5.0))
+    } finally pool.shutdown()
+    copiesOf(wh, c).size shouldBe 1
+    served(wh, c) shouldBe Seq(1.0, 2.0, 3.0, 4.0, 5.0)
   }
 
   "Warehouse metadata" should "never report a metric missing while inserts race reads" in {

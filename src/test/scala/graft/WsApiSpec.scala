@@ -5,7 +5,6 @@ import java.net.http.{HttpClient, HttpRequest, HttpResponse, WebSocket}
 import java.nio.file.Files
 import java.util.concurrent.{CompletionStage, LinkedBlockingQueue, TimeUnit}
 
-import graft.catalog.Warehouse
 import graft.http.{HttpApi, SubscriptionHub, WsApi}
 
 /** WebSocket pub/sub transport specs: RFC 6455 handshake + frames against
@@ -41,7 +40,7 @@ class WsApiSpec extends SparkTestBase {
   "WsApi" should "serve the subscribe protocol: ack, historical, then matching live pushes" in {
     val root   = Files.createTempDirectory("graft_ws_").toString
     val hub    = new SubscriptionHub
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine, hub = hub)
     val ws     = new WsApi(engine, hub)
     val httpPort = api.start()
@@ -76,7 +75,7 @@ class WsApiSpec extends SparkTestBase {
   it should "re-push aggregated subscriptions periodically and report errors in-protocol" in {
     val root   = Files.createTempDirectory("graft_ws_agg_").toString
     val hub    = new SubscriptionHub
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine, hub = hub)
     val ws     = new WsApi(engine, hub)
     val httpPort = api.start()
@@ -111,7 +110,7 @@ class WsApiSpec extends SparkTestBase {
   it should "enforce the authorization provider on register, with the token as a subprotocol" in {
     val root   = Files.createTempDirectory("graft_ws_auth_").toString
     val hub    = new SubscriptionHub
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine, hub = hub, auth = new TestAuthProvider)
     val ws     = new WsApi(engine, hub, auth = new TestAuthProvider)
     val httpPort = api.start()
@@ -159,7 +158,7 @@ class WsApiSpec extends SparkTestBase {
   it should "serve EXPLAIN over the WS surface without executing" in {
     val root   = Files.createTempDirectory("graft_ws_explain_").toString
     val hub    = new SubscriptionHub
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine, hub = hub)
     val ws     = new WsApi(engine, hub)
     val httpPort = api.start()
@@ -184,7 +183,7 @@ class WsApiSpec extends SparkTestBase {
   it should "shut down its subscribers and schedulers on stop without touching the SSE transport's" in {
     val root   = Files.createTempDirectory("graft_ws_stop_").toString
     val hub    = new SubscriptionHub
-    val engine = new GraftEngine(spark, Some(new Warehouse(spark, root)))
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
     val api    = new HttpApi(engine, hub = hub)
     val ws     = new WsApi(engine, hub)
     val httpPort = api.start()
@@ -208,5 +207,54 @@ class WsApiSpec extends SparkTestBase {
     hub.size shouldBe 0
     ws.ownedCount shouldBe 0
     api.stop() // …and the SSE transport shuts down independently
+  }
+
+  it should "count the accept loop's end at stop() as a closed socket" in {
+    val engine = new GraftEngine(spark)
+    val ws     = new WsApi(engine, new SubscriptionHub)
+    ws.start()
+    Thread.sleep(300) // let the accept loop block in accept()
+    ws.closedSocketCount shouldBe 0L
+    ws.stop()
+    val deadline = System.currentTimeMillis() + 10000
+    while (ws.closedSocketCount == 0L && System.currentTimeMillis() < deadline) Thread.sleep(20)
+    ws.closedSocketCount shouldBe 1L
+  }
+
+  it should "count a connection that dies under it, and let any other failure of a connection propagate" in {
+    Uncaught.in("graft-ws") { thrown =>
+      val root   = Files.createTempDirectory("graft_ws_fail_").toString
+      val failing = new GraftEngine(spark, Some(warehouse(root))) {
+        override def executeStatement(stmt: graft.sql.Ast.Statement)(implicit tc: graft.plan.TimeContext) =
+          throw new IllegalStateException("engine bug")
+      }
+      val ws   = new WsApi(failing, new SubscriptionHub)
+      val port = ws.start()
+      try {
+        // a client that resets the connection in the middle of its handshake
+        val raw = new java.net.Socket("127.0.0.1", port)
+        raw.getOutputStream.write("GET /ws-stream HTTP/1.1\r\n".getBytes("UTF-8"))
+        raw.getOutputStream.flush()
+        Thread.sleep(200)
+        raw.setSoLinger(true, 0)
+        raw.close()
+        val deadline = System.currentTimeMillis() + 10000
+        while (ws.closedSocketCount == 0L && System.currentTimeMillis() < deadline) Thread.sleep(20)
+        ws.closedSocketCount shouldBe 1L
+        thrown.poll(200, TimeUnit.MILLISECONDS) shouldBe null
+
+        // a subscription whose historical query throws: the connection
+        // closes and the failure leaves the connection's thread
+        val received = new LinkedBlockingQueue[String]()
+        val sock = connect(port, received)
+        sock.sendText("""{"db":"db","namespace":"ns","queryString":"select * from m"}""", true)
+        received.poll(20, TimeUnit.SECONDS) should include(""""subscribed"""")
+        val e = thrown.poll(20, TimeUnit.SECONDS)
+        e shouldBe an[IllegalStateException]
+        e.getMessage shouldBe "engine bug"
+        ws.closedSocketCount shouldBe 1L
+        sock.abort()
+      } finally ws.stop()
+    }
   }
 }
