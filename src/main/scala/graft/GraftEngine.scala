@@ -2,7 +2,7 @@ package graft
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
 
@@ -106,11 +106,22 @@ class GraftEngine(val spark: SparkSession, val warehouse: Option[graft.catalog.W
     } yield df
 
   /** Resolve a metric: in-memory registry first, then the warehouse catalog. */
-  private def resolve(db: String, ns: String, metric: String): Either[String, MetricRef] =
+  private[graft] def resolve(db: String, ns: String, metric: String): Either[String, MetricRef] =
     registry.get((db, ns, metric)).map(Right(_)).getOrElse {
       warehouse.toRight(s"metric $metric does not exist")
         .flatMap(_.read(graft.catalog.Coords(db, ns, metric)))
     }
+
+  /**
+   * The request path of every serving surface (`/query`, SSE, WebSocket,
+   * gRPC, periodic pushes): resolve → plan → execute, then ONE bounded
+   * collect ([[GraftEngine.collectBounded]]). `view` is the projection at
+   * the plan root — [[GraftEngine.json]] for the JSON surfaces, the typed
+   * columns otherwise — and the only thing a caller varies.
+   */
+  def answer(sel: Ast.SelectStatement, maxRows: Int, view: DataFrame => DataFrame = identity)(
+      implicit tc: TimeContext): Either[String, GraftEngine.Answer] =
+    executeStatement(sel).map(df => GraftEngine.collectBounded(view(df), maxRows))
 
   def executeStatement(stmt: Ast.Statement)(implicit tc: TimeContext): Either[String, DataFrame] =
     stmt match {
@@ -234,4 +245,30 @@ class GraftEngine(val spark: SparkSession, val warehouse: Option[graft.catalog.W
         resolve(s.db, s.namespace, s.metric).flatMap(ref => Planner.plan(s, ref.schema))
       case _ => Left("only select/delete statements can be planned")
     }
+}
+
+object GraftEngine {
+
+  /** A select's bounded answer: its column names, its first rows (at most
+    * the cap), and whether the result held more. */
+  final case class Answer(columns: Seq[String], rows: Seq[Row], truncated: Boolean)
+
+  /** The JSON projection: one string column, each row as a JSON object
+    * byte-identical to `Dataset.toJSON` (the same generator and options).
+    * The star expands to the plan's output attributes without looking any
+    * name up, so duplicate, dotted and backticked names render as they are. */
+  val json: DataFrame => DataFrame = _.select(to_json(struct(col("*"))))
+
+  /**
+   * `df`'s first `maxRows` rows in one bounded collect: `limit(maxRows + 1)`
+   * at the plan root makes Spark plan `CollectLimit` /
+   * `TakeOrderedAndProject`, so a `limit 1` reads one partition in one job,
+   * a trailing ORDER BY is a top-k instead of a range sort with its own
+   * sampling job, and the driver receives at most `maxRows + 1` rows per
+   * task result (`spark.driver.maxResultSize` as the hard stop).
+   */
+  private[graft] def collectBounded(df: DataFrame, maxRows: Int): Answer = {
+    val rows = df.limit(maxRows + 1).collect()
+    Answer(df.columns.toSeq, rows.take(maxRows).toSeq, rows.length > maxRows)
+  }
 }

@@ -9,9 +9,6 @@ import scala.util.{Failure, Success, Try}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
-import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions.{col, struct, to_json}
-
 import graft.GraftEngine
 import graft.catalog.Coords
 import graft.plan.TimeContext
@@ -31,13 +28,11 @@ import graft.sql.{Ast, SqlParser}
  *  - `GET /commands/<db>/<namespace>/metrics` → metric listing
  *
  * Results are capped at `maxResultRows` — the serving-layer bound the
- * reference enforces on its fetches. Every answer is ONE bounded collect
- * ([[HttpApi.records]]): `limit(maxResultRows + 1)` sits at the plan root,
- * so the driver receives at most `maxResultRows + 1` rendered rows per task
- * result (never a whole partition, never the table), with
- * `spark.driver.maxResultSize` as the hard stop. A `select * from events`
- * over REST at 100 TB returns the first `maxResultRows` rows and
- * `"truncated":true`.
+ * reference enforces on its fetches. Every answer — `/query`, the SSE
+ * historical snapshot and the periodic pushes — goes through
+ * [[GraftEngine.answer]]: ONE bounded collect of the rows rendered as JSON
+ * at the plan root, so a `select * from events` over REST at 100 TB returns
+ * the first `maxResultRows` rows and `"truncated":true`.
  *
  * Uses only the JDK http server + the Jackson shipped with Spark — no new
  * dependencies.
@@ -149,12 +144,10 @@ class HttpApi(
                 if (req.has("from") && req.has("to"))
                   sel.enrichWithTimeRange("timestamp", req.get("from").asLong(), req.get("to").asLong())
                 else sel
-              engine.executeStatement(enriched) match {
-                case Right(df) =>
-                  // rendered before any header goes out: a failing job
-                  // still answers a clean 500
-                  respond(ex, 200, HttpApi.records(df, maxResultRows, """{"records":[""",
-                    truncated => s"""],"truncated":$truncated}"""))
+              engine.answer(enriched, maxResultRows, GraftEngine.json) match {
+                // rendered before any header goes out: a failing job still
+                // answers a clean 500
+                case Right(a)  => respond(ex, 200, HttpApi.json(a, "records"))
                 case Left(err) => respond(ex, 400, s"""{"error":${mapper.writeValueAsString(err)}}""")
               }
           }
@@ -204,9 +197,7 @@ class HttpApi(
       case Right(_) =>
         // fan out to live subscribers (reference: WriteCoordinator fires
         // PublishRecord to the PublisherActor on every write)
-        hub.publish(Coords(stmt.db, stmt.namespace, stmt.metric),
-          Map("timestamp" -> stmt.timestamp.getOrElse(tc.currentTime), "value" -> value) ++
-            stmt.dimensions ++ stmt.tags)
+        hub.publish(stmt)
         (200, """{"inserted":1}""")
       case Left(err) => (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
     }
@@ -261,16 +252,9 @@ class HttpApi(
         ex.getResponseHeaders.set("Cache-Control", "no-cache")
         ex.sendResponseHeaders(200, 0) // chunked
         val out = ex.getResponseBody
-        engine.executeStatement(sel) match {
-          case Right(df) =>
-            // historical prefix under the same row cap as /query
-            out.write(HttpApi.records(df, maxResultRows, """data: {"historical":[""",
-              t => s"""],"truncated":$t}""" + "\n\n").getBytes(StandardCharsets.UTF_8))
-            out.flush()
-          case Left(_) => // metric may not exist yet — start empty
-            out.write("data: {\"historical\":[],\"truncated\":false}\n\n".getBytes(StandardCharsets.UTF_8))
-            out.flush()
-        }
+        // historical prefix under the same row cap as /query
+        out.write(s"data: ${HttpApi.historical(engine, sel, maxResultRows)}\n\n".getBytes(StandardCharsets.UTF_8))
+        out.flush()
         lazy val live: LiveSub = LiveSub(Coords(sel.db, sel.namespace, sel.metric), sel.where, new SseSubscriber(
           write = bytes => { out.write(bytes); out.flush() },
           onDead = () => { hub.remove(live); ownSubs.remove(live); Try(ex.close()); () },
@@ -290,16 +274,14 @@ class HttpApi(
         val out = ex.getResponseBody
         lazy val handle: AutoCloseable = graft.streaming.Subscriptions.periodic(
           engine, db, ns, q, interval,
-          rows => {
-            val json = rows.map(r =>
-              mapper.writeValueAsString(r.schema.fieldNames.zip(r.toSeq).toMap.asJava)).mkString(",")
+          a =>
             Try {
-              out.write(s"""data: {"records":[$json]}\n\n""".getBytes(StandardCharsets.UTF_8))
+              out.write(s"data: ${HttpApi.json(a, "records")}\n\n".getBytes(StandardCharsets.UTF_8))
               out.flush()
             }.failed.foreach { _ => // dead client: stop + untrack its scheduler
               handle.close(); periodicSubs.remove(handle); Try(ex.close())
-            }
-          })
+            },
+          maxResultRows)
         periodicSubs.add(handle) // materialize + track for stop()
         ()
       case Right(_) =>
@@ -473,20 +455,15 @@ class HttpApi(
 
 object HttpApi {
 
-  /**
-   * `prefix + r1,r2,… + suffix(truncated)`: `df`'s first `maxRows` rows as
-   * JSON objects, byte-identical to `Dataset.toJSON` (the same generator
-   * and options, via `to_json(struct(*))`), and whether more rows exist.
-   * The star expands to the plan's output attributes without looking any
-   * name up, so duplicate names, dotted names and backticks render as they
-   * are. One bounded collect: `limit(maxRows + 1)` at the plan root
-   * makes Spark plan `CollectLimit` / `TakeOrderedAndProject`, so a
-   * `limit 1` reads one partition in one job, a trailing ORDER BY is a
-   * top-k instead of a range sort with its own sampling job, and the driver
-   * receives at most `maxRows + 1` rows per task result.
-   */
-  private[graft] def records(df: DataFrame, maxRows: Int, prefix: String, suffix: Boolean => String): String = {
-    val rows = df.select(to_json(struct(col("*")))).limit(maxRows + 1).collect()
-    rows.iterator.take(maxRows).map(_.getString(0)).mkString(prefix, ",", suffix(rows.length > maxRows))
-  }
+  /** `{"<key>":[r1,r2,…],"truncated":…}` for an answer taken through the
+    * [[GraftEngine.json]] view — the one JSON rendering of every answer. */
+  private[graft] def json(a: GraftEngine.Answer, key: String): String =
+    a.rows.iterator.map(_.getString(0)).mkString(s"""{"$key":[""", ",", s"""],"truncated":${a.truncated}}""")
+
+  /** The historical snapshot a plain subscription opens with, under the
+    * transport's row cap: empty while the metric does not exist yet. */
+  private[http] def historical(engine: GraftEngine, sel: Ast.SelectStatement, maxRows: Int)(
+      implicit tc: TimeContext): String =
+    engine.answer(sel, maxRows, GraftEngine.json)
+      .fold(_ => """{"historical":[],"truncated":false}""", json(_, "historical"))
 }

@@ -6,11 +6,12 @@ import com.fasterxml.jackson.databind.ObjectMapper
 
 import graft.catalog.Coords
 import graft.plan.TimeContext
+import graft.sql.Ast
 
 /** One live plain-query subscription: the metric it watches, the
   * registered predicate, and the subscriber's bounded event buffer (any
   * transport framing). */
-final case class LiveSub(coords: Coords, pred: Option[graft.sql.Ast.Predicate], sub: SseSubscriber)
+final case class LiveSub(coords: Coords, pred: Option[Ast.Predicate], sub: SseSubscriber)
 
 /**
  * Transport-independent live-subscription registry (the reference's
@@ -33,19 +34,25 @@ final class SubscriptionHub {
   /** registered subscriber count (post-eviction) — observability. */
   def size: Int = subs.size()
 
-  /** Enqueue a record freshly written to metric `c` for every matching
-    * subscription on that metric. Non-blocking: each subscriber's
-    * [[SseSubscriber]] buffer absorbs the event and its own flusher writes
-    * it out — a stalled client stalls only itself (and is evicted on
-    * overflow), never the write path. */
-  def publish(c: Coords, record: Map[String, Any]): Unit = fanOut(record)(_.coords == c)
+  /** Enqueue the record an insert just wrote for every matching
+    * subscription on its metric: `timestamp` (the write's time when the
+    * statement names none), `value`, then its dimensions and tags — the one
+    * published-record shape of every write path. Non-blocking: each
+    * subscriber's [[SseSubscriber]] buffer absorbs the event and its own
+    * flusher writes it out — a stalled client stalls only itself (and is
+    * evicted on overflow), never the write path. */
+  def publish(ins: Ast.InsertStatement)(implicit tc: TimeContext): Unit = {
+    val c = Coords(ins.db, ins.namespace, ins.metric)
+    fanOut(Map[String, Any]("timestamp" -> ins.timestamp.getOrElse(tc.currentTime), "value" -> ins.value) ++
+      ins.dimensions ++ ins.tags)(_.coords == c)
+  }
 
   /** Enqueue a record whose metric the writer does not name for every
     * matching subscription, whatever metric it watches — so subscriptions
     * on other metrics receive it too. Kept only for `perfbench/`'s
     * harness, which does not pass the metric yet; no write path of graft
     * uses it. */
-  @deprecated("pass the written metric: publish(coords, record)", "0.1")
+  @deprecated("publish the insert statement: publish(ins)", "0.1")
   def publish(record: Map[String, Any]): Unit = fanOut(record)(_ => true)
 
   private def fanOut(record: Map[String, Any])(watches: LiveSub => Boolean): Unit = {

@@ -27,7 +27,7 @@ import graft.sql.{Ast, SqlParser}
  * `{"historical":[…],"truncated":…}` snapshot, then one JSON message per
  * future matching record — the same subscribe semantics the SSE transport
  * serves, over RFC 6455 frames. Aggregated (group-by) queries re-push
- * periodically (R6), mirroring [[HttpApi]].
+ * `{"records":[…],"truncated":…}` periodically (R6), mirroring [[HttpApi]].
  *
  * Subscriptions register in the SAME [[SubscriptionHub]] as the SSE
  * transport, so a write through `POST /data` fans out to both. Each WS
@@ -240,7 +240,7 @@ class WsApi(
       case Right(sel: Ast.SelectStatement) if denied(sel) => ()
       case Right(sel: Ast.SelectStatement) if sel.groupBy.isEmpty =>
         sendText(s"""{"subscribed":${mapper.writeValueAsString(q)}}""")
-        sendText(historicalJson(sel))
+        sendText(HttpApi.historical(engine, sel, maxResultRows))
         // the subscriber's flusher delivers PRE-FRAMED text frames (one per
         // event, batched per drain tick into a single socket write)
         lazy val closer: AutoCloseable = () => live.sub.close()
@@ -257,26 +257,16 @@ class WsApi(
         sendText(s"""{"subscribed":${mapper.writeValueAsString(q)}}""")
         lazy val handle: AutoCloseable = graft.streaming.Subscriptions.periodic(
           engine, db, ns, q, refreshMs.getOrElse(1000L),
-          rows => {
-            import scala.jdk.CollectionConverters._
-            val recs = rows.map(r =>
-              mapper.writeValueAsString(r.schema.fieldNames.zip(r.toSeq).toMap.asJava)).mkString(",")
-            Try(sendText(s"""{"records":[$recs]}""")).failed.foreach { _ =>
+          a =>
+            Try(sendText(HttpApi.json(a, "records"))).failed.foreach { _ =>
               handle.close(); owned.remove(handle); closeConn()
-            }
-          })
+            },
+          maxResultRows)
         owned.add(handle); mine.add(handle)
       case Right(_)    => err("only select statements can be subscribed")
       case Left(error) => err(error)
     }
   }
-
-  /** historical snapshot under the same row cap as the REST surface. */
-  private def historicalJson(sel: Ast.SelectStatement)(implicit tc: TimeContext): String =
-    engine.executeStatement(sel) match {
-      case Right(df) => HttpApi.records(df, maxResultRows, """{"historical":[""", t => s"""],"truncated":$t}""")
-      case Left(_) => """{"historical":[],"truncated":false}""" // metric may not exist yet
-    }
 }
 
 object WsApi {

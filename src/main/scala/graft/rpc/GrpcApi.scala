@@ -20,7 +20,7 @@ import graft.http.{LiveSub, SseSubscriber, SubscriptionHub}
 import graft.plan.TimeContext
 import graft.rpc.ProtoWire.{Reader, Writer}
 import graft.rpc.RpcMessages._
-import graft.security.GraftAuthProvider
+import graft.security.{AuthResult, GraftAuthProvider}
 import graft.sql.{Ast, SqlParser}
 
 /**
@@ -194,12 +194,17 @@ class GrpcApi(
 
     private def payload: String = auth.extractHttpSecurityPayload(headers)
 
-    /** reference interceptor contract: writePermission = true on every
-      * authorized gRPC verb; AllowAll bypasses the empty-token rejection. */
-    private def authorized(check: => graft.security.AuthResult): Option[String] =
-      if (auth eq GraftAuthProvider.AllowAll) None
-      else if (payload.trim.isEmpty) Some("missing security payload")
-      else { val r = check; if (r.isDenied) Some(r.failReason) else None }
+    /** Serves the call when `check` passes, else answers UNAUTHENTICATED
+      * (16). Reference interceptor contract: writePermission = true on
+      * every authorized gRPC verb; AllowAll bypasses the empty-token
+      * rejection. */
+    private def authorized(ctx: ChannelHandlerContext, check: => AuthResult)(serve: => Unit): Unit = {
+      val denied =
+        if (auth eq GraftAuthProvider.AllowAll) None
+        else if (payload.trim.isEmpty) Some("missing security payload")
+        else Some(check).filter(_.isDenied).map(_.failReason)
+      denied.fold(serve)(fail(ctx, 16, _))
+    }
 
     // NOTE on the path literals: gRPC routes on the fully-qualified proto
     // service name, so wire compatibility with reference clients REQUIRES
@@ -217,18 +222,16 @@ class GrpcApi(
 
         case "/io.radicalbit.nsdb.rpc.InitMetric/InitMetric" =>
           val req = InitMetricRequest.decode(new Reader(deframeFirst(body.toByteArray)))
-          authorized(auth.checkMetricAuth(req.db, req.namespace, req.metric, payload, writePermission = true)) match {
-            case Some(reason) => fail(ctx, 16, reason) // UNAUTHENTICATED
-            case None =>
-              val res = (for {
-                si  <- parseDuration(req.shardInterval, engine.warehouse.map(_.DefaultShardIntervalMs).getOrElse(86400000L))
-                ret <- parseDuration(req.retention, 0L)
-                _   <- engine.initMetric(req.db, req.namespace, req.metric, si, ret)
-              } yield ()) match {
-                case Right(())   => InitMetricResponse(req.db, req.namespace, req.metric, completedSuccessfully = true)
-                case Left(error) => InitMetricResponse(req.db, req.namespace, req.metric, completedSuccessfully = false, error)
-              }
-              unary(ctx, res.encode)
+          authorized(ctx, auth.checkMetricAuth(req.db, req.namespace, req.metric, payload, writePermission = true)) {
+            val res = (for {
+              si  <- parseDuration(req.shardInterval, engine.warehouse.map(_.DefaultShardIntervalMs).getOrElse(86400000L))
+              ret <- parseDuration(req.retention, 0L)
+              _   <- engine.initMetric(req.db, req.namespace, req.metric, si, ret)
+            } yield ()) match {
+              case Right(())   => InitMetricResponse(req.db, req.namespace, req.metric, completedSuccessfully = true)
+              case Left(error) => InitMetricResponse(req.db, req.namespace, req.metric, completedSuccessfully = false, error)
+            }
+            unary(ctx, res.encode)
           }
 
         case "/io.radicalbit.nsdb.rpc.Restore/Restore" =>
@@ -241,85 +244,71 @@ class GrpcApi(
 
         case "/io.radicalbit.nsdb.rpc.NSDBServiceSQL/InsertBit" =>
           val req = RpcInsert.decode(new Reader(deframeFirst(body.toByteArray)))
-          authorized(auth.checkMetricAuth(req.database, req.namespace, req.metric, payload, writePermission = true)) match {
-            case Some(reason) => fail(ctx, 16, reason)
-            case None =>
-              val stmt = Ast.InsertStatement(
-                req.database, req.namespace, req.metric,
-                if (req.timestamp == 0L) None else Some(req.timestamp),
-                req.dimensions.map { case (k, v) => k -> plain(v) },
-                req.tags.map { case (k, v) => k -> plain(v) },
-                plain(req.value))
-              val res = engine.executeStatement(stmt) match {
-                case Right(_) =>
-                  hub.publish(Coords(stmt.db, stmt.namespace, stmt.metric), Map[String, Any](
-                    "timestamp" -> stmt.timestamp.getOrElse(tc.currentTime), "value" -> plain(req.value)) ++
-                    stmt.dimensions ++ stmt.tags)
-                  RpcInsertResult(completedSuccessfully = true)
-                case Left(error) => RpcInsertResult(completedSuccessfully = false, error)
-              }
-              unary(ctx, res.encode)
+          authorized(ctx, auth.checkMetricAuth(req.database, req.namespace, req.metric, payload, writePermission = true)) {
+            val stmt = Ast.InsertStatement(
+              req.database, req.namespace, req.metric,
+              if (req.timestamp == 0L) None else Some(req.timestamp),
+              req.dimensions.map { case (k, v) => k -> plain(v) },
+              req.tags.map { case (k, v) => k -> plain(v) },
+              plain(req.value))
+            val res = engine.executeStatement(stmt) match {
+              case Right(_) =>
+                hub.publish(stmt)
+                RpcInsertResult(completedSuccessfully = true)
+              case Left(error) => RpcInsertResult(completedSuccessfully = false, error)
+            }
+            unary(ctx, res.encode)
           }
 
         case "/io.radicalbit.nsdb.rpc.NSDBServiceSQL/executeSQLStatement" =>
-          val req = SqlRequest.decode(new Reader(deframeFirst(body.toByteArray)))
-          authorized(auth.checkMetricAuth(req.db, req.namespace, req.metric, payload, writePermission = true)) match {
-            case Some(reason) => fail(ctx, 16, reason)
-            case None         => unary(ctx, executeSql(req).encode)
-          }
+          val req  = SqlRequest.decode(new Reader(deframeFirst(body.toByteArray)))
+          val stmt = SqlParser.parse(req.db, req.namespace, req.statement)
+          authorized(ctx, sqlScope(req, stmt))(unary(ctx, executeSql(req, stmt).encode))
 
         case "/io.radicalbit.nsdb.rpc.NSDBServiceCommand/showNamespaces" =>
           val req = ShowNamespaces.decode(new Reader(deframeFirst(body.toByteArray)))
-          authorized(auth.checkDbAuth(req.db, payload, writePermission = true)) match {
-            case Some(reason) => fail(ctx, 16, reason)
-            case None =>
-              val res = engine.command(req.db, "", Ast.ShowNamespaces) match {
-                case Right(rows) => Namespaces(req.db, rows.flatten, completedSuccessfully = true)
-                case Left(error) => Namespaces(req.db, Seq.empty, completedSuccessfully = false, error)
-              }
-              unary(ctx, res.encode)
+          authorized(ctx, auth.checkDbAuth(req.db, payload, writePermission = true)) {
+            val res = engine.command(req.db, "", Ast.ShowNamespaces) match {
+              case Right(rows) => Namespaces(req.db, rows.flatten, completedSuccessfully = true)
+              case Left(error) => Namespaces(req.db, Seq.empty, completedSuccessfully = false, error)
+            }
+            unary(ctx, res.encode)
           }
 
         case "/io.radicalbit.nsdb.rpc.NSDBServiceCommand/showMetrics" =>
           val req = ShowMetrics.decode(new Reader(deframeFirst(body.toByteArray)))
-          authorized(auth.checkNamespaceAuth(req.db, req.namespace, payload, writePermission = true)) match {
-            case Some(reason) => fail(ctx, 16, reason)
-            case None =>
-              val res = engine.command(req.db, req.namespace, Ast.ShowMetrics) match {
-                case Right(rows) => MetricsGot(req.db, req.namespace, rows.flatten, completedSuccessfully = true)
-                case Left(error) => MetricsGot(req.db, req.namespace, Seq.empty, completedSuccessfully = false, error)
-              }
-              unary(ctx, res.encode)
+          authorized(ctx, auth.checkNamespaceAuth(req.db, req.namespace, payload, writePermission = true)) {
+            val res = engine.command(req.db, req.namespace, Ast.ShowMetrics) match {
+              case Right(rows) => MetricsGot(req.db, req.namespace, rows.flatten, completedSuccessfully = true)
+              case Left(error) => MetricsGot(req.db, req.namespace, Seq.empty, completedSuccessfully = false, error)
+            }
+            unary(ctx, res.encode)
           }
 
         case "/io.radicalbit.nsdb.rpc.NSDBServiceCommand/describeMetric" =>
           val req = DescribeMetric.decode(new Reader(deframeFirst(body.toByteArray)))
-          authorized(auth.checkMetricAuth(req.db, req.namespace, req.metric, payload, writePermission = true)) match {
-            case Some(reason) => fail(ctx, 16, reason)
-            case None =>
-              val res = engine.command(req.db, req.namespace, Ast.DescribeMetric(req.metric)) match {
-                case Right(rows) =>
-                  val fields = rows.collect { case Seq(name, dataType, fieldClass) =>
-                    MetricField(name, fieldClassType(fieldClass), dataType)
-                  }
-                  val info = engine.warehouse.flatMap(
-                    _.metricInfo(graft.catalog.Coords(req.db, req.namespace, req.metric)))
-                    .map { case (si, ret) => MetricInfo(si, ret) }
-                  DescribeMetricResponse(req.db, req.namespace, req.metric, fields, info,
-                    completedSuccessfully = true)
-                case Left(error) =>
-                  DescribeMetricResponse(req.db, req.namespace, req.metric, Seq.empty, None,
-                    completedSuccessfully = false, error)
-              }
-              unary(ctx, res.encode)
+          authorized(ctx, auth.checkMetricAuth(req.db, req.namespace, req.metric, payload, writePermission = true)) {
+            val res = engine.command(req.db, req.namespace, Ast.DescribeMetric(req.metric)) match {
+              case Right(rows) =>
+                val fields = rows.collect { case Seq(name, dataType, fieldClass) =>
+                  MetricField(name, fieldClassType(fieldClass), dataType)
+                }
+                val info = engine.warehouse.flatMap(
+                  _.metricInfo(graft.catalog.Coords(req.db, req.namespace, req.metric)))
+                  .map { case (si, ret) => MetricInfo(si, ret) }
+                DescribeMetricResponse(req.db, req.namespace, req.metric, fields, info,
+                  completedSuccessfully = true)
+              case Left(error) =>
+                DescribeMetricResponse(req.db, req.namespace, req.metric, Seq.empty, None,
+                  completedSuccessfully = false, error)
+            }
+            unary(ctx, res.encode)
           }
 
         case "/io.radicalbit.nsdb.rpc.NSDbStreaming/streamSQL" =>
-          val req = SqlRequest.decode(new Reader(deframeFirst(body.toByteArray)))
-          authorized(auth.checkMetricAuth(req.db, req.namespace, req.metric, payload, writePermission = true)) match {
-            case Some(reason) => fail(ctx, 16, reason)
-            case None         => streamSql(ctx, req)
-          }
+          val req  = SqlRequest.decode(new Reader(deframeFirst(body.toByteArray)))
+          val stmt = SqlParser.parse(req.db, req.namespace, req.statement)
+          authorized(ctx, sqlScope(req, stmt))(streamSql(ctx, req, stmt))
 
         case other =>
           fail(ctx, 12, s"unimplemented method $other") // UNIMPLEMENTED
@@ -332,16 +321,16 @@ class GrpcApi(
       * records once, then every matching write pushes RecordsPublished —
       * the same [[SubscriptionHub]] the SSE/WS transports fan out
       * through, framed as gRPC stream messages instead of SSE events. */
-    private def streamSql(ctx: ChannelHandlerContext, req: SqlRequest)(implicit tc: TimeContext): Unit = {
-      SqlParser.parse(req.db, req.namespace, req.statement) match {
+    private def streamSql(ctx: ChannelHandlerContext, req: SqlRequest, stmt: Either[String, Ast.Statement])(
+        implicit tc: TimeContext): Unit = {
+      stmt match {
         case Right(sel: Ast.SelectStatement) if sel.groupBy.isEmpty =>
           val quid = java.util.UUID.nameUUIDFromBytes(
             s"${quids.incrementAndGet()}:${req.statement}".getBytes("UTF-8")).toString
           // any failure of the historical query is the subscriber's answer,
           // not a bare INTERNAL status the client's pump cannot surface
           val answer =
-            try engine.executeStatement(sel).map(df =>
-              df.limit(maxResultRows).collect().toSeq.map(rowToBit(df.columns, _, req)))
+            try engine.answer(sel, maxResultRows).map(bits(_, sel))
             catch { case NonFatal(e) => Left(Option(e.getMessage).getOrElse(e.getClass.getName)) }
           val historical = answer match {
             case Right(bits) => bits
@@ -371,18 +360,11 @@ class GrpcApi(
             capacity = queueCapacity,
             refreshMs = refreshMs,
             frame = json => {
-              val node = mapper.readTree(json)
-              val fields = node.properties().asScala.map { e =>
+              val fields = mapper.readTree(json).properties().asScala.map { e =>
                 val v = e.getValue
-                e.getKey -> (if (v.isIntegralNumber) LongValue(v.asLong())
-                             else if (v.isNumber) DecimalValue(v.asDouble())
-                             else StringValue(v.asText()): RpcValue)
-              }.toMap
-              val bit = RpcBit(
-                fields.get("timestamp").collect { case LongValue(l) => l }.getOrElse(0L),
-                fields.getOrElse("value", LongValue(0L)),
-                dimensions = fields -- Seq("timestamp", "value") -- tagNames(req),
-                tags = (fields -- Seq("timestamp", "value")).view.filterKeys(tagNames(req)).toMap)
+                e.getKey -> (if (v.isIntegralNumber) v.asLong() else if (v.isNumber) v.asDouble() else v.asText(): Any)
+              }
+              val bit = toBit(fields, tagNames(sel))
               val w = new Writer
               SqlStreamingResponse(req.db, req.namespace, req.metric,
                 RecordsPublished(quid, Seq(bit))).encode(w)
@@ -407,14 +389,12 @@ class GrpcApi(
     /** reference `GrpcEndpointServiceSQL.executeSQLStatement` semantics:
       * select → records; insert → the inserted bit echoed; delete → empty
       * records; failures echo the REQUEST db/namespace with `reason`. */
-    private def executeSql(req: SqlRequest)(implicit tc: TimeContext): SqlResponse =
-      SqlParser.parse(req.db, req.namespace, req.statement) match {
+    private def executeSql(req: SqlRequest, stmt: Either[String, Ast.Statement])(implicit tc: TimeContext): SqlResponse =
+      stmt match {
         case Right(sel: Ast.SelectStatement) =>
-          engine.executeStatement(sel) match {
-            case Right(df) =>
-              val rows = df.limit(maxResultRows).collect().toSeq
-              SqlResponse(sel.db, sel.namespace, sel.metric, completedSuccessfully = true,
-                records = rows.map(rowToBit(df.columns, _, req)))
+          engine.answer(sel, maxResultRows) match {
+            case Right(a) =>
+              SqlResponse(sel.db, sel.namespace, sel.metric, completedSuccessfully = true, records = bits(a, sel))
             case Left(error) =>
               SqlResponse(req.db, req.namespace, "", completedSuccessfully = false, reason = error)
           }
@@ -424,9 +404,7 @@ class GrpcApi(
               val bit = RpcBit(ins.timestamp.getOrElse(tc.currentTime), toRpcValue(ins.value),
                 ins.dimensions.map { case (k, v) => k -> toRpcValue(v) },
                 ins.tags.map { case (k, v) => k -> toRpcValue(v) })
-              hub.publish(Coords(ins.db, ins.namespace, ins.metric), Map[String, Any](
-                "timestamp" -> ins.timestamp.getOrElse(tc.currentTime), "value" -> ins.value) ++
-                ins.dimensions ++ ins.tags)
+              hub.publish(ins)
               SqlResponse(ins.db, ins.namespace, ins.metric, completedSuccessfully = true, records = Seq(bit))
             case Left(error) =>
               SqlResponse(req.db, req.namespace, ins.metric, completedSuccessfully = false, reason = error)
@@ -445,36 +423,48 @@ class GrpcApi(
           SqlResponse(req.db, req.namespace, "", completedSuccessfully = false, reason = error)
       }
 
-    /** tag-classed column names of the request's metric — registry first,
-      * then the warehouse catalog (empty when the metric is unknown —
-      * then everything lands in dimensions). */
-    private def tagNames(req: SqlRequest): Set[String] =
-      engine.metricRef(req.db, req.namespace, req.metric).map(_.schema)
-        .orElse(engine.warehouse.flatMap(
-          _.read(graft.catalog.Coords(req.db, req.namespace, req.metric)).toOption).map(_.schema))
-        .map(_.fields.collect { case (n, f) if f.fieldClass == graft.model.FieldClass.Tag => n }.toSet)
+    /** The request's metric scope, then the scope of the metric its
+      * statement names: the statement, not the request's `metric` field,
+      * decides what runs. */
+    private def sqlScope(req: SqlRequest, stmt: Either[String, Ast.Statement]): AuthResult = {
+      val scope = auth.checkMetricAuth(req.db, req.namespace, req.metric, payload, writePermission = true)
+      stmt match {
+        case Right(s) if !scope.isDenied =>
+          auth.checkMetricAuth(s.db, s.namespace, s.metric, payload, writePermission = true)
+        case _ => scope
+      }
+    }
+
+    /** tag-classed column names of the statement's metric — registry
+      * first, then the warehouse catalog (empty when the metric is unknown
+      * — then everything lands in dimensions). */
+    private def tagNames(sel: Ast.SelectStatement): Set[String] =
+      engine.resolve(sel.db, sel.namespace, sel.metric).toOption
+        .map(_.schema.fields.collect { case (n, f) if f.fieldClass == graft.model.FieldClass.Tag => n }.toSet)
         .getOrElse(Set.empty)
 
-    /** DataFrame row → wire Bit, the reference's `asGrpcBit` role: the
-      * `timestamp`/`value` columns map to the Bit scalars (aggregate
-      * results: the first numeric non-schema column is the value),
-      * schema-tagged columns go to `tags`, everything else to
-      * `dimensions`. */
-    private def rowToBit(cols: Array[String], row: org.apache.spark.sql.Row, req: SqlRequest): RpcBit = {
-      val tags = tagNames(req)
+    /** an answer's rows as wire Bits, the metric's tags resolved once. */
+    private def bits(a: GraftEngine.Answer, sel: Ast.SelectStatement): Seq[RpcBit] = {
+      val tags = tagNames(sel)
+      a.rows.map(row => toBit(a.columns.zip(row.toSeq), tags))
+    }
+
+    /** Named fields → wire Bit, the reference's `asGrpcBit` role: the
+      * `timestamp`/`value` fields map to the Bit scalars (aggregate
+      * results: the first numeric non-schema field is the value),
+      * schema-tagged fields go to `tags`, everything else to `dimensions`;
+      * null fields are omitted. */
+    private def toBit(fields: Iterable[(String, Any)], tags: Set[String]): RpcBit = {
       var ts   = 0L
       var value: Option[RpcValue]     = None
       var dims: Map[String, RpcValue] = Map.empty
       var tgs: Map[String, RpcValue]  = Map.empty
-      cols.zipWithIndex.foreach { case (name, i) =>
-        val raw = if (row.isNullAt(i)) null else row.get(i)
-        name match {
-          case "timestamp" if raw != null => ts = row.getLong(i)
-          case "value" if raw != null     => value = Some(toRpcValue(raw))
-          case _ if raw == null           => // absent field: omitted from the bit
-          case n if tags(n)               => tgs += n -> toRpcValue(raw)
-          case n                          => dims += n -> toRpcValue(raw)
-        }
+      fields.foreach {
+        case (_, null)             => // absent field: omitted from the bit
+        case ("timestamp", t: Long) => ts = t
+        case ("value", v)          => value = Some(toRpcValue(v))
+        case (n, v) if tags(n)     => tgs += n -> toRpcValue(v)
+        case (n, v)                => dims += n -> toRpcValue(v)
       }
       // aggregate shapes (count/sum columns) have no `value` column — the
       // first numeric dimension-side column is the aggregate's value

@@ -4,7 +4,7 @@ import java.util.concurrent.{Executors, ScheduledExecutorService, TimeUnit}
 
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -70,16 +70,18 @@ object Subscriptions {
       sql: String
   )(implicit tc: TimeContext): Either[String, Subscription] =
     for {
-      stmt <- SqlParser.parse(db, namespace, sql)
-      sel <- stmt match {
-        case s: Ast.SelectStatement => Right(s)
-        case _                      => Left("only select statements can be subscribed")
-      }
+      sel        <- parseSelect(db, namespace, sql)
       ref        <- engine.metricRef(db, namespace, sel.metric).toRight(s"metric ${sel.metric} does not exist")
       plan       <- Planner.plan(sel, ref.schema)
       historical <- engine.executeStatement(sel)
       live       <- liveStream(plan, stream, ref.schema)
     } yield Subscription(historical, live)
+
+  private def parseSelect(db: String, namespace: String, sql: String): Either[String, Ast.SelectStatement] =
+    SqlParser.parse(db, namespace, sql).flatMap {
+      case s: Ast.SelectStatement => Right(s)
+      case _                      => Left("only select statements can be subscribed")
+    }
 
   private def liveStream(
       plan: PlannedQuery,
@@ -150,10 +152,12 @@ object Subscriptions {
 
   /**
    * R6: periodic re-execution of a standard aggregation query on a fixed
-   * scheduler, pushing each result to the subscriber callback. Returns a
-   * handle that stops the scheduler. A run whose query is rejected or
-   * whose execution or callback throws is logged to stderr with the
-   * subscription's db, namespace and SQL; the schedule keeps running.
+   * scheduler, pushing each result to the subscriber callback. The query is
+   * parsed once; every run answers it through [[GraftEngine.answer]] in the
+   * [[GraftEngine.json]] view, capped at `maxRows`. Returns a handle that
+   * stops the scheduler. A run whose query is rejected or whose execution
+   * or callback throws is logged to stderr with the subscription's db,
+   * namespace and SQL; the schedule keeps running.
    */
   def periodic(
       engine: GraftEngine,
@@ -161,8 +165,10 @@ object Subscriptions {
       namespace: String,
       sql: String,
       intervalMs: Long,
-      onResult: Array[Row] => Unit
+      onResult: GraftEngine.Answer => Unit,
+      maxRows: Int = 10000
   ): AutoCloseable = {
+    val stmt = parseSelect(db, namespace, sql)
     val exec: ScheduledExecutorService = Executors.newSingleThreadScheduledExecutor(r => {
       val t = new Thread(r, "graft-periodic-subscription"); t.setDaemon(true); t
     })
@@ -172,7 +178,7 @@ object Subscriptions {
       () =>
         try {
           implicit val tc: TimeContext = TimeContext(System.currentTimeMillis())
-          engine.sql(db, namespace, sql).fold(failed, df => onResult(df.collect()))
+          stmt.flatMap(engine.answer(_, maxRows, GraftEngine.json)).fold(failed, onResult)
         } catch { case NonFatal(e) => failed(e.toString) },
       0L, intervalMs, TimeUnit.MILLISECONDS
     )

@@ -256,6 +256,58 @@ class GrpcApiSpec extends SparkTestBase {
     }
   }
 
+  it should "authorize the metric a SQL statement names, not only the request's metric field" in {
+    val root   = Files.createTempDirectory("graft_grpc_scope_").toString
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
+    val api    = new GrpcApi(engine, auth = new TestAuthProvider)
+    val port   = api.start()
+    val authed = new GrpcClient(port = port, headers = Map("x-auth-token" -> "token"))
+    val other  = new GrpcClient(port = port, headers = Map("x-auth-token" -> "nope"))
+    try {
+      Seq("open_m", "secret_m").foreach { m =>
+        authed.write(RpcInsert("db", "ns", m, 1000L, LongValue(1L), Map.empty, Map.empty))
+          .toOption.get.completedSuccessfully shouldBe true
+      }
+      // the open metric answers this payload
+      other.executeSQLStatement(SqlRequest("db", "ns", "open_m", "select * from open_m"))
+        .toOption.get.records should have size 1
+      // an open request field does not open the metric the statement reads or writes
+      val read = other.executeSQLStatement(SqlRequest("db", "ns", "open_m", "select * from secret_m"))
+      read.isLeft shouldBe true
+      read.swap.toOption.get should include("16")
+      val write = other.executeSQLStatement(
+        SqlRequest("db", "ns", "open_m", "insert into secret_m ts=2000 val=2"))
+      write.isLeft shouldBe true
+      write.swap.toOption.get should include("16")
+      authed.executeSQLStatement(SqlRequest("db", "ns", "secret_m", "select * from secret_m"))
+        .toOption.get.records should have size 1
+      // nor does it subscribe to it: no snapshot, no registration
+      val events = new LinkedBlockingQueue[SqlStreamingResponse]()
+      val sub = other.subscribe(SqlRequest("db", "ns", "open_m", "select * from secret_m"))(events.put)
+      events.poll(5, TimeUnit.SECONDS) shouldBe null
+      api.hub.size shouldBe 0
+      sub.close()
+    } finally {
+      authed.close(); other.close(); api.stop()
+    }
+  }
+
+  it should "classify tags from the statement's metric when the request's metric field is empty" in {
+    val root   = Files.createTempDirectory("graft_grpc_tags_").toString
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
+    val api    = new GrpcApi(engine)
+    val client = new GrpcClient(port = api.start())
+    try {
+      client.write(RpcInsert("db", "ns", "temps", 1000L, DecimalValue(21.5),
+        Map("node" -> StringValue("a")), Map("room" -> StringValue("kitchen"))))
+        .toOption.get.completedSuccessfully shouldBe true
+      val sel = client.executeSQLStatement(SqlRequest("db", "ns", "", "select * from temps")).toOption.get
+      sel.completedSuccessfully shouldBe true
+      sel.records shouldBe Seq(RpcBit(1000L, DecimalValue(21.5),
+        Map("node" -> StringValue("a")), Map("room" -> StringValue("kitchen"))))
+    } finally { client.close(); api.stop() }
+  }
+
   it should "answer an unknown method with a trailers-only UNIMPLEMENTED and chunk >16 KiB responses" in {
     val root   = Files.createTempDirectory("graft_grpc_wire_").toString
     val engine = new GraftEngine(spark, Some(warehouse(root)))

@@ -209,7 +209,7 @@ class HttpApiSpec extends SparkTestBase {
     val df = Seq((1L, Some("a"), Some(Seq(1, 2))), (2L, None, None), (3L, Some("c"), Some(Seq.empty[Int])))
       .toDF("dotted.name", "we`ird col", "arr")
     val render = (d: org.apache.spark.sql.DataFrame, cap: Int) =>
-      HttpApi.records(d, cap, """{"records":[""", t => s"""],"truncated":$t}""")
+      HttpApi.json(GraftEngine.collectBounded(GraftEngine.json(d), cap), "records")
     for (cap <- Seq(1, 3, 5)) render(df, cap) shouldBe toJsonRendering(df, cap)
     // two columns under one name, as two aggregates of one kind answer
     val dup = df.select(org.apache.spark.sql.functions.col("`dotted.name`").as("n"), df("arr").as("n"))
@@ -393,6 +393,45 @@ class HttpApiSpec extends SparkTestBase {
       api.periodicSubscriberCount shouldBe 1
     } finally api.stop()
     api.periodicSubscriberCount shouldBe 0
+  }
+
+  it should "cap periodic pushes at maxResultRows and render them like /query" in {
+    val root   = Files.createTempDirectory("graft_sse_agg_cap_").toString
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
+    val api    = new HttpApi(engine, maxResultRows = 1)
+    val port   = api.start()
+    try {
+      Seq("a" -> 5.0, "b" -> 7.0).zipWithIndex.foreach { case ((k, v), i) =>
+        post(port, "/data",
+          s"""{"db":"db","namespace":"ns","metric":"m","bit":{"timestamp":${1000 + i},"value":$v,"tags":{"k":"$k"}}}""")._1 shouldBe 200
+      }
+      val sql = "select sum(value) from m group by k"
+      val received = new java.util.concurrent.LinkedBlockingQueue[String]()
+      val q = java.net.URLEncoder.encode(sql, "UTF-8")
+      val req = HttpRequest.newBuilder(
+        URI.create(s"http://127.0.0.1:$port/subscribe?db=db&namespace=ns&q=$q&refresh_ms=500")).GET().build()
+      client.sendAsync(req, HttpResponse.BodyHandlers.fromLineSubscriber(
+        new java.util.concurrent.Flow.Subscriber[String] {
+          def onSubscribe(s: java.util.concurrent.Flow.Subscription): Unit = s.request(Long.MaxValue)
+          def onNext(line: String): Unit = if (line.startsWith("data: ")) received.add(line.stripPrefix("data: "))
+          def onError(t: Throwable): Unit = ()
+          def onComplete(): Unit = ()
+        }))
+      val first = received.poll(30, java.util.concurrent.TimeUnit.SECONDS)
+      first should startWith("""{"records":[""")
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val push   = mapper.readTree(first)
+      push.get("records").size() shouldBe 1
+      push.get("truncated").asBoolean() shouldBe true
+      // the same rendering as /query: same fields, in column order
+      val (st, body) = post(port, "/query", s"""{"db":"db","namespace":"ns","queryString":"$sql"}""")
+      st shouldBe 200
+      def names(n: com.fasterxml.jackson.databind.JsonNode): List[String] = {
+        import scala.jdk.CollectionConverters._
+        n.get("records").get(0).fieldNames().asScala.toList
+      }
+      names(push) shouldBe names(mapper.readTree(body))
+    } finally api.stop()
   }
 
   it should "reject a /data bit without a numeric value" in {

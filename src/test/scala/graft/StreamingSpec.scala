@@ -92,7 +92,7 @@ class StreamingSpec extends SparkTestBase {
     val seen   = new java.util.concurrent.CopyOnWriteArrayList[Int]()
     val handle = Subscriptions.periodic(engine, "db", "ns",
       "select count(*) from events group by kind", intervalMs = 200L,
-      rows => seen.add(rows.length))
+      (a: GraftEngine.Answer) => seen.add(a.rows.length))
     try {
       val deadline = System.currentTimeMillis() + 10000
       while (seen.size() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)
@@ -109,7 +109,7 @@ class StreamingSpec extends SparkTestBase {
     System.setErr(new java.io.PrintStream(errBuf, true))
     val handle = Subscriptions.periodic(engine, "db", "ns",
       "select count(*) from events group by kind", intervalMs = 200L,
-      _ => if (calls.incrementAndGet() == 1) throw new IllegalStateException("subscriber down"))
+      (_: GraftEngine.Answer) => if (calls.incrementAndGet() == 1) throw new IllegalStateException("subscriber down"))
     try {
       val deadline = System.currentTimeMillis() + 10000
       while (calls.get() < 2 && System.currentTimeMillis() < deadline) Thread.sleep(50)

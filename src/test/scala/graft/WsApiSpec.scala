@@ -107,6 +107,42 @@ class WsApiSpec extends SparkTestBase {
     } finally { ws.stop(); api.stop() }
   }
 
+  it should "cap periodic pushes at maxResultRows and render them like /query" in {
+    val root   = Files.createTempDirectory("graft_ws_agg_cap_").toString
+    val hub    = new SubscriptionHub
+    val engine = new GraftEngine(spark, Some(warehouse(root)))
+    val api    = new HttpApi(engine, hub = hub, maxResultRows = 1)
+    val ws     = new WsApi(engine, hub, maxResultRows = 1)
+    val httpPort = api.start()
+    val wsPort   = ws.start()
+    try {
+      Seq("a" -> 5.0, "b" -> 7.0).zipWithIndex.foreach { case ((k, v), i) =>
+        post(httpPort, "/data",
+          s"""{"db":"db","namespace":"ns","metric":"m","bit":{"timestamp":${1000 + i},"value":$v,"tags":{"k":"$k"}}}""")._1 shouldBe 200
+      }
+      val sql = "select sum(value) from m group by k"
+      val received = new LinkedBlockingQueue[String]()
+      val sock = connect(wsPort, received)
+      sock.sendText(s"""{"db":"db","namespace":"ns","queryString":"$sql","refreshMs":500}""", true)
+      received.poll(20, TimeUnit.SECONDS) should include(""""subscribed"""")
+      val first = received.poll(30, TimeUnit.SECONDS)
+      first should startWith("""{"records":[""")
+      val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+      val push   = mapper.readTree(first)
+      push.get("records").size() shouldBe 1
+      push.get("truncated").asBoolean() shouldBe true
+      // the same rendering as /query: same fields, in column order
+      val (st, body) = post(httpPort, "/query", s"""{"db":"db","namespace":"ns","queryString":"$sql"}""")
+      st shouldBe 200
+      def names(n: com.fasterxml.jackson.databind.JsonNode): List[String] = {
+        import scala.jdk.CollectionConverters._
+        n.get("records").get(0).fieldNames().asScala.toList
+      }
+      names(push) shouldBe names(mapper.readTree(body))
+      sock.abort()
+    } finally { ws.stop(); api.stop() }
+  }
+
   it should "enforce the authorization provider on register, with the token as a subprotocol" in {
     val root   = Files.createTempDirectory("graft_ws_auth_").toString
     val hub    = new SubscriptionHub
