@@ -1,11 +1,7 @@
 package graft
 
-import java.lang.management.ManagementFactory
-
-import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
-import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
 
 import graft.pipeline.Checkpoints
@@ -83,16 +79,8 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
 
     // ---- JVM health probes (diagnosis for the late-session cliff) ----
-    val codeCachePools = ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getName.contains("CodeHeap")) // segmented cache: profiled nmethods etc.
-    def codeCacheUsedMb: Long = codeCachePools.map(_.getUsage.getUsed).sum >> 20
-    def gcMillis: Long =
-      ManagementFactory.getGarbageCollectorMXBeans.asScala.map(_.getCollectionTime).sum
-    def metaspaceUsedMb: Long = ManagementFactory.getMemoryPoolMXBeans.asScala
-      .filter(_.getName == "Metaspace").map(_.getUsage.getUsed).sum >> 20
+    import JvmProbes._
     def persistedRdds: Int = spark.sparkContext.getPersistentRDDs.size
-    // generated classes compiled so far (JVM-wide; a codegen cache hit adds none)
-    def codegenCompiles: Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 
     // floor = min over passes: absorbs one-off JIT/IO/scheduler noise
     // (observed ±2-4x swings on shared hardware — a single noisy window
@@ -304,7 +292,7 @@ object Bench {
         QRow(names(i), times(i).min, times(i).max, times(i).head, times(i).length)
       }
     def oneRun(i: Int): Unit = {
-      val gc0 = gcMillis
+      val gc0 = gcMs
       val cg0 = codegenCompiles
       val run = timed {
         val s = sessionFor(names(i))
@@ -325,7 +313,7 @@ object Bench {
       System.err.println(
         f"[bench] ${names(i)}%-16s ${run.seconds}%8.3f s  floor=$floor%8s  rows=${run.rows}%-8d " +
           f"pass=${times(i).length + runs(i).failed.length}  " +
-          f"cc=${codeCacheUsedMb}%3dMB meta=${metaspaceUsedMb}%3dMB gc+=${gcMillis - gc0}%4dms cg+=${codegenCompiles - cg0}%3d rdds=$persistedRdds%3d " +
+          f"cc=${codeCacheMb}%3dMB meta=${metaspaceMb}%3dMB gc+=${gcMs - gc0}%4dms cg+=${codegenCompiles - cg0}%3d rdds=$persistedRdds%3d " +
           f"t=${elapsedS}%5.0fs")
       writeSelf(snapshot(), done = false)
     }

@@ -1909,7 +1909,9 @@ object SparkEntry {
     // REAL container-header decode: minimal PNG/JPEG fixtures wrap the
     // text bytes (see syntheticContainers), then width/height/channels
     // parse from the actual header bytes — fixed-offset IHDR reads and a
-    // bounded SOF marker walk, no codec library, no UDF
+    // bounded SOF marker walk, no codec library. This and every mm_* decode
+    // gate below is one ContainerKernels call per row (a compiled byte walk
+    // answering the operator's columns as one struct)
     "mm_dims" -> ((s, d) =>
       Multimodal.containerMeta(mediaFrames(s, d, "png"))
         .orderBy("doc_id")),
@@ -1934,9 +1936,9 @@ object SparkEntry {
       Multimodal.tiffMeta(mediaFrames(s, d, "tiff"))
         .orderBy("doc_id")),
     // the pointer chase GENERALIZED past one table: IFD0's tag-34665 LONG
-    // points at a second (Exif) IFD, walked with the same named-read
-    // steps for ISO and the ExposureTime RATIONAL (itself a third pointer
-    // to the num/den pair) — two chained hops, both byte orders
+    // points at a second (Exif) IFD, scanned the same way for ISO and the
+    // ExposureTime RATIONAL (itself a third pointer to the num/den pair) —
+    // two chained hops, both byte orders
     "mm_exif2" -> ((s, d) =>
       Multimodal.tiffExifMeta(mediaFrames(s, d, "exif2"))
         .orderBy("doc_id")),

@@ -19,25 +19,13 @@ object Verify {
     // driver runs it
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
     def keep(name: String) = only.forall(_.contains(name))
-    // same per-query JVM health probes as Bench (code cache, GC delta,
-    // generated-class compiles, live persisted RDDs): a 100+-plan
-    // single-JVM sweep is exactly the session shape that once collapsed
-    // late queries 20-50x — if it ever recurs here, the verify log
-    // attributes it without a rerun
-    val ccPools = java.lang.management.ManagementFactory.getMemoryPoolMXBeans
-    def ccUsedMb: Long = {
-      var s = 0L; ccPools.forEach(p => if (p.getName.contains("CodeHeap")) s += p.getUsage.getUsed); s >> 20
-    }
-    def gcMs: Long = {
-      var s = 0L
-      java.lang.management.ManagementFactory.getGarbageCollectorMXBeans.forEach(g => s += g.getCollectionTime)
-      s
-    }
-    def cgCount: Long = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    // the per-query JVM health probes Bench prints too, plus the live
+    // persisted RDDs
+    import JvmProbes._
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       val t0  = System.nanoTime()
       val gc0 = gcMs
-      val cg0 = cgCount
+      val cg0 = codegenCompiles
       try {
         val df = fn(spark, sfDir)
         df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
@@ -46,7 +34,7 @@ object Verify {
         // into the late-session degradation either
         graft.pipeline.Checkpoints.free(df)
         System.err.println(f"[verify] $name%-16s ${(System.nanoTime() - t0) / 1e9}%7.2f s  " +
-          f"cc=${ccUsedMb}%3dMB gc+=${gcMs - gc0}%4dms cg+=${cgCount - cg0}%3d rdds=${spark.sparkContext.getPersistentRDDs.size}%3d")
+          f"cc=${codeCacheMb}%3dMB gc+=${gcMs - gc0}%4dms cg+=${codegenCompiles - cg0}%3d rdds=${spark.sparkContext.getPersistentRDDs.size}%3d")
       }
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")

@@ -101,6 +101,12 @@ object GraftFunctions {
     Seq(lhs, rhs, lhs.zip(rhs).map { case (x, y) => UTF8String.concat(x, y) }).map(ref)
   }
 
+  /** A container decoder: the payload, then its constant caps, then the
+    * fixed `probes`; a NULL payload answers `format = 'raw'`, not NULL. */
+  private def decoder(name: String, method: String, dataType: StructType, probes: Int*): Entry =
+    scalar(name, ContainerKernels, method, dataType, Seq(Bytes), propagateNull = false)(
+      (_, k) => ints(k) ++ probes.map(Literal(_)))
+
   val registry: Seq[Entry] = Seq(
     scalar("graft_dot", ArrayKernels, "dot", DoubleType, Seq(Vector, Vector))((c, _) => c.map(isFloat)),
     scalar("graft_fold_sum", ArrayKernels, "foldSum", DoubleType, Seq(Doubles))(),
@@ -177,6 +183,15 @@ object GraftFunctions {
       returnNullable = true)((c, _) => Seq(isFloat(c(0)))),
     scalar("graft_char_bigrams", SnapKernels, "charBigrams", ArrayType(StringType, containsNull = false),
       Seq(Text), returnNullable = true)(),
+    decoder("graft_container_meta", "containerMeta", ContainerKernels.ContainerMetaType),
+    decoder("graft_av_container_meta", "avContainerMeta", ContainerKernels.AvMetaType),
+    decoder("graft_gif_frames", "gifFrameCount", ContainerKernels.GifFramesType),
+    decoder("graft_tiff_meta", "tiffMeta", ContainerKernels.TiffMetaType),
+    decoder("graft_tiff_exif_meta", "tiffExifMeta", ContainerKernels.TiffExifType),
+    decoder("graft_png_chunks", "pngChunkWalk", ContainerKernels.PngChunksType, ContainerKernels.NameProbe),
+    decoder("graft_zip_directory", "zipCentralDirectory", ContainerKernels.ZipDirType,
+      ContainerKernels.NameProbe, ContainerKernels.EocdScan),
+    decoder("graft_tar_headers", "tarHeaderWalk", ContainerKernels.TarHeadersType, ContainerKernels.NameProbe),
     // the aggregates keep their own expressions
     ("graft_collect_capped", (e: Seq[Expression]) => CappedCollectSorted(e.head, int(e(1))),
       new ExpressionInfo(classOf[CappedCollectSorted].getName, "graft_collect_capped")),

@@ -142,9 +142,10 @@ class HttpApi(
               // optional from/to enrichment, reference QueryEnriched semantics
               val enriched =
                 if (req.has("from") && req.has("to"))
-                  sel.enrichWithTimeRange("timestamp", req.get("from").asLong(), req.get("to").asLong())
-                else sel
-              engine.answer(enriched, maxResultRows, GraftEngine.json) match {
+                  for (f <- HttpApi.epoch(req, "from"); t <- HttpApi.epoch(req, "to"))
+                    yield sel.enrichWithTimeRange("timestamp", f, t)
+                else Right(sel)
+              enriched.flatMap(engine.answer(_, maxResultRows, GraftEngine.json)) match {
                 // rendered before any header goes out: a failing job still
                 // answers a clean 500
                 case Right(a)  => respond(ex, 200, HttpApi.json(a, "records"))
@@ -181,13 +182,19 @@ class HttpApi(
     // (reference DataApi rejects a bit without a numeric value)
     if (!bit.path("value").isNumber)
       return (400, """{"error":"bit.value must be a number"}""")
+    val timestamp =
+      if (!bit.has("timestamp")) None
+      else HttpApi.epoch(bit, "timestamp") match {
+        case Right(t)  => Some(t)
+        case Left(err) => return (400, s"""{"error":${mapper.writeValueAsString(err)}}""")
+      }
     val value: Any =
       if (bit.path("value").isIntegralNumber) bit.path("value").asLong() else bit.path("value").asDouble()
     val stmt = Ast.InsertStatement(
       req.path("db").asText("default"),
       req.path("namespace").asText("default"),
       req.path("metric").asText(""),
-      if (bit.has("timestamp")) Some(bit.get("timestamp").asLong()) else None,
+      timestamp,
       fields(bit.path("dimensions")),
       fields(bit.path("tags")),
       value
@@ -454,6 +461,14 @@ class HttpApi(
 }
 
 object HttpApi {
+
+  /** `node.field` as epoch milliseconds: an integral JSON number within
+    * `Long`, else an error. (Jackson's `asLong()` reads `"abc"` as 0,
+    * `true` as 1 and `1.9` as 1.) */
+  private[http] def epoch(node: JsonNode, field: String): Either[String, Long] = {
+    val v = node.get(field)
+    if (v.isIntegralNumber && v.canConvertToLong) Right(v.asLong()) else Left(s"$field must be an integral number")
+  }
 
   /** `{"<key>":[r1,r2,…],"truncated":…}` for an answer taken through the
     * [[GraftEngine.json]] view — the one JSON rendering of every answer. */

@@ -67,9 +67,9 @@ object Multimodal {
 
   /**
    * CONTAINER-HEADER metadata decode over the raw payload bytes — REAL
-   * parsing for the two fixed-layout image containers, no codec library,
-   * no UDF (`substring(binary) → hex → conv`, all codegen'd builtins —
-   * the [[audioEnergyWindows]] discipline applied to headers):
+   * parsing for the two fixed-layout image containers, no codec library:
+   * one compiled pass of [[graft.functions.ContainerKernels.containerMeta]]
+   * per payload (every container decode below has its kernel there):
    *
    *  - PNG: 8-byte signature `89 50 4E 47 0D 0A 1A 0A`, then the IHDR
    *    chunk at FIXED offsets — width is the big-endian uint32 at byte 17
@@ -80,8 +80,8 @@ object Multimodal {
    *    the first SOF0–SOF3 frame header: precision at +4, height BE16 at
    *    +5, width at +7, component count at +9. Real headers put SOF
    *    within the first handful of segments (APP0/APPn/DQT/DHT), so the
-   *    walk unrolls `maxSegments` plan-side steps — a desynced or
-   *    SOF-less stream falls through to the stub.
+   *    walk takes at most `maxSegments` steps — a desynced or SOF-less
+   *    stream falls through to the stub.
    *
    * Unknown containers (and failed walks) fall back to the deterministic
    * size-derived STUB arithmetic, loudly tagged `format = 'raw'`.
@@ -93,49 +93,17 @@ object Multimodal {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(maxSegments >= 1, "maxSegments must be >= 1")
-    // byte/word reads: 1-indexed byte offset → big-endian unsigned value
-    def be(pos: Column, len: Int): Column =
-      conv(hex(col("__pl").substr(pos.cast("int"), lit(len))), 16, 10).cast("long")
-    // JPEG marker walk: one NAMED projection per step (the Hilbert-walk
-    // discipline — composing raw Columns inlines each step's tree into the
-    // next and the plan grows exponentially; named step columns are
-    // non-cheap, so CollapseProject keeps the chain linear)
-    var cur = media.select(col(idCol), col(payloadCol).as("__pl"),
-      octet_length(col(payloadCol)).cast("long").as("__nb"),
-      lit(3L).as("__pos"), lit(-1L).as("__h"), lit(-1L).as("__w"), lit(-1L).as("__c"))
-    for (_ <- 1 to maxSegments) {
-      val pos   = col("__pos")
-      val live  = col("__h") < 0L && pos >= 3L && pos + 9L <= col("__nb") && be(pos, 1) === 255L
-      val mkr   = be(pos + 1L, 1)
-      val isSof = live && mkr >= 192L && mkr <= 195L
-      cur = cur.select(col(idCol), col("__pl"), col("__nb"),
-        when(col("__h") >= 0L, pos)
-          .when(isSof, pos)
-          .when(live, pos + 2L + be(pos + 2L, 2))
-          .otherwise(lit(-1L)).as("__pos"),
-        when(isSof, be(pos + 5L, 2)).otherwise(col("__h")).as("__h"),
-        when(isSof, be(pos + 7L, 2)).otherwise(col("__w")).as("__w"),
-        when(isSof, be(pos + 9L, 1)).otherwise(col("__c")).as("__c"))
-    }
-    val nb = col("__nb")
-    val isPng = nb >= 33L &&
-      hex(col("__pl").substr(lit(1), lit(8))) === "89504E470D0A1A0A" &&
-      hex(col("__pl").substr(lit(13), lit(4))) === "49484452" // "IHDR"
-    val jpegOk = nb >= 4L && hex(col("__pl").substr(lit(1), lit(2))) === "FFD8" &&
-      !isPng && col("__h") >= 0L
-    val pngCh = be(lit(26L), 1) // color type → channel count
-    val pngChannels =
-      when(pngCh === 0L, 1L).when(pngCh === 2L, 3L).when(pngCh === 3L, 1L)
-        .when(pngCh === 4L, 2L).when(pngCh === 6L, 4L).otherwise(lit(3L))
-    val stubW = (lit(64L) + pmod(nb, lit(193L)))
-    val stubH = (lit(64L) + pmod(nb * 31L, lit(177L)))
-    cur.select(
-      col(idCol),
-      when(isPng, "png").when(jpegOk, "jpeg").otherwise("raw").as("format"),
-      nb.as("n_bytes"),
-      when(isPng, be(lit(17L), 4)).when(jpegOk, col("__w")).otherwise(stubW).as("width"),
-      when(isPng, be(lit(21L), 4)).when(jpegOk, col("__h")).otherwise(stubH).as("height"),
-      when(isPng, pngChannels).when(jpegOk, col("__c")).otherwise(lit(3L)).as("channels"))
+    decode(media, "graft_container_meta", payloadCol, idCol, maxSegments)
+  }
+
+  /** `select(id, <kernel>(payload, caps…).*)`: one compiled call of a
+    * [[graft.functions.ContainerKernels]] decoder per row, its struct
+    * expanded to the operator's output columns. */
+  private def decode(media: DataFrame, fn: String, payloadCol: String, idCol: String,
+      caps: Int*): DataFrame = {
+    graft.functions.GraftFunctions.register(media.sparkSession)
+    media.select(col(idCol), call_function(fn, col(payloadCol) +: caps.map(c => lit(c)): _*).as("__k"))
+      .select(col(idCol), col("__k.*"))
   }
 
   /**
@@ -214,9 +182,7 @@ object Multimodal {
   /**
    * A/V CONTAINER-HEADER metadata decode — the LITTLE-ENDIAN counterpart
    * of [[containerMeta]]: real fixed-layout header parsing for the three
-   * classic LE containers, no codec library, no UDF (every read is the
-   * codegen'd `substring(binary) → hex → conv` byte extract; an LE word is
-   * the positional sum of its bytes, never a string reverse):
+   * classic LE containers, no codec library:
    *
    *  - WAV (canonical RIFF): `RIFF` at 1, `WAVE` at 9, `fmt ` at 13,
    *    `data` at 37 — channels LE16 at 23, sample rate LE32 at 25, block
@@ -233,54 +199,15 @@ object Multimodal {
    *    aligned depths, 1 for palette depths below 8.
    *
    * Unknown containers report `format = 'raw'` with every decoded field
-   * at −1 (n_bytes stays real). Row-local single projection: no shuffle,
-   * no explode; payload bytes never leave the scan projection — at 100 TB
-   * this is a map-only metadata sweep.
+   * at −1 (n_bytes stays real). Row-local: no shuffle, no explode;
+   * payload bytes never leave the scan projection — at 100 TB this is a
+   * map-only metadata sweep.
    */
   def avContainerMeta(
       media: DataFrame,
       payloadCol: String = "payload",
       idCol: String = "doc_id"
-  ): DataFrame = {
-    val pl = col(payloadCol)
-    val nb = octet_length(pl).cast("long")
-    // byte at 1-indexed pos → unsigned value; LE word = positional byte sum
-    def b1(pos: Int): Column =
-      conv(hex(pl.substr(lit(pos), lit(1))), 16, 10).cast("long")
-    def le(pos: Int, n: Int): Column =
-      (0 until n).map(i => b1(pos + i) * lit(1L << (8 * i))).reduce(_ + _)
-    // signed LE32: two's complement fold-down
-    def leS32(pos: Int): Column = {
-      val u = le(pos, 4)
-      when(u >= lit(1L << 31), u - lit(1L << 32)).otherwise(u)
-    }
-    def magic(pos: Int, hexStr: String): Column =
-      hex(pl.substr(lit(pos), lit(hexStr.length / 2))) === hexStr
-    val isWav = nb >= 44L && magic(1, "52494646") && magic(9, "57415645") &&
-      magic(13, "666D7420") && magic(37, "64617461")
-    val isGif = nb >= 13L &&
-      (magic(1, "474946383961") || magic(1, "474946383761"))
-    val isBmp = nb >= 30L && magic(1, "424D")
-    val blockAlign = le(33, 2)
-    val dataSize   = le(41, 4)
-    val bmpBpp     = le(29, 2)
-    val neg1       = lit(-1L)
-    media.select(
-      col(idCol),
-      when(isWav, "wav").when(isGif, "gif").when(isBmp, "bmp")
-        .otherwise("raw").as("format"),
-      nb.as("n_bytes"),
-      when(isGif, le(7, 2)).when(isBmp, abs(leS32(19))).otherwise(neg1).as("width"),
-      when(isGif, le(9, 2)).when(isBmp, abs(leS32(23))).otherwise(neg1).as("height"),
-      when(isWav, le(25, 4)).otherwise(neg1).as("sample_rate"),
-      when(isWav, le(23, 2)).when(isGif, lit(3L))
-        .when(isBmp, when(bmpBpp >= 8L, (bmpBpp / 8L).cast("long")).otherwise(lit(1L)))
-        .otherwise(neg1).as("channels"),
-      when(isWav, le(35, 2)).when(isGif, pmod(b1(11), lit(8L)) + 1L)
-        .when(isBmp, bmpBpp).otherwise(neg1).as("bits"),
-      when(isWav && blockAlign > 0L, (dataSize / blockAlign).cast("long"))
-        .otherwise(neg1).as("n_samples"))
-  }
+  ): DataFrame = decode(media, "graft_av_container_meta", payloadCol, idCol)
 
   /**
    * FIXTURE WRAPPER for [[avContainerMeta]] (gate/spec harness aid): wrap
@@ -338,8 +265,8 @@ object Multimodal {
    * GIF FRAME COUNT via a BOUNDED BLOCK WALK over the payload bytes —
    * the animation-vs-still readout (a video-curation pipeline prices a
    * 200-frame GIF very differently from a logo), REAL parsing with no
-   * codec library and no UDF (the [[containerMeta]] JPEG-marker-walk
-   * discipline applied to GIF's block grammar):
+   * codec library (the [[containerMeta]] JPEG-marker walk applied to
+   * GIF's block grammar):
    *
    *  - header `GIF87a`/`GIF89a`, logical screen descriptor, then the
    *    GLOBAL COLOR TABLE skip (3·2^(N+1) bytes when the packed byte's
@@ -350,16 +277,15 @@ object Multimodal {
    *    data sub-block chain) — each image descriptor is ONE FRAME —
    *    and `0x3B` trailer ends the file.
    *
-   * The walk unrolls `maxBlocks` plan-side steps (one NAMED projection
-   * per step — the [[containerMeta]] linear-plan discipline); each step
-   * consumes one block header or one sub-block. A GIF whose walk does
+   * The walk takes at most `maxBlocks` steps; each step consumes one
+   * block header or one sub-block. A GIF whose walk does
    * not reach the trailer within the budget (real-world frames carry
    * many KB-sized sub-blocks) reports `n_frames = -1` — honest "not
    * decoded", never a guess; raising `maxBlocks` buys depth linearly.
    * Non-GIF payloads report `format = 'raw'`, `n_frames = -1`.
    *
-   * Scale shape: row-local projection chain — payload bytes never
-   * shuffle; only (id, format, n_bytes, n_frames) survive.
+   * Scale shape: row-local — payload bytes never shuffle; only (id,
+   * format, n_bytes, n_frames) survive.
    */
   def gifFrameCount(
       media: DataFrame,
@@ -368,59 +294,7 @@ object Multimodal {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(maxBlocks >= 1 && maxBlocks <= 96, "maxBlocks must be in [1, 96]")
-    def be(pos: Column, len: Int): Column =
-      conv(hex(col("__pl").substr(pos.cast("int"), lit(len))), 16, 10).cast("long")
-    val nb0 = octet_length(col(payloadCol)).cast("long")
-    val isGif0 = nb0 >= 14L &&
-      (hex(col(payloadCol).substr(lit(1), lit(6))) === "474946383961" ||
-        hex(col(payloadCol).substr(lit(1), lit(6))) === "474946383761")
-    var cur = media.select(col(idCol), col(payloadCol).as("__pl"), nb0.as("__nb"),
-      isGif0.as("__gif"), lit(0L).as("__fr"), lit(0L).as("__mode"),
-      lit(false).as("__done"), lit(true).as("__ok"))
-    // skip the screen descriptor + optional global color table in one
-    // named step (3·2^(N+1) bytes; N ∈ 0..7 → a flat when-chain keeps the
-    // arithmetic integer and codegen'd)
-    val packed0 = be(lit(11L), 1)
-    def pow2(n: Column): Column =
-      when(n === 0L, 2L).when(n === 1L, 4L).when(n === 2L, 8L).when(n === 3L, 16L)
-        .when(n === 4L, 32L).when(n === 5L, 64L).when(n === 6L, 128L).otherwise(lit(256L))
-    val gctLen = when(packed0 >= 128L, lit(3L) * pow2(pmod(packed0, lit(8L)))).otherwise(lit(0L))
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__gif"),
-      when(col("__gif"), lit(14L) + gctLen).otherwise(lit(-1L)).as("__pos"),
-      col("__fr"), col("__mode"), col("__done"), col("__ok"))
-    for (_ <- 1 to maxBlocks) {
-      val pos  = col("__pos")
-      val live = col("__gif") && !col("__done") && pos >= 14L && pos <= col("__nb")
-      val b    = be(pos, 1)
-      val m0   = col("__mode") === 0L
-      val isTrailer = live && m0 && b === 59L  // 0x3B
-      val isImg     = live && m0 && b === 44L  // 0x2C
-      val isExt     = live && m0 && b === 33L  // 0x21
-      val badBlock  = live && m0 && !(b === 59L || b === 44L || b === 33L)
-      val imgPacked = be(pos + 9L, 1)
-      val lctLen = when(imgPacked >= 128L, lit(3L) * pow2(pmod(imgPacked, lit(8L))))
-        .otherwise(lit(0L))
-      val subLen = b
-      cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__gif"),
-        when(isImg, pos + 10L + lctLen + 1L)
-          .when(isExt, pos + 2L)
-          .when(live && !m0 && subLen === 0L, pos + 1L)
-          .when(live && !m0, pos + 1L + subLen)
-          .otherwise(pos).as("__pos"),
-        when(isImg, col("__fr") + 1L).otherwise(col("__fr")).as("__fr"),
-        when(isImg || isExt, lit(1L))
-          .when(live && !m0 && subLen === 0L, lit(0L))
-          .otherwise(col("__mode")).as("__mode"),
-        (col("__done") || isTrailer ||
-          coalesce(badBlock, lit(false))).as("__done"),
-        (col("__ok") && !coalesce(badBlock, lit(false))).as("__ok"))
-    }
-    cur.select(
-      col(idCol),
-      when(col("__gif"), "gif").otherwise("raw").as("format"),
-      col("__nb").as("n_bytes"),
-      when(col("__gif") && col("__done") && col("__ok"), col("__fr"))
-        .otherwise(lit(-1L)).as("n_frames"))
+    decode(media, "graft_gif_frames", payloadCol, idCol, maxBlocks)
   }
 
   /**
@@ -469,8 +343,7 @@ object Multimodal {
    * TIFF/EXIF IFD metadata decode — REAL parsing of the third container
    * family, and the first BYTE-ORDER-BRANCHING one: TIFF declares its own
    * endianness (`II` little, `MM` big) and every subsequent word honors
-   * it, which is exactly the bug farm a codec library hides. No library,
-   * no UDF — the [[containerMeta]] substring→hex→conv discipline:
+   * it, which is exactly the bug farm a codec library hides. No library:
    *
    *  - header: `II 2A00` / `MM 002A`, then the uint32 offset of IFD0;
    *  - IFD0: a uint16 entry count, then FIXED-SIZE 12-byte entries
@@ -485,11 +358,11 @@ object Multimodal {
    *    257 ImageLength, 258 BitsPerSample, 282 XResolution (rational →
    *    `xres_num`/`xres_den`).
    *
-   * The scan unrolls `maxEntries` plan-side reads gated by the declared
+   * The scan reads at most `maxEntries` entries, gated by the declared
    * entry count; a tag living beyond the budget is simply not found (its
    * field stays −1 — honest, never a guess), and `n_entries` always
    * reports the declared count. Non-TIFF payloads report `format='raw'`.
-   * Scale shape: row-local projection chain, payload bytes never shuffle.
+   * Scale shape: row-local, payload bytes never shuffle.
    */
   def tiffMeta(
       media: DataFrame,
@@ -498,70 +371,7 @@ object Multimodal {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(maxEntries >= 1 && maxEntries <= 64, "maxEntries must be in [1, 64]")
-    def b1(pos: Column): Column =
-      conv(hex(col("__pl").substr(pos.cast("int"), lit(1))), 16, 10).cast("long")
-    def u16(pos: Column): Column =
-      when(col("__le"), b1(pos) + b1(pos + 1L) * 256L)
-        .otherwise(b1(pos) * 256L + b1(pos + 1L))
-    def u32(pos: Column): Column =
-      when(col("__le"),
-        b1(pos) + b1(pos + 1L) * 256L + b1(pos + 2L) * 65536L + b1(pos + 3L) * 16777216L)
-        .otherwise(
-          b1(pos) * 16777216L + b1(pos + 2L) * 256L + b1(pos + 1L) * 65536L + b1(pos + 3L))
-    val nb = octet_length(col(payloadCol)).cast("long")
-    val hdr = hex(col(payloadCol).substr(lit(1), lit(4)))
-    val isLe = hdr === "49492A00"
-    val isBe = hdr === "4D4D002A"
-    var cur = media.select(col(idCol), col(payloadCol).as("__pl"), nb.as("__nb"),
-      (isLe || isBe).as("__tiff"), isLe.as("__le"))
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__tiff"), col("__le"),
-      when(col("__tiff"), u32(lit(5L)) + 1L).otherwise(lit(-1L)).as("__ifd"))
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__tiff"), col("__le"),
-      col("__ifd"),
-      when(col("__tiff") && col("__ifd") >= 1L && col("__ifd") + 1L <= col("__nb"),
-        u16(col("__ifd"))).otherwise(lit(-1L)).as("__cnt"),
-      lit(-1L).as("__w"), lit(-1L).as("__h"), lit(-1L).as("__bits"),
-      lit(-1L).as("__xn"), lit(-1L).as("__xd"))
-    val state = Seq("__pl", "__nb", "__tiff", "__le", "__ifd", "__cnt",
-      "__w", "__h", "__bits", "__xn", "__xd").map(col)
-    for (i <- 0 until maxEntries) {
-      val base = col("__ifd") + 2L + lit(12L * i)
-      val live = col("__tiff") && lit(i.toLong) < col("__cnt") &&
-        base + 11L <= col("__nb")
-      // step A: NAME the per-entry reads once — inlining them into every
-      // state branch duplicated the byte-read trees ~6x per step and the
-      // unrolled plan's analysis cost exploded (47 s cold at sf0.1)
-      val typA = u16(base + 2L)
-      val valA = when(typA === 3L, u16(base + 8L)).when(typA === 4L, u32(base + 8L))
-        .otherwise(lit(-1L))
-      cur = cur.select(col(idCol) +: state :+
-        u16(base).as("__tag") :+ typA.as("__typ") :+ valA.as("__val") :+
-        live.as("__live") :+ (u32(base + 8L) + 1L).as("__ptr"): _*)
-      // step B: fold into the tag state off the named columns
-      val tag = col("__tag")
-      val typ = col("__typ")
-      val lv  = col("__live")
-      val v   = col("__val")
-      // RATIONAL pointer-chase: the value field is a 0-based byte offset
-      // to an 8-byte num/den pair; both words honor the byte order
-      val ptr   = col("__ptr")
-      val ratOk = typ === 5L && ptr >= 1L && ptr + 7L <= col("__nb")
-      cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__tiff"), col("__le"),
-        col("__ifd"), col("__cnt"),
-        when(lv && tag === 256L, v).otherwise(col("__w")).as("__w"),
-        when(lv && tag === 257L, v).otherwise(col("__h")).as("__h"),
-        when(lv && tag === 258L, v).otherwise(col("__bits")).as("__bits"),
-        when(lv && tag === 282L && ratOk, u32(ptr)).otherwise(col("__xn")).as("__xn"),
-        when(lv && tag === 282L && ratOk, u32(ptr + 4L)).otherwise(col("__xd")).as("__xd"))
-    }
-    cur.select(
-      col(idCol),
-      when(col("__tiff") && col("__le"), "tiff_le")
-        .when(col("__tiff"), "tiff_be").otherwise("raw").as("format"),
-      col("__nb").as("n_bytes"),
-      when(col("__tiff"), col("__cnt")).otherwise(lit(-1L)).as("n_entries"),
-      col("__w").as("width"), col("__h").as("height"), col("__bits").as("bits"),
-      col("__xn").as("xres_num"), col("__xd").as("xres_den"))
+    decode(media, "graft_tiff_meta", payloadCol, idCol, maxEntries)
   }
 
   /**
@@ -615,12 +425,11 @@ object Multimodal {
    * TIFF + EXIF SUB-IFD decode — [[tiffMeta]]'s pointer-chase walk
    * GENERALIZED past one table: IFD0 yields width/height plus the
    * ExifIFDPointer (tag 34665, a LONG 0-based byte offset to a SECOND
-   * IFD), and that sub-IFD is walked with the same named-read step
-   * discipline for ISOSpeedRatings (tag 34855) and ExposureTime (tag
+   * IFD), and that sub-IFD is scanned the same way (at most
+   * `maxExifEntries` entries) for ISOSpeedRatings (tag 34855) and ExposureTime (tag
    * 33434) — a RATIONAL whose value field is itself a third pointer to
    * an 8-byte num/den pair. Two chained pointer hops (IFD0 → Exif IFD →
-   * rational payload), both byte orders, all as codegen'd
-   * substring→hex→conv columns; no codec library, no UDF. Non-TIFF
+   * rational payload), both byte orders; no codec library. Non-TIFF
    * payloads pass through as format='raw' with -1 fields; a 34665 value
    * pointing outside the payload yields n_exif = -1 (never a mis-read).
    * Layout per the public TIFF 6.0 / EXIF 2.x specifications.
@@ -634,89 +443,7 @@ object Multimodal {
   ): DataFrame = {
     require(maxEntries >= 1 && maxEntries <= 64, "maxEntries must be in [1, 64]")
     require(maxExifEntries >= 1 && maxExifEntries <= 64, "maxExifEntries must be in [1, 64]")
-    def b1(pos: Column): Column =
-      conv(hex(col("__pl").substr(pos.cast("int"), lit(1))), 16, 10).cast("long")
-    def u16(pos: Column): Column =
-      when(col("__le"), b1(pos) + b1(pos + 1L) * 256L)
-        .otherwise(b1(pos) * 256L + b1(pos + 1L))
-    def u32(pos: Column): Column =
-      when(col("__le"),
-        b1(pos) + b1(pos + 1L) * 256L + b1(pos + 2L) * 65536L + b1(pos + 3L) * 16777216L)
-        .otherwise(
-          b1(pos) * 16777216L + b1(pos + 2L) * 256L + b1(pos + 1L) * 65536L + b1(pos + 3L))
-    val nb  = octet_length(col(payloadCol)).cast("long")
-    val hdr = hex(col(payloadCol).substr(lit(1), lit(4)))
-    val isLe = hdr === "49492A00"
-    val isBe = hdr === "4D4D002A"
-    var cur = media.select(col(idCol), col(payloadCol).as("__pl"), nb.as("__nb"),
-      (isLe || isBe).as("__tiff"), isLe.as("__le"))
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__tiff"), col("__le"),
-      when(col("__tiff"), u32(lit(5L)) + 1L).otherwise(lit(-1L)).as("__ifd"))
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__tiff"), col("__le"),
-      col("__ifd"),
-      when(col("__tiff") && col("__ifd") >= 1L && col("__ifd") + 1L <= col("__nb"),
-        u16(col("__ifd"))).otherwise(lit(-1L)).as("__cnt"),
-      lit(-1L).as("__w"), lit(-1L).as("__h"), lit(-1L).as("__xifd"))
-    val st0 = Seq("__pl", "__nb", "__tiff", "__le", "__ifd", "__cnt",
-      "__w", "__h", "__xifd").map(col)
-    for (i <- 0 until maxEntries) {
-      val base = col("__ifd") + 2L + lit(12L * i)
-      val live = col("__tiff") && lit(i.toLong) < col("__cnt") &&
-        base + 11L <= col("__nb")
-      // named per-entry reads (the tiffMeta plan-cost fix: inlining them
-      // into every fold branch duplicated the byte-read trees ~6x/step)
-      val typA = u16(base + 2L)
-      val valA = when(typA === 3L, u16(base + 8L)).when(typA === 4L, u32(base + 8L))
-        .otherwise(lit(-1L))
-      cur = cur.select(col(idCol) +: st0 :+
-        u16(base).as("__tag") :+ typA.as("__typ") :+ valA.as("__val") :+
-        live.as("__live"): _*)
-      val tag = col("__tag"); val typ = col("__typ")
-      val lv  = col("__live"); val v = col("__val")
-      cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__tiff"), col("__le"),
-        col("__ifd"), col("__cnt"),
-        when(lv && tag === 256L, v).otherwise(col("__w")).as("__w"),
-        when(lv && tag === 257L, v).otherwise(col("__h")).as("__h"),
-        // the SUB-IFD hop: tag 34665's LONG value is the 0-based offset
-        // of the Exif IFD; store it 1-based for the substr reads below
-        when(lv && tag === 34665L && typ === 4L, v + 1L).otherwise(col("__xifd")).as("__xifd"))
-    }
-    // second table: entry count at the pointed-to offset, bounds-guarded
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__tiff"), col("__le"),
-      col("__cnt"), col("__w"), col("__h"), col("__xifd"),
-      when(col("__tiff") && col("__xifd") >= 1L && col("__xifd") + 1L <= col("__nb"),
-        u16(col("__xifd"))).otherwise(lit(-1L)).as("__cnt2"),
-      lit(-1L).as("__iso"), lit(-1L).as("__en"), lit(-1L).as("__ed"))
-    val st1 = Seq("__pl", "__nb", "__tiff", "__le", "__cnt",
-      "__w", "__h", "__xifd", "__cnt2", "__iso", "__en", "__ed").map(col)
-    for (j <- 0 until maxExifEntries) {
-      val base = col("__xifd") + 2L + lit(12L * j)
-      val live = col("__tiff") && col("__xifd") >= 1L &&
-        lit(j.toLong) < col("__cnt2") && base + 11L <= col("__nb")
-      val typA = u16(base + 2L)
-      val valA = when(typA === 3L, u16(base + 8L)).when(typA === 4L, u32(base + 8L))
-        .otherwise(lit(-1L))
-      cur = cur.select(col(idCol) +: st1 :+
-        u16(base).as("__tag") :+ typA.as("__typ") :+ valA.as("__val") :+
-        live.as("__live") :+ (u32(base + 8L) + 1L).as("__ptr"): _*)
-      val tag = col("__tag"); val typ = col("__typ")
-      val lv  = col("__live"); val v = col("__val"); val ptr = col("__ptr")
-      val ratOk = typ === 5L && ptr >= 1L && ptr + 7L <= col("__nb")
-      cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__tiff"), col("__le"),
-        col("__cnt"), col("__w"), col("__h"), col("__xifd"), col("__cnt2"),
-        when(lv && tag === 34855L, v).otherwise(col("__iso")).as("__iso"),
-        when(lv && tag === 33434L && ratOk, u32(ptr)).otherwise(col("__en")).as("__en"),
-        when(lv && tag === 33434L && ratOk, u32(ptr + 4L)).otherwise(col("__ed")).as("__ed"))
-    }
-    cur.select(
-      col(idCol),
-      when(col("__tiff") && col("__le"), "tiff_le")
-        .when(col("__tiff"), "tiff_be").otherwise("raw").as("format"),
-      col("__nb").as("n_bytes"),
-      col("__w").as("width"), col("__h").as("height"),
-      col("__cnt2").as("n_exif"),
-      col("__iso").as("iso"),
-      col("__en").as("exp_num"), col("__ed").as("exp_den"))
+    decode(media, "graft_tiff_exif_meta", payloadCol, idCol, maxEntries, maxExifEntries)
   }
 
   /**
@@ -779,15 +506,14 @@ object Multimodal {
    * payload bytes (the actual compressed-image volume vs container
    * overhead), and the first tEXt chunk's NUL-terminated keyword (the
    * embedded-annotation channel — where generator tags like "Software"
-   * live), probed over the first 16 data bytes with the named-read
-   * discipline and returned as hex. The 16-byte probe is a declared
+   * live), probed over the first 16 data bytes and returned as hex. The 16-byte probe is a declared
    * LIMIT, not a bug guard: PNG permits keywords up to 79 bytes, so the
    * reported keyword is that of the first tEXt chunk whose keyword's NUL
    * lands inside its first 16 data bytes — a tEXt with a longer keyword
    * is counted but skipped for the readout (a later short-keyword tEXt
    * then reports instead). Raise the probe window if a corpus's
-   * annotation keys exceed 16 bytes. REAL parsing, no codec library, no
-   * UDF; CRCs are skipped, not validated (a curation readout, not an
+   * annotation keys exceed 16 bytes. REAL parsing, no codec library;
+   * CRCs are skipped, not validated (a curation readout, not an
    * integrity checker). Truncated or over-running chunks poison the walk
    * (-1/null, never a mis-read), as does budget exhaustion.
    */
@@ -798,64 +524,7 @@ object Multimodal {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(maxChunks >= 1 && maxChunks <= 96, "maxChunks must be in [1, 96]")
-    def b1(pos: Column): Column =
-      conv(hex(col("__pl").substr(pos.cast("int"), lit(1))), 16, 10).cast("long")
-    def be(pos: Column, len: Int): Column =
-      conv(hex(col("__pl").substr(pos.cast("int"), lit(len))), 16, 10).cast("long")
-    val nb0 = octet_length(col(payloadCol)).cast("long")
-    val isPng0 = nb0 >= 8L &&
-      hex(col(payloadCol).substr(lit(1), lit(8))) === "89504E470D0A1A0A"
-    var cur = media.select(col(idCol), col(payloadCol).as("__pl"), nb0.as("__nb"),
-      isPng0.as("__png"),
-      when(isPng0, lit(9L)).otherwise(lit(-1L)).as("__pos"),
-      lit(0L).as("__n"), lit(0L).as("__idat"),
-      lit(null).cast("string").as("__kw"),
-      lit(false).as("__done"), lit(true).as("__ok"))
-    val state = Seq("__pl", "__nb", "__png", "__pos", "__n", "__idat",
-      "__kw", "__done", "__ok").map(col)
-    for (_ <- 1 to maxChunks) {
-      val pos  = col("__pos")
-      val live = col("__png") && !col("__done") && pos >= 9L && pos + 7L <= col("__nb")
-      // step A: NAME the per-chunk reads once (the tiffMeta plan-cost
-      // discipline) — length, type, and liveness feed every fold branch
-      cur = cur.select(col(idCol) +: state :+
-        be(pos, 4).as("__len") :+
-        hex(col("__pl").substr((pos + 4L).cast("int"), lit(4))).as("__typ") :+
-        live.as("__live"): _*)
-      val len = col("__len"); val typ = col("__typ"); val lv = col("__live")
-      // a declared length that runs past the payload poisons the walk
-      val bad = lv && (pos + 11L + len > col("__nb"))
-      // step B: the tEXt keyword NUL probe over the first 16 data bytes,
-      // named before the folds (each read appears ONCE in the plan)
-      val kwl = (0 until 16).foldRight(lit(-1L)) { (j, rest) =>
-        when(lit(j.toLong) < len && b1(pos + 8L + j) === 0L, lit(j.toLong)).otherwise(rest)
-      }
-      cur = cur.select(col(idCol) +: state :+ col("__len") :+ col("__typ") :+
-        col("__live") :+ bad.as("__bad") :+ kwl.as("__kwl"): _*)
-      val bd  = col("__bad"); val kl = col("__kwl")
-      val isEnd  = lv && !bd && typ === "49454E44"
-      val isIdat = lv && !bd && typ === "49444154"
-      val isText = lv && !bd && typ === "74455874"
-      cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__png"),
-        when(lv && !bd && !isEnd, pos + 12L + len).otherwise(pos).as("__pos"),
-        when(lv && !bd, col("__n") + 1L).otherwise(col("__n")).as("__n"),
-        when(isIdat, col("__idat") + len).otherwise(col("__idat")).as("__idat"),
-        when(isText && col("__kw").isNull && kl >= 1L,
-          hex(col("__pl").substr((pos + 8L).cast("int"), kl.cast("int"))))
-          .otherwise(col("__kw")).as("__kw"),
-        (col("__done") || isEnd || coalesce(bd, lit(false))).as("__done"),
-        (col("__ok") && !coalesce(bd, lit(false))).as("__ok"))
-    }
-    cur.select(
-      col(idCol),
-      when(col("__png"), "png").otherwise("raw").as("format"),
-      col("__nb").as("n_bytes"),
-      when(col("__png") && col("__done") && col("__ok"), col("__n"))
-        .otherwise(lit(-1L)).as("n_chunks"),
-      when(col("__png") && col("__done") && col("__ok"), col("__idat"))
-        .otherwise(lit(-1L)).as("idat_bytes"),
-      when(col("__png") && col("__done") && col("__ok"), col("__kw"))
-        .otherwise(lit(null).cast("string")).as("text_kw_hex"))
+    decode(media, "graft_png_chunks", payloadCol, idCol, maxChunks)
   }
 
   /**
@@ -913,8 +582,8 @@ object Multimodal {
    * file_end`, never by signature alone), then hop to the central
    * directory at the EOCD's u32-LE offset and walk its entries — each
    * `46 + name_len + extra_len + comment_len` bytes, three u16-LE
-   * length fields driving the hop (the TIFF/PNG named-read offset-hop
-   * discipline, little-endian this time). Readouts a curation pipeline
+   * length fields driving the hop (the TIFF/PNG offset hop,
+   * little-endian this time). Readouts a curation pipeline
    * prices on: entry count, summed compressed/uncompressed byte volumes
    * (the compression-ratio signal), and the first entry's name (probed
    * to `min(name_len, 16)` bytes — a declared cap like the PNG keyword
@@ -926,9 +595,9 @@ object Multimodal {
    * `maxEntries` budget can't finish poisons to -1/null — honest, never
    * a mis-read. The EOCD backward scan probes 16 candidate positions
    * (archive comments up to 15 bytes; longer-comment archives report
-   * raw — a declared limit). REAL parsing, no codec library, no UDF;
-   * CRCs skipped, not validated. Scale shape: row-local projection
-   * chain, payload bytes never shuffle.
+   * raw — a declared limit). REAL parsing, no codec library; CRCs
+   * skipped, not validated. Scale shape: row-local, payload bytes never
+   * shuffle.
    */
   def zipCentralDirectory(
       media: DataFrame,
@@ -937,75 +606,7 @@ object Multimodal {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(maxEntries >= 1 && maxEntries <= 64, "maxEntries must be in [1, 64]")
-    def b1(pos: Column): Column =
-      conv(hex(col("__pl").substr(pos.cast("int"), lit(1))), 16, 10).cast("long")
-    def u16(pos: Column): Column = b1(pos) + b1(pos + 1L) * 256L
-    def u32(pos: Column): Column =
-      b1(pos) + b1(pos + 1L) * 256L + b1(pos + 2L) * 65536L + b1(pos + 3L) * 16777216L
-    def sig4(pos: Column): Column = hex(col("__pl").substr(pos.cast("int"), lit(4)))
-    val nb0 = octet_length(col(payloadCol)).cast("long")
-    var cur = media.select(col(idCol), col(payloadCol).as("__pl"), nb0.as("__nb"))
-    // EOCD backward scan: first (= tail-most) candidate whose sig AND
-    // comment-length self-consistency both hold
-    val pCand = (0 until 16).foldRight(lit(-1L)) { (off, rest) =>
-      val p = col("__nb") - lit(21L + off)
-      when(p >= 1L && sig4(p) === "504B0506" && p + 21L + u16(p + 20L) === col("__nb"), p)
-        .otherwise(rest)
-    }
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), pCand.as("__p"))
-    val p0 = col("__p")
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__p"),
-      (p0 >= 1L).as("__zip"),
-      when(p0 >= 1L, u16(p0 + 10L)).otherwise(lit(-1L)).as("__tot"),
-      when(p0 >= 1L, u32(p0 + 12L)).otherwise(lit(-1L)).as("__cds"),
-      when(p0 >= 1L, u32(p0 + 16L) + 1L).otherwise(lit(-1L)).as("__q"))
-    // up-front directory-bounds consistency: the CD must END at the EOCD
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__zip"), col("__p"),
-      col("__tot"), col("__q"),
-      lit(0L).as("__n"), lit(0L).as("__c"), lit(0L).as("__u"),
-      lit(null).cast("string").as("__nm"),
-      (col("__tot") === 0L).as("__done"),
-      (!col("__zip") || (col("__q") >= 1L && col("__q") + col("__cds") === col("__p")))
-        .as("__ok"))
-    val state = Seq("__pl", "__nb", "__zip", "__p", "__tot", "__q",
-      "__n", "__c", "__u", "__nm", "__done", "__ok").map(col)
-    for (_ <- 1 to maxEntries) {
-      val q    = col("__q")
-      val live = col("__zip") && col("__ok") && !col("__done") && q >= 1L && q + 45L <= col("__nb")
-      // step A: NAME the per-entry reads once (the tiffMeta plan-cost
-      // discipline) — signature, the three hop lengths, the two volumes
-      cur = cur.select(col(idCol) +: state :+
-        sig4(q).as("__sig") :+ u16(q + 28L).as("__nl") :+ u16(q + 30L).as("__el") :+
-        u16(q + 32L).as("__cl") :+ u32(q + 20L).as("__cc") :+ u32(q + 24L).as("__uu") :+
-        live.as("__live"): _*)
-      val lv = col("__live"); val nl = col("__nl"); val el = col("__el"); val cl = col("__cl")
-      val bad = lv && (col("__sig") =!= "504B0102" || q + 45L + nl + el + cl > col("__nb"))
-      // step B: the name probe reads off the NAMED name_len
-      cur = cur.select(col(idCol) +: state :+ col("__nl") :+ col("__el") :+ col("__cl") :+
-        col("__cc") :+ col("__uu") :+ col("__live") :+ bad.as("__bad") :+
-        hex(col("__pl").substr((q + 46L).cast("int"), least(nl, lit(16L)).cast("int")))
-          .as("__nmp"): _*)
-      val bd  = coalesce(col("__bad"), lit(false))
-      val adv = col("__live") && !bd
-      cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__zip"), col("__p"),
-        col("__tot"),
-        when(adv, q + 46L + col("__nl") + col("__el") + col("__cl")).otherwise(q).as("__q"),
-        when(adv, col("__n") + 1L).otherwise(col("__n")).as("__n"),
-        when(adv, col("__c") + col("__cc")).otherwise(col("__c")).as("__c"),
-        when(adv, col("__u") + col("__uu")).otherwise(col("__u")).as("__u"),
-        when(adv && col("__n") === 0L, col("__nmp")).otherwise(col("__nm")).as("__nm"),
-        (col("__done") || (adv && col("__n") + 1L === col("__tot")) || bd).as("__done"),
-        (col("__ok") && !bd).as("__ok"))
-    }
-    val good = col("__zip") && col("__done") && col("__ok")
-    cur.select(
-      col(idCol),
-      when(col("__zip"), "zip").otherwise("raw").as("format"),
-      col("__nb").as("n_bytes"),
-      when(good, col("__tot")).otherwise(lit(-1L)).as("n_entries"),
-      when(good, col("__c")).otherwise(lit(-1L)).as("comp_bytes"),
-      when(good, col("__u")).otherwise(lit(-1L)).as("uncomp_bytes"),
-      when(good, col("__nm")).otherwise(lit(null).cast("string")).as("first_name_hex"))
+    decode(media, "graft_zip_directory", payloadCol, idCol, maxEntries)
   }
 
   /**
@@ -1096,8 +697,8 @@ object Multimodal {
    * Checksum fields are skipped, not validated (a curation readout).
    * Truncated blocks, a non-ustar header mid-archive, malformed octal,
    * or budget exhaustion poison to -1/null — honest, never a mis-read.
-   * REAL parsing, no codec library, no UDF. Scale shape: row-local
-   * projection chain, payload bytes never shuffle.
+   * REAL parsing, no codec library. Scale shape: row-local, payload
+   * bytes never shuffle.
    */
   def tarHeaderWalk(
       media: DataFrame,
@@ -1106,66 +707,7 @@ object Multimodal {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(maxEntries >= 1 && maxEntries <= 64, "maxEntries must be in [1, 64]")
-    def b1(pos: Column): Column =
-      conv(hex(col("__pl").substr(pos.cast("int"), lit(1))), 16, 10).cast("long")
-    val nb0 = octet_length(col(payloadCol)).cast("long")
-    var cur = media.select(col(idCol), col(payloadCol).as("__pl"), nb0.as("__nb"))
-    def magicAt(pos: Column): Column =
-      hex(col("__pl").substr((pos + 257L).cast("int"), lit(5))) === "7573746172"
-    val isTar = col("__nb") >= 512L && magicAt(lit(1L))
-    cur = cur.select(col(idCol), col("__pl"), col("__nb"), isTar.as("__tar"),
-      when(isTar, lit(1L)).otherwise(lit(-1L)).as("__pos"),
-      lit(0L).as("__n"), lit(0L).as("__dirs"), lit(0L).as("__fb"),
-      lit(null).cast("string").as("__nm"),
-      lit(false).as("__done"), lit(true).as("__ok"))
-    val state = Seq("__pl", "__nb", "__tar", "__pos", "__n", "__dirs", "__fb",
-      "__nm", "__done", "__ok").map(col)
-    for (_ <- 1 to maxEntries) {
-      val q    = col("__pos")
-      val live = col("__tar") && !col("__done") && q >= 1L && q + 511L <= col("__nb")
-      // step A: NAME the per-block reads once — end marker, magic, the 11
-      // octal size digits (digit-validity and value in one pass), typeflag
-      val sizeVal = (0 to 10).map(j =>
-        (b1(q + 124L + j) - 48L) * lit(1L << (3 * (10 - j)))).reduce(_ + _)
-      val sizeOk = (0 to 10).map(j =>
-        b1(q + 124L + j).between(48L, 55L)).reduce(_ && _)
-      val kwl = (0 until 16).foldRight(lit(16L)) { (j, rest) =>
-        when(b1(q + j) === 0L, lit(j.toLong)).otherwise(rest)
-      }
-      cur = cur.select(col(idCol) +: state :+
-        (b1(q) === 0L).as("__end") :+ magicAt(q).as("__mag") :+
-        sizeVal.as("__sz") :+ sizeOk.as("__szok") :+
-        b1(q + 156L).as("__tf") :+ kwl.as("__kwl") :+ live.as("__live"): _*)
-      val lv  = col("__live"); val end = col("__end")
-      val bad = lv && !end && (!col("__mag") || !col("__szok"))
-      // step B: the name probe reads off the NAMED first-NUL index
-      cur = cur.select(col(idCol) +: state :+ col("__end") :+ col("__sz") :+
-        col("__tf") :+ col("__live") :+ bad.as("__bad") :+
-        hex(col("__pl").substr(q.cast("int"), col("__kwl").cast("int"))).as("__nmp"): _*)
-      val bd  = coalesce(col("__bad"), lit(false))
-      val adv = col("__live") && !col("__end") && !bd
-      val sz  = col("__sz")
-      cur = cur.select(col(idCol), col("__pl"), col("__nb"), col("__tar"),
-        // next header: skip this one + the size's 512-padded data blocks
-        // (ceil(size/512) via an exact integer shift — never float math)
-        when(adv, q + 512L + shiftright(sz + 511L, 9) * 512L)
-          .otherwise(q).as("__pos"),
-        when(adv, col("__n") + 1L).otherwise(col("__n")).as("__n"),
-        when(adv && col("__tf") === 53L, col("__dirs") + 1L).otherwise(col("__dirs")).as("__dirs"),
-        when(adv && col("__tf") =!= 53L, col("__fb") + sz).otherwise(col("__fb")).as("__fb"),
-        when(adv && col("__n") === 0L, col("__nmp")).otherwise(col("__nm")).as("__nm"),
-        (col("__done") || (col("__live") && col("__end")) || bd).as("__done"),
-        (col("__ok") && !bd).as("__ok"))
-    }
-    val good = col("__tar") && col("__done") && col("__ok")
-    cur.select(
-      col(idCol),
-      when(col("__tar"), "tar").otherwise("raw").as("format"),
-      col("__nb").as("n_bytes"),
-      when(good, col("__n")).otherwise(lit(-1L)).as("n_entries"),
-      when(good, col("__dirs")).otherwise(lit(-1L)).as("n_dirs"),
-      when(good, col("__fb")).otherwise(lit(-1L)).as("file_bytes"),
-      when(good, col("__nm")).otherwise(lit(null).cast("string")).as("first_name_hex"))
+    decode(media, "graft_tar_headers", payloadCol, idCol, maxEntries)
   }
 
   /**
@@ -1323,8 +865,8 @@ object Multimodal {
    * window the DATA CHUNK (bytes 45+) exactly as the VAD op does, with
    * each window stamped `t_start_sec` from the container's own sample
    * rate. The "parse the container, then do signal math on its payload"
-   * pipeline in one declarative plan — header reads, chunk slice and
-   * frame sums are all codegen'd builtins; the only join is the tiny
+   * pipeline in one declarative plan — header reads and frame sums are
+   * compiled kernels, the chunk slice a builtin; the only join is the tiny
    * header-metadata relation back onto the payload by id.
    */
   def wavEnergyWindows(

@@ -252,7 +252,28 @@ class CompiledKernelSpec extends SparkTestBase {
     Call("graft_bpe_apply", "word", ", array('a', 'ab'), array('b', 'c')"),
     Call("graft_bpe_pairs", "word", ", array('a', 'ab'), array('b', 'c')"),
     Call("graft_unit_snap", "vd"),
-    Call("graft_char_bigrams", "word"))
+    Call("graft_char_bigrams", "word"),
+    Call("graft_container_meta", "bin", ", 8"),
+    Call("graft_av_container_meta", "bin"),
+    Call("graft_gif_frames", "bin", ", 24"),
+    Call("graft_tiff_meta", "bin", ", 16"),
+    Call("graft_tiff_exif_meta", "bin", ", 8, 8"),
+    Call("graft_png_chunks", "bin", ", 8"),
+    Call("graft_zip_directory", "bin", ", 4"),
+    Call("graft_tar_headers", "bin", ", 6"))
+
+  /** the all-NULL row's answer where it is not NULL: the hash gives its
+    * seed, a container decoder its raw-payload struct. */
+  private val nullAnswers = Map(
+    "graft_poly_hash"         -> "[0,7]",
+    "graft_container_meta"    -> "[0,[raw,null,null,null,3]]",
+    "graft_av_container_meta" -> "[0,[raw,null,-1,-1,-1,-1,-1,-1]]",
+    "graft_gif_frames"        -> "[0,[raw,null,-1]]",
+    "graft_tiff_meta"         -> "[0,[raw,null,-1,-1,-1,-1,-1,-1]]",
+    "graft_tiff_exif_meta"    -> "[0,[raw,null,-1,-1,-1,-1,-1,-1]]",
+    "graft_png_chunks"        -> "[0,[raw,null,-1,-1,null]]",
+    "graft_zip_directory"     -> "[0,[raw,null,-1,-1,-1,null]]",
+    "graft_tar_headers"       -> "[0,[raw,null,-1,-1,-1,null]]")
 
   /** seeded rows (vectors with null elements and short lengths, sorted
     * distinct id sets, byte payloads, Theil–Sen grids) plus one all-NULL
@@ -291,8 +312,8 @@ class CompiledKernelSpec extends SparkTestBase {
       withClue(s"${c.sql}: ") {
         compiled.size shouldBe 41
         withoutCodegen(run()) shouldBe compiled
-        // a NULL input gives NULL, except the hash, which gives its seed
-        compiled.head shouldBe (if (c.name == "graft_poly_hash") "[0,7]" else "[0,null]")
+        // a NULL input gives NULL, except where nullAnswers lists it
+        compiled.head shouldBe nullAnswers.getOrElse(c.name, "[0,null]")
         compiled.tail.count(!_.endsWith(",null]")) should be > 10
       }
     }

@@ -81,6 +81,12 @@ class HttpApiSpec extends SparkTestBase {
       se shouldBe 200
       be should include(""""timestamp":2000""")
       be should not include """"timestamp":1000"""
+      // a present but non-integral bound → 400, not a silently changed range
+      Seq(""""from":"abc","to":2500""", """"from":1500,"to":true""", """"from":1.9,"to":2500""",
+        """"from":1500,"to":null""", """"from":1500,"to":99999999999999999999""").foreach { range =>
+        val (sr, br) = post(port, "/query", s"""{"db":"db","namespace":"ns","queryString":"select * from temps",$range}""")
+        withClue(range) { sr shouldBe 400; br should include("must be an integral number") }
+      }
 
       // error surfaces as 400 with a message
       val (sb, bb) = post(port, "/query",
@@ -448,6 +454,13 @@ class HttpApiSpec extends SparkTestBase {
       // non-numeric value → 400
       post(port, "/data",
         """{"db":"db","namespace":"ns","metric":"mbad","bit":{"timestamp":1000,"value":"oops"}}""")._1 shouldBe 400
+      // a present but non-integral timestamp → 400 (not epoch 0 or a truncated instant)
+      Seq("\"abc\"", "true", "1.9", "null", "99999999999999999999").foreach { ts =>
+        withClue(ts) {
+          post(port, "/data", s"""{"db":"db","namespace":"ns","metric":"mbad","bit":{"timestamp":$ts,"value":4.5}}""")
+            ._1 shouldBe 400
+        }
+      }
       engine.command("db", "ns", graft.sql.Ast.ShowMetrics).fold(fail(_), identity) shouldBe empty
       // a proper bit still lands
       post(port, "/data",

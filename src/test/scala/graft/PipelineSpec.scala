@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{functions => F}
 
@@ -1907,6 +1908,69 @@ class PipelineSpec extends SparkTestBase {
     out(5) shouldBe ((5L, "raw", -1L, -1L, -1L, null))
     out(6) shouldBe ((6L, "tar", 1L, 0L, 5L, "6D616E"))
     out(7) shouldBe ((7L, "tar", 2L, 1L, 5L, "6D616E69"))
+  }
+
+  "Multimodal's container decoders" should "answer truncated, wrong-magic, over-cap, NULL and empty payloads" in {
+    def fixture(synthesize: DataFrame => DataFrame, id: Long): Array[Byte] =
+      synthesize(Seq((id, s"doc $id")).toDF("doc_id", "text")).head().getAs[Array[Byte]](1)
+    def flip(p: Array[Byte], at: Int): Array[Byte] = { val q = p.clone(); q(at) = (q(at) ^ 0xFF).toByte; q }
+    def eocd(p: Array[Byte]): Int = p.lastIndexOfSlice(Seq[Byte](0x50, 0x4B, 5, 6))
+    // (decoder, decoder at a cap the valid payload exceeds, valid payload,
+    // a length that cuts its header, the offset of a magic byte); the
+    // A/V decoder walks nothing, so its "capped" row decodes the payload whole
+    case class Case(name: String, decode: DataFrame => DataFrame, capped: DataFrame => DataFrame,
+        valid: Array[Byte], cut: Int, magic: Array[Byte] => Int)
+    val jpeg = fixture(Multimodal.syntheticContainers, 1L) // SOF2 in the second segment
+    val cases = Seq(
+      Case("containerMeta", Multimodal.containerMeta(_), Multimodal.containerMeta(_, maxSegments = 1),
+        jpeg, 25, _ => 0),
+      Case("avContainerMeta", Multimodal.avContainerMeta(_), Multimodal.avContainerMeta(_),
+        fixture(Multimodal.syntheticAvContainers, 0L), 30, _ => 0),
+      Case("gifFrameCount", Multimodal.gifFrameCount(_), Multimodal.gifFrameCount(_, maxBlocks = 1),
+        fixture(Multimodal.syntheticAnimatedGifs, 2L), 20, _ => 0),
+      Case("tiffMeta", Multimodal.tiffMeta(_), Multimodal.tiffMeta(_, maxEntries = 1),
+        fixture(Multimodal.syntheticTiffs, 0L), 20, _ => 0),
+      Case("tiffExifMeta", Multimodal.tiffExifMeta(_), Multimodal.tiffExifMeta(_, maxExifEntries = 1),
+        fixture(Multimodal.syntheticExifTiffs, 1L), 40, _ => 0),
+      Case("pngChunkWalk", Multimodal.pngChunkWalk(_), Multimodal.pngChunkWalk(_, maxChunks = 1),
+        fixture(Multimodal.syntheticPngChunks, 0L), 20, _ => 0),
+      Case("zipCentralDirectory", Multimodal.zipCentralDirectory(_),
+        Multimodal.zipCentralDirectory(_, maxEntries = 1), fixture(Multimodal.syntheticZips, 2L), -5, eocd),
+      Case("tarHeaderWalk", Multimodal.tarHeaderWalk(_), Multimodal.tarHeaderWalk(_, maxEntries = 1),
+        fixture(Multimodal.syntheticTars, 2L), 300, _ => 257))
+    // the answers of the expression chains these decoders replaced:
+    // (truncated, wrong magic, NULL, empty, over the cap)
+    val expected = Map(
+      "containerMeta" -> Seq("[1,raw,25,89,131,3]", "[2,raw,38,102,180,3]", "[3,raw,null,null,null,3]",
+        "[4,raw,0,64,64,3]", "[5,raw,38,102,180,3]"),
+      "avContainerMeta" -> Seq("[1,raw,30,-1,-1,-1,-1,-1,-1]", "[2,raw,49,-1,-1,-1,-1,-1,-1]",
+        "[3,raw,null,-1,-1,-1,-1,-1,-1]", "[4,raw,0,-1,-1,-1,-1,-1,-1]", "[5,wav,49,-1,-1,8000,1,8,5]"),
+      "gifFrameCount" -> Seq("[1,gif,20,-1]", "[2,raw,118,-1]", "[3,raw,null,-1]", "[4,raw,0,-1]",
+        "[5,gif,118,-1]"),
+      "tiffMeta" -> Seq("[1,tiff_le,20,5,-1,-1,-1,-1,-1]", "[2,raw,87,-1,-1,-1,-1,-1,-1]",
+        "[3,raw,null,-1,-1,-1,-1,-1,-1]", "[4,raw,0,-1,-1,-1,-1,-1,-1]", "[5,tiff_le,87,5,1,-1,-1,-1,-1]"),
+      "tiffExifMeta" -> Seq("[1,tiff_be,40,8,12,-1,-1,-1,-1]", "[2,raw,105,-1,-1,-1,-1,-1,-1]",
+        "[3,raw,null,-1,-1,-1,-1,-1,-1]", "[4,raw,0,-1,-1,-1,-1,-1,-1]", "[5,tiff_be,105,8,12,3,200,-1,-1]"),
+      "pngChunkWalk" -> Seq("[1,png,20,-1,-1,null]", "[2,raw,83,-1,-1,null]", "[3,raw,null,-1,-1,null]",
+        "[4,raw,0,-1,-1,null]", "[5,png,83,-1,-1,null]"),
+      "zipCentralDirectory" -> Seq("[1,raw,305,-1,-1,-1,null]", "[2,raw,310,-1,-1,-1,null]",
+        "[3,raw,null,-1,-1,-1,null]", "[4,raw,0,-1,-1,-1,null]", "[5,zip,310,-1,-1,-1,null]"),
+      "tarHeaderWalk" -> Seq("[1,raw,300,-1,-1,-1,null]", "[2,raw,3584,-1,-1,-1,null]",
+        "[3,raw,null,-1,-1,-1,null]", "[4,raw,0,-1,-1,-1,null]", "[5,tar,3584,-1,-1,-1,null]"))
+    val got = cases.map { c =>
+      val cut = if (c.cut < 0) c.valid.dropRight(-c.cut) else c.valid.take(c.cut)
+      val media = Seq[(Long, Array[Byte])]((1L, cut), (2L, flip(c.valid, c.magic(c.valid))), (3L, null),
+        (4L, Array.empty[Byte])).toDF("doc_id", "payload")
+      val rows = c.decode(media).orderBy("doc_id").collect().map(_.toString).toSeq ++
+        c.capped(Seq((5L, c.valid)).toDF("doc_id", "payload")).collect().map(_.toString)
+      c.name -> rows
+    }
+    got.foreach { case (name, rows) => withClue(name) { rows shouldBe expected(name) } }
+    // an offset past Int.MaxValue is a read outside the payload (the chains
+    // threw CAST_OVERFLOW casting it for `substring` under ANSI mode)
+    val farIfd = "II".getBytes ++ Array[Byte](42, 0, 3, 0, 0, -128) ++ new Array[Byte](20)
+    Multimodal.tiffMeta(Seq((1L, farIfd)).toDF("doc_id", "payload")).head().toString shouldBe
+      "[1,tiff_le,28,-1,-1,-1,-1,-1,-1]"
   }
 
   "Multimodal.wavEnergyWindows" should "window only PCM8-mono data chunks with rate-derived stamps" in {

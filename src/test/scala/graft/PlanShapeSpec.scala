@@ -314,25 +314,24 @@ class PlanShapeSpec extends SparkTestBase {
     }
   }
 
-  "the TIFF pointer-chase walks" should "keep their unrolled plans below the duplication tripwire" in {
-    import graft.pipeline.Multimodal
-    val docs = spark.read.parquet(s"$dir/documents.parquet")
-    // regression guard for the r15 plan-cost explosion: inlining the
-    // per-entry byte reads into every fold branch duplicated the read
-    // trees ~6x per unrolled step and mm_exif's analysis cost hit 47 s.
-    // The fix names each read once per step (Multimodal.tiffMeta step A);
-    // these digests sit at ~29/~45 nodes — a refactor that reintroduces
-    // the duplication blows past 120 and fails here before it ships.
-    val exif = Multimodal.tiffMeta(Multimodal.syntheticTiffs(docs), maxEntries = 16)
-      .orderBy("doc_id")
-    val n1 = graft.PlanAudit.digest(exif.queryExecution.executedPlan)
-      .toMap.apply("nodes")
-    withClue(s"mm_exif-shaped plan nodes = $n1") { n1 should be < 120 }
-    val exif2 = Multimodal.tiffExifMeta(Multimodal.syntheticExifTiffs(docs))
-      .orderBy("doc_id")
-    val n2 = graft.PlanAudit.digest(exif2.queryExecution.executedPlan)
-      .toMap.apply("nodes")
-    withClue(s"mm_exif2-shaped plan nodes = $n2") { n2 should be < 120 }
+  "the container decode gates" should "run whole-stage codegen with no fallback" in {
+    // each gate decodes with one kernel call per row, so its generated code
+    // must compile: with the fallback off, a whole-stage compile failure
+    // (Janino's 64 KB method limit) throws here instead of the stage
+    // silently running without codegen. The node bound guards plan growth,
+    // counted on the physical plan before AQE wraps it (the wrapped plan is
+    // one leaf node).
+    val gates = Seq("mm_meta", "mm_dims", "mm_av", "mm_wavvad", "mm_gif", "mm_exif", "mm_exif2",
+      "mm_pngtext", "mm_zipdir", "mm_tar")
+    val key = "spark.sql.codegen.fallback"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, "false")
+    try gates.foreach { g =>
+      val df = SparkEntry.queries(g)(spark, dir)
+      val nodes = graft.PlanAudit.digest(df.queryExecution.sparkPlan).toMap.apply("nodes")
+      withClue(s"$g plan nodes = $nodes") { nodes should be < 120 }
+      withClue(g) { df.collect() should not be empty }
+    } finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
 
   "fuzzy retrieval" should "broadcast the variant terms, never sort-merge the postings" in {
