@@ -215,7 +215,7 @@ object OracleGen {
        |  round(sum(c - 1)::DOUBLE / sum(c)::DOUBLE, 6) AS dup_rate
        |FROM cg GROUP BY source ORDER BY source""".stripMargin.replace("\n", " ")
 
-  /** mirror of [[Dedup.componentWeights]]: the CC labeling (singletons
+  /** mirror of [[Dedup.componentWeightsFromPairs]] over the mined pairs: the CC labeling (singletons
     * self-labeled), component sizes, and the 6-dp `1/size` weight. */
   def componentWeightsSql(threshold: Double, numHashes: Int, bands: Int,
                           shingleK: Int, maxBucket: Int): String =
@@ -227,7 +227,7 @@ object OracleGen {
        |  round(1.0 / cluster_size::DOUBLE, 6) AS weight
        |FROM cl JOIN sz USING (rep) ORDER BY cl.doc_id""".stripMargin.replace("\n", " ")
 
-  /** mirror of [[Dedup.dedupReport]]: per-source doc counts, non-representative
+  /** mirror of [[Dedup.dedupReportFromPairs]] over the mined pairs: per-source doc counts, non-representative
     * counts, and the 4-dp duplicate rate over the CC labeling. */
   def dedupReportSql(threshold: Double, numHashes: Int, bands: Int, shingleK: Int, maxBucket: Int): String =
     s"""WITH RECURSIVE ${ccLabelCtes(threshold, numHashes, bands, shingleK, maxBucket)},
@@ -238,7 +238,7 @@ object OracleGen {
        |  round(sum(CASE WHEN doc_id = rep THEN 0 ELSE 1 END)::DOUBLE / count(*)::DOUBLE, 4) AS dup_rate
        |FROM cl GROUP BY source ORDER BY source""".stripMargin.replace("\n", " ")
 
-  /** mirror of [[Dedup.crossSourceDuplicates]]: distinct mined pairs,
+  /** mirror of [[Dedup.crossSourceDuplicatesFromPairs]]: distinct mined pairs,
     * each side resolves its source, least/greatest collapse the pair. */
   def crossSourceDuplicatesSql(threshold: Double, numHashes: Int, bands: Int,
                                shingleK: Int, maxBucket: Int): String =
@@ -325,14 +325,8 @@ object OracleGen {
        |SELECT id_a, id_b, n_common, aa FROM aas
        |ORDER BY aa DESC, id_a, id_b LIMIT $topK""".stripMargin
 
-  def adamicAdarSql(threshold: Double, numHashes: Int, bands: Int, shingleK: Int,
-                    maxBucket: Int, topK: Int): String =
-    s"""WITH ${minhashPairCtes(numHashes, bands, shingleK, maxBucket)},
-       |aae AS (SELECT DISTINCT id_a, id_b FROM v WHERE jaccard >= $threshold),
-       |${adamicAdarChain(topK)}""".stripMargin.replace("\n", " ")
-
-  /** [[adamicAdarSql]] over the CO-PURCHASE part graph (edges = part
-    * pairs ordered together in ≥ `minSupport` orders). */
+  /** Adamic–Adar link scores over the CO-PURCHASE part graph (edges =
+    * part pairs ordered together in ≥ `minSupport` orders). */
   def adamicAdarBasketSql(minSupport: Long, topK: Int): String =
     s"""WITH li AS (SELECT DISTINCT l_orderkey AS ok, l_partkey AS pk FROM lineitem),
        |aae AS (SELECT a.pk AS id_a, b.pk AS id_b FROM li a JOIN li b ON a.ok = b.ok AND a.pk < b.pk
@@ -662,7 +656,7 @@ object OracleGen {
        |SELECT lang, term, n, rank::BIGINT AS rank FROM r WHERE rank <= $topK
        |ORDER BY lang, rank""".stripMargin.replace("\n", " ")
 
-  /** mirror of [[graft.pipeline.TextAnalysis.nbConfusion]]: Laplace-1
+  /** mirror of [[graft.pipeline.TextAnalysis.nbConfusionFrom]]: Laplace-1
     * multinomial NB self-prediction rolled to a confusion matrix, in the
     * engine's DECOMPOSED spelling — only non-zero (label, term) cells
     * fold (`tf·ln(c+1)`, ascending-sorted), and the smoothing denominator
@@ -702,7 +696,7 @@ object OracleGen {
        |FROM pred p JOIN documents d USING (doc_id) WHERE p.r = 1
        |GROUP BY 1, 2 ORDER BY 1, 2""".stripMargin.replace("\n", " ")
 
-  /** mirror of [[graft.pipeline.TextAnalysis.nbMarginCalibration]]: the
+  /** mirror of [[graft.pipeline.TextAnalysis.nbMarginCalibrationFrom]]: the
     * same score chain, top-2 rank per doc, identical-double margins
     * binned by `floor(margin / binWidth)` capped at `bins − 1`. */
   def nbMarginCalibSql(binWidth: Double, bins: Int): String =
@@ -880,7 +874,7 @@ object OracleGen {
        |FROM dl JOIN documents d USING (doc_id) GROUP BY d.lang ORDER BY d.lang""".stripMargin
       .replace("\n", " ")
 
-  /** shared CTE chain mirroring [[graft.pipeline.Similarity.pcaCore]]:
+  /** shared CTE chain mirroring [[graft.pipeline.Similarity.pcaModelShared]]:
     * 1e-4-lattice snap → exact int64 dim/pair-product sums → covariance
     * by the spelled-out op sequence `Sij/n − (Si/n)·(Sj/n)` → per
     * component `iters` unrolled power-iteration rounds (dim-ordered list
@@ -933,7 +927,7 @@ object OracleGen {
        |$comps""".stripMargin
   }
 
-  /** mirror of [[graft.pipeline.Similarity.pcaProject]]: per-vector top-k
+  /** mirror of [[graft.pipeline.Similarity.pcaProjectFrom]]: per-vector top-k
     * principal coordinates in original units, 6-dp. */
   def pcaProjectSql(dim: Int, k: Int, iters: Int, whiten: Boolean = false): String = {
     val pcCols = (1 to k).map { cN =>
@@ -950,7 +944,7 @@ object OracleGen {
        |ORDER BY qt.vec_id""".stripMargin.replace("\n", " ")
   }
 
-  /** mirror of [[graft.pipeline.Similarity.pcaTopKRerank]]: the
+  /** mirror of [[graft.pipeline.Similarity.pcaTopKRerankFrom]]: the
     * [[pcaProjectSql]] coordinates (6-dp, gate-proven identical) feed a
     * reduced-space cosine shortlist (ties by id), then the `ann_topk`
     * cosine/round spelling re-ranks the candidates at full dimension. */
@@ -968,7 +962,7 @@ object OracleGen {
       .stripMargin.replace("\n", " ")
   }
 
-  /** mirror of [[graft.pipeline.Similarity.pcaVarianceReport]]:
+  /** mirror of [[graft.pipeline.Similarity.pcaVarianceReportFrom]]:
     * per-component eigenvalue (original units) + share of the
     * pre-deflation trace. */
   def pcaVarianceSql(dim: Int, k: Int, iters: Int): String = {

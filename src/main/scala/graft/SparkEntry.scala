@@ -741,10 +741,7 @@ object SparkEntry {
     }),
     // isotropy health of the embedding space: exact mean pairwise cosine
     // via ||Σu||² − Σ||u||² (one pass, never a pair join) + centroid norm
-    "ann_isotropy" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
-      Similarity.isotropyReport(emb(s, d))
-    }),
+    "ann_isotropy" -> ((s, d) => Similarity.isotropyReport(emb(s, d))),
     // FILTERED vector search (the vector-DB "metadata pre-filter" shape):
     // the predicate pushes into the scan BEFORE scoring, so a selective
     // filter shrinks the candidate set instead of post-filtering top-k —
@@ -2057,7 +2054,6 @@ object SparkEntry {
     // media -> embeddings -> retrieval, composed: the multimodal features
     // feed the ANN operators unchanged (stub features, real plumbing)
     "mm_ann" -> ((s, d) => {
-      graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.dotProduct
       val e = Multimodal.embedBatched(mmPayload(s, d))
         .withColumnRenamed("doc_id", "vec_id")

@@ -204,12 +204,6 @@ class Warehouse(val spark: SparkSession, val root: String) {
   def listMetrics(db: String, ns: String): Seq[String] =
     subdirs(s"$root/$db/$ns").filter(m => Files.exists(Paths.get(metaPath(Coords(db, ns, m)))))
 
-  def describe(c: Coords): Option[Seq[(String, String, String)]] =
-    readMeta(c).map(m => m.schema.orderedNames.map { n =>
-      val f = m.schema.fields(n)
-      (f.name, f.dataType.catalogString, f.fieldClass.name)
-    })
-
   def exists(c: Coords): Boolean = readMeta(c).isDefined
 
   // ---- write path --------------------------------------------------------

@@ -6,7 +6,7 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Li
 import org.apache.spark.sql.catalyst.expressions.objects.StaticInvoke
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions.call_function
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -58,7 +58,9 @@ case class Kernel(
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): Expression = copy(children = c)
 }
 
-/** Registration for the engine's native functions (session-scoped). */
+/** The engine's native functions: the [[registry]] every graft session
+  * installs through [[GraftSparkExtensions]], and the column helpers that
+  * call them by name. */
 object GraftFunctions {
 
   type Entry = (String, Seq[Expression] => Expression, ExpressionInfo)
@@ -201,119 +203,108 @@ object GraftFunctions {
       new ExpressionInfo(classOf[SoleLatest].getName, "graft_sole_latest"))
   )
 
-  /** Idempotent per-session registration. */
-  def register(spark: SparkSession): Unit =
-    registry.foreach { case (name, builder, _) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
-
-  /** Column-level dot product (requires [[register]] on the session). */
+  /** Column-level dot product. */
   def dotProduct(a: Column, b: Column): Column = call_function("graft_dot", a, b)
 
-  /** Common-element count of two sorted distinct long arrays (requires [[register]]). */
+  /** Common-element count of two sorted distinct long arrays. */
   def sortedIntersect(a: Column, b: Column): Column = call_function("graft_sorted_intersect", a, b)
 
   /** Ascending-sorted sequential sum of a double array — the compiled
-    * portable fold (requires [[register]]). */
+    * portable fold. */
   def foldSum(xs: Column): Column = call_function("graft_fold_sum", xs)
 
   /** portable polynomial hash of a string column, one compiled call per
-    * row; NULL gives `seed` (requires [[register]]). */
+    * row; NULL gives `seed`. */
   def polyHash(s: Column, base: Long, seed: Long): Column =
     call_function("graft_poly_hash", s,
       org.apache.spark.sql.functions.lit(base), org.apache.spark.sql.functions.lit(seed))
 
-  /** MinHash signature of a hashed-shingle array (requires [[register]]). */
+  /** MinHash signature of a hashed-shingle array. */
   def minhash(shingleHashes: Column, numHashes: Int): Column =
     call_function("graft_minhash", shingleHashes, org.apache.spark.sql.functions.lit(numHashes))
 
   /** Bounded sorted collect: the group's bigint ids as a sorted array, or
-    * NULL when the group exceeds `cap` elements (requires [[register]]). */
+    * NULL when the group exceeds `cap` elements. */
   def collectCapped(id: Column, cap: Int): Column =
     call_function("graft_collect_capped", id, org.apache.spark.sql.functions.lit(cap))
 
-  /** `array(sum, count)` of the group's `k` largest bigint values
-    * (requires [[register]]). */
+  /** `array(sum, count)` of the group's `k` largest bigint values. */
   def topKSum(v: Column, k: Int): Column =
     call_function("graft_topk_sum", v, org.apache.spark.sql.functions.lit(k))
 
   /** int8-quantized cosine of a raw vector column against a PRE-QUANTIZED
-    * query array, one compiled pass (requires [[register]]). */
+    * query array, one compiled pass. */
   def int8QSim(vec: Column, zq: Array[Double]): Column =
     call_function("graft_int8_qsim", vec, org.apache.spark.sql.functions.lit(zq))
 
   /** a word's BPE token array after replaying `merges` in learned order,
-    * one compiled pass (requires [[register]]). */
+    * one compiled pass. */
   def bpeApply(word: Column, merges: Seq[(String, String)]): Column =
     call_function("graft_bpe_apply", word,
       org.apache.spark.sql.functions.lit(merges.map(_._1).toArray),
       org.apache.spark.sql.functions.lit(merges.map(_._2).toArray))
 
   /** adjacent `(l, r)` token pairs of the replayed tokenization — one BPE
-    * training round's explode input (requires [[register]]). */
+    * training round's explode input. */
   def bpePairs(word: Column, merges: Seq[(String, String)]): Column =
     call_function("graft_bpe_pairs", word,
       org.apache.spark.sql.functions.lit(merges.map(_._1).toArray),
       org.apache.spark.sql.functions.lit(merges.map(_._2).toArray))
 
   /** unit-normalized 1e-6-lattice snap of a vector column, one compiled
-    * pass (requires [[register]]). */
+    * pass. */
   def unitSnap(vec: Column): Column = call_function("graft_unit_snap", vec)
 
   /** overlapping 2-character substrings of a ≥2-char word, one compiled
-    * pass (requires [[register]]). */
+    * pass. */
   def charBigrams(word: Column): Column = call_function("graft_char_bigrams", word)
 
   /** one-pass `struct(ns, last, nl, key)` sole-latest fold: row count,
-    * max(ord), rows at the max, smallest key at the max (requires
-    * [[register]]). */
+    * max(ord), rows at the max, smallest key at the max. */
   def soleLatest(ord: Column, key: Column): Column =
     call_function("graft_sole_latest", ord, key)
 
   /** 128-bit SimHash signature of a word-hash array, packed as two
-    * non-negative longs `[lo, hi]` (requires [[register]]). */
+    * non-negative longs `[lo, hi]`. */
   def simhash(wordHashes: Column): Column = call_function("graft_simhash", wordHashes)
 
   /** content-defined chunk list of a text column as packed
-    * `n_words·2^32+chunk_hash` longs in chunk order (requires [[register]]). */
+    * `n_words·2^32+chunk_hash` longs in chunk order. */
   def cdcChunks(text: Column, divisor: Int): Column =
     call_function("graft_cdc_chunks", text,
       org.apache.spark.sql.functions.lit(divisor))
 
   /** per-`window` RMS energy array of a binary payload read as unsigned
-    * PCM8 around the 128 midpoint (requires [[register]]). */
+    * PCM8 around the 128 midpoint. */
   def rmsWindows(payload: Column, window: Int): Column =
     call_function("graft_rms_windows", payload,
       org.apache.spark.sql.functions.lit(window))
 
-  /** blockhash mean-vs-global-mean bit signature of a binary payload
-    * (requires [[register]]). */
+  /** blockhash mean-vs-global-mean bit signature of a binary payload. */
   def blockhashSig(payload: Column, blocks: Int): Column =
     call_function("graft_blockhash", payload,
       org.apache.spark.sql.functions.lit(blocks))
 
-  /** sorted distinct k-word shingle hashes of a text column (requires [[register]]). */
+  /** sorted distinct k-word shingle hashes of a text column. */
   def shingles(text: Column, k: Int): Column =
     call_function("graft_shingles", text, org.apache.spark.sql.functions.lit(k))
 
-  /** sorted distinct wide word hashes of a text column (requires [[register]]). */
+  /** sorted distinct wide word hashes of a text column. */
   def wordHashes(text: Column): Column = call_function("graft_word_hashes", text)
 
   /** winnowing fingerprints of a text column as packed `pos·2^32+fp`
-    * longs (requires [[register]]). */
+    * longs. */
   def winnow(text: Column, k: Int, w: Int): Column =
     call_function("graft_winnow", text,
       org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(w))
 
-  /** sorted DISTINCT winnowing fingerprint values of a text column
-    * (requires [[register]]). */
+  /** sorted DISTINCT winnowing fingerprint values of a text column. */
   def winnowFps(text: Column, k: Int, w: Int): Column =
     call_function("graft_winnow_fps", text,
       org.apache.spark.sql.functions.lit(k), org.apache.spark.sql.functions.lit(w))
 
   /** 0-based index of the cosine-nearest centroid, one pass over the
-    * vector (requires [[register]]). Norms are derived here with the same
+    * vector. Norms are derived here with the same
     * sequential fold the kernel uses. */
   def nearestCentroid(vec: Column, cents: Seq[Array[Double]]): Column = {
     val dim  = cents.head.length
@@ -331,7 +322,7 @@ object GraftFunctions {
 
   /** `m` PQ sub-codes (L2-nearest sub-centroid per subspace) of a vector
     * column against a literal subspace-major codebook, one pass over the
-    * vector (requires [[register]]). `centsFlat(((j*kpq)+c)*dsub + i)`. */
+    * vector. `centsFlat(((j*kpq)+c)*dsub + i)`. */
   def pqEncode(vec: Column, centsFlat: Array[Double], m: Int, dsub: Int, kpq: Int): Column =
     call_function("graft_pq_encode", vec,
       org.apache.spark.sql.functions.lit(centsFlat),
@@ -340,7 +331,7 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(kpq))
 
   /** minimum Euclidean distance of a vector column to a literal center
-    * set, one compiled pass (requires [[register]]). */
+    * set, one compiled pass. */
   def minEuclDist(vec: Column, cents: Seq[Array[Double]]): Column = {
     val dim  = cents.head.length
     val flat = cents.iterator.flatMap(_.iterator).toArray
@@ -349,18 +340,17 @@ object GraftFunctions {
       org.apache.spark.sql.functions.lit(dim))
   }
 
-  /** median of all pairwise Theil–Sen slopes over collected grid arrays
-    * (requires [[register]]). */
+  /** median of all pairwise Theil–Sen slopes over collected grid arrays. */
   def tsSlopeMedian(xs: Column, vs: Column): Column =
     call_function("graft_ts_slope_median", xs, vs)
 
   /** median of the per-point residuals `v − slope·x` over collected grid
-    * arrays (requires [[register]]). */
+    * arrays. */
   def tsResidMedian(xs: Column, vs: Column, slope: Column): Column =
     call_function("graft_ts_resid_median", xs, vs, slope)
 
   /** per-table LSH sign buckets of a vector column against literal
-    * hyperplane tables, one pass over the vector (requires [[register]]). */
+    * hyperplane tables, one pass over the vector. */
   def lshBuckets(vec: Column, tablePlanes: Seq[Array[Array[Double]]]): Column = {
     val k   = tablePlanes.head.length
     val dim = tablePlanes.head.head.length
@@ -372,9 +362,11 @@ object GraftFunctions {
 }
 
 /**
- * `SparkSessionExtensions` entry point: enable with
- * `spark.sql.extensions=graft.functions.GraftSparkExtensions` to get the
- * native functions in every session (incl. pure SQL users).
+ * `SparkSessionExtensions` entry point, and the one place graft functions
+ * are installed: `GraftSession.builder` sets
+ * `spark.sql.extensions=graft.functions.GraftSparkExtensions`, so every
+ * graft session, each `newSession()` of it and pure SQL users get the
+ * [[GraftFunctions.registry]] functions.
  */
 class GraftSparkExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit =

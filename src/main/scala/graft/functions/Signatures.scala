@@ -302,9 +302,8 @@ object PortableHash {
    * always closes the final chunk. Each element packs
    * `n_words · 2^32 + chunk_hash`, where the chunk hash is the base-131
    * seed-7 fold of the chunk's word hashes mod P31 (< 2^31, so the pack
-   * is lossless for documents under 2^31 words). Value-identical to the
-   * HOF reference form [[graft.pipeline.Dedup.cdcChunksHof]]
-   * (spec-asserted), element order = chunk order.
+   * is lossless for documents under 2^31 words). Element order = chunk
+   * order.
    */
   def cdcChunkList(text: UTF8String, divisor: Int): ArrayData = {
     val bytes  = text.getBytes

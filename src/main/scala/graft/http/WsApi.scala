@@ -226,7 +226,8 @@ class WsApi(
       return
     }
     val q   = req.path("queryString").asText("")
-    val refreshMs = if (req.has("refreshMs")) Some(req.get("refreshMs").asLong()) else None
+    // a present refreshMs that is not an integral JSON number reads as 0
+    val refreshMs = if (req.has("refreshMs")) Some(HttpApi.epoch(req, "refreshMs").getOrElse(0L)) else None
     if (refreshMs.exists(_ <= 0)) { err("refreshMs must be a positive integer"); return }
     implicit val tc: TimeContext = TimeContext(System.currentTimeMillis())
     // metric-scope check before any registration (reference WsResources

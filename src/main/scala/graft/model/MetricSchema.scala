@@ -37,7 +37,6 @@ final case class MetricField(name: String, dataType: DataType, fieldClass: Field
 final case class MetricSchema(fields: Map[String, MetricField]) {
 
   def tags: Map[String, MetricField]       = fields.filter(_._2.fieldClass == FieldClass.Tag)
-  def dimensions: Map[String, MetricField] = fields.filter(_._2.fieldClass == FieldClass.Dimension)
   def contains(name: String): Boolean      = fields.contains(name)
   def isNumeric(name: String): Boolean =
     fields.get(name).exists(_.dataType.isInstanceOf[NumericType])

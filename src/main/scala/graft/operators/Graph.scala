@@ -142,7 +142,6 @@ object Graph {
     require(seeds.nonEmpty, "need at least one seed node")
     require(topK >= 1, "topK must be >= 1")
     import graft.functions.GraftFunctions
-    GraftFunctions.register(edges.sparkSession)
     import GraftFunctions.foldSum
     val sym = edges.select(col("id_a"), col("id_b"))
     // degree attaches to the edge relation ONCE (static across rounds) via
@@ -308,8 +307,7 @@ object Graph {
   }
 
   /** [[labelPropagation]] body; `consume = false` leaves the caller's
-    * pins under `edges` alive (shared-edge compositions like
-    * [[labelPropagationModularity]]). */
+    * pins under `edges` alive ([[labelPropagationShared]]). */
   private def lpCore(
       edges: DataFrame,
       nodes: DataFrame,
@@ -408,21 +406,6 @@ object Graph {
     Seq((n, sij, sa, sb, ari)).toDF("n_docs", "pairs_both", "pairs_a", "pairs_b", "__ari")
       .select(col("n_docs"), col("pairs_both"), col("pairs_a"), col("pairs_b"),
         round(col("__ari"), 6).as("ari"))
-  }
-
-  /** [[labelPropagation]] + [[modularity]] over ONE materialization of
-    * the edge list — the composed gate shape (mining the pair graph is
-    * the dominant cost; two independent calls would mine it twice). */
-  def labelPropagationModularity(
-      edges: DataFrame,
-      nodes: DataFrame,
-      rounds: Int = 4,
-      idCol: String = "doc_id"
-  ): DataFrame = {
-    val pairs = edges.toDF("id_a", "id_b").pinned
-    Checkpoints.free(edges)
-    val labels = lpCore(pairs, nodes, rounds, idCol, consume = false)
-    modularity(pairs, labels, idCol)
   }
 
   /**
@@ -533,7 +516,6 @@ object Graph {
   def adamicAdar(pairs: DataFrame, topK: Int = 50): DataFrame = {
     import graft.functions.GraftFunctions
     require(topK >= 1, "topK must be >= 1")
-    GraftFunctions.register(pairs.sparkSession)
     import GraftFunctions.foldSum
     // canonicalize before distinct: a caller-supplied (5,3) must collapse
     // with (3,5) — otherwise the edge escapes the left-anti exclusion and

@@ -1025,7 +1025,6 @@ object Relational {
       dp: Int = 6
   ): DataFrame = {
     require(xmin >= 1, "xmin must be >= 1")
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val tail = df.groupBy(col(keyCol)).agg(count(lit(1)).as("__x"))
       .filter(col("__x") >= xmin)
     tail.agg(
@@ -1311,7 +1310,7 @@ object Relational {
       // the hash is its own column, so the CASE WHEN reads it once per row
       // instead of re-hashing in each of its branches
       .withColumn("__h", graft.pipeline.Sampling.sampleHash(
-        per, concat_ws("#", col("__id"), col("__b")), seed))
+        concat_ws("#", col("__id"), col("__b")), seed))
       .withColumn("__w", w)
       .groupBy(col("__b"))
       .agg(sum(col("__w")).as("__sw"),

@@ -543,7 +543,6 @@ object Star {
       supplier: DataFrame, orders: DataFrame, lineitem: DataFrame,
       k: Int = 20): DataFrame = {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(lineitem.sparkSession)
     val lastShippers = lineitem
       .join(orders.filter(col("o_orderstatus") === "F").select(col("o_orderkey")),
         col("l_orderkey") === col("o_orderkey"), "left_semi")

@@ -119,7 +119,6 @@ object TimeSeries {
   ): DataFrame = {
     require(maxPoints >= 2, "maxPoints must be >= 2")
     import graft.functions.GraftFunctions
-    GraftFunctions.register(df.sparkSession)
     val kc = keys.map(col)
     val grid = gridIn.getOrElse(resample(df, keys, tsCol, valueCol, step))
       .withColumn("__x", expr(floorDiv(tsCol, step)))
@@ -265,7 +264,6 @@ object TimeSeries {
       gridIn: Option[DataFrame] = None
   ): DataFrame = {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(df.sparkSession)
     import GraftFunctions.foldSum
     val grid = gridIn.getOrElse(resample(df, keys, tsCol, valueCol, step))
     val kc = keys.map(col)
@@ -332,7 +330,6 @@ object TimeSeries {
     require(minPeriod >= 2, "minPeriod must be >= 2")
     require(maxPeriod >= minPeriod, "maxPeriod must be >= minPeriod")
     import graft.functions.GraftFunctions
-    GraftFunctions.register(df.sparkSession)
     import GraftFunctions.foldSum
     import graft.pipeline.Checkpoints.PinOps
     val v = gridIn.getOrElse(resample(df, keys, tsCol, valueCol, step))
@@ -1205,7 +1202,6 @@ object TimeSeries {
       gridIn: Option[DataFrame] = None
   ): DataFrame = {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(df.sparkSession)
     val kc = keys.map(col)
     val dec = decompose(df, keys, tsCol, valueCol, step, period, gridIn)
       .filter(col("trend").isNotNull)

@@ -314,7 +314,6 @@ object Chat {
       dp: Int = 6
   ): DataFrame = {
     require(ns.nonEmpty && ns.forall(_ >= 1), "ns must be positive")
-    graft.functions.GraftFunctions.register(cands.sparkSession)
     import graft.functions.GraftFunctions.foldSum
     val w = Window.partitionBy(col(promptCol)).orderBy(col(scoreCol).asc, col(candCol).asc)
     // null scores would rank first in Spark ASC but last in DuckDB — drop

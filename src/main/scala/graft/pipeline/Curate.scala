@@ -17,8 +17,7 @@ import org.apache.spark.sql.functions._
  * md5 + id, never text), one semi-join back on the id, and a single
  * projection computing every metric (the [[TextAnalysis]] column
  * expressions compose — no metrics joins). Near-dup stages
- * ([[Dedup.minhashLshPairs]] etc.) chain after this with
- * [[Dedup.deduplicated]] when needed.
+ * ([[Dedup.minhashLshPairs]] etc.) chain after this when needed.
  */
 object Curate {
 
@@ -540,7 +539,6 @@ object Curate {
     require(binWidth >= 1, "binWidth must be >= 1")
     require(maxBins >= 2 && maxBins <= 1000, "maxBins must be in [2, 1000]")
     import graft.functions.GraftFunctions
-    GraftFunctions.register(oldDf.sparkSession)
     import GraftFunctions.foldSum
     // clamp BOTH ends into the [0, maxBins) universe: a negative value
     // otherwise lands in a negative bin the universe join silently drops

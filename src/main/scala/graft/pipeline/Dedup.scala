@@ -36,14 +36,6 @@ object Dedup {
 
   // ---- shared shingling --------------------------------------------------
 
-  /** word k-shingles as strings (whole text when shorter than k words). */
-  def shingles(text: Column, k: Int): Column = {
-    val w = split(text, " ")
-    when(size(w) >= k,
-      transform(sequence(lit(0), size(w) - k), i => concat_ws(" ", slice(w, i + 1, lit(k)))))
-      .otherwise(array(concat_ws(" ", w)))
-  }
-
   /**
    * Portable polynomial word hash: fold over code points of
    * `(acc*base + cp) mod (2^31-1)`. Plain arithmetic both Spark and the
@@ -80,12 +72,8 @@ object Dedup {
     sort_array(array_distinct(hashes))
   }
 
-  /** exact Jaccard similarity of two pre-hashed shingle set columns. */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)).cast("double") / size(array_union(a, b))
-
   /** allocation-free Jaccard over SORTED distinct arrays via the native
-    * two-pointer intersect (requires GraftFunctions.register). */
+    * two-pointer intersect. */
   private def fastJaccard(a: Column, b: Column): Column = {
     val inter = GraftFunctions.sortedIntersect(a, b)
     inter.cast("double") / (size(a) + size(b) - inter)
@@ -107,7 +95,6 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // the composite blocking key bounds the quadratic fan-out: tighter
     // blocks (more columns) trade recall across blocks for join size;
     // for a metadata-free scale path see [[ngramJaccardPairsBanded]]
@@ -186,7 +173,6 @@ object Dedup {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    GraftFunctions.register(df.sparkSession)
     val rows = numHashes / bands
     // signatures and shingle sets are reused on both sides of the bucket
     // join and in the verify — materialize once, with lineage truncated so
@@ -209,47 +195,6 @@ object Dedup {
   }
 
   /**
-   * [[minhashLshPairs]] materialized for SHARING across many consumers in
-   * one session: identical algebra and output, but the result persists with
-   * FULL LINEAGE (`Dataset.persist`, not `localCheckpoint`), so downstream
-   * operators' standard on-entry `Checkpoints.free(pairs)` is a no-op — the
-   * same discipline as [[graft.operators.Star.coPurchaseEdgesShared]]. The
-   * signature relation persists only for the one materialization and is
-   * released before returning. At 100 TB the equivalent is writing the
-   * mined pair table out once and pointing every graph/report consumer at
-   * it; release with `pairs.unpersist()` when the session retires it.
-   */
-  def minhashLshPairsShared(
-      df: DataFrame,
-      threshold: Double,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      shingleK: Int = 3,
-      maxBucket: Int = 1000,
-      textCol: String = "text",
-      idCol: String = "doc_id"
-  ): DataFrame = {
-    require(numHashes % bands == 0, "bands must divide numHashes")
-    GraftFunctions.register(df.sparkSession)
-    val rows = numHashes / bands
-    val prepped = df
-      .select(col(idCol).as("id"), GraftFunctions.shingles(col(textCol), shingleK).as("sh"))
-      .withColumn("sig", GraftFunctions.minhash(col("sh"), numHashes))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val candidates = lshCandidatePairs(prepped, bands, rows, maxBucket)
-    val sh = prepped.select(col("id"), col("sh"))
-    val out = candidates
-      .join(sh.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
-      .join(sh.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
-      .select(col("id_a"), col("id_b"), round(fastJaccard(col("sh_a"), col("sh_b")), 4).as("jaccard"))
-      .filter(col("jaccard") >= threshold)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    out.count() // materialize once; every sharer scans the cached relation
-    prepped.unpersist(false) // lineage intact: a lost block just recomputes
-    out
-  }
-
-  /**
    * The OPEN-THRESHOLD scored candidate relation, materialized for SHARING:
    * every LSH candidate pair with its signature-estimated AND exact
    * verified Jaccard — the superset every minhash-family readout derives
@@ -257,7 +202,9 @@ object Dedup {
    * [[minhashLshPairs]] at threshold `t` (same 4-dp snap, same null-drop
    * semantics); [[minhashErrorReportFrom]] and [[similarityHistogramFrom]]
    * are projections/aggregations of the same rows. One mining pass serves
-   * the whole family; same persist discipline as [[minhashLshPairsShared]].
+   * the whole family. The result persists with FULL LINEAGE
+   * (`Dataset.persist`, not `localCheckpoint`), so consumers'
+   * `Checkpoints.free` calls are no-ops on it.
    */
   def minhashScoredCandidatesShared(
       df: DataFrame,
@@ -269,7 +216,6 @@ object Dedup {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    GraftFunctions.register(df.sparkSession)
     val rows = numHashes / bands
     val prepped = df
       .select(col(idCol).as("id"), GraftFunctions.shingles(col(textCol), shingleK).as("sh"))
@@ -320,7 +266,6 @@ object Dedup {
     * relation is, by construction. */
   private[graft] def cappedBucketPairs(
       rel: DataFrame, bucketCols: Seq[String], maxBucket: Int): DataFrame = {
-    GraftFunctions.register(rel.sparkSession)
     rel.groupBy(bucketCols.map(col): _*)
       .agg(GraftFunctions.collectCapped(col("id"), maxBucket).as("__ids"))
       .filter(col("__ids").isNotNull && size(col("__ids")) >= 2)
@@ -369,7 +314,6 @@ object Dedup {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    GraftFunctions.register(df.sparkSession)
     val rows = numHashes / bands
     val prepped = df
       .select(col(idCol).as("id"), col(textCol).as("txt"),
@@ -401,11 +345,8 @@ object Dedup {
    * span's word hashes. One generator projection, zero shuffles — the
    * chunking itself is ONE native pass per document
    * ([[graft.functions.PortableHash.cdcChunkList]], packed
-   * `n_words·2^32+chunk_hash` longs); the HOF reference form
-   * [[cdcChunksHof]] states the same semantics declaratively and a spec
-   * asserts row-identity (the [[graft.functions.PortableHash.shingleSet]] /
-   * winnow discipline applied to the chunker — its interpreted per-word
-   * transform + per-chunk slice/aggregate lambdas were the d_cdc floor).
+   * `n_words·2^32+chunk_hash` longs; its interpreted per-word transform +
+   * per-chunk slice/aggregate lambdas were the d_cdc floor).
    */
   def cdcChunks(
       df: DataFrame,
@@ -414,7 +355,6 @@ object Dedup {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(divisor >= 2, "divisor must be >= 2")
-    GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"),
         posexplode(GraftFunctions.cdcChunks(col(textCol), divisor))
           .as(Seq("chunk_idx", "__p")))
@@ -423,36 +363,6 @@ object Dedup {
         col("chunk_idx").cast("long").as("chunk_idx"),
         col("__p").bitwiseAND(lit(0xFFFFFFFFL)).as("chunk_hash"),
         shiftright(col("__p"), 32).as("n_words"))
-  }
-
-  /** [[cdcChunks]]' declarative HOF reference form — same rows, stated in
-    * portable builtins (the spec's ground truth for the native kernel). */
-  def cdcChunksHof(
-      df: DataFrame,
-      divisor: Int = 8,
-      textCol: String = "text",
-      idCol: String = "doc_id"
-  ): DataFrame = {
-    require(divisor >= 2, "divisor must be >= 2")
-    val wh = transform(split(col(textCol), " "), w => polyHash(w, 131L, 7L))
-    val n  = size(col("__wh"))
-    df.select(col(idCol).as("id"), wh.as("__wh"))
-      .withColumn("__ends",
-        array_sort(array_distinct(concat(
-          filter(sequence(lit(1), n),
-            i => pmod(element_at(col("__wh"), i), lit(divisor.toLong)) === 0),
-          array(n)))))
-      .select(col("id"), col("__wh"),
-        posexplode(expr(
-          """transform(__ends, (e, j) -> struct(
-            |  CASE WHEN j = 0 THEN 1 ELSE element_at(__ends, j) + 1 END AS s, e AS e))"""
-            .stripMargin)).as(Seq("chunk_idx", "se")))
-      .select(
-        col("id").as(idCol),
-        col("chunk_idx").cast("long").as("chunk_idx"),
-        expr(s"aggregate(slice(__wh, se.s, se.e - se.s + 1), CAST(7 AS BIGINT), " +
-          s"(a, b) -> pmod(a * 131 + b, ${PortableHashP}L))").as("chunk_hash"),
-        (col("se.e") - col("se.s") + 1).cast("long").as("n_words"))
   }
 
   /**
@@ -513,7 +423,6 @@ object Dedup {
   ): DataFrame = {
     require(k >= 2 && k <= 32, "gram size k must be in [2,32]")
     require(w >= 2 && w <= 64, "window w must be in [2,64]")
-    GraftFunctions.register(df.sparkSession)
     df.select(col(idCol), explode(GraftFunctions.winnow(col(textCol), k, w)).as("__pk"))
       .select(col(idCol), shiftright(col("__pk"), 32).as("pos"),
         col("__pk").bitwiseAND(lit(0xFFFFFFFFL)).as("fp"))
@@ -580,7 +489,6 @@ object Dedup {
     // per-doc dedup happens INSIDE the kernel (sorted-distinct fp values),
     // so the explode emits distinct (id, fp) rows directly — no relational
     // DISTINCT shuffle over the corpus-sized positional picks
-    GraftFunctions.register(df.sparkSession)
     val fps = df.select(col(idCol).as("id"),
       explode(GraftFunctions.winnowFps(col(textCol), k, w)).as("fp"))
     winnowPairsFrom(fps, minShared, maxBucket)
@@ -589,10 +497,10 @@ object Dedup {
   /**
    * The corpus's DISTINCT `(id, fp)` winnowing fingerprint relation,
    * materialized for SHARING across consumers in one session: one native
-   * fingerprint pass serves [[winnowPairsOn]] AND [[winnowContainmentOn]]
+   * fingerprint pass serves [[winnowPairsOn]] AND [[winnowContainmentFrom]]
    * (before, each gate re-ran the per-character winnow kernel over the
    * whole corpus). Full-lineage persist, same discipline as
-   * [[minhashLshPairsShared]]; at 100 TB this is the persisted
+   * [[minhashScoredCandidatesShared]]; at 100 TB this is the persisted
    * [[winnowFpIndex]] table. Release with `fps.unpersist()`.
    */
   def winnowFpsShared(
@@ -604,7 +512,6 @@ object Dedup {
   ): DataFrame = {
     require(k >= 2 && k <= 32, "gram size k must be in [2,32]")
     require(w >= 2 && w <= 64, "window w must be in [2,64]")
-    GraftFunctions.register(df.sparkSession)
     val fps = df.select(col(idCol).as("id"),
         explode(GraftFunctions.winnowFps(col(textCol), k, w)).as("fp"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -616,15 +523,6 @@ object Dedup {
     * ([[winnowFpsShared]]) — no re-fingerprinting, identical rows. */
   def winnowPairsOn(fps: DataFrame, minShared: Long = 2L, maxBucket: Int = 1000): DataFrame =
     winnowPairsFrom(fps, minShared, maxBucket)
-
-  /** [[winnowContainment]] over a PREBUILT `(id, fp)` relation — the
-    * shared relation replaces the per-call pin, identical rows. */
-  def winnowContainmentOn(
-      fps: DataFrame,
-      minShared: Long = 2L,
-      maxBucket: Int = 200
-  ): DataFrame =
-    winnowContainmentFrom(winnowPairsFrom(fps, minShared, maxBucket), fps)
 
   /** [[winnowContainment]]'s fraction readout over a PREBUILT pair
     * relation ([[winnowPairsOn]]'s rows at the same params) plus the
@@ -675,7 +573,6 @@ object Dedup {
     require(k >= 2 && k <= 32, "gram size k must be in [2,32]")
     require(w >= 2 && w <= 64, "window w must be in [2,64]")
     import graft.pipeline.Checkpoints.PinOps
-    GraftFunctions.register(df.sparkSession)
     val fps = df.select(col(idCol).as("id"),
       explode(GraftFunctions.winnowFps(col(textCol), k, w)).as("fp")).pinned
     val counts = fps.groupBy(col("id")).agg(count(lit(1)).as("nfp"))
@@ -703,7 +600,6 @@ object Dedup {
   ): DataFrame = {
     require(k >= 2 && k <= 32, "gram size k must be in [2,32]")
     require(w >= 2 && w <= 64, "window w must be in [2,64]")
-    GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"), explode(GraftFunctions.winnowFps(col(textCol), k, w)).as("fp"))
   }
 
@@ -768,7 +664,6 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.select(col(idCol).as("id"), GraftFunctions.shingles(col(textCol), shingleK).as("sh"))
       .withColumn("sig", GraftFunctions.minhash(col("sh"), numHashes))
   }
@@ -817,7 +712,6 @@ object Dedup {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    GraftFunctions.register(newDocs.sparkSession)
     val rows  = numHashes / bands
     val fresh = signatureIndex(newDocs, numHashes, shingleK, textCol, idCol).pinned
 
@@ -855,7 +749,6 @@ object Dedup {
       idCol: String = "doc_id",
       evalTextCol: String = "text"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val evalSh = evalDf
       .select(explode(GraftFunctions.shingles(col(evalTextCol), shingleK)).as("sh"))
       .distinct()
@@ -895,7 +788,6 @@ object Dedup {
       idCol: String = "doc_id",
       evalTextCol: String = "text"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // read twice (bloom build + confirm join): pin, release with the result
     val evalSh = evalDf
       .select(explode(GraftFunctions.shingles(col(evalTextCol), shingleK)).as("sh"))
@@ -941,7 +833,6 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // read three times (inverted index + the two size joins): pin once
     val sh = df
       .select(col(idCol).as("id"), GraftFunctions.shingles(col(textCol), shingleK).as("sh"))
@@ -979,7 +870,6 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val e = df
       .select(col(idCol), explode(GraftFunctions.shingles(col(textCol), shingleK)).as("h"))
       .pinned // read twice: the shingle-frequency agg and the join back
@@ -995,33 +885,14 @@ object Dedup {
   }
 
   /**
-   * Per-source dedup health report: doc count, duplicate count (docs that
-   * are NOT their cluster's representative) and the duplicate rate for
-   * each source — the dashboard number for "how much of this feed is
-   * redundant", fed by [[duplicateClusters]]'s CC labeling. One metadata
-   * join + one |sources|-row aggregation on top of the labeling; the
-   * division is double-cast on both engines before the 4-dp snap.
+   * Per-source dedup health report over PREBUILT near-dup pairs
+   * (consumed): doc count, duplicate count (docs that are NOT their
+   * cluster's representative) and the duplicate rate for each source —
+   * the dashboard number for "how much of this feed is redundant", fed by
+   * [[duplicateClustersFromPairs]]' CC labeling. One metadata join + one
+   * |sources|-row aggregation on top of the labeling; the division is
+   * double-cast on both engines before the 4-dp snap.
    */
-  def dedupReport(
-      df: DataFrame,
-      threshold: Double,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      shingleK: Int = 3,
-      maxBucket: Int = 1000,
-      sourceCol: String = "source",
-      textCol: String = "text",
-      idCol: String = "doc_id"
-  ): DataFrame =
-    dedupReportFromPairs(
-      minhashLshPairs(df, threshold, numHashes, bands, shingleK, maxBucket, textCol, idCol)
-        .select(col("id_a"), col("id_b")),
-      df, sourceCol, idCol)
-
-  /** [[dedupReport]] over PREBUILT near-dup pairs (consumed) — the
-    * shared-mining path: one [[minhashLshPairsShared]] relation can feed
-    * this report, [[componentWeightsFromPairs]] and the CC labeling without
-    * re-mining per consumer. */
   def dedupReportFromPairs(
       pairsIn: DataFrame,
       df: DataFrame,
@@ -1030,7 +901,7 @@ object Dedup {
   ): DataFrame =
     dedupReportFromClusters(duplicateClustersFromPairs(pairsIn, df, idCol), df, sourceCol, idCol)
 
-  /** [[dedupReport]]'s readout over a PREBUILT CC labeling
+  /** [[dedupReportFromPairs]]' readout over a PREBUILT CC labeling
     * ([[duplicateClustersShared]]) — the report is one join + one
     * aggregation over the labeling; re-running the convergence loop per
     * readout was the cost, not the readout. Identical rows. */
@@ -1050,36 +921,17 @@ object Dedup {
         round(col("n_dups").cast("double") / col("n_docs").cast("double"), 4))
 
   /**
-   * CROSS-SOURCE DUPLICATE FLOW — the near-dup pair counts per (unordered)
-   * source pair: which crawls/feeds copy from each other, and how much of
-   * each source's duplication is internal (the diagonal). The routing
-   * report a multi-source ingest consults before deciding which feed to
-   * drop; [[dedupReport]] gives the per-source rate, this gives the
-   * between-source structure.
+   * CROSS-SOURCE DUPLICATE FLOW over PREBUILT near-dup pairs — the pair
+   * counts per (unordered) source pair: which crawls/feeds copy from each
+   * other, and how much of each source's duplication is internal (the
+   * diagonal). [[dedupReportFromPairs]] gives the per-source rate, this
+   * gives the between-source structure.
    *
-   * Scale shape: the mined pair list (bare ids, bucket-capped) joins the
-   * `(id, source)` projection twice on the id — two key joins at pair
-   * cardinality, never doc×doc; the final matrix is ≤ |sources|² rows.
-   * `least/greatest` collapse the unordered pair so A→B and B→A count as
-   * one cell.
+   * Scale shape: the pair list (bare ids) joins the `(id, source)`
+   * projection twice on the id — two key joins at pair cardinality, never
+   * doc×doc; the final matrix is ≤ |sources|² rows. `least/greatest`
+   * collapse the unordered pair so A→B and B→A count as one cell.
    */
-  def crossSourceDuplicates(
-      df: DataFrame,
-      threshold: Double,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      shingleK: Int = 3,
-      maxBucket: Int = 1000,
-      sourceCol: String = "source",
-      textCol: String = "text",
-      idCol: String = "doc_id"
-  ): DataFrame =
-    crossSourceDuplicatesFromPairs(
-      minhashLshPairs(df, threshold, numHashes, bands, shingleK, maxBucket, textCol, idCol),
-      df, sourceCol, idCol)
-
-  /** [[crossSourceDuplicates]] over PREBUILT near-dup pairs — the
-    * shared-mining path (see [[dedupReportFromPairs]]). */
   def crossSourceDuplicatesFromPairs(
       pairsIn: DataFrame,
       df: DataFrame,
@@ -1117,7 +969,6 @@ object Dedup {
       idCol: String = "doc_id",
       evalTextCol: String = "text"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val evalSh = evalDf
       .select(explode(GraftFunctions.shingles(col(evalTextCol), shingleK)).as("sh"))
       .distinct()
@@ -1150,7 +1001,6 @@ object Dedup {
       minDocs: Long = 2L,
       textCol: String = "text"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df
       .select(explode(GraftFunctions.shingles(col(textCol), spanK)).as("span_hash"))
       .groupBy(col("span_hash"))
@@ -1185,8 +1035,8 @@ object Dedup {
    * TRUE duplicate clusters: connected components over the verified
    * near-dup pair graph, every doc labeled with the smallest id in its
    * component (`rep`) — the union-find step large corpus-dedup pipelines
-   * run after LSH pair mining, which [[minhashLshDuplicates]]'s single
-   * pass only approximates (it misses transitive chains A~B~C where A≁C).
+   * run after LSH pair mining; dropping the larger id of each pair only
+   * approximates it (it misses transitive chains A~B~C where A≁C).
    *
    * Iterative min-label propagation: each round joins labels across the
    * EDGE set (near-dup pairs — a vanishing fraction of the corpus; the
@@ -1352,7 +1202,6 @@ object Dedup {
       groupCol: String = "source",
       textCol: String = "text"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df.select(col(groupCol), explode(GraftFunctions.shingles(col(textCol), k)).as("__g"))
       .groupBy(col(groupCol), col("__g"))
       .agg(count(lit(1)).as("__c"))
@@ -1366,35 +1215,13 @@ object Dedup {
   }
 
   /**
-   * DUPLICATE-AWARE SAMPLING WEIGHTS — the soft alternative to dropping
-   * near-dups: every document weighs `1 / |its near-dup component|`, so
-   * each component contributes ONE document's worth of mass to the
-   * training mix (singletons weigh 1). The standard middle ground when
-   * hard dedup is too blunt: variants stay in the corpus for coverage,
-   * their over-count is neutralized. Feed the `weight` column to
+   * DUPLICATE-AWARE SAMPLING WEIGHTS over PREBUILT near-dup pairs
+   * (consumed) — the soft alternative to dropping near-dups: every
+   * document weighs `1 / |its near-dup component|`, so each component
+   * contributes ONE document's worth of mass to the training mix
+   * (singletons weigh 1). Feed the `weight` column to
    * [[Sampling.weightedSample]] / loss weighting downstream.
-   *
-   * Scale shape: [[duplicateClusters]]' bounded CC labeling + one
-   * rep-keyed count + one id-keyed join; weights are one exact divide,
-   * snapped to 6 dp.
    */
-  def componentWeights(
-      df: DataFrame,
-      threshold: Double,
-      numHashes: Int = 64,
-      bands: Int = 16,
-      shingleK: Int = 3,
-      maxBucket: Int = 1000,
-      textCol: String = "text",
-      idCol: String = "doc_id"
-  ): DataFrame =
-    componentWeightsFromPairs(
-      minhashLshPairs(df, threshold, numHashes, bands, shingleK, maxBucket, textCol, idCol)
-        .select(col("id_a"), col("id_b")),
-      df, idCol)
-
-  /** [[componentWeights]] over PREBUILT near-dup pairs (consumed) — the
-    * shared-mining path (see [[dedupReportFromPairs]]). */
   def componentWeightsFromPairs(
       pairsIn: DataFrame,
       df: DataFrame,
@@ -1402,7 +1229,7 @@ object Dedup {
   ): DataFrame =
     componentWeightsFromClusters(duplicateClustersFromPairs(pairsIn, df, idCol), idCol)
 
-  /** [[componentWeights]]' readout over a PREBUILT CC labeling
+  /** [[componentWeightsFromPairs]]' readout over a PREBUILT CC labeling
     * ([[duplicateClustersShared]]) — size counts + the 1/size weight are
     * two cheap passes over the labeling; identical rows. */
   def componentWeightsFromClusters(
@@ -1426,52 +1253,10 @@ object Dedup {
     clusters.groupBy(col(repCol)).agg(count(lit(1)).as("cluster_size"))
       .groupBy(col("cluster_size")).agg(count(lit(1)).as("n_clusters"))
 
-  /**
-   * Dedup by LSH pairs: ids that have a near-duplicate with a smaller id.
-   * (Single-pass approximation of connected components — exact CC needs
-   * iteration, unnecessary for keep-one-representative semantics.)
-   */
-  def minhashLshDuplicates(df: DataFrame, threshold: Double): DataFrame =
-    minhashLshPairs(df, threshold).select(col("id_b").as("doc_id")).distinct()
-
-  /** The deduplicated corpus: drop every doc that has a near-duplicate with
-    * a smaller id (left-anti join against the duplicate set). */
-  def deduplicated(df: DataFrame, threshold: Double, idCol: String = "doc_id"): DataFrame =
-    df.join(minhashLshDuplicates(df, threshold).withColumnRenamed("doc_id", idCol), Seq(idCol), "left_anti")
-
   // ---- SimHash -----------------------------------------------------------
 
-  /** second-lane word rehash — HOF mirror of
-    * [[graft.functions.PortableHash.lane2]]: two independent modular
-    * reductions (mod P, mod P31b) rehashed affinely and recombined < 2^62.
-    * `pmod == %` here because wide word hashes are non-negative. */
-  def lane2Hash(h: Column): Column = {
-    import graft.functions.{PortableHash => PH}
-    val g1 = pmod(pmod(h, lit(PH.P31)) * lit(PH.L2A1) + lit(PH.L2C1), lit(PH.P31))
-    val g2 = pmod(pmod(h, lit(PH.P31b)) * lit(PH.L2A2) + lit(PH.L2C2), lit(PH.P31))
-    g1 * lit(PH.P31) + g2
-  }
-
-  /**
-   * 128-bit SimHash signature packed into two non-negative longs
-   * `[lo, hi]`: per position, sign of the sum of ±1 over word hashes
-   * (positions 0-63 from the wide hash bits, 64-127 from the [[lane2Hash]]
-   * rehash bits). HOF reference form of the native
-   * [[graft.functions.PortableHash.simHash128]] — a spec asserts identity.
-   */
-  def simhashSignature(hashesCol: Column): Column = {
-    def packed(hs: Column): Column =
-      (0 until 64).map { b =>
-        when(
-          aggregate(hs, lit(0),
-            (acc, h) => acc + when(shiftright(h, b).bitwiseAND(lit(1L)) === 1L, 1).otherwise(-1)
-          ) > 0, lit(1L << b)).otherwise(lit(0L))
-      }.reduce(_ + _)
-    array(packed(hashesCol), packed(transform(hashesCol, lane2Hash(_))))
-  }
-
   /** sorted distinct wide (~62-bit) word hashes of a text column (input to
-    * [[simhashSignature]]): two independent portable polynomial hashes
+    * [[graft.functions.GraftFunctions.simhash]]): two independent portable polynomial hashes
     * combined as `h131 * P + h137` — engine-portable, unlike xxhash64, so
     * the oracle can replay the signature. Bits 62-63 are ~always 0 (the
     * value is uniform below P² ≈ 2^62): those signature positions are
@@ -1498,7 +1283,6 @@ object Dedup {
       textCol: String = "text",
       idCol: String = "doc_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // signatures are reused on both sides of the bucket join and for the
     // final Hamming check — materialize once, with lineage truncated so the
     // blocks are reclaimed by the ContextCleaner once the result is dropped
@@ -1547,7 +1331,6 @@ object Dedup {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(numHashes % bands == 0, "bands must divide numHashes")
-    GraftFunctions.register(df.sparkSession)
     val rows = numHashes / bands
     val prepped = df
       .select(col(idCol).as("id"), GraftFunctions.shingles(col(textCol), shingleK).as("sh"))

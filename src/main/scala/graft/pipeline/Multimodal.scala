@@ -101,7 +101,6 @@ object Multimodal {
     * expanded to the operator's output columns. */
   private def decode(media: DataFrame, fn: String, payloadCol: String, idCol: String,
       caps: Int*): DataFrame = {
-    graft.functions.GraftFunctions.register(media.sparkSession)
     media.select(col(idCol), call_function(fn, col(payloadCol) +: caps.map(c => lit(c)): _*).as("__k"))
       .select(col(idCol), col("__k.*"))
   }
@@ -169,7 +168,6 @@ object Multimodal {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(blocks >= 1 && blocks <= 62, "blocks must be in [1, 62]")
-    graft.functions.GraftFunctions.register(media.sparkSession)
     media
       .filter(expr(s"octet_length($payloadCol)") > 0)
       .withColumn("__sig",
@@ -796,7 +794,6 @@ object Multimodal {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(window >= 1, "window must be >= 1")
-    graft.functions.GraftFunctions.register(media.sparkSession)
     media
       // an empty payload emits no window rows (the oracle's range(0, 0)
       // emits none); drop empties before the explode
@@ -840,7 +837,6 @@ object Multimodal {
   ): DataFrame = {
     require(window >= 1, "window must be >= 1")
     require(jump >= 0.0, "jump must be >= 0")
-    graft.functions.GraftFunctions.register(media.sparkSession)
     media
       .filter(expr(s"octet_length($payloadCol)") > 0)
       .select(col(idCol),

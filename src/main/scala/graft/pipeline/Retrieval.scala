@@ -42,13 +42,6 @@ object Retrieval {
     * interpreted HOF form single-threaded AQE-coalesced scoring stages. */
   private def foldSum(xs: Column): Column = graft.functions.GraftFunctions.foldSum(xs)
 
-  /** every scoring path funnels through [[foldSum]] → the native function
-    * registry must be session-registered before plan analysis. */
-  private def withKernels(df: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
-    df
-  }
-
   /** shared Okapi scoring over hit relations: `tf` = (extraGroupCols*,
     * idCol, __term, __tf), `dfreq` = (__term, __df), `dl` = (idCol, __dl).
     * Every scoring path — corpus scan, index, batch join (which groups by
@@ -68,7 +61,7 @@ object Retrieval {
     val idf = log(lit(1.0) + (lit(n.toDouble) - col("__df") + 0.5) / (col("__df") + 0.5))
     val wt  = col("__idf") * (col("__tf") * (k1 + 1)) /
       (col("__tf") + lit(k1) * (lit(1.0) - b + lit(b) * col("__dl") / avgdl))
-    withKernels(tf).join(broadcast(dfreq.withColumn("__idf", idf)), "__term")
+    tf.join(broadcast(dfreq.withColumn("__idf", idf)), "__term")
       .join(dl, idCol)
       .groupBy((extraGroupCols :+ idCol).map(col): _*)
       .agg(foldSum(collect_list(wt)).as("score"))
@@ -459,7 +452,7 @@ object Retrieval {
       .join(broadcast(dfreq.withColumn("__idf", idf)), "__term")
       .join(ix.doclens.select(col(idCol), col("dl").as("__dl")), idCol)
       .select(col("__term"), col(idCol), wt.as("__wt"))
-    val scored = withKernels(wts).join(broadcast(qt), "__term")
+    val scored = wts.join(broadcast(qt), "__term")
       .groupBy(col(qidCol), col(idCol))
       .agg(foldSum(collect_list(col("__wt"))).as("score"))
     val w = Window.partitionBy(col(qidCol)).orderBy(col("score").desc, col(idCol))
@@ -491,7 +484,6 @@ object Retrieval {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(nQueries > 0, "nQueries must be positive")
-    graft.functions.GraftFunctions.register(results.sparkSession)
     val firsts = results.join(relevant, Seq(qidCol, idCol), "left_semi")
       .groupBy(col(qidCol)).agg(min(col("rank")).as("__fr"))
     firsts
@@ -588,7 +580,6 @@ object Retrieval {
   ): DataFrame = {
     require(k >= 1, "k must be >= 1")
     require(p > 0.0 && p < 1.0, "p must be in (0, 1)")
-    graft.functions.GraftFunctions.register(a.sparkSession)
     val wOverD = (1 to k).map(d => math.pow(p, d - 1) / d).toArray
     def ranked(df: DataFrame, out: String) =
       df.select(col(idCol).as("id"),
@@ -671,7 +662,6 @@ object Retrieval {
   ): DataFrame = {
     require(terms.nonEmpty, "need at least one query term")
     require(mu > 0.0, "Dirichlet mu must be positive")
-    graft.functions.GraftFunctions.register(docs.sparkSession)
     val ts   = terms.distinct
     val toks = docs.select(col(idCol), explode(TextAnalysis.words(col(textCol))).as("__term"))
     val dl   = docs.filter(col(textCol).isNotNull)
@@ -713,7 +703,6 @@ object Retrieval {
     require(terms.nonEmpty, "need at least one query term")
     require(mu > 0.0, "Dirichlet mu must be positive")
     require(ix.sumDl > 0, "empty corpus")
-    graft.functions.GraftFunctions.register(ix.postings.sparkSession)
     val ts = terms.distinct
     val tf = ix.postings.filter(col("term").isin(ts: _*))
       .select(col(idCol), col("term").as("__term"), col("tf").as("__tf"))
@@ -1206,7 +1195,6 @@ object Retrieval {
     require(k >= 1, "k must be >= 1")
     require(maxDfFrac > 0.0 && maxDfFrac <= 1.0, "maxDfFrac must be in (0, 1]")
     require(maxDfCap >= 1, "maxDfCap must be >= 1")
-    graft.functions.GraftFunctions.register(ix.postings.sparkSession)
     // the stop-term cut scales WITH the corpus (a fixed count would drop
     // every term once N grows past it): terms in more than maxDfFrac of
     // docs leave the vector space; fan-out stays ≤ (maxDfFrac·N)·Σdf.

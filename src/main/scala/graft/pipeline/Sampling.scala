@@ -19,10 +19,9 @@ object Sampling {
   /** The sampling hash: portable polynomial over the id's decimal digits,
     * reduced mod 10000 — two engines computing it agree bit-for-bit
     * ([[graft.OracleGen]] replays it in SQL). One compiled call per row
-    * ([[GraftFunctions.polyHash]], registered on `df`'s session), value-
-    * identical to the HOF reference form [[Dedup.polyHash]]. */
-  private[graft] def sampleHash(df: DataFrame, idCol: Column, seed: Long): Column = {
-    GraftFunctions.register(df.sparkSession)
+    * ([[GraftFunctions.polyHash]]), value-identical to the HOF reference
+    * form [[Dedup.polyHash]]. */
+  private[graft] def sampleHash(idCol: Column, seed: Long): Column = {
     pmod(GraftFunctions.polyHash(idCol.cast("string"), 131L, seed), lit(10000L))
   }
 
@@ -30,7 +29,7 @@ object Sampling {
     * sample forever, independent of partitioning and order. */
   def hashSample(df: DataFrame, rate: Double, seed: Long = 7L, idCol: String = "doc_id"): DataFrame = {
     require(rate >= 0 && rate <= 1, "rate must be in [0,1]")
-    df.filter(sampleHash(df, col(idCol), seed) < lit(math.round(rate * 10000)))
+    df.filter(sampleHash(col(idCol), seed) < lit(math.round(rate * 10000)))
   }
 
   /**
@@ -59,7 +58,7 @@ object Sampling {
     if (maxRow.isNullAt(0)) return df.filter(lit(false)) // empty / all-null weights
     val maxW = maxRow.getDouble(0)
     require(maxW > 0, s"$weightCol must have a positive maximum, got $maxW")
-    df.filter(sampleHash(df, col(idCol), seed) <
+    df.filter(sampleHash(col(idCol), seed) <
       round(lit(10000.0 * fraction) * col(weightCol).cast("double") / lit(maxW), 0))
   }
 
@@ -79,7 +78,7 @@ object Sampling {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(rates.values.forall(r => r >= 0 && r <= 1), "rates must be in [0,1]")
-    val h = sampleHash(df, col(idCol), seed)
+    val h = sampleHash(col(idCol), seed)
     val keep = rates.toSeq.sortBy(_._1).map { case (stratum, rate) =>
       col(stratumCol) === lit(stratum) && h < lit(math.round(rate * 10000))
     }.reduceOption(_ || _).getOrElse(lit(false))
@@ -169,7 +168,7 @@ object Sampling {
     require(weights.nonEmpty, "weights must be non-empty")
     require(weights.forall(_._2 >= 0), "weights must be non-negative")
     require(math.abs(weights.map(_._2).sum - 1.0) < 1e-9, "weights must sum to 1")
-    val h = sampleHash(df, col(idCol), seed)
+    val h = sampleHash(col(idCol), seed)
     // cumulative integer cutoffs on the same 10000-lattice as the hash;
     // the last split takes the remainder so rounding can't orphan a row
     val cuts  = weights.scanLeft(0L) { case (acc, (_, w)) => acc + math.round(w * 10000) }.tail
@@ -190,7 +189,7 @@ object Sampling {
    */
   def kfold(df: DataFrame, k: Int, seed: Long = 7L, idCol: String = "doc_id"): DataFrame = {
     require(k >= 2 && k <= 10000, "k must be in [2, 10000]")
-    df.withColumn("fold", pmod(sampleHash(df, col(idCol), seed), lit(k.toLong)))
+    df.withColumn("fold", pmod(sampleHash(col(idCol), seed), lit(k.toLong)))
   }
 
   /** [[stratifiedHashSample]] with [[temperatureMixRates]]-derived rates —
@@ -547,7 +546,7 @@ object Sampling {
   ): DataFrame = {
     require(k >= 1, "k must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    val h = sampleHash(df, col(idCol), seed)
+    val h = sampleHash(col(idCol), seed)
     val w = Window.partitionBy(col(srcCol)).orderBy(h.asc, col(idCol).asc)
     df.select(col(srcCol), col(idCol), h.as("__h"))
       .withColumn("__rn", row_number().over(w))

@@ -30,7 +30,7 @@ object Similarity {
     aggregate(zip_with(a, b, (x, y) => x.cast("double") * y.cast("double")),
       lit(0.0), (acc, x) => acc + x)
 
-  /** native fast path (requires GraftFunctions.register on the session). */
+  /** native fast path. */
   private def fdot(a: Column, b: Column): Column = GraftFunctions.dotProduct(a, b)
   private def fnorm(a: Column): Column           = sqrt(fdot(a, a))
 
@@ -39,10 +39,6 @@ object Similarity {
     * micro-batch must flow through the gate, not throw). */
   private def inferDim(df: DataFrame, vecCol: String): Int =
     df.select(size(col(vecCol))).head(1).headOption.fold(1)(_.getInt(0))
-
-  def norm(a: Column): Column = sqrt(dot(a, a))
-
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (norm(a) * norm(b))
 
   // ---- brute force -------------------------------------------------------
 
@@ -58,7 +54,6 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val q = lit(queryVec.map(_.toDouble).toArray)
     df.select(col(idCol), (fdot(col(vecCol), q) / (fnorm(col(vecCol)) * fnorm(q))).as("sim"))
       .orderBy(col("sim").desc, col(idCol))
@@ -74,7 +69,6 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     // cast float→double once per row, not once per pair
     val vd      = transform(col(vecCol), x => x.cast("double"))
     val prepped = df.select(col(idCol).as("id"), vd.as("v"), fnorm(col(vecCol)).as("n"))
@@ -193,7 +187,6 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val d = if (dim > 0) dim else inferDim(df, vecCol)
     val tablePlanes = (0 until tables).map(t => hyperplanes(planesPerTable, d, seed = 42L + t))
     // ALL table buckets from one native kernel call: the vector is read
@@ -232,7 +225,7 @@ object Similarity {
       .filter(col("sim") >= threshold)
   }
 
-  /** Embedding twin of [[Dedup.deduplicated]]: drop every vector with a
+  /** Embedding near-dup filter: drop every vector with a
     * smaller-id cosine near-duplicate (single LSH pass — pairwise, the
     * within-batch guard; run [[semDedup]]/[[lshCosinePairs]] + connected
     * components for corpus-wide transitive dedup). */
@@ -269,7 +262,6 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val d = if (dim > 0) dim else inferDim(df, vecCol)
     val tablePlanes = (0 until tables).map(t => hyperplanes(planesPerTable, d, seed = 42L + t))
     df.select(col(idCol).as("id"), col(vecCol).as("v"), fnorm(col(vecCol)).as("n"),
@@ -483,7 +475,6 @@ object Similarity {
     // shuffle+sort passes [guide §2.4]
     val simsP = sims.pinned // feeds both neighborhood aggs + the margin join
     import graft.functions.GraftFunctions
-    GraftFunctions.register(a.sparkSession)
     def topk(side: String) = simsP.groupBy(col(side))
       .agg(GraftFunctions.topKSum(col("__s"), k).as("__t"))
     val aggA = topk("id_a").select(col("id_a"),
@@ -543,8 +534,8 @@ object Similarity {
       corpusIn: Option[DataFrame] = None
   ): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    // a prebuilt mined-pair relation (the session-shared
-    // Dedup.minhashLshPairsShared) replaces the per-call mining pass —
+    // a prebuilt mined-pair relation (a session-shared one) replaces the
+    // per-call mining pass —
     // identical relation, so identical triplets
     val minedPairs = pairsIn.getOrElse(
       Dedup.minhashLshPairs(docsDf, jaccardThreshold, idCol = docIdCol))
@@ -659,7 +650,6 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"
   ): IvfIndex = {
-    GraftFunctions.register(df.sparkSession)
     var cents: Map[Long, Seq[Float]] = df.orderBy(col(idCol)).limit(nlist).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap
 
@@ -699,7 +689,6 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val cents: Map[Long, Seq[Float]] = df.orderBy(col(idCol)).limit(nlist).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap
     assignByProjection(df, cents, vecCol, idCol)
@@ -754,7 +743,6 @@ object Similarity {
       nprobe: Int
   ): DataFrame = {
     val probed = probeList(centroidVecs, queryVec, nprobe)
-    GraftFunctions.register(assigned.sparkSession)
     val q = lit(queryVec.map(_.toDouble).toArray)
     assigned
       .filter(col("centroid").isin(probed: _*)) // partition pruning at scale
@@ -806,7 +794,6 @@ object Similarity {
     val flat  = new Array[Double](m * kpq * dsub)
     for (j <- 0 until m; c <- 0 until kpq; i <- 0 until dsub)
       flat((j * kpq + c) * dsub + i) = cents(j)(c)(i).toDouble
-    GraftFunctions.register(df.sparkSession)
     val codes = df.select(col(idCol).as("id"),
       GraftFunctions.pqEncode(col(vecCol), flat, m, dsub, kpq).as("codes"))
     PqIndex(codes, cents, m, dsub, kpq)
@@ -886,7 +873,6 @@ object Similarity {
       dp: Int = 3
   ): DataFrame = {
     require(nCand >= k, "nCand must be >= k")
-    GraftFunctions.register(df.sparkSession)
     val cand = pqTopK(ix, queryVec, nCand).select(col("id"))
     val q    = lit(queryVec.map(_.toDouble).toArray)
     df.join(broadcast(cand), df(idCol) === cand("id"))
@@ -921,7 +907,6 @@ object Similarity {
   ): DataFrame = {
     require(nCand >= k, "nCand must be >= k")
     require(dPrefix > 0 && dPrefix <= queryVec.length, "dPrefix must be in [1, dim]")
-    GraftFunctions.register(df.sparkSession)
     val qPre = lit(queryVec.take(dPrefix).map(_.toDouble).toArray)
     val pre  = slice(col(vecCol), 1, dPrefix)
     val cand = df
@@ -960,7 +945,6 @@ object Similarity {
       dp: Int = 3
   ): DataFrame = {
     require(nCand >= k, "nCand must be >= k")
-    GraftFunctions.register(df.sparkSession)
     val q   = lit(queryVec.map(_.toDouble).toArray)
     val ham = size(filter(
       zip_with(col(vecCol), q, (x, y) => (x >= 0) =!= (y >= 0)), b => b))
@@ -999,7 +983,6 @@ object Similarity {
       dp: Int = 3
   ): DataFrame = {
     require(nCand >= k, "nCand must be >= k")
-    GraftFunctions.register(df.sparkSession)
     // quantized-cosine shortlist in ONE compiled pass per row — the HOF
     // spelling (transform + array_max inside the lambda) evaluated
     // interpreted at O(dim²) per row, three times per row (§4); the kernel
@@ -1046,7 +1029,6 @@ object Similarity {
       idCol: String = "vec_id",
       dp: Int = 4
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val cents: Map[Long, Seq[Float]] = df.orderBy(col(idCol)).limit(nlist).collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toSeq).toMap
     val probed = probeList(cents, queryVec, nprobe)
@@ -1287,7 +1269,6 @@ object Similarity {
       vecCol: String = "embedding",
       idCol: String = "vec_id"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val assigned = ivfBuild(df, nlist, refineIterations, vecCol, idCol).assigned
       // feeds BOTH self-join sides and the final kept-flag projection —
       // materialize once so the scan + centroid-assignment kernel doesn't
@@ -1306,7 +1287,6 @@ object Similarity {
    * reads co-located centroid partitions.
    */
   def semDedupWith(assignedIn: DataFrame, tau: Double): DataFrame = {
-    GraftFunctions.register(assignedIn.sparkSession)
     // norms once per vector, pairs pay one dot product each
     val assigned = assignedIn.select(col("id"), col("centroid"), col("v"), fnorm(col("v")).as("n"))
     val a = assigned.alias("a")
@@ -1323,40 +1303,21 @@ object Similarity {
   }
 
   /**
-   * PCA-REDUCED TWO-STAGE RETRIEVAL — "reduce then index" made concrete:
-   * project the corpus to its top `kDims` principal coordinates
-   * ([[pcaProject]]), shortlist `nCand` candidates by cosine in the
-   * REDUCED space (a `kDims`-component fold instead of a full-dimension
-   * one — the scan the reduced index replaces), then re-rank the
-   * candidates by exact full-dimension cosine. [[matryoshkaTopK]] does
-   * the same two-stage with prefix dimensions a model was TRAINED to
-   * concentrate; this is the classical post-hoc alternative when the
-   * encoder wasn't (PCA concentrates the variance instead).
+   * PCA-REDUCED TWO-STAGE RETRIEVAL off a prebuilt [[PcaModel]]
+   * (`kDims ≤ model.kMax`) — "reduce then index" made concrete: project the
+   * corpus to its top `kDims` principal coordinates, shortlist `nCand`
+   * candidates by cosine in the REDUCED space (a `kDims`-component fold
+   * instead of a full-dimension one — the scan the reduced index replaces),
+   * then re-rank the candidates by exact full-dimension cosine.
+   * [[matryoshkaTopK]] does the same two-stage with prefix dimensions a
+   * model was TRAINED to concentrate; this is the classical post-hoc
+   * alternative when the encoder wasn't. The shortlist reads the shared
+   * snapped relation instead of re-fitting the basis per call.
    *
-   * Determinism: projected coordinates come 6-dp-snapped off
-   * [[pcaProject]], so the shortlist cosine folds identical doubles on
-   * both engines; the re-rank is `ann_topk`'s proven cosine/round
-   * spelling. The query's projected vector is one bounded head() — the
-   * same one-row-collect class as every literal-query gate.
+   * Determinism: projected coordinates come 6-dp-snapped, so the shortlist
+   * cosine folds identical doubles on both engines; the re-rank is
+   * `ann_topk`'s proven cosine/round spelling.
    */
-  def pcaTopKRerank(
-      df: DataFrame,
-      qid: Long,
-      k: Int,
-      nCand: Int,
-      kDims: Int = 4,
-      iters: Int = 12,
-      vecCol: String = "embedding",
-      idCol: String = "vec_id",
-      dp: Int = 3
-  ): DataFrame = {
-    require(nCand >= k, "nCand must be >= k")
-    pcaRerankOn(pcaProject(df, kDims, iters, idCol, vecCol), df, qid, k, nCand, kDims, vecCol, idCol, dp)
-  }
-
-  /** [[pcaTopKRerank]] off a prebuilt [[PcaModel]] (`kDims ≤ model.kMax`):
-    * the reduced-scan shortlist reads the shared snapped relation instead
-    * of re-fitting the basis per call. */
   def pcaTopKRerankFrom(
       model: Option[PcaModel],
       df: DataFrame,
@@ -1376,12 +1337,11 @@ object Similarity {
       proj: DataFrame, df: DataFrame, qid: Long, k: Int, nCand: Int,
       kDims: Int, vecCol: String, idCol: String, dp: Int
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val pv = proj.select(col(idCol).as("id"),
       array((1 to kDims).map(i => col(s"pc$i")): _*).as("__v"))
       .localCheckpoint(true) // the query row and the shortlist scan share one projection
-    // the pv checkpoint truncates lineage, so pcaProject's internal pin
-    // (the snapped vector column) would otherwise leak — free it now
+    // the pv checkpoint truncates lineage, so a pin beneath the
+    // projection would otherwise leak — free it now
     Checkpoints.free(proj)
     val qRow = pv.filter(col("id") === qid).head(1)
     require(qRow.nonEmpty, s"query id $qid not found")
@@ -1449,7 +1409,6 @@ object Similarity {
     var centers = Vector(vecOf(seed(0)))
     var exhausted = false // fewer than k vectors: stop issuing empty-remainder scans
     var round_ = 2
-    graft.functions.GraftFunctions.register(spark)
     while (round_ <= k && !exhausted) {
       val minD = graft.functions.GraftFunctions.minEuclDist(col("v"), centers)
       val chosenIds = picks.map(_._1).toSeq
@@ -1563,7 +1522,6 @@ object Similarity {
       df: DataFrame,
       vecCol: String = "embedding"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     val norm = fnorm(col(vecCol))
     // compiled unit-snap: the HOF spelling embedded the norm subtree
     // inside the per-element lambda, costing O(dim²) interpreted per row
@@ -1641,8 +1599,16 @@ object Similarity {
 
   private def r6(x: Double): Double = OracleCompat.r6(x)
 
-  /** Covariance + top-k eigenpairs of the embedding cloud; shared core of
-    * [[pcaProject]] / [[pcaVarianceReport]]. Returns None on empty input.
+  /** The lattice snap shared by every PCA entry point: `(idCol, q)` with
+    * `q` the 1e-4-lattice int64 coordinates. */
+  private def pcaSnap(df: DataFrame, idCol: String, vecCol: String): DataFrame =
+    df.select(col(idCol),
+      transform(col(vecCol), x => round(x.cast("double") * lit(10000.0), 0).cast("long")).as("q"))
+
+  /** Covariance + top-k eigenpairs of the embedding cloud over a
+    * MATERIALIZED snapped relation, so a session-shared persisted snap
+    * ([[pcaModelShared]]) runs it once for many consumers. Returns None on
+    * empty input.
     *
     * Engine-portable determinism, end to end:
     *  1. coordinates snap to the 1e-4 integer lattice (`round(x·10⁴)::long`)
@@ -1668,29 +1634,6 @@ object Similarity {
     * PARTITION (at d=64: 4096 longs), never per row. The explode could
     * halve via symmetry; full d² keeps the index arithmetic trivial.
     */
-  /** The lattice snap shared by every PCA entry point: `(idCol, q)` with
-    * `q` the 1e-4-lattice int64 coordinates. */
-  private def pcaSnap(df: DataFrame, idCol: String, vecCol: String): DataFrame =
-    df.select(col(idCol),
-      transform(col(vecCol), x => round(x.cast("double") * lit(10000.0), 0).cast("long")).as("q"))
-
-  private def pcaCore(
-      df: DataFrame, k: Int, iters: Int, idCol: String, vecCol: String
-  ): Option[(DataFrame, Array[Double], Array[Array[Double]], Array[Double], Double)] = {
-    require(k >= 1, "k must be >= 1")
-    require(iters >= 1 && iters <= 256, "iters must be in [1,256]")
-    val snapped = pcaSnap(df, idCol, vecCol)
-      .pinned // materialize the snap: the d² explode must read a stored
-              // column, not re-evaluate the transform per product
-    pcaSpectrum(snapped, k, iters) match {
-      case None => Checkpoints.free(snapped); None
-      case Some((means, comps, lams, trace)) => Some((snapped, means, comps, lams, trace))
-    }
-  }
-
-  /** Covariance spectrum over a MATERIALIZED snapped relation — the driver-
-    * side half of [[pcaCore]], factored out so a session-shared persisted
-    * snap ([[pcaModelShared]]) runs it once for many consumers. */
   private def pcaSpectrum(
       snapped: DataFrame, k: Int, iters: Int
   ): Option[(Array[Double], Array[Array[Double]], Array[Double], Double)] = {
@@ -1787,8 +1730,16 @@ object Similarity {
     }
   }
 
-  /** [[pcaProject]] off a prebuilt [[PcaModel]] (`k ≤ model.kMax`); `df`
-    * only shapes the empty frame when the model is absent (empty input). */
+  /**
+   * Per-vector coordinates along the top-k principal components of a
+   * prebuilt [[PcaModel]] (`k ≤ model.kMax`), in ORIGINAL units (the
+   * lattice scale divides back out), snapped to 6 dp — `(idCol, pc1..pck)`.
+   * This is the portable core of PCA reduction before ANN indexing:
+   * project to the top directions, index the small vectors. The projection
+   * is one codegen'd ordered fold per component over the snapped column;
+   * `df` only shapes the empty frame when the model is absent (empty
+   * input).
+   */
   def pcaProjectFrom(
       model: Option[PcaModel],
       df: DataFrame,
@@ -1803,7 +1754,14 @@ object Similarity {
       m.snapped.select(col(idCol) +: pcaProjCols(m.means, m.comps, m.lams, k, whiten): _*)
   }
 
-  /** [[pcaVarianceReport]] off a prebuilt [[PcaModel]]. */
+  /**
+   * Spectrum summary of a prebuilt [[PcaModel]]'s top `k` components —
+   * `(component, eigenvalue, explained_ratio)`: the eigenvalue back in
+   * original units (int-space λ / 1e8) and its share of TOTAL variance
+   * (the pre-deflation trace; scale cancels). The k-component cutoff this
+   * reports is the dimensionality-reduction decision itself: how much of
+   * the cloud's variance the reduced index preserves.
+   */
   def pcaVarianceReportFrom(model: Option[PcaModel], spark: org.apache.spark.sql.SparkSession, k: Int): DataFrame = {
     import spark.implicits._
     model match {
@@ -1819,31 +1777,8 @@ object Similarity {
     }
   }
 
-  /**
-   * Per-vector coordinates along the top-k principal components of the
-   * embedding cloud, in ORIGINAL units (the lattice scale divides back
-   * out), snapped to 6 dp — `(idCol, pc1..pck)`. This is the portable
-   * core of PCA reduction before ANN indexing: project to the top
-   * directions, index the small vectors ([[pcaCore]] documents the
-   * determinism and scale story). The projection is one codegen'd
-   * ordered fold per component over the pinned snapped column.
-   */
-  def pcaProject(
-      df: DataFrame,
-      k: Int = 2,
-      iters: Int = 12,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding",
-      whiten: Boolean = false
-  ): DataFrame = pcaCore(df, k, iters, idCol, vecCol) match {
-    case None =>
-      df.limit(0).select(col(idCol) +: (1 to k).map(i => lit(0.0).as(s"pc$i")): _*)
-    case Some((snapped, means, comps, lams, _)) =>
-      snapped.select(col(idCol) +: pcaProjCols(means, comps, lams, k, whiten): _*)
-  }
-
   /** The per-component projection folds over a snapped relation's `q`
-    * column — shared by [[pcaProject]] and [[pcaProjectFrom]]. */
+    * column ([[pcaProjectFrom]]). */
   private def pcaProjCols(
       means: Array[Double], comps: Array[Array[Double]], lams: Array[Double],
       k: Int, whiten: Boolean): Seq[Column] = {
@@ -1862,33 +1797,4 @@ object Similarity {
     }.toSeq
   }
 
-  /**
-   * Spectrum summary of [[pcaProject]]'s components — `(component,
-   * eigenvalue, explained_ratio)`: the eigenvalue back in original units
-   * (int-space λ / 1e8) and its share of TOTAL variance (the
-   * pre-deflation trace; scale cancels). The k-component cutoff this
-   * reports is the dimensionality-reduction decision itself: how much of
-   * the cloud's variance the reduced index preserves.
-   */
-  def pcaVarianceReport(
-      df: DataFrame,
-      k: Int = 2,
-      iters: Int = 12,
-      idCol: String = "vec_id",
-      vecCol: String = "embedding"
-  ): DataFrame = {
-    val spark = df.sparkSession
-    import spark.implicits._
-    pcaCore(df, k, iters, idCol, vecCol) match {
-      case None =>
-        Seq.empty[(Long, Double, Double)].toDF("component", "eigenvalue", "explained_ratio")
-      case Some((snapped, _, _, lams, trace)) =>
-        Checkpoints.free(snapped) // the report never reads the vectors again
-        lams.zipWithIndex.map { case (l, i) => ((i + 1).toLong, l, trace) }.toSeq
-          .toDF("component", "__lam", "__tr")
-          .select(col("component"),
-            round(col("__lam") / lit(100000000.0), 6).as("eigenvalue"),
-            round(col("__lam") / col("__tr"), 6).as("explained_ratio"))
-    }
-  }
 }

@@ -818,7 +818,6 @@ object TextAnalysis {
       idCol: String = "doc_id"
   ): DataFrame = {
     require(minTokens >= 1, "minTokens must be >= 1")
-    GraftFunctions.register(df.sparkSession)
     val ws = filter(words(col(textCol)), w => length(w) >= 1)
     val green = (acc: Column, w: Column) =>
       acc + when(pmod(GraftFunctions.polyHash(w, 131L, seed), lit(2L)) === 0L, 1L).otherwise(0L)
@@ -969,7 +968,6 @@ object TextAnalysis {
       textCol: String = "text",
       dp: Int = 6
   ): DataFrame = {
-    GraftFunctions.register(a.sparkSession)
     def counts(df: DataFrame, out: String) =
       df.select(explode(words(col(textCol))).as("__t"))
         .groupBy(col("__t")).agg(count(lit(1)).as(out))
@@ -1258,7 +1256,6 @@ object TextAnalysis {
       k: Int = 50,
       textCol: String = "text"
   ): DataFrame = {
-    GraftFunctions.register(df.sparkSession)
     df
       .select(explode(words(col(textCol))).as("__w"))
       .filter(length(col("__w")) >= 2)
@@ -1297,7 +1294,6 @@ object TextAnalysis {
     import graft.pipeline.Checkpoints.PinOps
     require(merges >= 1 && merges <= 64, "merges must be in [1,64]")
     val spark = df.sparkSession
-    GraftFunctions.register(spark)
     import spark.implicits._
     // the WORD HISTOGRAM is the only materialized state: each round's
     // tokenization is replayed from the character tokens by the compiled
@@ -1378,7 +1374,6 @@ object TextAnalysis {
     // single-char words) encodes as plain character tokenization — the
     // identity replay, matching the oracle's dry-round vocab fallback
     require(merges.size <= 64, "need 0..64 learned merges")
-    GraftFunctions.register(df.sparkSession)
     val corpusWords = df.select(col(idCol), explode(words(col(textCol))).as("__w"))
       .filter(length(col("__w")) >= 1)
     // the full merge sequence replays per DISTINCT word form in one
@@ -1411,7 +1406,7 @@ object TextAnalysis {
    * aggregation-only cousin — ONE groupBy trains it). Returns the top
    * `topK` highest-count terms per label (count desc, term asc — the
    * inspectable head of the model); the full count relation feeds
-   * [[nbConfusion]] internally.
+   * [[nbScoredShared]].
    *
    * Scale shape: one map-side-combined `(label, term)` count — shuffle is
    * vocab×labels-sized, never corpus-sized; the top-K is a
@@ -1435,11 +1430,15 @@ object TextAnalysis {
   }
 
   /**
-   * NB self-prediction confusion matrix: train on the labeled corpus,
-   * score every document against every label with Laplace-1 smoothing,
-   * and roll up `(true label, argmax label, n)` — the model-quality
-   * readout (the diagonal is the self-consistency of the labeling; heavy
-   * off-diagonal cells flag confusable label pairs or mislabeled slices).
+   * NB scoring for SHARING across consumers in one session: train on the
+   * labeled corpus and score every document against every label with
+   * Laplace-1 smoothing — one row per (doc, label) with the multinomial
+   * log-score in the decomposed spelling both oracles replay. The scored
+   * relation persists with FULL LINEAGE and no pins, so consumers'
+   * `Checkpoints.free` calls are no-ops on it — one training + scoring
+   * pass serves [[nbConfusionFrom]] AND [[nbMarginCalibrationFrom]]. At
+   * 100 TB the equivalent is persisting the scored table once as a
+   * model-eval artifact. Release with `scored.unpersist()` to retire it.
    *
    * The smoothed log-likelihood is computed in its DECOMPOSED form —
    * absent `(label, term)` cells contribute `ln(0+1) = 0` to the count
@@ -1464,55 +1463,26 @@ object TextAnalysis {
    * CLASSIFIER — guarded); the only driver values are the two corpus
    * scalars (N docs, V vocab).
    */
-  /** shared NB scoring chain of [[nbConfusion]] / [[nbMarginCalibration]]:
-    * one row per (doc, label) with the Laplace-1 multinomial log-score in
-    * the decomposed spelling both oracles replay. */
-  private def nbScored(
-      df: DataFrame,
-      labelCol: String,
-      textCol: String,
-      idCol: String,
-      maxLabels: Int
-  ): DataFrame = nbScoredImpl(df, labelCol, textCol, idCol, maxLabels, shared = false)
-
-  /** [[nbScored]] materialized for SHARING across consumers in one session
-    * (the [[graft.pipeline.Dedup.minhashLshPairsShared]] discipline): the
-    * scored relation persists with FULL LINEAGE and no pins, so consumers'
-    * `Checkpoints.free` calls are no-ops on it — one training + scoring
-    * pass serves the confusion matrix AND the calibration curve. At 100 TB
-    * the equivalent is persisting the scored table once as a model-eval
-    * artifact. Release with `scored.unpersist()` to retire it. */
   def nbScoredShared(
       df: DataFrame,
       labelCol: String = "lang",
       textCol: String = "text",
       idCol: String = "doc_id",
       maxLabels: Int = 100
-  ): DataFrame = nbScoredImpl(df, labelCol, textCol, idCol, maxLabels, shared = true)
-
-  private def nbScoredImpl(
-      df: DataFrame,
-      labelCol: String,
-      textCol: String,
-      idCol: String,
-      maxLabels: Int,
-      shared: Boolean
   ): DataFrame = {
-    graft.functions.GraftFunctions.register(df.sparkSession)
     val mad = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
     val lab = df.select(col(idCol), col(labelCol).as("__lab"))
     val tk  = nbToks(df, textCol, idCol)
-    val cnt0 = tk.join(lab, idCol)
+    val cnt = tk.join(lab, idCol)
       .groupBy(col("__lab"), col("__term")).agg(count(lit(1)).as("__c"))
-    val cnt = if (shared) cnt0.persist(mad) else cnt0.pinned
+      .persist(mad)
     // per-label totals + doc counts: tiny (≤ labels rows); N and V are the
     // two bounded driver scalars
     val tot = cnt.groupBy(col("__lab")).agg(sum(col("__c")).as("__tot"))
     val nd  = df.groupBy(col(labelCol).as("__lab")).agg(count(lit(1)).as("__nd"))
-    val stats0 = tot.join(nd, "__lab")
-    val stats = if (shared) stats0.persist(mad) else stats0.pinned
+    val stats = tot.join(nd, "__lab").persist(mad)
     require(stats.count() <= maxLabels,
-      s"nbConfusion: label cardinality exceeds $maxLabels — not a classification column")
+      s"nbScoredShared: label cardinality exceeds $maxLabels — not a classification column")
     val nDocs = df.count()
     val vocab = tk.agg(countDistinct(col("__term"))).head().getLong(0)
     val dtf = tk.groupBy(col(idCol), col("__term")).agg(count(lit(1)).as("__tf"))
@@ -1533,26 +1503,18 @@ object TextAnalysis {
           coalesce(col("__fold"), lit(0.0)) -
           col("__dl").cast("double") * log((col("__tot") + lit(vocab)).cast("double")))
       .select(col(idCol), col("__lab"), col("__score"))
-    if (!shared) scored
-    else {
-      val out = scored.persist(mad)
-      out.count() // materialize once; every consumer scans the cached relation
-      cnt.unpersist(false); stats.unpersist(false) // lineage intact
-      out
-    }
+      .persist(mad)
+    scored.count() // materialize once; every consumer scans the cached relation
+    cnt.unpersist(false); stats.unpersist(false) // lineage intact
+    scored
   }
 
-  def nbConfusion(
-      df: DataFrame,
-      labelCol: String = "lang",
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      maxLabels: Int = 100
-  ): DataFrame =
-    nbConfusionFrom(nbScored(df, labelCol, textCol, idCol, maxLabels), df, labelCol, idCol)
-
-  /** [[nbConfusion]] over a PREBUILT scored relation ([[nbScoredShared]])
-    * — the shared-scoring path. */
+  /** NB self-prediction confusion matrix over a PREBUILT scored relation
+    * ([[nbScoredShared]]): `(true label, argmax label, n)` — the
+    * model-quality readout (the diagonal is the self-consistency of the
+    * labeling; heavy off-diagonal cells flag confusable label pairs or
+    * mislabeled slices). Argmax ties break by label asc on the unrounded
+    * score. */
   def nbConfusionFrom(
       scored: DataFrame,
       df: DataFrame,
@@ -1563,8 +1525,6 @@ object TextAnalysis {
     val w = Window.partitionBy(col(idCol)).orderBy(col("__score").desc, col("__lab"))
     val pred = scored.withColumn("__r", row_number().over(w)).filter(col("__r") === 1)
       .select(col(idCol), col("__lab").as("pred"))
-    // the pins (cnt, stats) stay in the result's lineage — the caller
-    // releases them via Checkpoints.free(result) after its last action
     pred.join(lab, idCol)
       .groupBy(col("__lab").as(labelCol), col("pred"))
       .agg(count(lit(1)).as("n"))
@@ -1580,22 +1540,9 @@ object TextAnalysis {
    * softmax: `exp` is not IEEE-portable across engines, the log-score
    * difference is — every margin is the same fixed double chain the
    * `tx_nbconf` gate already replays, so `floor(margin / binWidth)` lands
-   * identically. One windowed top-2 per doc + one bin aggregation.
+   * identically. One windowed top-2 per doc + one bin aggregation over a
+   * PREBUILT scored relation ([[nbScoredShared]]).
    */
-  def nbMarginCalibration(
-      df: DataFrame,
-      labelCol: String = "lang",
-      textCol: String = "text",
-      idCol: String = "doc_id",
-      binWidth: Double = 0.25,
-      bins: Int = 8,
-      maxLabels: Int = 100
-  ): DataFrame =
-    nbMarginCalibrationFrom(nbScored(df, labelCol, textCol, idCol, maxLabels), df,
-      labelCol, idCol, binWidth, bins)
-
-  /** [[nbMarginCalibration]] over a PREBUILT scored relation
-    * ([[nbScoredShared]]) — the shared-scoring path. */
   def nbMarginCalibrationFrom(
       scored: DataFrame,
       df: DataFrame,

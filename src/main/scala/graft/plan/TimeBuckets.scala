@@ -25,9 +25,6 @@ object TimeBuckets {
     }
   }
 
-  /** One temporal bucket; `lowerInclusive` is true only for the oldest bucket of a span. */
-  final case class Bucket(lower: Long, upper: Long, lowerInclusive: Boolean)
-
   private val Full = Span(Long.MinValue, Long.MaxValue)
 
   /**
@@ -106,28 +103,6 @@ object TimeBuckets {
     }
     if (!exhausted) out += Span(cursor, Long.MaxValue)
     out.result()
-  }
-
-  /**
-   * Generate backward-anchored buckets for one span
-   * (reference: `TimeRangeManager.computeRangeForInterval:74-90`).
-   */
-  def bucketsFor(span: Span, len: Long): Seq[Bucket] = {
-    require(len > 0, "bucket length must be positive")
-    val out   = Seq.newBuilder[Bucket]
-    var upper = span.hi
-    var done  = false
-    while (!done) {
-      val lower = upper - len
-      if (lower <= span.lo) {
-        out += Bucket(span.lo, upper, lowerInclusive = true)
-        done = true
-      } else {
-        out += Bucket(lower, upper, lowerInclusive = false)
-        upper = lower
-      }
-    }
-    out.result().reverse // oldest first
   }
 
   /** Number of buckets covering a span. */

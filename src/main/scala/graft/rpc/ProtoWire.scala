@@ -55,18 +55,7 @@ object ProtoWire {
     /** bool field — skipped when false. */
     def bool(field: Int, v: Boolean): this.type = if (v) { tag(field, WireVarint); varint(1L) } else this
 
-    /** double field — skipped at 0.0 (positive zero only; -0.0 is emitted). */
-    def double(field: Int, v: Double): this.type =
-      if (java.lang.Double.doubleToRawLongBits(v) == 0L) this
-      else {
-        tag(field, WireFixed64); ensure(8)
-        var bits = java.lang.Double.doubleToLongBits(v)
-        var i = 0
-        while (i < 8) { buf(n) = bits.toByte; bits >>>= 8; n += 1; i += 1 }
-        this
-      }
-
-    /** like [[int64]]/[[double]] but ALWAYS emitted — oneof cases carry
+    /** like [[int64]] but ALWAYS emitted — oneof cases carry
       * explicit presence even at the default value. */
     def int64Always(field: Int, v: Long): this.type = { tag(field, WireVarint); varint(v) }
     def doubleAlways(field: Int, v: Double): this.type = {
@@ -85,14 +74,6 @@ object ProtoWire {
 
     def bytes(field: Int, v: Array[Byte]): this.type = {
       tag(field, WireBytes); varint(v.length.toLong); raw(v)
-    }
-
-    /** embedded message (skipped when the encoder wrote nothing — but a
-      * present-but-default message should use [[messageAlways]]). */
-    def message(field: Int, body: Writer => Unit): this.type = {
-      val w = new Writer
-      body(w)
-      if (w.n == 0) this else bytes(field, w.result())
     }
 
     def messageAlways(field: Int, body: Writer => Unit): this.type = {

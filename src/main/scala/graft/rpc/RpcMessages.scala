@@ -403,7 +403,7 @@ object RpcMessages {
     }
   }
 
-  object ServingStatus { val UNKNOWN = 0; val SERVING = 1; val NOT_SERVING = 2 }
+  object ServingStatus { val SERVING = 1 }
 
   final case class HealthCheckResponse(status: Int) {
     def encode(w: Writer): Unit = w.int64(1, status.toLong)

@@ -43,7 +43,6 @@ class CappedCollectSpec extends SparkTestBase {
 
   it should "clip degenerate buckets at cap+1 elements under partial merges" in {
     val rel = (1L to 5000L).map(i => (1L, i)).toDF("b", "id").repartition(16)
-    GraftFunctions.register(spark)
     val agg = rel.groupBy(col("b"))
       .agg(GraftFunctions.collectCapped(col("id"), 100).as("ids"))
       .head()
@@ -58,7 +57,6 @@ class CappedCollectSpec extends SparkTestBase {
       ("b", 2L),
       ("c", -4L), ("c", -1L), ("c", -9L), ("c", -1L)
     ).toDF("k", "v").repartition(5)
-    GraftFunctions.register(spark)
     val k = 3
     val got = df.groupBy(col("k")).agg(GraftFunctions.topKSum(col("v"), k).as("t"))
       .select(col("k"), element_at(col("t"), 1).as("s"), element_at(col("t"), 2).as("c"))

@@ -304,7 +304,6 @@ class CompiledKernelSpec extends SparkTestBase {
   }
 
   "every scalar kernel" should "answer the same with generated code and through the interpreted path" in {
-    GraftFunctions.register(spark)
     calls.foreach { c =>
       def run(): Seq[String] =
         kernelInputs.selectExpr("id", s"${c.sql} AS k").orderBy("id").collect().map(_.toString).toSeq
@@ -320,7 +319,6 @@ class CompiledKernelSpec extends SparkTestBase {
   }
 
   it should "fail at analysis on a wrongly typed column, naming the function" in {
-    GraftFunctions.register(spark)
     calls.foreach { c =>
       val e = intercept[AnalysisException](kernelInputs.selectExpr(c.bad))
       withClue(c.bad) { e.getMessage should include(s"${c.name} requires") }
@@ -339,8 +337,12 @@ class CompiledKernelSpec extends SparkTestBase {
     files.size should be > 5
     val codegen = "\\b(doGenCode|nullSafeCodeGen|defineCodeGen)\\b".r
     files.filter(p => codegen.findFirstIn(Files.readString(p)).isDefined).map(_.getFileName) shouldBe empty
-    GraftFunctions.register(spark)
     calls.map(_.name).toSet shouldBe GraftFunctions.registry.map(_._1).toSet -- aggregates
+    // the session extension installs every function, in each new session too:
+    // nothing registers them by hand
+    Seq(spark, spark.newSession()).foreach { s =>
+      GraftFunctions.registry.map(_._1).filterNot(s.catalog.functionExists) shouldBe empty
+    }
     calls.foreach { c =>
       val built = kernelInputs.selectExpr(c.sql).queryExecution.analyzed.expressions.collect {
         case Alias(child, _) => child
@@ -356,7 +358,7 @@ class CompiledKernelSpec extends SparkTestBase {
 
   "operator paths" should "call the compiled hash, not the HOF polyHash" in {
     // the HOF fold stays only as the reference form of these natives
-    val referenceForms = Set("shingleSet", "cdcChunksHof", "wordHashes")
+    val referenceForms = Set("shingleSet", "wordHashes")
     val sources: Seq[Path] = {
       val walk = Files.walk(Paths.get("src/main"))
       try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList

@@ -520,7 +520,10 @@ class PipelineSpec extends SparkTestBase {
       (2L, Seq(2.0f, 0.3f, 0.5f)), (3L, Seq(-2.0f, -0.3f, 0.5f)),
       (4L, Seq(3.0f, -0.2f, 0.5f)), (5L, Seq(-3.0f, 0.2f, 0.5f))
     ).toDF("vec_id", "embedding")
-    val pc = Similarity.pcaProject(vecs, k = 2, iters = 20)
+    // one fitted model serves every readout (a kMax-run is bit-identical
+    // to a dedicated k-run for k <= kMax)
+    val model = Similarity.pcaModelShared(vecs, kMax = 3, iters = 20)
+    val pc = Similarity.pcaProjectFrom(model, vecs, k = 2)
       .collect().map(r => r.getLong(0) -> ((r.getDouble(1), r.getDouble(2)))).toMap
     // pc1 ≈ the (mean-centered) axis-1 coordinate, up to a global sign
     val s = math.signum(pc(0L)._1)
@@ -530,7 +533,7 @@ class PipelineSpec extends SparkTestBase {
     // pc2 carries far less spread than pc1
     def spread(xs: Iterable[Double]) = xs.max - xs.min
     spread(pc.values.map(_._2)) should be < spread(pc.values.map(_._1)) / 5
-    val rep = Similarity.pcaVarianceReport(vecs, k = 3, iters = 20)
+    val rep = Similarity.pcaVarianceReportFrom(model, spark, k = 3)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
     rep.map(_._1).toSeq shouldBe Seq(1L, 2L, 3L)
     // eigenvalues descend; axis 3 is constant → its component is ~zero
@@ -543,15 +546,18 @@ class PipelineSpec extends SparkTestBase {
     // whitening rescales each axis toward unit variance: the dominant
     // axis shrinks relative to its raw projection, and both whitened
     // axes end up with comparable spread
-    val wh = Similarity.pcaProject(vecs, k = 2, iters = 20, whiten = true)
+    val wh = Similarity.pcaProjectFrom(model, vecs, k = 2, whiten = true)
       .collect().map(r => (r.getDouble(1), r.getDouble(2)))
+    model.foreach(_.snapped.unpersist())
     val s1 = spread(wh.map(_._1)); val s2 = spread(wh.map(_._2))
     (s1 / s2) should (be > 0.3 and be < 3.0)
     // empty input → empty frames, schemas intact
     val e = vecs.filter(lit(false))
-    Similarity.pcaProject(e, k = 2).columns.toSeq shouldBe Seq("vec_id", "pc1", "pc2")
-    Similarity.pcaProject(e, k = 2).count() shouldBe 0L
-    Similarity.pcaVarianceReport(e).count() shouldBe 0L
+    val none = Similarity.pcaModelShared(e, kMax = 2)
+    none shouldBe None
+    Similarity.pcaProjectFrom(none, e, k = 2).columns.toSeq shouldBe Seq("vec_id", "pc1", "pc2")
+    Similarity.pcaProjectFrom(none, e, k = 2).count() shouldBe 0L
+    Similarity.pcaVarianceReportFrom(none, spark, k = 2).count() shouldBe 0L
   }
 
   "Similarity.embeddingDrift" should "score identical sets 1/0 and orthogonal means 0" in {
@@ -803,23 +809,6 @@ class PipelineSpec extends SparkTestBase {
       (3L, "w10", 1L)) // start=9 < 10 tokens: the tail chunk is emitted, truncated
   }
 
-  "Dedup.cdcChunks (native kernel)" should "match the HOF reference form row-for-row" in {
-    // edge cases the packer must honor: empty text (one empty word, one
-    // chunk), leading/trailing/double spaces (empty words), a boundary
-    // word CLOSING the last chunk (no spurious extra), non-ASCII
-    // codepoints (the wordPoly fallback path), and a long chain
-    val d = Seq(
-      (0L, ""), (1L, " a  b "), (2L, "héllo wörld ünïcode"),
-      (3L, (1 to 97).map(i => s"tok$i word$i").mkString(" ")),
-      (4L, "solo")
-    ).toDF("doc_id", "text")
-    for (div <- Seq(2, 4, 8)) {
-      val fast = Dedup.cdcChunks(d, divisor = div).orderBy("doc_id", "chunk_idx").collect()
-      val ref  = Dedup.cdcChunksHof(d, divisor = div).orderBy("doc_id", "chunk_idx").collect()
-      fast shouldBe ref
-    }
-  }
-
   "Dedup.cdcOverlapPairs" should "survive a prefix insertion that shifts every fixed window" in {
     val base = (1 to 40).map(i => s"w$i").mkString(" ")
     val d = Seq(
@@ -923,15 +912,8 @@ class PipelineSpec extends SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))) shouldBe Array((0L, 1L))
   }
 
-  "Dedup.minhashLshDuplicates" should "flag the larger id of each dup pair" in {
-    val dups = Dedup.minhashLshDuplicates(docs, 0.9).collect().map(_.getLong(0))
-    dups should contain(4L)
-    dups should not contain 3L
-  }
-
   "native signature kernels" should "be value-identical to the portable HOF forms" in {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     // non-ASCII rows exercise the per-code-point fallback of the native
     // byte-level word hash (PortableHash.wordPoly); the empty doc and the
     // short doc exercise the k<words fallback fold
@@ -948,13 +930,11 @@ class PipelineSpec extends SparkTestBase {
     ).collect()
     all(cmp.map(_.getBoolean(0))) shouldBe true
     all(cmp.map(_.getBoolean(1))) shouldBe true
-    val sh = all_docs.select(Dedup.shingleSet(col("text"), 3).as("sh"), Dedup.wordHashes(col("text")).as("wh"))
+    val sh = all_docs.select(Dedup.shingleSet(col("text"), 3).as("sh"))
     val cmp2 = sh.select(
-      (GraftFunctions.minhash(col("sh"), 64) === Dedup.minhashSignature(col("sh"), 64)).as("mh_eq"),
-      (GraftFunctions.simhash(col("wh")) === Dedup.simhashSignature(col("wh"))).as("sh_eq")
+      (GraftFunctions.minhash(col("sh"), 64) === Dedup.minhashSignature(col("sh"), 64)).as("mh_eq")
     ).collect()
     all(cmp2.map(_.getBoolean(0))) shouldBe true
-    all(cmp2.map(_.getBoolean(1))) shouldBe true
     // winnowing: the native rolling-hash + deque kernel against the HOF
     // window-min spelling, row-for-row (BMP docs only — the HOF form's
     // split("") separates UTF-16 units, see winnowFingerprintsHof)
@@ -968,7 +948,6 @@ class PipelineSpec extends SparkTestBase {
     kern shouldBe hof
     kern.nonEmpty shouldBe true
     // the in-kernel distinct-fp variant == DISTINCT over the positional picks
-    graft.functions.GraftFunctions.register(spark)
     val viaSet = bmp.select(col("doc_id"),
         explode(graft.functions.GraftFunctions.winnowFps(col("text"), 5, 3)).as("fp"))
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted
@@ -1013,7 +992,6 @@ class PipelineSpec extends SparkTestBase {
 
   "native LshBuckets kernel" should "be bit-identical to the portable HOF bucket fold" in {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val planes = (0 until 3).map(t => Similarity.hyperplanes(5, 8, seed = 42L + t))
     val rnd = new scala.util.Random(11)
     val rvecs = (0 until 50).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
@@ -1027,7 +1005,6 @@ class PipelineSpec extends SparkTestBase {
   "native Int8QSim kernel" should "be bit-identical to the HOF quantize/dot/norm chain" in {
     import graft.functions.{GraftFunctions, Int8QSimKernel}
     import org.apache.spark.sql.Column
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(17)
     val qv  = Array.fill(8)(rnd.nextGaussian())
     // the HOF spelling the kernel replaces — verbatim from the old
@@ -1062,7 +1039,6 @@ class PipelineSpec extends SparkTestBase {
 
   "native BPE replay kernels" should "match the HOF char-split + greedy merge fold, merge by merge" in {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     // words with repeats, overlap traps (aaa under (a,a)), unicode, and
     // single chars; merges chosen so later rounds consume earlier fused
     // tokens ((ab, c) after (a, b)) and so some rounds are no-ops
@@ -1091,7 +1067,6 @@ class PipelineSpec extends SparkTestBase {
   "native UnitSnap and CharBigrams kernels" should "be bit-identical to their HOF spellings" in {
     import graft.functions.GraftFunctions
     import org.apache.spark.sql.Column
-    GraftFunctions.register(spark)
     val rnd = new scala.util.Random(23)
     val vdf = ((0 until 50).map(_ => Seq.fill(8)(java.lang.Float.valueOf(
         (rnd.nextGaussian() * (if (rnd.nextBoolean()) 1e2f else 1e-2f)).toFloat))) :+
@@ -1113,7 +1088,6 @@ class PipelineSpec extends SparkTestBase {
 
   "native NearestCentroid kernel" should "pick the argmax-cosine centroid, first index on ties" in {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     val rnd   = new scala.util.Random(13)
     val cents = (0 until 6).map(_ => Array.fill(8)(rnd.nextGaussian()))
     val data = (0 until 40).map(i => (i.toLong, Array.fill(8)(rnd.nextGaussian().toFloat)))
@@ -1132,7 +1106,6 @@ class PipelineSpec extends SparkTestBase {
 
   it should "mirror Spark's NaN-greatest ordering for zero-norm vectors and centroids" in {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     // Spark parity probe: array_max treats NaN as GREATER than any double
     // and array_position then finds the FIRST NaN — the form the kernel
     // replaces must agree on exactly this
@@ -1304,7 +1277,6 @@ class PipelineSpec extends SparkTestBase {
   }
 
   "Similarity.isotropyReport" should "score collapse 1, orthogonal 0, and drop zero vectors" in {
-    graft.functions.GraftFunctions.register(spark)
     def rep(vs: Seq[Array[Float]]) =
       Similarity.isotropyReport(vs.zipWithIndex.map { case (v, i) => (i.toLong, v) }
         .toDF("vec_id", "embedding")).head()
@@ -1490,7 +1462,6 @@ class PipelineSpec extends SparkTestBase {
 
   "graft_rms_windows / graft_blockhash kernels" should "read bytes UNSIGNED and handle remainder/past-end slices" in {
     import graft.functions.GraftFunctions
-    GraftFunctions.register(spark)
     // 0xFF must read as 255 (d = 127), not as the sign-extended -1
     // (d = -129): rms over four 0xFF bytes is exactly 127
     val media = Seq(
@@ -2054,7 +2025,7 @@ class PipelineSpec extends SparkTestBase {
       (1L, text, "s1"), (2L, text, "s1"), (3L, text, "s1"), // one 3-doc exact-dup component
       (4L, "completely different words nothing shared here at all", "s2")
     ).toDF("doc_id", "text", "source")
-    val out = Dedup.componentWeights(corpus, 0.5).orderBy("doc_id")
+    val out = Dedup.componentWeightsFromPairs(Dedup.minhashLshPairs(corpus, 0.5), corpus).orderBy("doc_id")
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     out shouldBe Array(
       (1L, 1L, 3L, 0.333333), (2L, 1L, 3L, 0.333333), (3L, 1L, 3L, 0.333333),
@@ -2399,12 +2370,6 @@ class PipelineSpec extends SparkTestBase {
     top(1).getLong(0) shouldBe 1L
   }
 
-  "Dedup.deduplicated" should "drop near-duplicates keeping the smallest id" in {
-    val out = Dedup.deduplicated(docs, 0.9).select("doc_id").collect().map(_.getLong(0)).sorted
-    out should contain(0L)     // representative kept
-    out should not contain 4L  // exact dup of 0 dropped
-  }
-
   "Skew.saltedCount and saltedSum" should "match unsalted aggregation" in {
     import graft.pipeline.Skew
     val expectCnt = docs.groupBy("source").count().collect()
@@ -2517,7 +2482,6 @@ class PipelineSpec extends SparkTestBase {
 
   "the graft_min_eucl kernel" should "replicate the zip_with/aggregate least-distance chain bit-for-bit" in {
     import org.apache.spark.sql.functions.{aggregate, col, least, lit, sqrt, zip_with}
-    graft.functions.GraftFunctions.register(spark)
     // float-precision-sensitive values: the widening float->double casts
     // and the sequential (x-y)^2 fold order must match the HOF chain
     val vecs = Seq(
@@ -2642,21 +2606,25 @@ class PipelineSpec extends SparkTestBase {
   }
 
   "TextAnalysis.nbConfusion" should "self-predict a separable corpus on the diagonal" in {
-    val m = TextAnalysis.nbConfusion(docs).collect()
+    val scored = TextAnalysis.nbScoredShared(docs)
+    val m = try TextAnalysis.nbConfusionFrom(scored, docs).collect()
       .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
+    finally scored.unpersist()
     m(("en", "en")) shouldBe 4L
     m(("de", "de")) shouldBe 1L
     m(("es", "es")) shouldBe 1L
     m.values.sum shouldBe 6L // every doc predicted exactly once
     // label-cardinality guard: doc_id as "label" is not a classifier input
     an[IllegalArgumentException] should be thrownBy
-      TextAnalysis.nbConfusion(docs.withColumn("big", $"doc_id".cast("string")),
-        labelCol = "big", maxLabels = 3).collect()
+      TextAnalysis.nbScoredShared(docs.withColumn("big", $"doc_id".cast("string")),
+        labelCol = "big", maxLabels = 3)
   }
 
   "TextAnalysis.nbMarginCalibration" should "bin top-2 margins, cap the top bin, and sum to the corpus" in {
-    val out = TextAnalysis.nbMarginCalibration(docs, binWidth = 0.25, bins = 8)
+    val scored = TextAnalysis.nbScoredShared(docs)
+    val out = try TextAnalysis.nbMarginCalibrationFrom(scored, docs, binWidth = 0.25, bins = 8)
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getLong(2), r.getLong(3), r.getDouble(4)))
+    finally scored.unpersist()
     out.map(_._3).sum shouldBe 6L                    // every doc lands in one bin
     all(out.map(_._1)) should be <= 7L               // top bin is open-ended
     all(out.map(_._1)) should be >= 0L
@@ -2686,7 +2654,6 @@ class PipelineSpec extends SparkTestBase {
   }
 
   "GraftFunctions.foldSum" should "match the interpreted sorted-fold bit for bit" in {
-    graft.functions.GraftFunctions.register(spark)
     val xs = Seq(Tuple1(Array(0.3, 0.1, 1e-17, 0.2)), Tuple1(Array.empty[Double]))
       .toDF("xs")
     val cmp = xs.select(

@@ -132,13 +132,18 @@ class PlanShapeSpec extends SparkTestBase {
       wp should include("PortableHash.winnowFpSet(")
       wp should not include "CartesianProduct"
     }
-    // NB confusion: the only nested-loop is the intended tiny
+    // NB scoring: the only nested-loop is the intended tiny
     // stats-broadcast cross join; the count-cell join hashes
-    val nbQe = graft.pipeline.TextAnalysis.nbConfusion(docs).queryExecution
-    withClue(nbQe.executedPlan.toString) {
-      nbQe.executedPlan.toString should not include "CartesianProduct"
-      nbQe.optimizedPlan.toString should include("ArrayKernels.foldSum(")
-    }
+    val scored = graft.pipeline.TextAnalysis.nbScoredShared(docs)
+    val nbCached = spark.sharedState.cacheManager
+      .lookupCachedData(scored.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]])
+    scored.unpersist()
+    nbCached should not be empty
+    val nbPlan = nbCached.get.cachedRepresentation.cacheBuilder.cachedPlan.toString
+    withClue(nbPlan) { nbPlan should not include "CartesianProduct" }
+    // the per-(doc, label) fold is the compiled kernel (the aggregate's
+    // physical string hides its result expressions)
+    nbCached.get.plan.toString should include("graft_fold_sum(")
   }
 
   "the round-12 second-wave additions" should "keep their prescribed shuffle shapes" in {
@@ -215,13 +220,15 @@ class PlanShapeSpec extends SparkTestBase {
 
   "the round-10 additions" should "keep their prescribed shuffle shapes" in {
     import spark.implicits._
-    // PCA projection: per-row folds over the pinned snapped column — ZERO
-    // exchanges in the returned frame (all cross-row work happened inside
-    // the bounded collected-sums pass)
+    // PCA projection: per-row folds over the persisted snapped column —
+    // ZERO exchanges in the returned frame (all cross-row work happened
+    // inside the bounded collected-sums pass)
     val vecs = Seq((0L, Seq(1.0f, 0.0f)), (1L, Seq(0.0f, 2.0f)), (2L, Seq(1.0f, 1.0f)))
       .toDF("vec_id", "embedding")
-    val pca = graft.pipeline.Similarity.pcaProject(vecs, k = 1, iters = 2)
+    val model = graft.pipeline.Similarity.pcaModelShared(vecs, kMax = 1, iters = 2)
+    val pca = graft.pipeline.Similarity.pcaProjectFrom(model, vecs, k = 1)
     val pcaPlan = pca.queryExecution.executedPlan.toString
+    model.foreach(_.snapped.unpersist())
     withClue(pcaPlan) { exchanges(pcaPlan) shouldBe 0 }
     // LPA and modularity: join + partial-aggregate rounds only — no
     // window function may creep into either (the argmin is min(struct))

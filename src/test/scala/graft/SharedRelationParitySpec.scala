@@ -59,7 +59,7 @@ class SharedRelationParitySpec extends SparkTestBase {
         .orderBy("id_a", "id_b")) shouldBe
         rows(Dedup.winnowPairs(docsFx, k = 8, w = 4, minShared = 1L, maxBucket = 1000)
           .orderBy("id_a", "id_b"))
-      rows(Dedup.winnowContainmentOn(fps, minShared = 1L, maxBucket = 1000)
+      rows(Dedup.winnowContainmentFrom(Dedup.winnowPairsOn(fps, minShared = 1L, maxBucket = 1000), fps)
         .orderBy("id_a", "id_b")) shouldBe
         rows(Dedup.winnowContainment(docsFx, k = 8, w = 4, minShared = 1L, maxBucket = 1000)
           .orderBy("id_a", "id_b"))
@@ -92,10 +92,10 @@ class SharedRelationParitySpec extends SparkTestBase {
           .orderBy("source"))
       rows(Dedup.componentWeightsFromClusters(cc).orderBy("doc_id")) shouldBe
         rows(Dedup.componentWeightsFromPairs(pairs, docsFx).orderBy("doc_id"))
-      // modularity over the shared labeling ≡ the composed per-call path
+      // modularity over the shared labeling ≡ over the per-call labeling
       rows(graft.operators.Graph.modularity(pairs, lpa).orderBy("community")) shouldBe
-        rows(graft.operators.Graph.labelPropagationModularity(pairs, docsFx, rounds = 4)
-          .orderBy("community"))
+        rows(graft.operators.Graph.modularity(pairs,
+          graft.operators.Graph.labelPropagation(pairs, docsFx, rounds = 4)).orderBy("community"))
     } finally { cc.unpersist(); lpa.unpersist() }
   }
 

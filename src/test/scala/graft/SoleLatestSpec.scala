@@ -14,7 +14,6 @@ class SoleLatestSpec extends SparkTestBase {
   import spark.implicits._
 
   "graft_sole_latest" should "match the stats + join-back + re-aggregate reference" in {
-    GraftFunctions.register(spark)
     // g=1: sole latest (supplier 7 at ts 30, two others below)
     // g=2: TIE at the max (suppliers 4 and 9 both at ts 50) — nl = 2
     // g=3: singleton group
@@ -61,7 +60,6 @@ class SoleLatestSpec extends SparkTestBase {
   }
 
   it should "keep the fold a HashAggregate (flat buffer, no sort)" in {
-    GraftFunctions.register(spark)
     val df = Seq((1L, 2L, 3L)).toDF("g", "ord", "key")
     val plan = df.groupBy(col("g"))
       .agg(GraftFunctions.soleLatest(col("ord"), col("key")).as("st"))

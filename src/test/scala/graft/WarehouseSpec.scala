@@ -242,7 +242,7 @@ class WarehouseSpec extends SparkTestBase {
     wh.initMetric(c, shardIntervalMs = 1000L, retentionMs = 0L) shouldBe Right(())
     // the initialized metric is visible with an empty field list
     engine.command("db", "ns", Ast.ShowMetrics).fold(fail(_), _.flatten) should contain("minit")
-    wh.describe(c) shouldBe Some(Seq.empty)
+    engine.command("db", "ns", Ast.DescribeMetric("minit")) shouldBe Right(Seq.empty)
     // re-init with the same settings is idempotent; conflicting rejects
     wh.initMetric(c, 1000L, 0L) shouldBe Right(())
     wh.initMetric(c, 2000L, 0L).isLeft shouldBe true

@@ -88,9 +88,13 @@ class WsApiSpec extends SparkTestBase {
 
       val received = new LinkedBlockingQueue[String]()
       val sock = connect(wsPort, received)
-      // malformed refresh and non-select queries answer with in-protocol errors
-      sock.sendText("""{"db":"db","namespace":"ns","queryString":"select sum(value) from m group by k","refreshMs":-5}""", true)
-      received.poll(20, TimeUnit.SECONDS) should include(""""error"""")
+      // malformed refresh and non-select queries answer with in-protocol
+      // errors; a refresh that is not a positive integral number registers nothing
+      for (refresh <- Seq("-5", "\"abc\"", "true", "1.9", "\"250\"", "0", "null")) {
+        sock.sendText(s"""{"db":"db","namespace":"ns","queryString":"select * from m","refreshMs":$refresh}""", true)
+        withClue(s"refreshMs $refresh: ") { received.poll(20, TimeUnit.SECONDS) should include(""""error"""") }
+      }
+      hub.size shouldBe 0
       sock.sendText("""{"db":"db","namespace":"ns","queryString":"drop metric m"}""", true)
       received.poll(20, TimeUnit.SECONDS) should include(""""error"""")
 
